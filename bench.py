@@ -93,7 +93,7 @@ SCALING_BUDGET = int(os.environ.get("QSVSPARK_BENCH_SCALING_BUDGET", "5400"))
 # through 14 degraded host phases and the summary never printed. The
 # budget is measured from process start; 0 disables it.
 _RUN_T0 = time.time()
-TOTAL_BUDGET = int(os.environ.get("QSVSPARK_BENCH_TOTAL_BUDGET", "6600"))
+TOTAL_BUDGET = int(os.environ.get("QSVSPARK_BENCH_TOTAL_BUDGET", "3200"))
 
 
 def _total_deadline() -> float:
@@ -947,7 +947,7 @@ def _run_sf1(spark, queries: dict, sf01_steady: dict) -> dict:
 
 
 def _emit_artifacts(
-    summary: dict, detail: dict, detail_path: str, max_line: int = 2800
+    summary: dict, detail: dict, detail_path: str, max_line: int = 1500
 ) -> str:
     """Stamp BOTH artifacts with one shared run id and write the detail
     file atomically (tmp + rename), so BENCH_r*.json and
@@ -968,17 +968,26 @@ def _emit_artifacts(
     except OSError as e:  # noqa: PERF203 — the summary line must still print
         summary.setdefault("errors_count", 0)
         summary["detail_write_error"] = repr(e)[:200]
-    # belt-and-braces: never outgrow the driver's tail-capture window.
-    # Drop order keeps the round-4 evidence sections (sf1, skew,
-    # extensions_steady) over the per-query cold timings, which the
-    # detail file always carries.
+    # belt-and-braces: stay well inside a 2,000-byte stdout tail
+    # capture. The per-query maps go first (the detail file always
+    # carries them), then the evidence sections; totals, pipeline and
+    # scaling stay.
     line = json.dumps(summary)
-    for drop in ("queries", "extensions", "extensions_steady", "skew", "sf1"):
+    for *path, key in _LINE_DROP_ORDER:
         if len(line) <= max_line:
             break
-        summary.pop(drop, None)
+        parent = summary
+        for p in path:
+            parent = parent.get(p) or {}
+        parent.pop(key, None)
         line = json.dumps(summary)
     return line
+
+
+_LINE_DROP_ORDER = (
+    ("queries",), ("extensions",), ("extensions_steady",),
+    ("sf1", "per_row_rate_ratio"), ("section_probes",), ("skew",), ("sf1",),
+)
 
 
 def _assemble(state: dict) -> tuple[dict, dict]:
@@ -1089,7 +1098,9 @@ def _assemble(state: dict) -> tuple[dict, dict]:
         "skew": skew_summary,
         "sf1": sf1_summary,
         "scaling": scaling_summary,
-        "errors_count": len(query_errors),
+        # a kill signal is not a query error: reported on its own
+        "errors_count": sum(1 for k in query_errors if k != "__signal__"),
+        "signal": query_errors.get("__signal__"),
         "detail_file": "BENCH_DETAIL.json",
         "run_id": state["run_id"],
         "sections_done": list(state.get("sections_done") or []),
@@ -1360,9 +1371,9 @@ def main() -> None:
             "rows_per_sec": round(packed_rows / pack_wall, 1) if pack_wall else None,
         }
 
-        # materialize the physical sequence table from the committed
-        # layout (the north-star deliverable: ~SCALE_ROWS×264 tokens
-        # flattened through one keyed join + one groupBy(seq_id));
+        # materialize the physical sequence table (the north-star
+        # deliverable: ~SCALE_ROWS×264 tokens packed and assembled in one
+        # partition-local pass, then the layout re-derived from it);
         # throughput is per INPUT token
         t0 = time.time()
         sm = pipe.pack_sinks(seq_len=2048, materialize=True, pad_id=0)

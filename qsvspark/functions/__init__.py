@@ -20,7 +20,9 @@ from qsvspark.functions.packing import (
     materialize_greedy_sequences,
     pack_chunked,
     pack_greedy,
+    pack_greedy_sequences,
     pack_stats,
+    sequence_layout,
 )
 from qsvspark.functions.dedup import (
     connected_components,
@@ -52,6 +54,7 @@ __all__ = [
     "add_repetition_signals", "contamination", "scrub_pii", "word_ngrams",
     "add_line_dup_signals", "vocab_topk", "shared_span_pairs", "semantic_dedup",
     "connected_components", "keep_representatives",
-    "pack_chunked", "pack_greedy", "pack_stats",
+    "pack_chunked", "pack_greedy", "pack_greedy_sequences", "pack_stats",
+    "sequence_layout",
     "materialize_chunked_sequences", "materialize_greedy_sequences",
 ]

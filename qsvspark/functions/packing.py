@@ -26,17 +26,30 @@ Two packers, two contracts:
   plan codegen'd. ``tests/test_plans.py`` pins the no-single-partition
   property.
 
-* ``pack_greedy`` — no-split first-fit packing: a document never
-  crosses a sequence boundary; a new sequence starts when the current
-  one can't fit the next document. Sequential state makes it
-  non-SQL-expressible, so it runs PARTITION-LOCALLY: each task packs
-  its own shard with a first-fit-decreasing loop over Arrow batches
-  (``mapInPandas`` carries packer state across batches of one
-  partition). Cross-shard order is irrelevant for training-data layout,
-  which is exactly why this parallelizes embarrassingly. Sequence ids
-  are globalized as ``pid * 2^40 + local_seq``. Invariants (every doc
-  packed once, every sequence ≤ seq_len unless a single oversized doc,
-  fill ratio bound) are pinned in ``tests/test_packing.py``.
+* greedy — no-split first-fit packing: a document never crosses a
+  sequence boundary; a new sequence starts when the current one can't
+  fit the next document. Sequential state makes it non-SQL-expressible,
+  so it runs PARTITION-LOCALLY: each task packs its own shard over
+  Arrow batches (the packer state spans all batches of one partition).
+  Cross-shard order is irrelevant for training-data layout, which is
+  exactly why this parallelizes embarrassingly. Sequence ids are
+  globalized as ``pid * 2^40 + local_seq``.
+
+  ONE first-fit loop (``_FirstFit``), TWO emitters:
+
+    - ``pack_greedy`` emits LAYOUT rows (one per document part: seq_id,
+      seq_fill, part_start, part_len, ...) — the ``materialize=False``
+      table and quilt's ``pack`` stage;
+    - ``pack_greedy_sequences`` emits SEQUENCE rows: a ``mapInArrow``
+      over (id, n_tok, group, tokens) that cuts and concatenates each
+      sequence's token array with NumPy from the Arrow list buffers. No
+      token is shuffled or joined: the documents of a sequence already
+      sit in its partition. Its ``parts`` column carries the layout
+      rows; ``sequence_layout`` explodes them back.
+
+  Invariants (every doc packed once, every sequence ≤ seq_len unless a
+  single oversized doc, fill ratio bound, emitter equivalence) are
+  pinned in ``tests/test_packing.py``.
 
 Reference provenance: qsv-rs has no packer — this is part of the
 training-data extension surface (SURVEY.md §2b) the north star asks
@@ -48,6 +61,7 @@ from __future__ import annotations
 import math
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -55,6 +69,8 @@ from pyspark.sql import functions as F
 # pid * 2^40 leaves ~10^12 sequences per shard and ~8M shards before a
 # signed-64 collision — comfortable at the 10^12-sequence target.
 _GREEDY_PID_SHIFT = 40
+_MAX_LOCAL = 1 << _GREEDY_PID_SHIFT
+_MAX_PID = 1 << (63 - _GREEDY_PID_SHIFT)
 
 
 def _bucket_plan(
@@ -167,6 +183,113 @@ def pack_chunked(
     return out
 
 
+class _Bin:
+    """One open sequence: its group key, global id, tokens placed so far
+    and its parts ``(ref, seq_id, fill, part_start, part_len, big)``."""
+
+    __slots__ = ("key", "seq_id", "fill", "parts")
+
+    def __init__(self, key, seq_id: int):
+        self.key, self.seq_id, self.fill, self.parts = key, seq_id, 0, []
+
+
+class _FirstFit:
+    """The first-fit loop of one shard — the only copy; both greedy
+    emitters drive it. One open bin per group key, a shard-wide sequence
+    counter (seq ids unique across groups) and the ``pid << 40`` id
+    space. ``place`` lays one document out and returns its parts; with
+    ``keep_closed`` every non-empty bin the loop leaves behind is queued
+    on ``closed`` for the sequence emitter to assemble."""
+
+    def __init__(self, seq_len: int, policy: str, keep_closed: bool = False):
+        from pyspark import TaskContext
+
+        # mapIn* yields all batches of ONE partition to one call, so the
+        # packer state legally spans the whole shard; the partition id is
+        # unique per shard
+        pid = TaskContext.get().partitionId()
+        if pid >= _MAX_PID:
+            raise ValueError(
+                f"pack_greedy: partition id {pid} exceeds the "
+                f"{_MAX_PID} id-space bound"
+            )
+        self.base = pid << _GREEDY_PID_SHIFT
+        self.seq_len, self.policy = seq_len, policy
+        self.next_seq = 0
+        self.bins: dict = {}
+        self.closed: Optional[list] = [] if keep_closed else None
+
+    def _fresh(self, key) -> _Bin:
+        # enforced, not just documented: '|' would silently corrupt ids
+        # past these bounds (≥2^40 sequences in one shard or ≥2^23
+        # partitions hit the sign bit)
+        if self.next_seq >= _MAX_LOCAL:
+            raise ValueError(
+                f"pack_greedy: shard emitted {self.next_seq} sequences "
+                f"(max {_MAX_LOCAL}); repartition the input finer"
+            )
+        old = self.bins.get(key)
+        if old is not None and old.parts and self.closed is not None:
+            self.closed.append(old)
+        b = self.bins[key] = _Bin(key, self.base | self.next_seq)
+        self.next_seq += 1
+        return b
+
+    def place(self, key, t: int, ref) -> list:
+        """Lay out one document of ``t`` tokens in group ``key``; returns
+        its parts (one per chunk under "split", else one)."""
+        L, out = self.seq_len, []
+
+        def emit(b: _Bin, start: int, length: int, big: bool) -> None:
+            part = (ref, b.seq_id, b.fill, start, length, big)
+            b.parts.append(part)
+            out.append(part)
+            b.fill += length
+
+        b = self.bins.get(key) or self._fresh(key)
+        big = t > L
+        if big and self.policy == "split":
+            # fill the open bin's remainder, then full sequences; the
+            # tail chunk leaves the bin open for later docs
+            start = 0
+            while start < t:
+                if b.fill >= L:
+                    b = self._fresh(key)
+                take = min(t - start, L - b.fill)
+                emit(b, start, take, True)
+                start += take
+            return out
+        eff = min(t, L) if (big and self.policy == "truncate") else t
+        if big and self.policy == "own":
+            # a bin holding only zero-token docs has fill 0 but is not
+            # fresh: an "own" oversized doc must still not share it
+            if b.parts:
+                b = self._fresh(key)
+            emit(b, 0, eff, True)
+            self._fresh(key)  # an oversized doc closes its sequence at once
+            return out
+        if b.fill + eff > L:
+            b = self._fresh(key)
+        emit(b, 0, eff, big)
+        return out
+
+    def drain(self, final: bool = False) -> list:
+        """The bins closed since the last drain; ``final`` (end of the
+        shard) closes every open bin too."""
+        if final:
+            self.closed.extend(b for b in self.bins.values() if b.parts)
+            self.bins.clear()
+        done, self.closed = self.closed, []
+        return done
+
+
+def _check_greedy_args(seq_len: int, oversized: str) -> None:
+    if seq_len <= 0:
+        raise ValueError("seq_len must be positive")
+    if oversized not in ("own", "split", "truncate"):
+        raise ValueError(f"unknown oversized policy '{oversized}'")
+
+
 def pack_greedy(
     df: DataFrame,
     n_tok_col: str,
@@ -176,7 +299,7 @@ def pack_greedy(
     group_cols: Optional[list[str]] = None,
     oversized: str = "own",
 ) -> DataFrame:
-    """No-split first-fit packing, partition-local.
+    """No-split first-fit packing, partition-local — the LAYOUT emitter.
 
     Each task packs its shard independently: docs are taken in shard
     order and appended to the current open sequence, opening a new one
@@ -210,11 +333,7 @@ def pack_greedy(
     count — fine for training layout where padding waste, not bin
     optimality, is the metric).
     """
-    if seq_len <= 0:
-        raise ValueError("seq_len must be positive")
-    if oversized not in ("own", "split", "truncate"):
-        raise ValueError(f"unknown oversized policy '{oversized}'")
-    policy = oversized
+    _check_greedy_args(seq_len, oversized)
     groups = list(group_cols or [])
     src = df.select(id_col, n_tok_col, *groups)
     if num_partitions:
@@ -227,106 +346,192 @@ def pack_greedy(
         f"{keep_fields}, seq_id long, seq_fill long, oversized int,"
         " part_start long, part_len long"
     )
-    max_local = 1 << _GREEDY_PID_SHIFT
-    max_pid = 1 << (63 - _GREEDY_PID_SHIFT)
 
     def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # mapInPandas yields all batches of ONE partition to one call,
-        # so packer state legally spans the whole shard.
-        pid = None
-        next_seq = 0  # pid-wide counter -> seq ids unique across groups
-        bins: dict = {}  # group key -> [seq_local, fill]
-
-        def fresh(key) -> list:
-            nonlocal next_seq
-            # enforced, not just documented: '|' would silently corrupt
-            # ids past these bounds (≥2^40 sequences in one shard or
-            # ≥2^23 partitions hit the sign bit)
-            if next_seq >= max_local:
-                raise ValueError(
-                    f"pack_greedy: shard emitted {next_seq} sequences "
-                    f"(max {max_local}); repartition the input finer"
-                )
-            # [seq_local, fill, n_docs] — n_docs distinguishes a truly
-            # fresh bin from one holding only zero-token docs (fill 0
-            # either way, but an "own" oversized doc must not share)
-            b = bins[key] = [next_seq, 0, 0]
-            next_seq += 1
-            return b
-
+        ff = None
         for pdf in batches:
             if pdf.empty:
                 continue
-            if pid is None:
-                # TaskContext partitionId — unique per shard.
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                if pid >= max_pid:
-                    raise ValueError(
-                        f"pack_greedy: partition id {pid} exceeds the "
-                        f"{max_pid} id-space bound"
-                    )
+            ff = ff or _FirstFit(seq_len, oversized)
             toks = pdf[n_tok_col].astype("int64").to_numpy()
             if groups:
                 keys = list(zip(*(pdf[g].to_numpy() for g in groups)))
             else:
-                keys = None
-            idx = []  # source row position per output row (1:N for split)
-            seq_ids = []
-            fills = []
-            over = []
-            part_starts = []
-            part_lens = []
-
-            def emit(i: int, b: list, start: int, length: int, big: bool) -> None:
-                idx.append(i)
-                seq_ids.append((pid << _GREEDY_PID_SHIFT) | b[0])
-                fills.append(b[1])
-                over.append(1 if big else 0)
-                part_starts.append(start)
-                part_lens.append(length)
-                b[1] += length
-                b[2] += 1
-
-            for i, t in enumerate(toks):
-                t = int(t)
-                key = keys[i] if keys is not None else ()
-                big = t > seq_len
-                b = bins.get(key)
-                if b is None:
-                    b = fresh(key)
-                if big and policy == "split":
-                    # fill the open bin's remainder, then full sequences;
-                    # the tail chunk leaves the bin open for later docs
-                    start = 0
-                    while start < t:
-                        if b[1] >= seq_len:
-                            b = fresh(key)
-                        take = min(t - start, seq_len - b[1])
-                        emit(i, b, start, take, True)
-                        start += take
-                    continue
-                eff = min(t, seq_len) if (big and policy == "truncate") else t
-                if big and policy == "own":
-                    if b[2] > 0:  # non-empty incl. zero-token occupants
-                        b = fresh(key)
-                    emit(i, b, 0, eff, True)
-                    # an oversized doc closes its sequence immediately
-                    b = fresh(key)
-                    continue
-                if b[1] + eff > seq_len:
-                    b = fresh(key)
-                emit(i, b, 0, eff, big)
-            out = pdf.iloc[idx].reset_index(drop=True)
-            out["seq_id"] = pd.Series(seq_ids, dtype="int64").to_numpy()
-            out["seq_fill"] = pd.Series(fills, dtype="int64").to_numpy()
-            out["oversized"] = pd.Series(over, dtype="int32").to_numpy()
-            out["part_start"] = pd.Series(part_starts, dtype="int64").to_numpy()
-            out["part_len"] = pd.Series(part_lens, dtype="int64").to_numpy()
+                keys = [()] * len(toks)
+            # one output row per part; ref = source row position (1:N
+            # for split)
+            parts = [
+                p for i, t in enumerate(toks) for p in ff.place(keys[i], int(t), i)
+            ]
+            idx, seq_ids, fills, starts, lens, bigs = (
+                zip(*parts) if parts else ((),) * 6
+            )
+            out = pdf.iloc[list(idx)].reset_index(drop=True)
+            out["seq_id"] = np.asarray(seq_ids, dtype="int64")
+            out["seq_fill"] = np.asarray(fills, dtype="int64")
+            out["oversized"] = np.asarray(bigs, dtype="int32")
+            out["part_start"] = np.asarray(starts, dtype="int64")
+            out["part_len"] = np.asarray(lens, dtype="int64")
             yield out
 
     return src.mapInPandas(pack, schema=schema)
+
+
+def pack_greedy_sequences(
+    df: DataFrame,
+    n_tok_col: str,
+    id_col: str,
+    seq_len: int,
+    tokens_col: str = "tokens",
+    num_partitions: Optional[int] = None,
+    group_cols: Optional[list[str]] = None,
+    oversized: str = "own",
+    pad_id: Optional[int] = None,
+) -> DataFrame:
+    """``pack_greedy`` + ``materialize_greedy_sequences`` in ONE
+    partition-local pass — the SEQUENCE emitter. Same first-fit loop,
+    same seq ids, same ``oversized`` / ``group_cols`` semantics; one row
+    per sequence:
+
+      (seq_id, *group_cols, tokens_col, n_docs, n_tokens, pad, parts)
+
+    ``parts`` is ``array<struct<id_col, n_tok_col, seq_fill, oversized,
+    part_start, part_len>>`` in fill order — the document boundaries a
+    loader needs for document-masked attention, and exactly the
+    ``pack_greedy`` rows of this sequence (``sequence_layout`` explodes
+    them back into that layout).
+
+    A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)``: each
+    sequence's token array is cut and concatenated with NumPy straight
+    from the Arrow list buffers (no per-token Python), the token slices
+    of bins still open carry across Arrow batches, and every open bin
+    is flushed at the end of the partition. ``pad_id`` (when given)
+    right-pads every sequence to exactly ``seq_len``; an ``"own"``
+    oversized sequence stays unpadded. No shuffle, no join: the
+    documents of one sequence already sit in one partition.
+    """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    _check_greedy_args(seq_len, oversized)
+    groups = list(group_cols or [])
+    src = df.select(id_col, n_tok_col, *groups, tokens_col)
+    if num_partitions:
+        src = src.repartition(num_partitions, id_col)
+    field = {f.name: f for f in src.schema.fields}
+    part_type = T.StructType([
+        field[id_col], field[n_tok_col],
+        T.StructField("seq_fill", T.LongType()),
+        T.StructField("oversized", T.IntegerType()),
+        T.StructField("part_start", T.LongType()),
+        T.StructField("part_len", T.LongType()),
+    ])
+    out_schema = T.StructType([
+        T.StructField("seq_id", T.LongType()),
+        *(field[g] for g in groups),
+        field[tokens_col],
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("n_tokens", T.LongType()),
+        T.StructField("pad", T.LongType()),
+        T.StructField("parts", T.ArrayType(part_type)),
+    ])
+    arrow_schema = to_arrow_schema(out_schema)
+    tok_type = arrow_schema.field(tokens_col).type
+    pad_dtype = tok_type.value_type.to_pandas_dtype()
+    part_fields = list(arrow_schema.field("parts").type.value_type)
+
+    def offsets(lengths: list) -> pa.Array:
+        return pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
+
+    def assemble(bins: list) -> pa.RecordBatch:
+        pieces, rows, seq_lens, n_docs, n_tokens = [], [], [], [], []
+        for b in bins:
+            n = 0
+            for (doc_id, n_tok, toks), _sid, fill, start, length, big in b.parts:
+                piece = toks[start:start + length]
+                pieces.append(piece)
+                n += len(piece)
+                rows.append((doc_id, n_tok, fill, int(big), start, length))
+            if pad_id is not None and n < seq_len:
+                pieces.append(np.full(seq_len - n, pad_id, dtype=pad_dtype))
+            seq_lens.append(max(n, seq_len) if pad_id is not None else n)
+            n_docs.append(len({p[0][0] for p in b.parts}))
+            n_tokens.append(n)
+        parts = pa.StructArray.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(zip(*rows), part_fields)],
+            fields=part_fields,
+        )
+        n_tokens_arr = np.asarray(n_tokens, dtype=np.int64)
+        columns = [
+            pa.array([b.seq_id for b in bins], type=pa.int64()),
+            *(
+                pa.array([b.key[j] for b in bins], type=arrow_schema.field(g).type)
+                for j, g in enumerate(groups)
+            ),
+            pa.ListArray.from_arrays(
+                offsets(seq_lens),
+                pa.array(np.concatenate(pieces), type=tok_type.value_type),
+                type=tok_type,
+            ),
+            pa.array(np.asarray(n_docs, dtype=np.int64)),
+            pa.array(n_tokens_arr),
+            pa.array(np.maximum(seq_len - n_tokens_arr, 0)),
+            pa.ListArray.from_arrays(offsets([len(b.parts) for b in bins]), parts),
+        ]
+        return pa.RecordBatch.from_arrays(columns, schema=arrow_schema)
+
+    def pack(batches):
+        ff = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ff = ff or _FirstFit(seq_len, oversized, keep_closed=True)
+            col = batch.column
+            ids = col(id_col).to_pylist()
+            n_toks = col(n_tok_col).to_pylist()
+            keys = (
+                list(zip(*(col(g).to_pylist() for g in groups)))
+                if groups else [()] * batch.num_rows
+            )
+            lists = col(tokens_col)
+            offs = lists.offsets.to_numpy()
+            vals = lists.values.to_numpy()
+            for i in range(batch.num_rows):
+                # a view into this batch's buffer: open bins keep it alive
+                doc = (ids[i], n_toks[i], vals[offs[i]:offs[i + 1]])
+                ff.place(keys[i], int(n_toks[i]), doc)
+            done = ff.drain()
+            if done:
+                yield assemble(done)
+        if ff is not None:
+            done = ff.drain(final=True)
+            if done:
+                yield assemble(done)
+
+    return src.mapInArrow(pack, out_schema)
+
+
+def sequence_layout(
+    seqs: DataFrame, group_cols: Optional[list[str]] = None
+) -> DataFrame:
+    """The ``pack_greedy`` layout of a ``pack_greedy_sequences`` table:
+    ``explode(parts)``, one row per part, columns in ``pack_greedy``
+    order. Narrow and codegen'd — it reads only ``seq_id``, the group
+    columns and ``parts``, never a token."""
+    groups = list(group_cols or [])
+    doc_col, n_tok_col = seqs.schema["parts"].dataType.elementType.names[:2]
+    p = seqs.select(*groups, "seq_id", F.explode("parts").alias("__p"))
+    return p.select(
+        F.col(f"__p.{doc_col}").alias(doc_col),
+        F.col(f"__p.{n_tok_col}").alias(n_tok_col),
+        *groups,
+        "seq_id",
+        *(
+            F.col(f"__p.{c}").alias(c)
+            for c in ("seq_fill", "oversized", "part_start", "part_len")
+        ),
+    )
 
 
 def pack_stats(packed: DataFrame, seq_len: int, n_tok_col: str = "n_tok") -> DataFrame:
@@ -400,7 +605,9 @@ def materialize_greedy_sequences(
     Scale shape: one shuffle join on ``id_col`` to fetch token arrays,
     one groupBy(seq_id) to assemble — both keyed, skew-free (a sequence
     holds ≤ seq_len tokens), no Python. Everything else is codegen
-    (slice / array_sort / flatten / concat).
+    (slice / array_sort / flatten / concat). For a layout computed in
+    the same job ``pack_greedy_sequences`` gives the same rows with
+    neither shuffle; this path materializes a layout committed earlier.
     """
     keep = list(keep_cols or [])
     lay_cols = [id_col, "seq_id", "seq_fill", "part_start", "part_len", *keep]

@@ -319,7 +319,9 @@ def semantic_dedup(
             norms = np.linalg.norm(x, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             xn = x / norms
-            sims = np.round(xn @ xn.T, 6)
+            # round-6 HALF-UP, the rule of the expr path (Spark round)
+            # and the oracle; np.round would round ties half-to-even
+            sims = np.floor(xn @ xn.T * 1e6 + 0.5) / 1e6
             # strictly-lower-triangular: sims[i, j<i] is against a
             # lower-id mate (ids are sorted above)
             tri = np.tril(sims >= thr, k=-1)

@@ -5,6 +5,8 @@ run inside whole-stage codegen and scale with executors."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -244,7 +246,8 @@ def add_line_dup_signals(
     "fraction of characters in duplicate lines"). Complements
     add_repetition_signals (word/bigram modes) with the line axis.
 
-    Lines are ``sep``-separated, trimmed, empties dropped. Emitted:
+    Lines are ``sep``-separated (``sep`` is literal, not a regex),
+    trimmed, empties dropped. Emitted:
 
     * ``total_lines`` / ``distinct_lines`` — longs,
     * ``dup_line_chars`` — characters in repeated occurrences beyond
@@ -255,7 +258,10 @@ def add_line_dup_signals(
     Row-local codegen: split/filter/array_distinct plus two aggregate
     folds — no explode, no shuffle; at 100 TB this runs at scan speed
     alongside the other quality columns."""
-    raw = F.split(F.col(text_col), sep)
+    # F.split takes a Java regex: escape its metacharacters so ``sep``
+    # is taken literally ("|" or "." must not match everywhere)
+    literal = re.sub(r"([\\^$.|?*+()\[\]{}])", r"\\\1", sep)
+    raw = F.split(F.col(text_col), literal)
     # the lambda must be explicitly unary: F.transform feeds (element,
     # index) to a two-parameter callable, and F.trim's optional second
     # parameter is the trim-character set — the index would silently

@@ -999,6 +999,12 @@ class SnapshotCatalog:
                 continue  # empty delta: no files on disk
             data_dir = os.path.join(self._table_dir(table), s, "data")
             mask = masks.get(s) or set()
+            # the manifest's stored schema IS the data's read-back schema:
+            # passing it skips Spark's per-read schema-inference job
+            reader = (
+                spark.read.schema(T.StructType.fromJson(m["schema"]))
+                if m.get("schema") else spark.read
+            )
             if m.get("bucket_by"):
                 parts.append(spark.table(self._register_bucketed(spark, table, s)))
             elif mask and m.get("partition_by"):
@@ -1010,11 +1016,9 @@ class SnapshotCatalog:
                 )
                 if not keep:
                     continue
-                parts.append(
-                    spark.read.option("basePath", data_dir).parquet(*keep)
-                )
+                parts.append(reader.option("basePath", data_dir).parquet(*keep))
             else:
-                parts.append(spark.read.parquet(data_dir))
+                parts.append(reader.parquet(data_dir))
             if deletes.get(s):
                 # broadcast LEFT ANTI keeps the part's reported
                 # partitioning (bucketed parts stay join-co-located)

@@ -1029,8 +1029,8 @@ class NorthStarPipeline:
         """Lay the routed table out as fixed-length training sequences —
         the step that turns routed pre-tokenized documents into the
         corpus's sequence table (the north-star deliverable). Greedy
-        no-split packing, partition-local (functions/packing.pack_greedy)
-        with ``group_cols=["sink"]``: a sequence never spans two sinks,
+        no-split packing, partition-local (functions/packing) with
+        ``group_cols=["sink"]``: a sequence never spans two sinks,
         quarantined rows are excluded, and packing parallelizes without
         any shuffle because cross-shard sequence order is irrelevant for
         training layout.
@@ -1046,21 +1046,33 @@ class NorthStarPipeline:
         (flagged solo sequence), "split" (boundary-cut chunks, zero
         waste), "truncate" (see pack_greedy).
 
-        ``materialize=True`` additionally writes the ``sequences``
-        table — one row per sequence with the PHYSICAL token array
-        (seq_id, sink, tokens, n_docs, n_tokens, pad), every doc's
-        tokens flattened in seq_fill order and right-padded with
-        ``pad_id`` to exactly seq_len (pad_id=None skips padding). This
-        is the table a training loader consumes; per-row token-array
-        equality against the routed docs is pinned in
-        tests/test_packing.py.
+        ``materialize=True`` also writes the ``sequences`` table — one
+        row per sequence with the PHYSICAL token array (seq_id, sink,
+        tokens, n_docs, n_tokens, pad, parts), every doc's tokens in
+        seq_fill order, right-padded with ``pad_id`` to exactly seq_len
+        (pad_id=None skips padding). This is the table a training loader
+        consumes; ``parts`` (doc_id, n_tok, seq_fill, oversized,
+        part_start, part_len per document) gives the document boundaries
+        for document-masked attention. Commit order: ``sequences`` first
+        (packed and assembled in one partition-local pass,
+        pack_greedy_sequences — no token shuffle, no join), then
+        ``packed`` as ``explode(parts)`` of that committed snapshot, so
+        the two tables agree by construction. Resume:
+          * both committed (packed derived from the current sequences
+            snapshot) — no-op;
+          * sequences committed, packed missing — packed is derived from
+            the committed sequences;
+          * packed committed by an earlier ``materialize=False`` call,
+            sequences missing — sequences are written, then a fresh
+            packed snapshot derived from them is committed.
 
-        Returns {"layout": manifest, "sequences": manifest-or-None}
-        merged into the layout manifest dict for backward compatibility,
-        or None when everything is already committed (resume)."""
+        Returns the written packed manifest (with a ``"sequences"`` key
+        holding the sequences manifest, or None when it was already
+        committed), or None when everything is already committed."""
         from qsvspark.functions.packing import (
-            materialize_greedy_sequences,
             pack_greedy,
+            pack_greedy_sequences,
+            sequence_layout,
         )
 
         snap = self.catalog.current_snapshot("routed")
@@ -1070,42 +1082,58 @@ class NorthStarPipeline:
         routed_fp = man.get("input_fingerprint") or snap
         policy_tag = "" if oversized == "own" else f"|ov={oversized}"
         pack_fp = f"{routed_fp}|pack|seq_len={seq_len}{policy_tag}"
-        layout_manifest = None
-        if not self.catalog.find_committed("packed", pack_fp):
-            src = self.routed()
-            if self.quarantine:
-                src = src.where(F.col("sink") != QUARANTINE_SINK)
+        src = self.routed()
+        if self.quarantine:
+            src = src.where(F.col("sink") != QUARANTINE_SINK)
+        packed_write = {
+            "input_fingerprint": pack_fp,
+            "partition_by": "sink",
+            "count_by": "sink",
+        }
+        layout_snap = self.catalog.find_committed("packed", pack_fp)
+        if not materialize:
+            if layout_snap:
+                return None
             packed = pack_greedy(
                 src, "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized,
             )
-            layout_manifest = self.catalog.write(
-                packed,
-                "packed",
-                input_fingerprint=pack_fp,
+            return self.catalog.write(
+                packed, "packed",
                 lineage={"stages": ["pack"], "inputs": [routed_fp]},
+                **packed_write,
+            )
+        seq_fp = f"{pack_fp}|sequences|pad={pad_id}"
+        seq_manifest = None
+        seq_snap = self.catalog.find_committed("sequences", seq_fp)
+        if seq_snap is None:
+            seqs = pack_greedy_sequences(
+                src, "n_tok", "doc_id", seq_len, group_cols=["sink"],
+                oversized=oversized, pad_id=pad_id,
+            )
+            seq_manifest = self.catalog.write(
+                seqs,
+                "sequences",
+                input_fingerprint=seq_fp,
+                lineage={"stages": ["pack", "materialize"], "inputs": [routed_fp]},
                 partition_by="sink",
                 count_by="sink",
             )
-        if materialize:
-            seq_fp = f"{pack_fp}|sequences|pad={pad_id}"
-            if not self.catalog.find_committed("sequences", seq_fp):
-                docs = self.routed().select("doc_id", "tokens")
-                layout = self.catalog.read(self.spark, "packed")
-                seqs = materialize_greedy_sequences(
-                    layout, docs, seq_len,
-                    keep_cols=["sink"], pad_id=pad_id,
-                )
-                seq_manifest = self.catalog.write(
-                    seqs,
-                    "sequences",
-                    input_fingerprint=seq_fp,
-                    lineage={"stages": ["materialize"], "inputs": [pack_fp]},
-                    partition_by="sink",
-                    count_by="sink",
-                )
-                layout_manifest = dict(layout_manifest or {})
-                layout_manifest["sequences"] = seq_manifest
+            seq_snap = seq_manifest["snapshot"]
+        elif layout_snap and (
+            self.catalog.manifest("packed", layout_snap)["lineage"].get("sequences")
+            == seq_snap
+        ):
+            return None
+        layout = sequence_layout(
+            self.catalog.read(self.spark, "sequences", seq_snap), ["sink"]
+        )
+        layout_manifest = self.catalog.write(
+            layout, "packed",
+            lineage={"stages": ["pack"], "inputs": [seq_fp], "sequences": seq_snap},
+            **packed_write,
+        )
+        layout_manifest["sequences"] = seq_manifest
         return layout_manifest
 
     # -- results ------------------------------------------------------

@@ -108,7 +108,9 @@ class TestEmitArtifacts:
         assert parsed["run_id"] == "run-sig-test"
         assert parsed["partial"] is True
         assert parsed["sections_done"] == ["headline"]
-        assert parsed["errors_count"] == 1
+        # the kill is reported on its own, not as a query error
+        assert parsed["errors_count"] == 0
+        assert parsed["signal"].startswith("killed by signal 15")
         assert json.load(open(detail_path))["errors"]["__signal__"].startswith(
             "killed by signal 15"
         )
@@ -141,3 +143,53 @@ class TestEmitArtifacts:
         assert "queries" not in parsed
         # the detail file keeps EVERYTHING regardless of the line cap
         assert "queries" in json.load(open(detail_path))
+
+    def test_full_summary_line_fits_1500_bytes(self, tmp_path, capsys):
+        """The flushed summary line of a run with EVERY section done stays
+        within 1,500 B — inside a 2,000-byte stdout tail capture with
+        room to spare. Per-query maps are dropped first; totals, the
+        pipeline rates and the scaling block survive."""
+        names = [f"query_name_{i:02d}" for i in range(19)]
+        state = {
+            "run_id": "run-cap-test", "sf": 0.1,
+            "sections_done": ["headline", "extensions", "pipeline", "skew",
+                              "sf1", "scaling"],
+            "timings": {n: 1.234 for n in names[:15]},
+            "steady": {n: 0.567 for n in names[:15]},
+            "ext_timings": {n: 1.234 for n in names},
+            "ext_steady": {n: 0.567 for n in names},
+            "query_errors": {"query_name_03": "x" * 150},
+            "section_probes": {"before_headline_gbps": 19.1,
+                               "between_gbps": 18.2,
+                               "after_extensions_gbps": 18.3},
+            "pipeline": {"rows": 1000000, "seconds": 5.4,
+                         "sequences_per_sec": 185000.0,
+                         "increment": {"sequences_per_sec": 90000.0},
+                         "pack": {"rows_per_sec": 400000.0},
+                         "sequences": {"tokens_per_sec": 29000000.0}},
+            "skew": {"rows": 2000000,
+                     "agg": {"speedup": 1.1, "skew_neutral_by_plan": True,
+                             "results_match": True},
+                     "join": {"speedup": 4.2, "results_match": True}},
+            "sf1": {"rows_tokens": 5000000,
+                    "pipeline": {"sequences_per_sec": 210000.0},
+                    "increment": {"sequences_per_sec": 100000.0},
+                    "per_row_rate_ratio": {n: 1.02 for n in names[:8]}},
+            "scaling": {"rows": 4000000, "scaling_efficiency": 0.863,
+                        "counts_match": True, "phase": "clean",
+                        "hw_pair_efficiency": 0.91, "job_vs_hw_ceiling": 0.95,
+                        "bandwidth_capped": False,
+                        "pairs": {"1v4": {"scaling_efficiency": 0.86},
+                                  "8v32": {"scaling_efficiency": 0.71}},
+                        "errors": []},
+        }
+        line = bench._flush_state(state, str(tmp_path / "d.json"), final=True)
+        assert len(line.encode()) <= 1500
+        parsed = json.loads(line)
+        assert "queries" not in parsed and "extensions" not in parsed
+        assert parsed["scaling"]["scaling_efficiency"] == 0.863
+        assert parsed["pipeline"]["sequences_per_sec"] == 185000.0
+        assert parsed["errors_count"] == 1 and parsed["value"] > 0
+        # the detail file keeps every per-query map
+        assert "queries" in json.load(open(tmp_path / "d.json"))
+

@@ -487,6 +487,20 @@ class TestLineDups:
         assert out[2]["dup_line_chars"] == 0 and out[2]["dup_line_frac"] == 0.0
         assert out[3]["total_lines"] == 0 and out[3]["dup_line_char_frac"] == 0.0
 
+    @pytest.mark.parametrize("sep", ["|", "."])
+    def test_sep_is_literal(self, spark, sep):
+        """A regex metacharacter as ``sep`` splits on itself only: "|"
+        as a regex is an empty alternation (a split between every
+        character), "." matches every character."""
+        from qsvspark.functions import add_line_dup_signals
+
+        text = sep.join(["ab", "cd", "ab", "e"])
+        r = add_line_dup_signals(
+            spark.createDataFrame([(0, text)], ["doc_id", "text"]), sep=sep
+        ).first()
+        assert (r["total_lines"], r["distinct_lines"]) == (4, 3)
+        assert r["dup_line_chars"] == 2
+
 
 class TestVocabTopk:
     def test_topk_deterministic_ties(self, spark):
@@ -572,6 +586,20 @@ class TestSemanticDedup:
         }
         assert expr == blas and len(expr) == emb.count()
         assert any(not k for (_, _, k) in expr)  # some dups exist
+
+    def test_round6_tie_same_verdict_on_both_paths(self, spark):
+        """cos = 0.9000005 exactly (b's norm evaluates to 1.0): round-6
+        half-up gives 0.900001 and meets the threshold; half-to-even
+        would give 0.9 and keep the duplicate. Both paths drop it."""
+        from qsvspark.functions import semantic_dedup
+
+        rows = [(0, [1.0, 0.0]), (1, [0.9000005, 0.4358888619817557])]
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        for method in ("expr", "blas"):
+            out = semantic_dedup(df, [[1.0, 0.0]], threshold=0.900001, method=method)
+            assert {r["vec_id"]: r["kept"] for r in out.collect()} == {
+                0: True, 1: False,
+            }, method
 
     def test_cross_cluster_dups_not_compared(self, spark):
         from qsvspark.functions import semantic_dedup

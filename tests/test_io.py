@@ -246,6 +246,36 @@ class TestSnapshotCatalog:
         # older snapshot still readable (time travel)
         assert cat.read(spark, "t", "snap-00001").count() == 3
 
+    def test_read_uses_stored_schema(self, spark, simple_df, tmp_path):
+        cat = SnapshotCatalog(str(tmp_path / "wh4"))
+        cat.write(simple_df, "flat")
+        cat.write(simple_df, "byk", partition_by="str", count_by="str")
+        for table in ("flat", "byk"):
+            df = _assert_read_submits_no_job(spark, cat, table)
+            assert sorted(map(tuple, df.select(*simple_df.columns).collect())) == sorted(
+                map(tuple, simple_df.collect())
+            )
+
+
+def _last_job_id(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _assert_read_submits_no_job(spark, cat, table, snap=None):
+    """A snapshot read plans against the manifest's stored schema: no
+    Spark job (no schema inference) before an action, and every part's
+    schema equals what inference over its data directory gives."""
+    before = _last_job_id(spark)
+    parts = cat.read_parts(spark, table, snap)
+    df = cat.read(spark, table, snap)
+    assert _last_job_id(spark) == before
+    chain = cat._chain(table, snap or cat.current_snapshot(table))  # noqa: SLF001
+    dirs = [os.path.join(cat.root, table, s, "data") for s in chain]
+    assert len(parts) == len(dirs)
+    for part, d in zip(parts, dirs):
+        assert part.schema == spark.read.parquet(d).schema
+    return df
+
 
 class TestCompaction:
     """SnapshotCatalog.compact = Iceberg rewrite_data_files: bin-pack a
@@ -585,6 +615,14 @@ class TestPartitionOverwrite:
     def test_chain_read_masks_replaced_partition(self, spark, chain):
         cat, _, _ = chain
         rows = sorted((r.k, r.v) for r in cat.read(spark, "t").collect())
+        assert rows == [("a", 1), ("a", 2), ("a", 5), ("b", 99)]
+
+    def test_masked_chain_read_uses_stored_schema(self, spark, chain):
+        cat, _, _ = chain
+        # the parent's masked branch reads its surviving partition dirs
+        # (basePath) under the stored schema too
+        df = _assert_read_submits_no_job(spark, cat, "t")
+        rows = sorted((r.k, r.v) for r in df.collect())
         assert rows == [("a", 1), ("a", 2), ("a", 5), ("b", 99)]
 
     def test_cumulative_accounting_reflects_replacement(self, chain):

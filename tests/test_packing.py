@@ -19,8 +19,10 @@ from qsvspark.functions import (
     materialize_greedy_sequences,
     pack_chunked,
     pack_greedy,
+    pack_greedy_sequences,
     pack_stats,
     scrub_pii,
+    sequence_layout,
     word_ngrams,
 )
 
@@ -314,6 +316,69 @@ def test_materialize_greedy_keep_cols_and_no_pad(spark):
         firsts = {t // 1000 for t in r["tokens"]}
         assert {doc_sink[d] for d in firsts} == {r["sink"]}
         assert len(r["tokens"]) == r["n_tokens"]  # pad_id=None: no padding
+
+
+def _random_token_docs(spark, seed, n=150, parts=3):
+    """Seeded ragged corpus in fixed partitions (row order within a
+    partition is what the first-fit loop sees): zero-token docs,
+    oversized docs up to 3x SEQ_LEN, two sinks, token j of doc i =
+    i*1000+j."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        r = rng.random()
+        if r < 0.05:
+            tok = 0
+        elif r < 0.15:
+            tok = rng.randint(SEQ_LEN + 1, 3 * SEQ_LEN)
+        else:
+            tok = rng.randint(1, SEQ_LEN)
+        sink = f"s{rng.randint(0, 1)}"
+        rows.append((i, tok, sink, [i * 1000 + j for j in range(tok)]))
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, parts),
+        "doc_id long, n_tok long, sink string, tokens array<int>",
+    )
+
+
+@pytest.mark.parametrize("group_cols", [None, ["sink"]])
+@pytest.mark.parametrize("pad_id", [-1, None])
+@pytest.mark.parametrize("policy", ["own", "split", "truncate"])
+def test_pack_greedy_sequences_matches_layout_plus_materialize(
+    spark, policy, pad_id, group_cols
+):
+    """The one-pass sequence emitter equals the two-step path
+    (pack_greedy layout, then the join + groupBy materializer) on the
+    same input frame: same seq ids, token arrays, counts and padding,
+    and its ``parts`` explode back into exactly the pack_greedy layout."""
+    df = _random_token_docs(spark, seed=f"{policy}|{pad_id}|{group_cols}")
+    keep = list(group_cols or [])
+    layout = pack_greedy(
+        df, "n_tok", "doc_id", SEQ_LEN, group_cols=group_cols, oversized=policy
+    )
+    want_rows = materialize_greedy_sequences(
+        layout, df, SEQ_LEN, keep_cols=keep, pad_id=pad_id
+    ).collect()
+    seqs = pack_greedy_sequences(
+        df, "n_tok", "doc_id", SEQ_LEN, group_cols=group_cols,
+        oversized=policy, pad_id=pad_id,
+    )
+    got_rows = seqs.collect()
+    cols = ["seq_id", *keep, "tokens", "n_docs", "n_tokens", "pad"]
+    want = {r["seq_id"]: tuple(r[c] for c in cols) for r in want_rows}
+    got = {r["seq_id"]: tuple(r[c] for c in cols) for r in got_rows}
+    assert len(got) == len(got_rows)  # one row per sequence
+    assert got == want
+    # parts are in fill order and are exactly the layout rows
+    for r in got_rows:
+        fills = [p["seq_fill"] for p in r["parts"]]
+        assert fills == sorted(fills)
+    assert sorted(map(tuple, sequence_layout(seqs, keep).collect())) == sorted(
+        map(tuple, layout.collect())
+    )
+    assert sequence_layout(seqs, keep).columns == layout.columns
 
 
 def test_materialize_chunked_sequences_exact(spark):

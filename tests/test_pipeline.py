@@ -7,6 +7,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -905,6 +907,41 @@ class TestPackSinks:
         assert pipe.pack_sinks(seq_len=self.SEQ_LEN, oversized="split") is None
 
 
+def _assert_sequences_token_exact_vs_packed(pipe, seq_len, pad):
+    """Rebuild every committed sequence from the committed packed
+    layout + routed docs and compare token arrays row by row."""
+    from qsvspark.pipeline import QUARANTINE_SINK
+
+    seqs = pipe.catalog.read(pipe.spark, "sequences")
+    layout = pipe.catalog.read(pipe.spark, "packed").collect()
+    docs = {
+        r["doc_id"]: r["tokens"]
+        for r in pipe.routed()
+        .where(f"sink != '{QUARANTINE_SINK}'")
+        .select("doc_id", "tokens")
+        .collect()
+    }
+    # rebuild every sequence from the committed layout + routed docs
+    by_seq: dict = {}
+    for r in layout:
+        by_seq.setdefault(r["seq_id"], []).append(r)
+    got = {r["seq_id"]: r for r in seqs.collect()}
+    assert sorted(got) == sorted(by_seq)
+    for sid, rows in by_seq.items():
+        rows.sort(key=lambda r: r["seq_fill"])
+        toks: list = []
+        for r in rows:
+            toks.extend(
+                docs[r["doc_id"]][r["part_start"]: r["part_start"] + r["part_len"]]
+            )
+        g = got[sid]
+        assert g["n_tokens"] == len(toks)
+        assert g["tokens"] == toks + [pad] * (seq_len - len(toks))
+        assert len(g["tokens"]) == seq_len  # no routed doc exceeds seq_len
+        assert g["pad"] == seq_len - len(toks)
+        assert {r["sink"] for r in rows} == {g["sink"]}  # purity
+
+
 class TestPackSinksMaterialize:
     """pack_sinks(materialize=True): the physical sequence table — the
     north-star deliverable (VERDICT r4 #4). Per-row token-array equality
@@ -929,36 +966,7 @@ class TestPackSinksMaterialize:
         return p
 
     def test_sequences_token_exact_vs_routed(self, pipe):
-        from qsvspark.pipeline import QUARANTINE_SINK
-
-        seqs = pipe.catalog.read(pipe.spark, "sequences")
-        layout = pipe.catalog.read(pipe.spark, "packed").collect()
-        docs = {
-            r["doc_id"]: r["tokens"]
-            for r in pipe.routed()
-            .where(f"sink != '{QUARANTINE_SINK}'")
-            .select("doc_id", "tokens")
-            .collect()
-        }
-        # rebuild every sequence from the committed layout + routed docs
-        by_seq: dict = {}
-        for r in layout:
-            by_seq.setdefault(r["seq_id"], []).append(r)
-        got = {r["seq_id"]: r for r in seqs.collect()}
-        assert sorted(got) == sorted(by_seq)
-        for sid, rows in by_seq.items():
-            rows.sort(key=lambda r: r["seq_fill"])
-            toks: list = []
-            for r in rows:
-                toks.extend(
-                    docs[r["doc_id"]][r["part_start"]: r["part_start"] + r["part_len"]]
-                )
-            g = got[sid]
-            assert g["n_tokens"] == len(toks)
-            assert g["tokens"] == toks + [self.PAD] * (self.SEQ_LEN - len(toks))
-            assert len(g["tokens"]) == self.SEQ_LEN  # split: none oversized
-            assert g["pad"] == self.SEQ_LEN - len(toks)
-            assert {r["sink"] for r in rows} == {g["sink"]}  # purity
+        _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
 
     def test_token_conservation(self, pipe):
         from pyspark.sql import functions as F  # noqa: PLC0415
@@ -983,3 +991,49 @@ class TestPackSinksMaterialize:
             )
             is None
         )
+
+
+class TestPackSinksLayoutThenMaterialize:
+    """pack_sinks() then pack_sinks(materialize=True): the second call
+    writes ``sequences`` and commits a fresh ``packed`` snapshot derived
+    from it; a lost ``packed`` is re-derived from the committed
+    ``sequences`` without rewriting them."""
+
+    SEQ_LEN = 512
+    PAD = 0
+
+    @pytest.fixture(scope="class")
+    def pipe(self, spark, tmp_path_factory):
+        from qsvspark.pipeline import NorthStarPipeline
+
+        wh = str(tmp_path_factory.mktemp("layoutseqwh"))
+        p = NorthStarPipeline(spark, wh)
+        p.run(synth_tokens(spark, 1500, seed=35), input_fingerprint="layout-seq-test")
+        first = p.pack_sinks(seq_len=self.SEQ_LEN)
+        assert first is not None and "sequences" not in first
+        m = p.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
+        assert m is not None and m["sequences"] is not None
+        assert m["snapshot"] != first["snapshot"]  # fresh packed snapshot
+        assert m["lineage"]["sequences"] == m["sequences"]["snapshot"]
+        return p
+
+    def test_sequences_token_exact_vs_packed(self, pipe):
+        _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
+
+    def test_resume_is_noop_both_ways(self, pipe):
+        assert pipe.pack_sinks(seq_len=self.SEQ_LEN) is None
+        assert (
+            pipe.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
+            is None
+        )
+
+    def test_lost_packed_is_derived_from_committed_sequences(self, pipe):
+        import shutil
+
+        seq_snap = pipe.catalog.current_snapshot("sequences")
+        shutil.rmtree(os.path.join(pipe.catalog.root, "packed"))
+        m = pipe.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
+        assert m is not None and m["sequences"] is None  # not rewritten
+        assert pipe.catalog.current_snapshot("sequences") == seq_snap
+        assert m["lineage"]["sequences"] == seq_snap
+        _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)

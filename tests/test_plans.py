@@ -188,3 +188,35 @@ class TestPipelineDedupPlan:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "LeftAnti" in plan
+
+
+class TestSequencePackingPlan:
+    def test_sequences_write_has_no_exchange_or_join(self, spark, tmp_path, monkeypatch):
+        """pack_sinks(materialize=True) packs and assembles sequences in
+        one partition-local pass: the ``sequences`` write plan holds no
+        shuffle and no join (the documents of one sequence already sit
+        in one routed scan partition), and the ``packed`` layout derived
+        from it reads only ``parts`` — no token column, no Python."""
+        from qsvspark.pipeline.northstar import NorthStarPipeline
+        from qsvspark.pipeline.tokens import synth_tokens
+
+        p = NorthStarPipeline(spark, str(tmp_path / "wh"))
+        p.run(synth_tokens(spark, 300, seed=7), input_fingerprint="plan-test")
+        written = {}
+        real_write = p.catalog.write
+
+        def spy(df, table, **kw):
+            written[table] = df
+            return real_write(df, table, **kw)
+
+        monkeypatch.setattr(p.catalog, "write", spy)
+        p.pack_sinks(seq_len=512, materialize=True)
+        seq_plan = plan_of(written["sequences"])
+        assert "MapInArrow" in seq_plan
+        assert "Exchange" not in seq_plan
+        assert "Join" not in seq_plan
+        layout_plan = plan_of(written["packed"])
+        assert "Exchange" not in layout_plan
+        assert "Python" not in layout_plan and "MapIn" not in layout_plan
+        read = [l for l in layout_plan.splitlines() if "ReadSchema" in l]
+        assert read and all("tokens:" not in l for l in read)
