@@ -197,11 +197,11 @@ class _FirstFit:
     """The first-fit loop of one shard — the only copy; both greedy
     emitters drive it. One open bin per group key, a shard-wide sequence
     counter (seq ids unique across groups) and the ``pid << 40`` id
-    space. ``place`` lays one document out and returns its parts; with
-    ``keep_closed`` every non-empty bin the loop leaves behind is queued
-    on ``closed`` for the sequence emitter to assemble."""
+    space. ``place`` lays one document out and returns its parts; every
+    non-empty bin the loop leaves behind is queued on ``closed`` until
+    the next ``drain``."""
 
-    def __init__(self, seq_len: int, policy: str, keep_closed: bool = False):
+    def __init__(self, seq_len: int, policy: str):
         from pyspark import TaskContext
 
         # mapIn* yields all batches of ONE partition to one call, so the
@@ -217,7 +217,7 @@ class _FirstFit:
         self.seq_len, self.policy = seq_len, policy
         self.next_seq = 0
         self.bins: dict = {}
-        self.closed: Optional[list] = [] if keep_closed else None
+        self.closed: list = []
 
     def _fresh(self, key) -> _Bin:
         # enforced, not just documented: '|' would silently corrupt ids
@@ -229,7 +229,7 @@ class _FirstFit:
                 f"(max {_MAX_LOCAL}); repartition the input finer"
             )
         old = self.bins.get(key)
-        if old is not None and old.parts and self.closed is not None:
+        if old is not None and old.parts:
             self.closed.append(old)
         b = self.bins[key] = _Bin(key, self.base | self.next_seq)
         self.next_seq += 1
@@ -363,6 +363,7 @@ def pack_greedy(
             parts = [
                 p for i, t in enumerate(toks) for p in ff.place(keys[i], int(t), i)
             ]
+            ff.drain()  # the layout needs only the parts ``place`` returns
             idx, seq_ids, fills, starts, lens, bigs = (
                 zip(*parts) if parts else ((),) * 6
             )
@@ -377,13 +378,15 @@ def pack_greedy(
     return src.mapInPandas(pack, schema=schema)
 
 
+# the columns pack_greedy_sequences adds around the group columns
+_SEQUENCE_COLS = ("seq_id", "tokens", "n_docs", "n_tokens", "pad", "parts")
+
+
 def pack_greedy_sequences(
     df: DataFrame,
     n_tok_col: str,
     id_col: str,
     seq_len: int,
-    tokens_col: str = "tokens",
-    num_partitions: Optional[int] = None,
     group_cols: Optional[list[str]] = None,
     oversized: str = "own",
     pad_id: Optional[int] = None,
@@ -393,7 +396,7 @@ def pack_greedy_sequences(
     same seq ids, same ``oversized`` / ``group_cols`` semantics; one row
     per sequence:
 
-      (seq_id, *group_cols, tokens_col, n_docs, n_tokens, pad, parts)
+      (seq_id, *group_cols, tokens, n_docs, n_tokens, pad, parts)
 
     ``parts`` is ``array<struct<id_col, n_tok_col, seq_fill, oversized,
     part_start, part_len>>`` in fill order — the document boundaries a
@@ -401,11 +404,12 @@ def pack_greedy_sequences(
     ``pack_greedy`` rows of this sequence (``sequence_layout`` explodes
     them back into that layout).
 
-    A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)``: each
-    sequence's token array is cut and concatenated with NumPy straight
-    from the Arrow list buffers (no per-token Python), the token slices
-    of bins still open carry across Arrow batches, and every open bin
-    is flushed at the end of the partition. ``pad_id`` (when given)
+    A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)`` (the token
+    array column is always ``tokens``): each sequence's token array is
+    cut and concatenated with NumPy straight from the Arrow list buffers
+    (no per-token Python), the token slices of bins still open carry
+    across Arrow batches, and every open bin is flushed at the end of
+    the partition. ``pad_id`` (when given)
     right-pads every sequence to exactly ``seq_len``; an ``"own"``
     oversized sequence stays unpadded. No shuffle, no join: the
     documents of one sequence already sit in one partition.
@@ -416,9 +420,7 @@ def pack_greedy_sequences(
 
     _check_greedy_args(seq_len, oversized)
     groups = list(group_cols or [])
-    src = df.select(id_col, n_tok_col, *groups, tokens_col)
-    if num_partitions:
-        src = src.repartition(num_partitions, id_col)
+    src = df.select(id_col, n_tok_col, *groups, "tokens")
     field = {f.name: f for f in src.schema.fields}
     part_type = T.StructType([
         field[id_col], field[n_tok_col],
@@ -430,14 +432,14 @@ def pack_greedy_sequences(
     out_schema = T.StructType([
         T.StructField("seq_id", T.LongType()),
         *(field[g] for g in groups),
-        field[tokens_col],
+        field["tokens"],
         T.StructField("n_docs", T.LongType()),
         T.StructField("n_tokens", T.LongType()),
         T.StructField("pad", T.LongType()),
         T.StructField("parts", T.ArrayType(part_type)),
     ])
     arrow_schema = to_arrow_schema(out_schema)
-    tok_type = arrow_schema.field(tokens_col).type
+    tok_type = arrow_schema.field("tokens").type
     pad_dtype = tok_type.value_type.to_pandas_dtype()
     part_fields = list(arrow_schema.field("parts").type.value_type)
 
@@ -486,7 +488,7 @@ def pack_greedy_sequences(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ff = ff or _FirstFit(seq_len, oversized, keep_closed=True)
+            ff = ff or _FirstFit(seq_len, oversized)
             col = batch.column
             ids = col(id_col).to_pylist()
             n_toks = col(n_tok_col).to_pylist()
@@ -494,7 +496,7 @@ def pack_greedy_sequences(
                 list(zip(*(col(g).to_pylist() for g in groups)))
                 if groups else [()] * batch.num_rows
             )
-            lists = col(tokens_col)
+            lists = col("tokens")
             offs = lists.offsets.to_numpy()
             vals = lists.values.to_numpy()
             for i in range(batch.num_rows):
@@ -512,14 +514,13 @@ def pack_greedy_sequences(
     return src.mapInArrow(pack, out_schema)
 
 
-def sequence_layout(
-    seqs: DataFrame, group_cols: Optional[list[str]] = None
-) -> DataFrame:
+def sequence_layout(seqs: DataFrame) -> DataFrame:
     """The ``pack_greedy`` layout of a ``pack_greedy_sequences`` table:
     ``explode(parts)``, one row per part, columns in ``pack_greedy``
     order. Narrow and codegen'd — it reads only ``seq_id``, the group
-    columns and ``parts``, never a token."""
-    groups = list(group_cols or [])
+    columns (every column the emitter does not add itself) and
+    ``parts``, never a token."""
+    groups = [c for c in seqs.columns if c not in _SEQUENCE_COLS]
     doc_col, n_tok_col = seqs.schema["parts"].dataType.elementType.names[:2]
     p = seqs.select(*groups, "seq_id", F.explode("parts").alias("__p"))
     return p.select(

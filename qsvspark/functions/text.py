@@ -258,10 +258,9 @@ def add_line_dup_signals(
     Row-local codegen: split/filter/array_distinct plus two aggregate
     folds — no explode, no shuffle; at 100 TB this runs at scan speed
     alongside the other quality columns."""
-    # F.split takes a Java regex: escape its metacharacters so ``sep``
-    # is taken literally ("|" or "." must not match everywhere)
-    literal = re.sub(r"([\\^$.|?*+()\[\]{}])", r"\\\1", sep)
-    raw = F.split(F.col(text_col), literal)
+    # F.split takes a Java regex; a backslash before a non-alphabetic
+    # character is literal there too, so re.escape makes ``sep`` literal
+    raw = F.split(F.col(text_col), re.escape(sep))
     # the lambda must be explicitly unary: F.transform feeds (element,
     # index) to a two-parameter callable, and F.trim's optional second
     # parameter is the trim-character set — the index would silently

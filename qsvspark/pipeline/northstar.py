@@ -1082,9 +1082,15 @@ class NorthStarPipeline:
         routed_fp = man.get("input_fingerprint") or snap
         policy_tag = "" if oversized == "own" else f"|ov={oversized}"
         pack_fp = f"{routed_fp}|pack|seq_len={seq_len}{policy_tag}"
-        src = self.routed()
-        if self.quarantine:
-            src = src.where(F.col("sink") != QUARANTINE_SINK)
+
+        def source() -> DataFrame:
+            # read only where a branch packs: a resume that finds its
+            # tables committed never resolves the routed snapshot chain
+            src = self.routed()
+            if self.quarantine:
+                src = src.where(F.col("sink") != QUARANTINE_SINK)
+            return src
+
         packed_write = {
             "input_fingerprint": pack_fp,
             "partition_by": "sink",
@@ -1095,7 +1101,7 @@ class NorthStarPipeline:
             if layout_snap:
                 return None
             packed = pack_greedy(
-                src, "n_tok", "doc_id", seq_len, group_cols=["sink"],
+                source(), "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized,
             )
             return self.catalog.write(
@@ -1108,7 +1114,7 @@ class NorthStarPipeline:
         seq_snap = self.catalog.find_committed("sequences", seq_fp)
         if seq_snap is None:
             seqs = pack_greedy_sequences(
-                src, "n_tok", "doc_id", seq_len, group_cols=["sink"],
+                source(), "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized, pad_id=pad_id,
             )
             seq_manifest = self.catalog.write(
@@ -1125,9 +1131,7 @@ class NorthStarPipeline:
             == seq_snap
         ):
             return None
-        layout = sequence_layout(
-            self.catalog.read(self.spark, "sequences", seq_snap), ["sink"]
-        )
+        layout = sequence_layout(self.catalog.read(self.spark, "sequences", seq_snap))
         layout_manifest = self.catalog.write(
             layout, "packed",
             lineage={"stages": ["pack"], "inputs": [seq_fp], "sequences": seq_snap},

@@ -375,10 +375,10 @@ def test_pack_greedy_sequences_matches_layout_plus_materialize(
     for r in got_rows:
         fills = [p["seq_fill"] for p in r["parts"]]
         assert fills == sorted(fills)
-    assert sorted(map(tuple, sequence_layout(seqs, keep).collect())) == sorted(
+    assert sorted(map(tuple, sequence_layout(seqs).collect())) == sorted(
         map(tuple, layout.collect())
     )
-    assert sequence_layout(seqs, keep).columns == layout.columns
+    assert sequence_layout(seqs).columns == layout.columns
 
 
 def test_materialize_chunked_sequences_exact(spark):

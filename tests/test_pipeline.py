@@ -1020,19 +1020,35 @@ class TestPackSinksLayoutThenMaterialize:
     def test_sequences_token_exact_vs_packed(self, pipe):
         _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
 
-    def test_resume_is_noop_both_ways(self, pipe):
+    @staticmethod
+    def _forbid_routed_read(pipe, monkeypatch):
+        def routed():
+            raise AssertionError("resume read the routed table")
+
+        monkeypatch.setattr(pipe, "routed", routed)
+
+    def test_resume_is_noop_both_ways(self, pipe, monkeypatch):
+        # nothing to pack: the routed snapshot chain is never resolved
+        self._forbid_routed_read(pipe, monkeypatch)
         assert pipe.pack_sinks(seq_len=self.SEQ_LEN) is None
         assert (
             pipe.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
             is None
         )
 
-    def test_lost_packed_is_derived_from_committed_sequences(self, pipe):
+    def test_lost_packed_is_derived_from_committed_sequences(
+        self, pipe, monkeypatch
+    ):
         import shutil
 
         seq_snap = pipe.catalog.current_snapshot("sequences")
         shutil.rmtree(os.path.join(pipe.catalog.root, "packed"))
-        m = pipe.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
+        with monkeypatch.context() as mp:
+            # packed comes from sequences' parts alone, never from routed
+            self._forbid_routed_read(pipe, mp)
+            m = pipe.pack_sinks(
+                seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD
+            )
         assert m is not None and m["sequences"] is None  # not rewritten
         assert pipe.catalog.current_snapshot("sequences") == seq_snap
         assert m["lineage"]["sequences"] == seq_snap
