@@ -68,13 +68,13 @@ def main(argv: list[str] | None = None) -> int:
                          "real sinks via dynamic partition overwrite; "
                          "implies --quarantine, needs --fingerprint but "
                          "no --input")
-    ap.add_argument("--dedup-keys-buckets", type=int, default=None,
+    ap.add_argument("--dedup-keys-buckets", type=int, default=0,
                     help="store the committed dedup_keys chain hash-bucketed "
                          "into N buckets (Iceberg bucket(N, key) transform): "
                          "the ever-growing key chain is never reshuffled by "
                          "increment anti-joins — only each delta's keys cross "
                          "an Exchange. Size ~= chain bytes / 256MB at target "
-                         "scale. 0/unset = plain layout")
+                         "scale. 0 (default) = plain layout")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--cluster-by", default=None,
                     help="comma-separated sort-order columns for the routed "

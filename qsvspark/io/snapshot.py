@@ -308,7 +308,6 @@ class SnapshotCatalog:
         lineage: dict | None = None,
         partition_by: str | None = None,
         count_by: str | None = None,
-        compression: str = "snappy",
         cluster_by: list[str] | None = None,
         parent: str | None = None,
         stats_by: list[str] | None = None,
@@ -408,9 +407,7 @@ class SnapshotCatalog:
             # bucket → one file per bucket, no tasks×buckets fan-out);
             # in-bucket sort on the bucket columns so downstream SMJs
             # skip the sort on this side
-            total = self._write_bucketed_data(
-                observed, obs, data_dir, bucket_by, n_buckets, compression
-            )
+            total = self._write_bucketed_data(observed, obs, data_dir, bucket_by, n_buckets)
         else:
             writer = (
                 observed
@@ -426,7 +423,7 @@ class SnapshotCatalog:
             )
             if partition_by:
                 writer = writer.partitionBy(partition_by)
-            writer.parquet(data_dir, compression=compression)
+            writer.parquet(data_dir, compression="snappy")
             total = obs.get["rows"]
 
         spark = df.sparkSession
@@ -846,7 +843,6 @@ class SnapshotCatalog:
         data_dir: str,
         bucket_by: list[str],
         n_buckets: int,
-        compression: str,
     ) -> int:
         """Write through Spark's native bucketed writer (external table at
         the snap data dir). repartition(n_buckets, cols) uses the same
@@ -861,7 +857,7 @@ class SnapshotCatalog:
             .write.mode("overwrite")
             .format("parquet")
             .option("path", data_dir)
-            .option("compression", compression)
+            .option("compression", "snappy")
             .option("parquet.enable.dictionary", "false")
             .option("parquet.writer.version", "v2")
             .option("parquet.block.size", str(32 * 1024 * 1024))
@@ -1436,7 +1432,6 @@ class SnapshotCatalog:
                 },
                 partition_by=key,
                 count_by=key,
-                compression="snappy",
                 cluster_by=cluster_by,
                 stats_by=src_stat_cols or None,
                 bucket_by=bucket_by,

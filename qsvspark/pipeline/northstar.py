@@ -5,12 +5,12 @@ snapshot manifests (BASELINE.json north_rule).
 Stage design (all DataFrame-declarative; Catalyst/AQE pick physical plans):
 
   parse      grok/regex extraction of route fields (shard, seq) from the
-             doc_id/source string columns. Two interchangeable engines:
-             'pandas' — a vectorized Arrow-batched pandas UDF over the
-             doc_id column only (the batched-byte-column form the north
-             star mandates; only doc_id crosses the Python boundary, the
-             token arrays stay in the JVM), and 'native' —
-             regexp_extract, whole-stage codegen, zero Python.
+             doc_id/source string columns. Three interchangeable engines
+             (see parse_stage): 'arrow' (default) — mapInArrow, whole
+             Arrow batches with the regex in pyarrow.compute; 'pandas' —
+             a scalar pandas UDF over the doc_id column only (the token
+             arrays stay in the JVM); and 'native' — regexp_extract,
+             whole-stage codegen, zero Python.
   dedup      (optional, dedup="exact") drop duplicate token sequences,
              keep-first by doc_id: WindowGroupLimit emits one local
              candidate per 128-bit content key map-side before the
@@ -37,18 +37,21 @@ Stage design (all DataFrame-declarative; Catalyst/AQE pick physical plans):
              matters when a groupBy key alone is too hot even for partial
              agg (e.g. high-cardinality agg states at 10^12 rows).
 
-Resume: each stage writes through SnapshotCatalog keyed on an input
-fingerprint; a rerun finds committed snapshots and skips the work
-(kill-and-restart test in tests/test_pipeline.py).
+Resume: every stage of every entry point (run, run_increment,
+redrive_quarantine, purge_docs) runs through NorthStarPipeline._stage,
+which writes one SnapshotCatalog snapshot keyed on an input fingerprint;
+a rerun finds the committed snapshot, takes its manifest and skips the
+work without reading data (kill-and-restart tests in
+tests/test_pipeline.py).
 """
 
 from __future__ import annotations
 
-import os
 import time
+from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -435,6 +438,16 @@ def aggregate_stage_salted(
     )
 
 
+# Route write tasks per core. partitionBy(sink) emits (tasks × sinks)
+# files, so the write is sized to the cluster, not to the input split
+# count: 100k input splits each writing 4 sink files is the small-files
+# anti-pattern (tiny row groups, 400k-file commits, per-task overhead).
+# coalesce is narrow (no shuffle) and only ever REDUCES the task count.
+ROUTE_TASKS_PER_CORE = 4
+
+_AGG_SUMS = ("seq_count", "uniq_docs", "tok_sum")
+
+
 class NorthStarPipeline:
     """Resumable parse → enrich → route → aggregate over a tokens table."""
 
@@ -448,11 +461,9 @@ class NorthStarPipeline:
         num_sinks: int = 4,
         salted: bool = False,
         salt_buckets: int = 32,
-        route_tasks_per_core: int | None = None,
-        codec: str | None = None,
         route_cluster_by: list[str] | None = None,
         dedup: str | None = None,
-        dedup_keys_buckets: int | None = None,
+        dedup_keys_buckets: int = 0,
         quarantine: bool = False,
     ):
         self.spark = spark
@@ -463,14 +474,6 @@ class NorthStarPipeline:
         self.num_sinks = num_sinks
         self.salted = salted
         self.salt_buckets = salt_buckets
-        # write-task granularity (× cores) and parquet codec for the
-        # routed sink: finer tasks shrink the last-wave straggler tail at
-        # the cost of more output files; zstd trades write bandwidth for
-        # CPU (which scales with cores — bandwidth does not)
-        self.route_tasks_per_core = route_tasks_per_core or int(
-            os.environ.get("QSVSPARK_ROUTE_TASKS_PER_CORE", "4")
-        )
-        self.codec = codec or os.environ.get("QSVSPARK_ROUTE_CODEC", "snappy")
         # sort-order layout for the routed sink (e.g. ["source", "n_tok"]):
         # narrow per-task sort so downstream source/n_tok filters prune
         # parquet row groups via min/max stats instead of scanning
@@ -492,11 +495,7 @@ class NorthStarPipeline:
         # increment's anti-join shuffles only the delta keys. Sized like
         # shuffle partitions: buckets ≈ chain_bytes / 256 MB at target
         # scale; any positive value shows the plan shape locally.
-        self.dedup_keys_buckets = int(
-            dedup_keys_buckets
-            if dedup_keys_buckets is not None
-            else os.environ.get("QSVSPARK_DEDUP_KEYS_BUCKETS", "0")
-        )
+        self.dedup_keys_buckets = dedup_keys_buckets
 
     def _config_fp(self, input_fingerprint: str, stage: str) -> str:
         return (
@@ -505,6 +504,113 @@ class NorthStarPipeline:
             f"|dedup={self.dedup or 'off'}"
             + ("|dlq=1" if self.quarantine else "")
         )
+
+    # -- checkpointed stages ------------------------------------------
+
+    @contextmanager
+    def _metrics(self, rate_rows: str | None = None, **extra):
+        """The metrics dict of one entry point. _stage fills ``stages``
+        (seconds per built stage) and ``resumed``; on exit the dict gains
+        total_seconds and, given ``rate_rows``, sequences_per_sec of the
+        row count under that key."""
+        metrics: dict = {"stages": {}, "resumed": [], **extra}
+        t_start = time.time()
+        yield metrics
+        total = time.time() - t_start
+        metrics["total_seconds"] = round(total, 3)
+        if rate_rows:
+            metrics["sequences_per_sec"] = round(metrics[rate_rows] / total, 1) if total else None
+
+    def _stage(self, metrics: dict, name: str, table: str, fp: str, build) -> dict | None:
+        """One checkpointed stage (BASELINE.json north_rule). If ``table``
+        holds a committed snapshot with input fingerprint ``fp``, the stage
+        is resumed: ``name`` joins metrics["resumed"] and that snapshot's
+        manifest is returned, with no data read. Otherwise ``build()``
+        commits the snapshot and returns its manifest, timed into
+        metrics["stages"][name]; a build that returns None had nothing to
+        commit and records no time."""
+        snap = self.catalog.find_committed(table, fp)
+        if snap:
+            metrics["resumed"].append(name)
+            return self.catalog.manifest(table, snap)
+        t0 = time.time()
+        manifest = build()
+        if manifest is not None:
+            metrics["stages"][name] = round(time.time() - t0, 3)
+        return manifest
+
+    def _clean(self, df: DataFrame) -> DataFrame:
+        """Drop the quarantine partition when quarantine is on. sink is
+        the routed partition column, so the filter is resolved from
+        directory names and the quarantine files are never read."""
+        if self.quarantine:
+            return df.where(F.col("sink") != QUARANTINE_SINK)
+        return df
+
+    def _route(
+        self, parsed: DataFrame, fp: str, lineage: dict, dim: DataFrame | None = None, **write
+    ) -> dict:
+        """enrich (against ``dim``, default the configured source_dim) →
+        (quarantine) → route: commit ``parsed`` to the routed table as one
+        partitionBy(sink) write with per-sink counts. The lineage records
+        the pipeline's stages unless ``lineage`` names its own; ``write``
+        passes parent / replace_partitions to the catalog. parse+enrich
+        are narrow (no shuffle), so they fuse into this write instead of
+        costing a snapshot of their own."""
+        if dim is None:
+            dim = source_dim(self.spark, self.num_sources, self.num_sinks)
+        enriched = enrich_stage(parsed, dim)
+        if self.quarantine:
+            enriched = quarantine_stage(enriched)
+        target = ROUTE_TASKS_PER_CORE * self.spark.sparkContext.defaultParallelism
+        stages = ["parse", "dedup"] if self.dedup else ["parse"]
+        return self.catalog.write(
+            enriched.coalesce(max(target, 1)),
+            "routed",
+            input_fingerprint=fp,
+            lineage={"stages": stages + ["enrich", "route"], "parse_mode": self.parse_mode,
+                     **lineage},
+            partition_by="sink",
+            count_by="sink",
+            cluster_by=self.route_cluster_by,
+            **write,
+        )
+
+    def _after_route(self, metrics: dict, manifest: dict, fp: str) -> None:
+        """Commit the dedup keys of a routed delta (also on resume: a
+        crash may fall between the two commits) and report its
+        quarantined row count."""
+        if self.dedup:
+            self._commit_dedup_keys(manifest["snapshot"], fp)
+        if self.quarantine:
+            metrics["quarantined"] = manifest["partition_counts"].get(QUARANTINE_SINK, 0)
+
+    def _delta(self, snap: str) -> DataFrame:
+        """The rows one routed snapshot added (its own delta, no parents)."""
+        return self.catalog.read(self.spark, "routed", snap, follow_parents=False)
+
+    def _write_aggregates(self, aggs: DataFrame, fp: str, lineage: dict) -> dict:
+        return self.catalog.write(aggs, "aggregates", input_fingerprint=fp,
+                                  lineage={"stages": ["aggregate"], **lineage}, count_by="sink")
+
+    def _merge_aggregates(
+        self, delta: DataFrame, fp: str, lineage: dict, sign: int = 1
+    ) -> dict:
+        """Commit the current aggregates plus (sign=1) or minus (sign=-1)
+        the aggregate of ``delta``'s clean rows, keeping the groups whose
+        seq_count stays positive. Scans only the delta and the aggregate
+        table (one row per sink × source × bucket)."""
+        aggs = aggregate_stage(self._clean(delta), self.bucket_width)
+        prev = self.catalog.current_snapshot("aggregates")
+        if prev is not None:
+            signed = [(sign * F.col(c)).alias(c) for c in _AGG_SUMS]
+            aggs = (
+                self.catalog.read(self.spark, "aggregates", prev)
+                .unionByName(aggs.select("sink", "source", "n_tok_bucket", *signed))
+                .groupBy("sink", "source", "n_tok_bucket")
+                .agg(*[F.sum(c).alias(c) for c in _AGG_SUMS])
+            )
+        return self._write_aggregates(aggs.where(F.col("seq_count") > 0), fp, lineage)
 
     def _commit_dedup_keys(self, routed_snap: str, route_fp: str) -> None:
         """Append the content keys of ONE committed routed delta to the
@@ -516,10 +622,7 @@ class NorthStarPipeline:
         keys_fp = f"{route_fp}|dedup-keys"
         if self.catalog.find_committed("dedup_keys", keys_fp):
             return
-        delta = self.catalog.read(
-            self.spark, "routed", routed_snap, follow_parents=False
-        )
-        keys = dedup_key(delta.select("n_tok", "tokens")).select("__h1", "__h2")
+        keys = dedup_key(self._delta(routed_snap).select("n_tok", "tokens")).select("__h1", "__h2")
         bucketed = self.dedup_keys_buckets > 0
         head = self.catalog.manifest("dedup_keys")
         if head is not None:
@@ -539,110 +642,52 @@ class NorthStarPipeline:
             n_buckets=self.dedup_keys_buckets if bucketed else 0,
         )
 
+    # -- entry points -------------------------------------------------
+
     def run(self, tokens: DataFrame, input_fingerprint: str) -> dict:
         """Execute all stages; returns metrics incl. per-stage timings,
-        skipped (resumed) stages, and rows/sec throughput."""
-        metrics: dict = {"stages": {}, "resumed": []}
-        t_start = time.time()
-        dim = source_dim(self.spark, self.num_sources, self.num_sinks)
+        skipped (resumed) stages, and rows/sec throughput. The routed
+        table is the first checkpoint; aggregate is the second."""
+        with self._metrics("rows") as metrics:
+            routed_fp = self._config_fp(input_fingerprint, "route")
 
-        # parse+enrich are narrow (no shuffle) → fused into the route
-        # write; snapshotting them separately would double the I/O. The
-        # routed table is the first checkpoint; aggregate is the second.
-        routed_fp = self._config_fp(input_fingerprint, "route")
-        snap = self.catalog.find_committed("routed", routed_fp)
-        if snap:
-            metrics["resumed"].append("route")
-            routed = self.catalog.read(self.spark, "routed", snap)
-            route_manifest = self.catalog.manifest("routed", snap)
-        else:
-            t0 = time.time()
-            parsed = parse_stage(tokens, self.parse_mode)
-            obs = None
-            if self.dedup:
-                from pyspark.sql import Observation
+            def route() -> dict:
+                parsed = parse_stage(tokens, self.parse_mode)
+                obs = None
+                if self.dedup:
+                    # pre-dedup row count rides the SAME write action via
+                    # Observation — no extra job to account for drops
+                    obs = Observation()
+                    parsed = parsed.observe(obs, F.count(F.lit(1)).alias("rows"))
+                    parsed = dedup_stage(parsed)
+                manifest = self._route(parsed, routed_fp, {"inputs": [input_fingerprint]})
+                if obs is not None:
+                    metrics["input_rows"] = int(obs.get["rows"])
+                    metrics["duplicates_dropped"] = metrics["input_rows"] - manifest["row_count"]
+                return manifest
 
-                # pre-dedup row count rides the SAME write action via
-                # Observation — no extra job to account for drops
-                obs = Observation()
-                parsed = parsed.observe(obs, F.count(F.lit(1)).alias("rows"))
-                parsed = dedup_stage(parsed)
-            enriched = enrich_stage(parsed, dim)
-            if self.quarantine:
-                enriched = quarantine_stage(enriched)
-            # Size write tasks to the cluster, not to the input split
-            # count: partitionBy(sink) emits (tasks × sinks) files, so
-            # letting 100k input splits each write 4 sink files is the
-            # classic small-files anti-pattern — tiny row groups, a
-            # commit protocol moving 400k files, and per-task overhead
-            # that caps scaling. coalesce (narrow, no shuffle) only ever
-            # REDUCES partition count, so when the input has fewer
-            # splits than 2×cores it is a no-op.
-            target = self.route_tasks_per_core * self.spark.sparkContext.defaultParallelism
-            route_manifest = self.catalog.write(
-                enriched.coalesce(max(target, 1)),
-                "routed",
-                input_fingerprint=routed_fp,
-                lineage={
-                    "stages": (["parse", "dedup"] if self.dedup else ["parse"])
-                    + ["enrich", "route"],
-                    "parse_mode": self.parse_mode,
-                    "inputs": [input_fingerprint],
-                },
-                partition_by="sink",
-                count_by="sink",
-                compression=self.codec,
-                cluster_by=self.route_cluster_by,
-            )
-            metrics["stages"]["route"] = round(time.time() - t0, 3)
-            if obs is not None:
-                metrics["input_rows"] = int(obs.get["rows"])
-                metrics["duplicates_dropped"] = (
-                    metrics["input_rows"] - route_manifest["row_count"]
-                )
-            routed = self.catalog.read(self.spark, "routed")
-        if self.dedup:
-            self._commit_dedup_keys(route_manifest["snapshot"], routed_fp)
-        metrics["per_sink_counts"] = route_manifest["partition_counts"]
-        metrics["rows"] = route_manifest["row_count"]
-        if self.quarantine:
-            metrics["quarantined"] = route_manifest["partition_counts"].get(
-                QUARANTINE_SINK, 0
+            routed = self._stage(metrics, "route", "routed", routed_fp, route)
+            metrics["per_sink_counts"] = routed["partition_counts"]
+            metrics["rows"] = routed["row_count"]
+            self._after_route(metrics, routed, routed_fp)
+
+            # salt config in the fingerprint: toggling --salted (or the
+            # bucket count) must NOT resume from the other mode's snapshot
+            agg_fp = self._config_fp(
+                input_fingerprint,
+                f"aggregate|salted={self.salted}|sb={self.salt_buckets if self.salted else 0}",
             )
 
-        # salt config in the fingerprint: toggling --salted (or the bucket
-        # count) must NOT resume from the other mode's committed snapshot
-        agg_fp = self._config_fp(
-            input_fingerprint,
-            f"aggregate|salted={self.salted}|sb={self.salt_buckets if self.salted else 0}",
-        )
-        snap = self.catalog.find_committed("aggregates", agg_fp)
-        if snap:
-            metrics["resumed"].append("aggregate")
-        else:
-            t0 = time.time()
-            agg_src = routed
-            if self.quarantine:
-                # sink is the partition column: this filter is resolved
-                # from directory names, the quarantine files are never read
-                agg_src = routed.where(F.col("sink") != QUARANTINE_SINK)
-            if self.salted:
-                aggs = aggregate_stage_salted(agg_src, self.bucket_width, self.salt_buckets)
-            else:
-                aggs = aggregate_stage(agg_src, self.bucket_width)
-            self.catalog.write(
-                aggs,
-                "aggregates",
-                input_fingerprint=agg_fp,
-                lineage={"stages": ["aggregate"], "inputs": [routed_fp]},
-                count_by="sink",
-            )
-            metrics["stages"]["aggregate"] = round(time.time() - t0, 3)
+            def aggregate() -> dict:
+                src = self._clean(self.catalog.read(self.spark, "routed", routed["snapshot"]))
+                if self.salted:
+                    aggs = aggregate_stage_salted(src, self.bucket_width, self.salt_buckets)
+                else:
+                    aggs = aggregate_stage(src, self.bucket_width)
+                return self._write_aggregates(aggs, agg_fp, {"inputs": [routed_fp]})
 
-        total = time.time() - t_start
-        metrics["total_seconds"] = round(total, 3)
-        metrics["sequences_per_sec"] = round(metrics["rows"] / total, 1) if total else None
-        return metrics
+            self._stage(metrics, "aggregate", "aggregates", agg_fp, aggregate)
+            return metrics
 
     # -- incremental runs ---------------------------------------------
 
@@ -677,118 +722,50 @@ class NorthStarPipeline:
         """
         if distinct_mode not in ("merge", "recompute"):
             raise ValueError(f"unknown distinct_mode '{distinct_mode}'")
-        metrics: dict = {"stages": {}, "resumed": [], "increment": increment_fingerprint}
-        t_start = time.time()
-        dim = source_dim(self.spark, self.num_sources, self.num_sinks)
+        with self._metrics("delta_rows", increment=increment_fingerprint) as metrics:
+            inc_fp = self._config_fp(increment_fingerprint, "route-increment")
 
-        inc_fp = self._config_fp(increment_fingerprint, "route-increment")
-        snap = self.catalog.find_committed("routed", inc_fp)
-        if snap:
-            metrics["resumed"].append("route")
-            manifest = self.catalog.manifest("routed", snap)
-        else:
-            t0 = time.time()
-            parsed = parse_stage(tokens, self.parse_mode)
-            if self.dedup:
-                # within-increment keep-first, then drop anything whose
-                # content key is already in the committed key chain —
-                # cross-increment dedup as one anti-join on 16-byte keys
-                prev_keys = None
-                keys_snap = self.catalog.current_snapshot("dedup_keys")
-                if keys_snap is not None:
-                    # per-snapshot frames, not a union: bucketed chain
+            def route() -> dict:
+                parsed = parse_stage(tokens, self.parse_mode)
+                if self.dedup:
+                    # within-increment keep-first, then drop anything whose
+                    # content key is already in the committed key chain —
+                    # cross-increment dedup as one anti-join on 16-byte keys
+                    # (per-snapshot frames, not a union: bucketed chain
                     # elements keep their reported hash partitioning so
-                    # each anti-join leaves the committed side in place
-                    prev_keys = self.catalog.read_parts(
-                        self.spark, "dedup_keys", keys_snap
+                    # each anti-join leaves the committed side in place)
+                    keys_snap = self.catalog.current_snapshot("dedup_keys")
+                    prev_keys = (
+                        None if keys_snap is None
+                        else self.catalog.read_parts(self.spark, "dedup_keys", keys_snap)
                     )
-                parsed = dedup_stage(parsed, against=prev_keys)
-            enriched = enrich_stage(parsed, dim)
-            if self.quarantine:
-                enriched = quarantine_stage(enriched)
-            target = self.route_tasks_per_core * self.spark.sparkContext.defaultParallelism
-            parent = self.catalog.current_snapshot("routed")
-            manifest = self.catalog.write(
-                enriched.coalesce(max(target, 1)),
-                "routed",
-                input_fingerprint=inc_fp,
-                lineage={
-                    "stages": ["parse", "enrich", "route"],
-                    "parse_mode": self.parse_mode,
-                    "inputs": [increment_fingerprint],
-                    "op": "append-increment",
-                },
-                partition_by="sink",
-                count_by="sink",
-                compression=self.codec,
-                cluster_by=self.route_cluster_by,
-                parent=parent,
-            )
-            metrics["stages"]["route"] = round(time.time() - t0, 3)
-        if self.dedup:
-            self._commit_dedup_keys(manifest["snapshot"], inc_fp)
-        metrics["delta_rows"] = manifest["row_count"]
-        metrics["delta_per_sink_counts"] = manifest["partition_counts"]
-        metrics["rows"] = manifest["cumulative_row_count"]
-        metrics["per_sink_counts"] = manifest["cumulative_partition_counts"]
-        if self.quarantine:
-            metrics["quarantined"] = manifest["partition_counts"].get(
-                QUARANTINE_SINK, 0
-            )
-
-        agg_fp = self._config_fp(
-            increment_fingerprint, f"aggregate-increment|mode={distinct_mode}"
-        )
-        if self.catalog.find_committed("aggregates", agg_fp):
-            metrics["resumed"].append("aggregate")
-        else:
-            t0 = time.time()
-
-            def _clean(df: DataFrame) -> DataFrame:
-                if self.quarantine:
-                    return df.where(F.col("sink") != QUARANTINE_SINK)
-                return df
-
-            if distinct_mode == "recompute":
-                aggs = aggregate_stage(_clean(self.routed()), self.bucket_width)
-            else:
-                delta = self.catalog.read(
-                    self.spark, "routed", manifest["snapshot"], follow_parents=False
+                    parsed = dedup_stage(parsed, against=prev_keys)
+                return self._route(
+                    parsed, inc_fp,
+                    {"inputs": [increment_fingerprint], "op": "append-increment"},
+                    parent=self.catalog.current_snapshot("routed"),
                 )
-                delta_agg = aggregate_stage(_clean(delta), self.bucket_width)
-                prev_snap = self.catalog.current_snapshot("aggregates")
-                if prev_snap is None:
-                    aggs = delta_agg
-                else:
-                    prev = self.catalog.read(self.spark, "aggregates", prev_snap)
-                    aggs = (
-                        prev.unionByName(delta_agg)
-                        .groupBy("sink", "source", "n_tok_bucket")
-                        .agg(
-                            F.sum("seq_count").alias("seq_count"),
-                            F.sum("uniq_docs").alias("uniq_docs"),
-                            F.sum("tok_sum").alias("tok_sum"),
-                        )
-                    )
-            self.catalog.write(
-                aggs,
-                "aggregates",
-                input_fingerprint=agg_fp,
-                lineage={
-                    "stages": ["aggregate"],
-                    "inputs": [inc_fp],
-                    "op": f"aggregate-increment-{distinct_mode}",
-                },
-                count_by="sink",
-            )
-            metrics["stages"]["aggregate"] = round(time.time() - t0, 3)
 
-        total = time.time() - t_start
-        metrics["total_seconds"] = round(total, 3)
-        metrics["sequences_per_sec"] = (
-            round(metrics["delta_rows"] / total, 1) if total else None
-        )
-        return metrics
+            delta = self._stage(metrics, "route", "routed", inc_fp, route)
+            metrics["delta_rows"] = delta["row_count"]
+            metrics["delta_per_sink_counts"] = delta["partition_counts"]
+            metrics["rows"] = delta["cumulative_row_count"]
+            metrics["per_sink_counts"] = delta["cumulative_partition_counts"]
+            self._after_route(metrics, delta, inc_fp)
+
+            agg_fp = self._config_fp(
+                increment_fingerprint, f"aggregate-increment|mode={distinct_mode}"
+            )
+
+            def aggregate() -> dict:
+                lineage = {"inputs": [inc_fp], "op": f"aggregate-increment-{distinct_mode}"}
+                if distinct_mode == "recompute":
+                    aggs = aggregate_stage(self._clean(self.routed()), self.bucket_width)
+                    return self._write_aggregates(aggs, agg_fp, lineage)
+                return self._merge_aggregates(self._delta(delta["snapshot"]), agg_fp, lineage)
+
+            self._stage(metrics, "aggregate", "aggregates", agg_fp, aggregate)
+            return metrics
 
     def redrive_quarantine(
         self,
@@ -813,107 +790,56 @@ class NorthStarPipeline:
         """
         if not self.quarantine:
             raise ValueError("redrive_quarantine requires quarantine=True")
-        dim = dim if dim is not None else source_dim(
-            self.spark, self.num_sources, self.num_sinks
-        )
-        metrics: dict = {"stages": {}, "resumed": []}
-        t_start = time.time()
+        with self._metrics() as metrics:
+            route_fp = self._config_fp(redrive_fingerprint, "redrive")
+            cur = self.catalog.manifest("routed") or {}
+            counts = cur.get("cumulative_partition_counts") or {}
 
-        route_fp = self._config_fp(redrive_fingerprint, "redrive")
-        snap = self.catalog.find_committed("routed", route_fp)
-        cur = self.catalog.manifest("routed")
-        counts = (cur or {}).get("cumulative_partition_counts") or {}
-        if snap is None and not counts.get(QUARANTINE_SINK, 0):
-            # nothing quarantined: no commit to make
-            return {
-                "stages": {}, "resumed": [], "redriven": 0,
-                "still_quarantined": 0,
-                "per_sink_counts": counts,
-                "rows": (cur or {}).get("cumulative_row_count", 0),
-                "total_seconds": round(time.time() - t_start, 3),
-            }
-        if snap:
-            metrics["resumed"].append("redrive")
-            manifest = self.catalog.manifest("routed", snap)
-        else:
-            t0 = time.time()
-            parent = self.catalog.current_snapshot("routed")
-            raw = (
-                self.catalog.read(self.spark, "routed", parent)
-                .where(F.col("sink") == QUARANTINE_SINK)
-                .select("doc_id", "tokens", "n_tok", "source")
-            )
-            reprocessed = quarantine_stage(
-                enrich_stage(parse_stage(raw, self.parse_mode), dim)
-            )
-            target = (
-                self.route_tasks_per_core
-                * self.spark.sparkContext.defaultParallelism
-            )
-            manifest = self.catalog.write(
-                reprocessed.coalesce(max(target, 1)),
-                "routed",
-                input_fingerprint=route_fp,
-                lineage={
-                    "stages": ["parse", "enrich", "route"],
-                    "parse_mode": self.parse_mode,
-                    "inputs": [redrive_fingerprint],
-                    "op": "redrive-quarantine",
-                },
-                partition_by="sink",
-                count_by="sink",
-                compression=self.codec,
-                cluster_by=self.route_cluster_by,
-                parent=parent,
-                replace_partitions=[QUARANTINE_SINK],
-            )
-            metrics["stages"]["redrive"] = round(time.time() - t0, 3)
-        delta = dict(manifest["partition_counts"] or {})
-        still_bad = delta.pop(QUARANTINE_SINK, 0)
-        metrics["redriven"] = sum(delta.values())
-        metrics["still_quarantined"] = still_bad
-        metrics["per_sink_counts"] = manifest["cumulative_partition_counts"]
-        metrics["rows"] = manifest["cumulative_row_count"]
-
-        # merge the newly-clean rows into the aggregates (delta-only scan)
-        agg_fp = self._config_fp(redrive_fingerprint, "aggregate-redrive")
-        if self.catalog.find_committed("aggregates", agg_fp):
-            metrics["resumed"].append("aggregate")
-        elif metrics["redriven"]:
-            t0 = time.time()
-            clean_delta = self.catalog.read(
-                self.spark, "routed", manifest["snapshot"], follow_parents=False
-            ).where(F.col("sink") != QUARANTINE_SINK)
-            delta_agg = aggregate_stage(clean_delta, self.bucket_width)
-            prev_snap = self.catalog.current_snapshot("aggregates")
-            if prev_snap is None:
-                aggs = delta_agg
-            else:
-                prev = self.catalog.read(self.spark, "aggregates", prev_snap)
-                aggs = (
-                    prev.unionByName(delta_agg)
-                    .groupBy("sink", "source", "n_tok_bucket")
-                    .agg(
-                        F.sum("seq_count").alias("seq_count"),
-                        F.sum("uniq_docs").alias("uniq_docs"),
-                        F.sum("tok_sum").alias("tok_sum"),
-                    )
+            def redrive() -> dict | None:
+                if not counts.get(QUARANTINE_SINK, 0):
+                    return None  # nothing quarantined: no commit to make
+                parent = self.catalog.current_snapshot("routed")
+                raw = (
+                    self.catalog.read(self.spark, "routed", parent)
+                    .where(F.col("sink") == QUARANTINE_SINK)
+                    .select("doc_id", "tokens", "n_tok", "source")
                 )
-            self.catalog.write(
-                aggs,
-                "aggregates",
-                input_fingerprint=agg_fp,
-                lineage={
-                    "stages": ["aggregate"],
-                    "inputs": [route_fp],
-                    "op": "aggregate-redrive",
-                },
-                count_by="sink",
-            )
-            metrics["stages"]["aggregate"] = round(time.time() - t0, 3)
+                return self._route(
+                    parse_stage(raw, self.parse_mode),
+                    route_fp,
+                    # these rows passed any dedup when they were first routed
+                    {"stages": ["parse", "enrich", "route"], "inputs": [redrive_fingerprint],
+                     "op": "redrive-quarantine"},
+                    dim=dim,
+                    parent=parent,
+                    replace_partitions=[QUARANTINE_SINK],
+                )
 
-        metrics["total_seconds"] = round(time.time() - t_start, 3)
-        return metrics
+            manifest = self._stage(metrics, "redrive", "routed", route_fp, redrive)
+            if manifest is None:
+                metrics.update(redriven=0, still_quarantined=0, per_sink_counts=counts,
+                               rows=cur.get("cumulative_row_count", 0))
+                return metrics
+            delta = dict(manifest["partition_counts"] or {})
+            still_bad = delta.pop(QUARANTINE_SINK, 0)
+            metrics["redriven"] = sum(delta.values())
+            metrics["still_quarantined"] = still_bad
+            metrics["per_sink_counts"] = manifest["cumulative_partition_counts"]
+            metrics["rows"] = manifest["cumulative_row_count"]
+
+            # merge the newly-clean rows into the aggregates (delta-only scan)
+            agg_fp = self._config_fp(redrive_fingerprint, "aggregate-redrive")
+
+            def aggregate() -> dict | None:
+                if not metrics["redriven"]:
+                    return None
+                return self._merge_aggregates(
+                    self._delta(manifest["snapshot"]), agg_fp,
+                    {"inputs": [route_fp], "op": "aggregate-redrive"},
+                )
+
+            self._stage(metrics, "aggregate", "aggregates", agg_fp, aggregate)
+            return metrics
 
     def purge_docs(self, doc_ids: DataFrame, purge_fingerprint: str) -> dict:
         """Takedown / contamination removal: delete every routed row whose
@@ -930,76 +856,36 @@ class NorthStarPipeline:
         dedup_keys chain, so re-shipped copies of taken-down content are
         still dropped — the takedown semantics a training corpus wants.
         """
-        metrics: dict = {"stages": {}, "resumed": []}
-        t_start = time.time()
-        keys = doc_ids.select("doc_id").distinct()
-
-        del_fp = self._config_fp(purge_fingerprint, "purge")
-        snap = self.catalog.find_committed("routed", del_fp)
-        if snap:
-            metrics["resumed"].append("delete")
-            manifest = self.catalog.manifest("routed", snap)
-        else:
-            t0 = time.time()
-            manifest = self.catalog.delete_rows(
-                self.spark,
-                "routed",
-                keys,
-                on=["doc_id"],
-                input_fingerprint=del_fp,
-                lineage={"inputs": [purge_fingerprint]},
+        with self._metrics() as metrics:
+            keys = doc_ids.select("doc_id").distinct()
+            del_fp = self._config_fp(purge_fingerprint, "purge")
+            manifest = self._stage(
+                metrics, "delete", "routed", del_fp,
+                lambda: self.catalog.delete_rows(
+                    self.spark, "routed", keys, on=["doc_id"], input_fingerprint=del_fp,
+                    lineage={"inputs": [purge_fingerprint]},
+                ),
             )
-            metrics["stages"]["delete"] = round(time.time() - t0, 3)
-        metrics["deleted"] = manifest["deleted_row_count"]
-        metrics["per_sink_counts"] = manifest["cumulative_partition_counts"]
-        metrics["rows"] = manifest["cumulative_row_count"]
+            metrics["deleted"] = manifest["deleted_row_count"]
+            metrics["per_sink_counts"] = manifest["cumulative_partition_counts"]
+            metrics["rows"] = manifest["cumulative_row_count"]
 
-        agg_fp = self._config_fp(purge_fingerprint, "aggregate-purge")
-        if self.catalog.find_committed("aggregates", agg_fp):
-            metrics["resumed"].append("aggregate")
-        elif metrics["deleted"]:
-            t0 = time.time()
-            # the doomed rows come from the delete's PARENT snapshot:
-            # correct even when resuming after the delete already
-            # committed (the current chain no longer shows those rows)
-            doomed = self.catalog.read(
-                self.spark, "routed", manifest["parent"]
-            ).join(F.broadcast(keys), "doc_id", "left_semi")
-            if self.quarantine:
-                doomed = doomed.where(F.col("sink") != QUARANTINE_SINK)
-            doomed_agg = aggregate_stage(doomed, self.bucket_width)
-            prev = self.catalog.read(self.spark, "aggregates")
-            neg = doomed_agg.select(
-                "sink", "source", "n_tok_bucket",
-                (-F.col("seq_count")).alias("seq_count"),
-                (-F.col("uniq_docs")).alias("uniq_docs"),
-                (-F.col("tok_sum")).alias("tok_sum"),
-            )
-            aggs = (
-                prev.unionByName(neg)
-                .groupBy("sink", "source", "n_tok_bucket")
-                .agg(
-                    F.sum("seq_count").alias("seq_count"),
-                    F.sum("uniq_docs").alias("uniq_docs"),
-                    F.sum("tok_sum").alias("tok_sum"),
+            agg_fp = self._config_fp(purge_fingerprint, "aggregate-purge")
+
+            def aggregate() -> dict | None:
+                if not metrics["deleted"]:
+                    return None
+                # the doomed rows come from the delete's PARENT snapshot:
+                # correct even when resuming after the delete already
+                # committed (the current chain no longer shows those rows)
+                doomed = self.catalog.read(self.spark, "routed", manifest["parent"])
+                doomed = doomed.join(F.broadcast(keys), "doc_id", "left_semi")
+                return self._merge_aggregates(
+                    doomed, agg_fp, {"inputs": [del_fp], "op": "aggregate-purge"}, sign=-1
                 )
-                .where(F.col("seq_count") > 0)
-            )
-            self.catalog.write(
-                aggs,
-                "aggregates",
-                input_fingerprint=agg_fp,
-                lineage={
-                    "stages": ["aggregate"],
-                    "inputs": [del_fp],
-                    "op": "aggregate-purge",
-                },
-                count_by="sink",
-            )
-            metrics["stages"]["aggregate"] = round(time.time() - t0, 3)
 
-        metrics["total_seconds"] = round(time.time() - t_start, 3)
-        return metrics
+            self._stage(metrics, "aggregate", "aggregates", agg_fp, aggregate)
+            return metrics
 
     # -- maintenance --------------------------------------------------
 
@@ -1083,14 +969,6 @@ class NorthStarPipeline:
         policy_tag = "" if oversized == "own" else f"|ov={oversized}"
         pack_fp = f"{routed_fp}|pack|seq_len={seq_len}{policy_tag}"
 
-        def source() -> DataFrame:
-            # read only where a branch packs: a resume that finds its
-            # tables committed never resolves the routed snapshot chain
-            src = self.routed()
-            if self.quarantine:
-                src = src.where(F.col("sink") != QUARANTINE_SINK)
-            return src
-
         packed_write = {
             "input_fingerprint": pack_fp,
             "partition_by": "sink",
@@ -1101,7 +979,7 @@ class NorthStarPipeline:
             if layout_snap:
                 return None
             packed = pack_greedy(
-                source(), "n_tok", "doc_id", seq_len, group_cols=["sink"],
+                self._clean(self.routed()), "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized,
             )
             return self.catalog.write(
@@ -1114,7 +992,7 @@ class NorthStarPipeline:
         seq_snap = self.catalog.find_committed("sequences", seq_fp)
         if seq_snap is None:
             seqs = pack_greedy_sequences(
-                source(), "n_tok", "doc_id", seq_len, group_cols=["sink"],
+                self._clean(self.routed()), "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized, pad_id=pad_id,
             )
             seq_manifest = self.catalog.write(

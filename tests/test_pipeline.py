@@ -248,8 +248,7 @@ class TestIncrementalRuns:
     @pytest.fixture(scope="class")
     def inc_setup(self, spark, tokens, tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("wh_inc"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         inc1, inc2 = self._halves(tokens)
         m1 = pipe.run_increment(inc1, "inc-1")
         m2 = pipe.run_increment(inc2, "inc-2")
@@ -295,8 +294,7 @@ class TestIncrementalRuns:
     def test_recompute_mode_equals_full_computation(self, spark, tokens,
                                                     tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("wh_inc_rc"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         inc1, inc2 = self._halves(tokens)
         pipe.run_increment(inc1, "inc-1", distinct_mode="recompute")
         pipe.run_increment(inc2, "inc-2", distinct_mode="recompute")
@@ -309,8 +307,7 @@ class TestIncrementalRuns:
         """Any partitioning of the input into disjoint increments must
         reproduce the single-run results exactly."""
         wh = str(tmp_path_factory.mktemp("wh_inc3"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         h = F.pmod(F.xxhash64("doc_id"), F.lit(3))
         for i in range(3):
             pipe.run_increment(tokens.filter(h == i), f"inc3-{i}")
@@ -370,7 +367,7 @@ class TestSinkMaintenance:
         reads the compacted snapshot without recomputing the route."""
         wh = str(tmp_path_factory.mktemp("wh_compact"))
         pipe = NorthStarPipeline(
-            spark, wh, parse_mode="pandas", route_tasks_per_core=1,
+            spark, wh, parse_mode="pandas",
             route_cluster_by=["source", "n_tok"],
         )
         fp = f"synth-n{N}-s{SEED}-compact"
@@ -1053,3 +1050,88 @@ class TestPackSinksLayoutThenMaterialize:
         assert pipe.catalog.current_snapshot("sequences") == seq_snap
         assert m["lineage"]["sequences"] == seq_snap
         _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
+
+
+class TestCheckpointedStages:
+    """Every entry point commits through one checkpointed-stage helper:
+    run and run_increment record the same routed lineage, a rerun of a
+    committed run reads no snapshot data, and the input fingerprints a
+    warehouse was committed under stay exactly as they were, so it still
+    resumes."""
+
+    ROUTED_STAGES = {
+        None: ["parse", "enrich", "route"],
+        "exact": ["parse", "dedup", "enrich", "route"],
+    }
+
+    @pytest.fixture(scope="class", params=[None, "exact"], ids=["dedup-off", "dedup-exact"])
+    def committed(self, request, spark, tmp_path_factory):
+        wh = str(tmp_path_factory.mktemp("wh_stages"))
+        pipe = NorthStarPipeline(spark, wh, parse_mode="native", dedup=request.param)
+        base = synth_tokens(spark, 200, seed=41)
+        inc = synth_tokens(spark, 100, seed=42, id_offset=200)
+        pipe.run(base, "stages-base")
+        run_snap = pipe.catalog.current_snapshot("routed")
+        pipe.run_increment(inc, "stages-inc")
+        inc_snap = pipe.catalog.current_snapshot("routed")
+        return pipe, base, inc, {"run": run_snap, "run_increment": inc_snap}
+
+    @pytest.mark.parametrize("entry", ["run", "run_increment"])
+    def test_routed_lineage_stages(self, committed, entry):
+        pipe, _, _, snaps = committed
+        lineage = pipe.catalog.manifest("routed", snaps[entry])["lineage"]
+        assert lineage["stages"] == self.ROUTED_STAGES[pipe.dedup]
+
+    def test_committed_rerun_reads_nothing(self, committed, monkeypatch):
+        pipe, base, inc, _ = committed
+
+        def no_read(*args, **kwargs):
+            raise AssertionError("resume read a snapshot")
+
+        monkeypatch.setattr(pipe.catalog, "read", no_read)
+        monkeypatch.setattr(pipe.catalog, "read_parts", no_read)
+        assert set(pipe.run(base, "stages-base")["resumed"]) == {"route", "aggregate"}
+        again = pipe.run_increment(inc, "stages-inc")
+        assert set(again["resumed"]) == {"route", "aggregate"}
+
+    @staticmethod
+    def _fingerprints(pipe, table):
+        cat = pipe.catalog
+        return [cat.manifest(table, s)["input_fingerprint"] for s in cat._snaps(table)]
+
+    def test_fingerprints_unchanged(self, spark, tmp_path_factory):
+        pipe = NorthStarPipeline(
+            spark, str(tmp_path_factory.mktemp("wh_fp")), parse_mode="native", dedup="exact"
+        )
+        tok = synth_tokens(spark, 200, seed=43)
+        pipe.run(tok, "fp")
+        pipe.run_increment(synth_tokens(spark, 100, seed=44, id_offset=200), "inc")
+        pipe.purge_docs(tok.limit(3).select("doc_id"), "take")
+        cfg = "parse=native|bw=64|k=20|s=4|dedup=exact"
+        assert self._fingerprints(pipe, "routed") == [
+            "fp|route|parse=native|bw=64|k=20|s=4|dedup=exact",
+            f"inc|route-increment|{cfg}",
+            f"take|purge|{cfg}",
+        ]
+        assert self._fingerprints(pipe, "dedup_keys") == [
+            "fp|route|parse=native|bw=64|k=20|s=4|dedup=exact|dedup-keys",
+            f"inc|route-increment|{cfg}|dedup-keys",
+        ]
+        assert self._fingerprints(pipe, "aggregates") == [
+            f"fp|aggregate|salted=False|sb=0|{cfg}",
+            f"inc|aggregate-increment|mode=merge|{cfg}",
+            f"take|aggregate-purge|{cfg}",
+        ]
+
+        q = NorthStarPipeline(
+            spark, str(tmp_path_factory.mktemp("wh_fp_dlq")), parse_mode="native",
+            quarantine=True,
+        )
+        q.run(TestQuarantine()._dirty(spark), "q")
+        q.redrive_quarantine("rd", dim=TestQuarantineRedrive()._fixed_dim(spark))
+        qcfg = "parse=native|bw=64|k=20|s=4|dedup=off|dlq=1"
+        assert self._fingerprints(q, "routed") == [f"q|route|{qcfg}", f"rd|redrive|{qcfg}"]
+        assert self._fingerprints(q, "aggregates") == [
+            f"q|aggregate|salted=False|sb=0|{qcfg}",
+            f"rd|aggregate-redrive|{qcfg}",
+        ]

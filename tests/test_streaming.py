@@ -103,8 +103,7 @@ class TestIncrementalIngest:
 
     def test_streamed_increments_match_one_batch_run(self, spark, inc_dirs):
         inp, wh, ckpt = inc_dirs
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt,
                                max_files_per_trigger=1)
         q.awaitTermination(180)
@@ -121,8 +120,7 @@ class TestIncrementalIngest:
 
     def test_restart_is_noop(self, spark, inc_dirs):
         inp, wh, ckpt = inc_dirs
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         snaps_before = pipe.catalog._snaps("routed")
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt)
         q.awaitTermination(120)
@@ -415,7 +413,7 @@ class TestStreamingQuarantine:
                      ).unionByName(bad).write.parquet(os.path.join(inp, "batch2"))
 
         pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1, quarantine=True)
+                                 quarantine=True)
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt,
                                max_files_per_trigger=2)
         q.awaitTermination(180)
@@ -459,8 +457,7 @@ class TestStreamingDecontaminate:
         bench = all_tokens.where("doc_id LIKE '%00'").cache()
         bench.count()
 
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 route_tasks_per_core=1)
+        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
         q = incremental_ingest(
             spark, inp + "/*/", pipe, ckpt, max_files_per_trigger=1,
             pre_stage=lambda df: decontaminate_stage(df, bench, n=8),
