@@ -35,30 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _footer_partition_counts(data_dir: str, key: str) -> dict:
-    """Per-partition row counts from parquet FOOTERS only — zero data
-    pages read, no extra Spark job. This mirrors how Iceberg manifests
-    account rows (per-file record counts captured at commit time); the
-    local-FS walk is the emulation-layer equivalent of reading the
-    manifest file list."""
-    import pyarrow.parquet as pq
-
-    counts: dict = {}
-    if not os.path.isdir(data_dir):
-        return counts
-    for entry in sorted(os.listdir(data_dir)):
-        if not entry.startswith(f"{key}="):
-            continue
-        val = urllib.parse.unquote(entry.split("=", 1)[1])
-        n = 0
-        for root, _, files in os.walk(os.path.join(data_dir, entry)):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n += pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-        counts[val] = n
-    return counts
-
-
 def _json_scalar(v):
     """Parquet footer statistics value → JSON-serializable scalar, or None
     when the type has no meaningful file-pruning order (we then skip the
@@ -75,28 +51,51 @@ def _json_scalar(v):
     return None
 
 
-def _footer_file_stats(data_dir: str, cols: list[str]) -> list[dict]:
-    """Per-file min/max for ``cols`` plus row/byte counts, from parquet
-    FOOTERS only (no data pages). This is the per-file column-stats record
-    an Iceberg manifest carries (lower_bounds/upper_bounds per data file);
-    scan planning prunes on it before Spark ever lists the files."""
+# Spark stores each file's data schema (partition columns excluded) as
+# JSON in the parquet footer under this key
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _walk_written(data_dir: str, stats_cols: list[str], count_col: str | None = None) -> dict:
+    """What a commit records about the files a write just produced, from
+    ONE driver-side pass and no Spark job — the way Iceberg manifests
+    account data files at commit time. Returns ``schema`` (footer Spark
+    schema JSON, None if no file has one), ``files`` (path, bytes, rows,
+    partition, min/max of ``stats_cols``: Iceberg lower/upper bounds),
+    ``partition_counts`` (rows per partition value) and ``value_counts``
+    (rows per ``str(value)`` of ``count_col``, else None). Only
+    ``count_col`` reads data pages; the rest is footers."""
     import pyarrow.parquet as pq
 
-    out: list[dict] = []
-    want = set(cols or [])
-    for root, _, files in os.walk(data_dir):
+    out: dict = {"schema": None, "files": [], "partition_counts": {},
+                 "value_counts": {} if count_col else None}
+    want = set(stats_cols or [])
+    for root, dirs, files in os.walk(data_dir):
+        dirs.sort()  # stable partition order in the manifest and sidecar
+        rel_dir = os.path.relpath(root, data_dir)
+        part = None
+        if rel_dir != "." and "=" in rel_dir:
+            part = urllib.parse.unquote(rel_dir.split("=", 1)[1])
         for fn in sorted(files):
             if not fn.endswith(".parquet"):
                 continue
             path = os.path.join(root, fn)
-            rel_dir = os.path.relpath(root, data_dir)
-            part = None
-            if rel_dir != "." and "=" in rel_dir:
-                part = urllib.parse.unquote(rel_dir.split("=", 1)[1])
-            md = pq.ParquetFile(path).metadata
+            pf = pq.ParquetFile(path)
+            md = pf.metadata
+            if out["schema"] is None:
+                out["schema"] = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            if part is not None:
+                out["partition_counts"][part] = (
+                    out["partition_counts"].get(part, 0) + md.num_rows
+                )
+            if count_col:
+                vc = out["value_counts"]
+                for item in pf.read(columns=[count_col]).column(0).value_counts().to_pylist():
+                    key = str(item["values"])
+                    vc[key] = vc.get(key, 0) + item["counts"]
             stats: dict[str, list] = {}
             complete: dict[str, bool] = {}
-            for rg in range(md.num_row_groups):
+            for rg in range(md.num_row_groups if want else 0):
                 g = md.row_group(rg)
                 for ci in range(g.num_columns):
                     c = g.column(ci)
@@ -119,7 +118,7 @@ def _footer_file_stats(data_dir: str, cols: list[str]) -> list[dict]:
                         stats[name] = [mn, mx]
             # a column whose stats any row group lacked can't prune safely
             stats = {k: v for k, v in stats.items() if complete.get(k)}
-            out.append(
+            out["files"].append(
                 {
                     "path": os.path.relpath(path, data_dir),
                     "bytes": os.path.getsize(path),
@@ -128,7 +127,26 @@ def _footer_file_stats(data_dir: str, cols: list[str]) -> list[dict]:
                     "stats": stats,
                 }
             )
+    if count_col:
+        out["value_counts"] = dict(sorted(out["value_counts"].items()))
     return out
+
+
+def _written_schema(
+    df: DataFrame, data_dir: str, written: dict, partition_by: str | None
+) -> T.StructType:
+    """``spark.read.parquet(data_dir).schema`` without its inference job
+    (see ``SnapshotCatalog.write``); with no files, the same column order
+    and nullability from ``df``'s declared schema."""
+    spark = df.sparkSession
+    if written["schema"] is not None:
+        data_schema = T.StructType.fromJson(json.loads(written["schema"]))
+    else:  # 0 files: every file Spark's parquet writer makes has the footer key
+        data_schema = T.StructType([f for f in df.schema.fields if f.name != partition_by])
+    schema = spark.read.schema(data_schema).parquet(data_dir).schema
+    if partition_by and partition_by not in schema.names:
+        schema = schema.add(partition_by, df.schema[partition_by].dataType, True)
+    return schema
 
 
 def _zorder_expr(cols_ranges: list[tuple[str, float, float]],
@@ -326,10 +344,29 @@ class SnapshotCatalog:
 
         count_by: a column whose per-value row counts go in the manifest
         (the per-partition lineage/metrics the north rule requires).
-        Accounting never re-reads the written data: the total row count
+        Accounting runs no Spark job after the write: the total row count
         is an ``Observation`` metric collected DURING the write job, and
-        per-partition counts come from parquet footers (when partitioned
-        by the count key) or one column-pruned aggregate otherwise.
+        per-value counts come from one driver-side pass over the files
+        just written — footer row counts per partition directory when
+        partitioned by the count key, otherwise a pyarrow read of that
+        one column, keyed by ``str(value)`` (``"None"`` for null), as a
+        ``groupBy().count().collect()`` would key string, numeric, date
+        and boolean values. That read is O(rows) on the driver, so
+        unpartitioned ``count_by`` suits small tables: its one caller,
+        the pipeline's aggregates, writes one row per sink × source ×
+        bucket.
+
+        The manifest's ``schema`` is exactly what
+        ``spark.read.parquet(data_dir).schema`` reports (partition column
+        last, every field nullable), obtained without the inference job:
+        the data schema Spark stored in the parquet footer is passed to
+        the reader as a user schema and only the partition column is
+        inferred, from directory names. A 0-row write (no files) stores
+        the same column order and nullability built from ``df``'s
+        declared schema; there the partition column keeps its declared
+        type, which equals the inferred one for string columns whose
+        values do not parse as numbers or dates (a long column reads back
+        as int when its values fit).
 
         cluster_by: sort each write task's rows by these columns before
         encoding (Iceberg's sort-order data layout). Narrow (no shuffle)
@@ -426,21 +463,14 @@ class SnapshotCatalog:
             writer.parquet(data_dir, compression="snappy")
             total = obs.get["rows"]
 
-        spark = df.sparkSession
+        stat_cols = stats_by if stats_by is not None else (cluster_by or [])
+        counted = count_by if count_by and count_by in df.columns else None
+        written = _walk_written(
+            data_dir, stat_cols, counted if counted != partition_by else None
+        )
         per_part = None
-        if count_by and count_by in df.columns:
-            if partition_by == count_by:
-                per_part = _footer_partition_counts(data_dir, count_by)
-            else:
-                # unpartitioned: one aggregate reading ONLY the count_by
-                # column (column-pruned parquet scan of the written data)
-                per_part = {
-                    str(r[count_by]): r["n"]
-                    for r in spark.read.parquet(data_dir)
-                    .groupBy(count_by)
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
+        if counted:
+            per_part = written["partition_counts" if counted == partition_by else "value_counts"]
         cum_total, cum_parts = total, per_part
         if parent is not None:
             pm = self.manifest(table, parent)
@@ -472,15 +502,8 @@ class SnapshotCatalog:
                     cum_total -= cum_parts.pop(v, 0)
                 for k, v in per_part.items():
                     cum_parts[k] = cum_parts.get(k, 0) + v
-        stat_cols = stats_by if stats_by is not None else (cluster_by or [])
-        file_stats = _footer_file_stats(data_dir, stat_cols) if stat_cols else None
-        # a 0-row delta (e.g. an increment that was entirely duplicates)
-        # writes no parquet files; the declared schema stands in for the
-        # read-back and reads skip the snapshot via row_count == 0
-        if total:
-            schema_json = spark.read.parquet(data_dir).schema.jsonValue()
-        else:
-            schema_json = df.schema.jsonValue()
+        file_stats = written["files"] if stat_cols else None
+        schema_json = _written_schema(df, data_dir, written, partition_by).jsonValue()
         manifest = {
             "table": table,
             "snapshot": snap,

@@ -59,8 +59,8 @@ from qsvspark.io.snapshot import SnapshotCatalog
 from qsvspark.pipeline.tokens import source_dim
 
 # doc_id grok pattern: "<source>/part-<shard>/doc-<seq>"
-DOC_ID_RE = r"^(src\d+)/part-(\d+)/doc-(\d+)$"
-_DOC_ID_RE_NAMED = r"^(?P<parsed_source>src\d+)/part-(?P<shard>\d+)/doc-(?P<seq>\d+)$"
+DOC_ID_RE = r"^(src\d+)/part-(\d+)/doc-(\d+)\z"
+_DOC_ID_RE_NAMED = r"^(?P<parsed_source>src\d+)/part-(?P<shard>\d+)/doc-(?P<seq>\d+)\z"
 
 _PARSE_SCHEMA = T.StructType(
     [

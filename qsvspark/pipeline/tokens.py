@@ -126,16 +126,23 @@ def doc_source_dim(docs: DataFrame, num_sinks: int = 4) -> DataFrame:
 
 def source_dim(spark: SparkSession, num_sources: int = 20, num_sinks: int = 4) -> DataFrame:
     """The small lookup dimension the enrich stage broadcast-joins:
-    source → sink assignment, category, quality weight. Deterministic."""
-    rows = []
+    source → sink assignment, category, quality weight. Deterministic.
+
+    Built from a pyarrow table, so the plan is a JVM-side
+    ``LocalRelation`` (string, string, string, double; all nullable).
+    A Python list would plan as a pickled ``LogicalRDD``, and every
+    broadcast of it would run a Spark job that starts a Python worker
+    just to ship these few rows."""
+    import pyarrow as pa
+
     cats = ["web", "code", "books", "forums"]
-    for i in range(num_sources):
-        rows.append(
+    return spark.createDataFrame(
+        pa.table(
             {
-                "source": f"src{i:02d}",
-                "sink": f"sink_{i % num_sinks}",
-                "category": cats[i % len(cats)],
-                "quality_weight": round(1.0 - 0.03 * i, 4),
+                "source": [f"src{i:02d}" for i in range(num_sources)],
+                "sink": [f"sink_{i % num_sinks}" for i in range(num_sources)],
+                "category": [cats[i % len(cats)] for i in range(num_sources)],
+                "quality_weight": [round(1.0 - 0.03 * i, 4) for i in range(num_sources)],
             }
         )
-    return spark.createDataFrame(rows).select("source", "sink", "category", "quality_weight")
+    )

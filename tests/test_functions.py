@@ -405,18 +405,31 @@ class TestRetiredRegistryVariants:
         """contains_ci / grep_invert / pivot_mean / timeline_sum rotated
         out of the 50-slot registry for line_dups / vocab_topk /
         span_pairs / semdedup; their base operators stay oracle-checked
-        and the variants stay exercised here."""
+        and the variants stay pinned here by value invariants: grep and
+        its invert partition the table, contains_ci counts what a plain
+        ILIKE counts, and pivot_mean cells are plain group means."""
         import __spark_entry__ as e
 
+        from qsvspark import Q
+
         sf = "/root/testdata/sf0.001"
-        ci = e.q_contains_ci(spark, sf)
-        assert ci.count() > 0  # AUTOMOBILE segment matches 'AUTO' case-insensitively
-        inv = e.q_grep_invert(spark, sf)
-        grep = e.q_grep(spark, sf)
-        # invert selects the complement regex family on the same table
-        assert inv.count() > 0 and grep.count() > 0
+        customer = e._t(spark, sf, "customer")  # noqa: SLF001
+        ilike = customer.where(F.col("c_mktsegment").ilike("%auto%")).count()
+        assert e.q_contains_ci(spark, sf).count() == ilike > 0
+        nation = e._t(spark, sf, "nation")  # noqa: SLF001
+        hits = Q(nation).grep("1").df.count()
+        assert 0 < hits < nation.count()
+        assert hits + e.q_grep_invert(spark, sf).count() == nation.count()
+        keys = ["l_returnflag", "l_linestatus"]
+        plain = {
+            (r[0], r[1]): r[2]
+            for r in e._t(spark, sf, "lineitem")  # noqa: SLF001
+            .groupBy(*keys).avg("l_quantity")
+            .select(*keys, F.round("avg(l_quantity)", 4))
+            .collect()
+        }
         pm = {tuple(r)[:2]: r["qty_mean"] for r in e.q_pivot_mean(spark, sf).collect()}
-        assert len(pm) >= 3 and all(v > 0 for v in pm.values())
+        assert len(pm) >= 3 and pm == plain
         ts = e.q_timeline_sum(spark, sf)
         assert ts.count() > 0 and "sum_cents" in ts.columns
         # join_left rotated out for dedup_groups; join stays oracle-checked

@@ -8,9 +8,11 @@ import gzip
 import io
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from qsvspark import Q
 from qsvspark.errors import LoadError
@@ -275,6 +277,96 @@ def _assert_read_submits_no_job(spark, cat, table, snap=None):
     for part, d in zip(parts, dirs):
         assert part.schema == spark.read.parquet(d).schema
     return df
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` submits, counted through a job group
+    once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestJobLeanCommit:
+    """A commit runs only its own write's Spark job: the schema comes from
+    the parquet footers and per-value counts from a driver-side read of
+    the files just written, never from a read-back job."""
+
+    @pytest.fixture
+    def keyed(self, spark):
+        # string key with nulls; a non-nullable array and double so the
+        # read-back's nullability differs from the declared schema
+        return spark.range(300).select(
+            F.col("id"),
+            F.when(F.col("id") % 7 == 0, F.lit(None))
+            .otherwise(F.concat(F.lit("k"), (F.col("id") % 3).cast("string")))
+            .alias("k"),
+            F.array(F.col("id").cast("int")).alias("arr"),
+            F.lit(1.5).alias("x"),
+        )
+
+    def test_flat_write_with_count_by_is_one_job(self, spark, keyed, tmp_path):
+        cat = SnapshotCatalog(str(tmp_path / "wh"))
+        out = {}
+        assert _jobs_submitted(
+            spark, lambda: out.update(m=cat.write(keyed, "t", count_by="k"))
+        ) == 1
+        grouped = {
+            str(r["k"]): r["n"]
+            for r in keyed.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        assert "None" in grouped
+        assert out["m"]["partition_counts"] == grouped
+        data_dir = os.path.join(cat.root, "t", "snap-00001", "data")
+        assert out["m"]["schema"] == spark.read.parquet(data_dir).schema.jsonValue()
+
+    def test_partitioned_write_is_one_job(self, spark, keyed, tmp_path):
+        cat = SnapshotCatalog(str(tmp_path / "wh"))
+        out = {}
+        assert _jobs_submitted(
+            spark,
+            lambda: out.update(
+                m=cat.write(keyed, "t", partition_by="k", count_by="k", stats_by=["id"])
+            ),
+        ) == 1
+        m = out["m"]
+        assert m["partition_counts"] == {
+            "__HIVE_DEFAULT_PARTITION__": 43, "k0": 85, "k1": 86, "k2": 86,
+        }
+        data_dir = os.path.join(cat.root, "t", "snap-00001", "data")
+        assert m["schema"] == spark.read.parquet(data_dir).schema.jsonValue()
+        assert sum(e["rows"] for e in cat.file_stats("t")) == 300
+
+    def test_empty_and_nonempty_writes_store_one_shape(self, spark, keyed, tmp_path):
+        cat = SnapshotCatalog(str(tmp_path / "wh"))
+        full = cat.write(keyed, "full", partition_by="k", count_by="k")
+        empty = cat.write(keyed.where("id < 0"), "empty", partition_by="k", count_by="k")
+        assert empty["row_count"] == 0
+        assert empty["schema"] == full["schema"]
+        read_empty, read_full = cat.read(spark, "empty"), cat.read(spark, "full")
+        assert read_empty.schema == read_full.schema
+        assert read_full.columns == ["id", "arr", "x", "k"]
+        assert read_empty.count() == 0
+
+    def test_empty_numeric_partition_keeps_order_and_nullability(self, spark, keyed, tmp_path):
+        # a numeric partition column's read-back type comes from directory
+        # names (int for small longs), so only order and nullability can
+        # match an empty write, which keeps the declared long
+        cat = SnapshotCatalog(str(tmp_path / "wh"))
+        df = keyed.withColumn("b", F.col("id") % 3)
+        full = T.StructType.fromJson(cat.write(df, "full", partition_by="b")["schema"])
+        empty = T.StructType.fromJson(
+            cat.write(df.where("id < 0"), "empty", partition_by="b")["schema"]
+        )
+        assert full.names == empty.names == ["id", "k", "arr", "x", "b"]
+        assert [f.nullable for f in full] == [f.nullable for f in empty]
+        assert (full["b"].dataType, empty["b"].dataType) == (T.IntegerType(), T.LongType())
 
 
 class TestCompaction:

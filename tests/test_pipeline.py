@@ -65,16 +65,33 @@ class TestParse:
         assert p.filter(F.col("parsed_source") != F.col("source")).count() == 0
 
     def test_malformed_doc_id_gives_nulls(self, spark):
+        # a trailing newline is malformed on every engine: the pattern
+        # ends in \z, since Java's `$` also matches before a final "\n"
         df = spark.createDataFrame(
-            [("garbage", [1, 2], 2, "src00")],
+            [("garbage", [1, 2], 2, "src00"), ("src01/part-3/doc-7\n", [1], 1, "src01")],
             "doc_id string, tokens array<int>, n_tok int, source string",
         )
         for mode in ("pandas", "native", "arrow"):
-            row = parse_stage(df, mode).collect()[0]
-            assert row["parsed_source"] is None and row["shard"] is None
+            rows = parse_stage(df, mode).collect()
+            assert len(rows) == 2, mode
+            for row in rows:
+                assert (row["parsed_source"], row["shard"], row["seq"]) == (None, None, None), mode
 
 
 class TestEnrichRouteAggregate:
+    def test_source_dim_is_a_local_relation(self, spark):
+        dim = source_dim(spark)
+        plan = dim._jdf.queryExecution().analyzed()  # noqa: SLF001
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert dim.schema.simpleString() == (
+            "struct<source:string,sink:string,category:string,quality_weight:double>"
+        )
+        assert all(f.nullable for f in dim.schema.fields)
+        rows = [tuple(r) for r in dim.collect()]
+        assert len(rows) == 20
+        assert rows[0] == ("src00", "sink_0", "web", 1.0)
+        assert rows[19] == ("src19", "sink_3", "forums", 0.43)
+
     def test_enrich_assigns_sink_to_all(self, spark, tokens):
         dim = source_dim(spark)
         e = enrich_stage(parse_stage(tokens, "native"), dim)
