@@ -854,14 +854,14 @@ def _semdedup_oracle(threshold: float = 0.45) -> str:
 
 
 def q_pipeline_parse(spark, sf):
-    """North-star parse stage (Arrow-vectorized grok UDF) over a
+    """North-star parse stage (native regexp_extract, no Python) over a
     documents-derived tokens table; tokens serialized to a string so the
     oracle value-hash proves per-row token-array equality."""
     from qsvspark.pipeline.northstar import parse_stage
     from qsvspark.pipeline.tokens import tokens_from_documents
 
     tok = tokens_from_documents(_t(spark, sf, "documents"))
-    out = parse_stage(tok, "arrow")
+    out = parse_stage(tok)
     return out.select(
         "doc_id", "parsed_source", "shard", "seq", "n_tok",
         F.concat_ws(",", F.col("tokens")).alias("tokens_str"),
@@ -897,13 +897,13 @@ def q_pipeline_quarantine(spark, sf):
     ).otherwise(eff_src)
     dirty = base.select(did.alias("doc_id"), src_col.alias("source"))
     out = quarantine_stage(
-        enrich_stage(parse_stage(dirty, "arrow"), doc_source_dim(docs))
+        enrich_stage(parse_stage(dirty), doc_source_dim(docs))
     )
     return out.select("doc_id", "source", "sink", "error_reason")
 
 
 def q_pipeline_aggregate(spark, sf):
-    """North-star DAG: parse (Arrow grok UDF) → broadcast enrich →
+    """North-star DAG: parse (native regexp_extract) → broadcast enrich →
     aggregate, over the documents-derived tokens table (route's write
     stage is exercised by tests/bench; a query() must stay read-only).
     Fully oracle-checked: per-sink seq counts, uniq doc counts, token
@@ -913,7 +913,7 @@ def q_pipeline_aggregate(spark, sf):
 
     docs = _t(spark, sf, "documents")
     tok = tokens_from_documents(docs)
-    return aggregate_stage(enrich_stage(parse_stage(tok, "arrow"), doc_source_dim(docs)))
+    return aggregate_stage(enrich_stage(parse_stage(tok), doc_source_dim(docs)))
 
 
 def q_pipeline_aggregate_salted(spark, sf):
@@ -928,7 +928,7 @@ def q_pipeline_aggregate_salted(spark, sf):
     docs = _t(spark, sf, "documents")
     tok = tokens_from_documents(docs)
     return aggregate_stage_salted(
-        enrich_stage(parse_stage(tok, "arrow"), doc_source_dim(docs)), salt_buckets=8
+        enrich_stage(parse_stage(tok), doc_source_dim(docs)), salt_buckets=8
     )
 
 

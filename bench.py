@@ -4,9 +4,10 @@
    "pipeline": {rows, seconds, sequences_per_sec},
    "scaling": {scaling_efficiency, hw_pair_efficiency,
                job_vs_hw_ceiling, bandwidth_capped, phase, ...},
-   "detail_file": "BENCH_DETAIL.json"}
+   "detail_file": "BENCH_DETAIL_<run_id>.json"}
 and writes the full detail (per-level runs, bandwidth-probe history,
-calibration, per-sink counts) to BENCH_DETAIL.json next to this file.
+calibration, per-sink counts) to that file next to this one. Each run
+writes its own file, so a run never overwrites a committed record.
 
 Headline queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS]. The scaling section evidences the north-rule
@@ -947,17 +948,21 @@ def _run_sf1(spark, queries: dict, sf01_steady: dict) -> dict:
 
 
 def _emit_artifacts(
-    summary: dict, detail: dict, detail_path: str, max_line: int = 1500
+    summary: dict, detail: dict, detail_dir: str, max_line: int = 1500
 ) -> str:
     """Stamp BOTH artifacts with one shared run id and write the detail
-    file atomically (tmp + rename), so BENCH_r*.json and
-    BENCH_DETAIL.json can never describe different executions (round-3's
-    committed detail file was from an earlier run than its summary).
+    file atomically (tmp + rename) to detail_dir/BENCH_DETAIL_<run_id>.json,
+    which the summary names in ``detail_file``. BENCH_r*.json and its
+    detail file can never describe different executions (round-3's
+    committed detail file was from an earlier run than its summary), and
+    no run overwrites another run's detail file.
     Returns the bounded summary line to print."""
     run_id = (summary.get("run_id") or detail.get("run_id")
               or f"run-{int(time.time())}-{os.getpid()}")
     summary["run_id"] = run_id
     detail["run_id"] = run_id
+    summary["detail_file"] = f"BENCH_DETAIL_{run_id}.json"
+    detail_path = os.path.join(detail_dir, summary["detail_file"])
     tmp = detail_path + ".tmp"
     try:
         with open(tmp, "w") as f:
@@ -1101,14 +1106,13 @@ def _assemble(state: dict) -> tuple[dict, dict]:
         # a kill signal is not a query error: reported on its own
         "errors_count": sum(1 for k in query_errors if k != "__signal__"),
         "signal": query_errors.get("__signal__"),
-        "detail_file": "BENCH_DETAIL.json",
         "run_id": state["run_id"],
         "sections_done": list(state.get("sections_done") or []),
     }
     return summary, detail
 
 
-def _flush_state(state: dict, detail_path: str, final: bool = False) -> str:
+def _flush_state(state: dict, detail_dir: str, final: bool = False) -> str:
     """Emit the current artifacts: write the detail file (atomic) and
     print the bounded summary line to stdout. Non-final flushes carry
     ``"partial": true``; a consumer that takes the LAST parseable JSON
@@ -1116,12 +1120,12 @@ def _flush_state(state: dict, detail_path: str, final: bool = False) -> str:
     summary, detail = _assemble(state)
     if not final:
         summary["partial"] = True
-    line = _emit_artifacts(summary, detail, detail_path)
+    line = _emit_artifacts(summary, detail, detail_dir)
     print(line, flush=True)
     return line
 
 
-def _install_signal_flush(state: dict, detail_path: str):
+def _install_signal_flush(state: dict, detail_dir: str):
     """SIGTERM/SIGINT → flush whatever sections completed, then exit
     128+sig. The driver kills the bench with `timeout` (SIGTERM first);
     without this trap the in-flight section's results and the summary
@@ -1134,7 +1138,7 @@ def _install_signal_flush(state: dict, detail_path: str):
                 f"killed by signal {sig} after "
                 f"{round(time.time() - _RUN_T0, 1)}s"
             )
-            _flush_state(state, detail_path, final=False)
+            _flush_state(state, detail_dir, final=False)
         finally:
             os._exit(128 + sig)
 
@@ -1168,7 +1172,6 @@ def main() -> None:
     ext_steady: dict[str, float] = {}
     query_errors: dict[str, str] = {}
     section_probes: dict[str, float | None] = {}
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
     state: dict = {
         "run_id": f"run-{int(time.time())}-{os.getpid()}",
         "sf": float(SF_DIR.rstrip("/").split("sf")[-1]),
@@ -1180,11 +1183,11 @@ def main() -> None:
         "query_errors": query_errors,
         "section_probes": section_probes,
     }
-    _install_signal_flush(state, detail_path)
+    _install_signal_flush(state, REPO)
 
     def _section_done(name: str) -> None:
         state["sections_done"].append(name)
-        _flush_state(state, detail_path)
+        _flush_state(state, REPO)
     # Untimed warmup: first-use JVM costs (codegen JIT, noop-sink init,
     # Arrow Python-worker spawn) land on whichever query runs first —
     # rounds 1–2 charged ~1.4 s of it to `select`. Steady state is what
@@ -1419,7 +1422,7 @@ def main() -> None:
     # its own line, so the LAST parseable stdout line is always current.
     if not SKIP_SCALING and scaling is not None:
         state["sections_done"].append("scaling")
-    _flush_state(state, detail_path, final=True)
+    _flush_state(state, REPO, final=True)
 
 
 if __name__ == "__main__":

@@ -8,7 +8,7 @@ Ship and run:
         --input  s3://bucket/tokens_table \
         --warehouse s3://bucket/warehouse \
         --fingerprint tokens-2026-08-17 \
-        [--parse-mode arrow] [--salted] [--bucket-width 64]
+        [--salted] [--bucket-width 64]
 
 On a real cluster add Iceberg via
     --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver>
@@ -39,8 +39,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--warehouse", required=True, help="snapshot warehouse root")
     ap.add_argument("--fingerprint",
                     help="input fingerprint for resume (same input+config → resume)")
-    ap.add_argument("--parse-mode", default="arrow",
-                    choices=["arrow", "pandas", "native"])
     ap.add_argument("--bucket-width", type=int, default=64)
     ap.add_argument("--num-sources", type=int, default=20,
                     help="size of the enrich dimension; widening it then "
@@ -158,7 +156,6 @@ def main(argv: list[str] | None = None) -> int:
                       shuffle_partitions=args.shuffle_partitions)
     pipe = NorthStarPipeline(
         spark, args.warehouse,
-        parse_mode=args.parse_mode,
         bucket_width=args.bucket_width,
         num_sources=args.num_sources,
         num_sinks=args.num_sinks,

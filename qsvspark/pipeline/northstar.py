@@ -1,16 +1,15 @@
-"""The north-star pipeline: parse → enrich → route → aggregate over an
+r"""The north-star pipeline: parse → enrich → route → aggregate over an
 Iceberg-style table of pre-tokenized training sequences, resumable from
 snapshot manifests (BASELINE.json north_rule).
 
 Stage design (all DataFrame-declarative; Catalyst/AQE pick physical plans):
 
   parse      grok/regex extraction of route fields (shard, seq) from the
-             doc_id/source string columns. Three interchangeable engines
-             (see parse_stage): 'arrow' (default) — mapInArrow, whole
-             Arrow batches with the regex in pyarrow.compute; 'pandas' —
-             a scalar pandas UDF over the doc_id column only (the token
-             arrays stay in the JVM); and 'native' — regexp_extract,
-             whole-stage codegen, zero Python.
+             doc_id string column with native regexp_extract: whole-stage
+             codegen, zero Python, so the token arrays never leave the JVM.
+             The pattern uses only ASCII classes and \z, so the JVM regex
+             engine matches exactly what a reference regex would; there is
+             no need for a Python engine (see parse_stage).
   dedup      (optional, dedup="exact") drop duplicate token sequences,
              keep-first by doc_id: WindowGroupLimit emits one local
              candidate per 128-bit content key map-side before the
@@ -50,114 +49,44 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from qsvspark.io.snapshot import SnapshotCatalog
 from qsvspark.pipeline.tokens import source_dim
 
-# doc_id grok pattern: "<source>/part-<shard>/doc-<seq>"
+# doc_id grok pattern: "<source>/part-<shard>/doc-<seq>". Only ASCII
+# classes and \z, so Java's regex engine reads it exactly like RE2 and
+# Python's re.ASCII: \d never matches a non-ASCII digit, and \z (unlike
+# `$`) does not match before a trailing "\n".
 DOC_ID_RE = r"^(src\d+)/part-(\d+)/doc-(\d+)\z"
-_DOC_ID_RE_NAMED = r"^(?P<parsed_source>src\d+)/part-(?P<shard>\d+)/doc-(?P<seq>\d+)\z"
-
-_PARSE_SCHEMA = T.StructType(
-    [
-        T.StructField("parsed_source", T.StringType()),
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("seq", T.LongType()),
-    ]
-)
 
 
-@F.pandas_udf(_PARSE_SCHEMA)
-def _grok_doc_id(doc_id: pd.Series) -> pd.DataFrame:
-    """Vectorized grok over batched byte columns: the regex runs as
-    pyarrow.compute.extract_regex (RE2 over Arrow buffers, C++) — NOT
-    pandas .str.extract, which on object-dtype Series is a per-row Python
-    loop and anti-scales once every core carries a Python worker. Nothing
-    here touches Python objects per row; only the (small) doc_id column
-    crosses the JVM↔Python boundary."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def parse_stage(df: DataFrame) -> DataFrame:
+    r"""Extract the route fields parsed_source (string), shard (int) and
+    seq (long) from doc_id.
 
-    arr = pa.array(doc_id, type=pa.string())
-    ext = pc.extract_regex(arr, _DOC_ID_RE_NAMED)
-    return pd.DataFrame(
+    Native regexp_extract is the only engine. It runs inside whole-stage
+    codegen with no Python worker, so the token arrays stay in the JVM
+    instead of crossing to Python and back. DOC_ID_RE uses only ASCII
+    classes plus \z, so Java matches the same ids as RE2 or Python's
+    re.ASCII would, and no second engine is needed to be exact.
+
+    A doc_id that does not match, or whose shard or seq does not fit its
+    type, gives null in all three fields: a malformed id, which
+    quarantine_stage files as unparseable_doc_id. try_cast keeps an
+    out-of-range number from failing the job under ANSI mode."""
+    d = F.col("doc_id")
+    shard = F.regexp_extract(d, DOC_ID_RE, 2).try_cast("int")
+    seq = F.regexp_extract(d, DOC_ID_RE, 3).try_cast("long")
+    fits = shard.isNotNull() & seq.isNotNull()
+    return df.withColumns(
         {
-            "parsed_source": pc.struct_field(ext, "parsed_source").to_pandas(),
-            "shard": pc.cast(pc.struct_field(ext, "shard"), pa.int32()).to_pandas(),
-            "seq": pc.cast(pc.struct_field(ext, "seq"), pa.int64()).to_pandas(),
+            "parsed_source": F.when(fits, F.regexp_extract(d, DOC_ID_RE, 1)),
+            "shard": F.when(fits, shard),
+            "seq": F.when(fits, seq),
         }
     )
-
-
-def parse_stage(df: DataFrame, mode: str = "arrow") -> DataFrame:
-    """Extract route fields from doc_id. Three interchangeable engines
-    (identical results — asserted in tests):
-
-    'arrow'  — mapInArrow: whole batches stream JVM→Python as Arrow
-               buffers, the regex runs via pyarrow.compute (RE2), and the
-               token arrays cross as columnar list<int32> with no
-               per-element object work. This avoids the BatchEvalPython
-               row queue, which buffers/serializes every FULL input row
-               (~1KB each with tokens) while a scalar-UDF batch round-
-               trips — measured 1.5-2x slower on wide rows. Default.
-    'pandas' — scalar pandas_udf over ONLY the doc_id column (narrowest
-               possible Python boundary; pays the row-queue cost).
-    'native' — regexp_extract, whole-stage codegen, zero Python.
-    """
-    if mode == "arrow":
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        out_schema = T.StructType(
-            df.schema.fields
-            + [
-                T.StructField("parsed_source", T.StringType()),
-                T.StructField("shard", T.IntegerType()),
-                T.StructField("seq", T.LongType()),
-            ]
-        )
-        extra = [
-            pa.field("parsed_source", pa.string()),
-            pa.field("shard", pa.int32()),
-            pa.field("seq", pa.int64()),
-        ]
-
-        def parse_batches(batches):
-            for batch in batches:
-                ext = pc.extract_regex(batch.column("doc_id"), _DOC_ID_RE_NAMED)
-                arrays = list(batch.columns) + [
-                    pc.struct_field(ext, "parsed_source"),
-                    pc.cast(pc.struct_field(ext, "shard"), pa.int32()),
-                    pc.cast(pc.struct_field(ext, "seq"), pa.int64()),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, schema=pa.schema(list(batch.schema) + extra)
-                )
-
-        return df.mapInArrow(parse_batches, out_schema)
-    if mode == "pandas":
-        parsed = df.withColumn("__p", _grok_doc_id(F.col("doc_id")))
-        return parsed.select(
-            "*",
-            F.col("__p.parsed_source").alias("parsed_source"),
-            F.col("__p.shard").alias("shard"),
-            F.col("__p.seq").alias("seq"),
-        ).drop("__p")
-    if mode == "native":
-        d = F.col("doc_id")
-        return (
-            df.withColumn(
-                "parsed_source",
-                F.nullif(F.regexp_extract(d, DOC_ID_RE, 1), F.lit("")),
-            )
-            .withColumn("shard", F.nullif(F.regexp_extract(d, DOC_ID_RE, 2), F.lit("")).cast("int"))
-            .withColumn("seq", F.nullif(F.regexp_extract(d, DOC_ID_RE, 3), F.lit("")).cast("long"))
-        )
-    raise ValueError(f"unknown parse mode '{mode}'")
 
 
 def enrich_stage(df: DataFrame, dim: DataFrame) -> DataFrame:
@@ -238,7 +167,8 @@ def quarantine_stage(df: DataFrame) -> DataFrame:
     partition directory.
 
     Reasons, first match wins:
-      unparseable_doc_id — the grok regex extracted nothing
+      unparseable_doc_id — parse_stage gave no fields (no grok match,
+                           or a shard/seq out of range)
       source_mismatch    — doc_id parsed but embeds a different source
                            than the row's source column (corrupt join key)
       unknown_source     — the enrich dimension has no row for source
@@ -455,7 +385,6 @@ class NorthStarPipeline:
         self,
         spark: SparkSession,
         warehouse: str,
-        parse_mode: str = "arrow",
         bucket_width: int = 64,
         num_sources: int = 20,
         num_sinks: int = 4,
@@ -468,7 +397,6 @@ class NorthStarPipeline:
     ):
         self.spark = spark
         self.catalog = SnapshotCatalog(warehouse)
-        self.parse_mode = parse_mode
         self.bucket_width = bucket_width
         self.num_sources = num_sources
         self.num_sinks = num_sinks
@@ -498,8 +426,10 @@ class NorthStarPipeline:
         self.dedup_keys_buckets = dedup_keys_buckets
 
     def _config_fp(self, input_fingerprint: str, stage: str) -> str:
+        # "parse=native" names the one doc_id parser; it stays in the
+        # string so snapshots committed with it keep resuming
         return (
-            f"{input_fingerprint}|{stage}|parse={self.parse_mode}"
+            f"{input_fingerprint}|{stage}|parse=native"
             f"|bw={self.bucket_width}|k={self.num_sources}|s={self.num_sinks}"
             f"|dedup={self.dedup or 'off'}"
             + ("|dlq=1" if self.quarantine else "")
@@ -568,8 +498,7 @@ class NorthStarPipeline:
             enriched.coalesce(max(target, 1)),
             "routed",
             input_fingerprint=fp,
-            lineage={"stages": stages + ["enrich", "route"], "parse_mode": self.parse_mode,
-                     **lineage},
+            lineage={"stages": stages + ["enrich", "route"], **lineage},
             partition_by="sink",
             count_by="sink",
             cluster_by=self.route_cluster_by,
@@ -652,7 +581,7 @@ class NorthStarPipeline:
             routed_fp = self._config_fp(input_fingerprint, "route")
 
             def route() -> dict:
-                parsed = parse_stage(tokens, self.parse_mode)
+                parsed = parse_stage(tokens)
                 obs = None
                 if self.dedup:
                     # pre-dedup row count rides the SAME write action via
@@ -726,7 +655,7 @@ class NorthStarPipeline:
             inc_fp = self._config_fp(increment_fingerprint, "route-increment")
 
             def route() -> dict:
-                parsed = parse_stage(tokens, self.parse_mode)
+                parsed = parse_stage(tokens)
                 if self.dedup:
                     # within-increment keep-first, then drop anything whose
                     # content key is already in the committed key chain —
@@ -805,7 +734,7 @@ class NorthStarPipeline:
                     .select("doc_id", "tokens", "n_tok", "source")
                 )
                 return self._route(
-                    parse_stage(raw, self.parse_mode),
+                    parse_stage(raw),
                     route_fp,
                     # these rows passed any dedup when they were first routed
                     {"stages": ["parse", "enrich", "route"], "inputs": [redrive_fingerprint],

@@ -29,7 +29,6 @@ def routed_stream(
     spark: SparkSession,
     input_dir: str,
     dim: DataFrame,
-    parse_mode: str = "arrow",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming parse→enrich over a parquet-file source of token
@@ -41,7 +40,7 @@ def routed_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     tokens = reader.load(input_dir)
-    return enrich_stage(parse_stage(tokens, parse_mode), dim)
+    return enrich_stage(parse_stage(tokens), dim)
 
 
 def run_available_now(

@@ -1,7 +1,8 @@
 """The bench writer contract: summary line and detail file are stamped
 with ONE shared run id and the detail file is written atomically, so
-BENCH_r*.json and BENCH_DETAIL.json can never describe different
-executions (the round-3 artifacts did). Round 5 adds the kill-proof
+BENCH_r*.json and its BENCH_DETAIL_<run_id>.json can never describe
+different executions (the round-3 artifacts did), and no run overwrites
+another run's detail file. Round 5 adds the kill-proof
 delivery contract (round 4's driver artifact was rc=124/parsed:null):
 a summary line is flushed after EVERY completed section, SIGTERM/SIGINT
 flush before exiting, and the scaling hunt respects a total-run
@@ -21,11 +22,12 @@ import bench
 
 class TestEmitArtifacts:
     def test_shared_run_id_and_atomic_detail(self, tmp_path):
-        detail_path = str(tmp_path / "BENCH_DETAIL.json")
         summary = {"metric": "m", "value": 1.0}
         detail = {"metric": "m", "value": 1.0, "queries": {"q": 0.5}}
-        line = bench._emit_artifacts(summary, detail, detail_path)
+        line = bench._emit_artifacts(summary, detail, str(tmp_path))
         parsed = json.loads(line)
+        assert parsed["detail_file"] == f"BENCH_DETAIL_{parsed['run_id']}.json"
+        detail_path = str(tmp_path / parsed["detail_file"])
         on_disk = json.load(open(detail_path))
         assert parsed["run_id"] == on_disk["run_id"]
         assert parsed["run_id"].startswith("run-")
@@ -33,12 +35,20 @@ class TestEmitArtifacts:
         assert not os.path.exists(detail_path + ".tmp")
 
     def test_preserves_caller_run_id(self, tmp_path):
-        detail_path = str(tmp_path / "d.json")
         line = bench._emit_artifacts(
-            {"run_id": "run-fixed"}, {}, detail_path
+            {"run_id": "run-fixed"}, {}, str(tmp_path)
         )
         assert json.loads(line)["run_id"] == "run-fixed"
-        assert json.load(open(detail_path))["run_id"] == "run-fixed"
+        detail = json.load(open(tmp_path / "BENCH_DETAIL_run-fixed.json"))
+        assert detail["run_id"] == "run-fixed"
+
+    def test_each_run_id_writes_its_own_detail_file(self, tmp_path):
+        for run_id in ("run-1", "run-2"):
+            bench._emit_artifacts({"run_id": run_id}, {"value": run_id}, str(tmp_path))
+        assert sorted(os.listdir(tmp_path)) == [
+            "BENCH_DETAIL_run-1.json", "BENCH_DETAIL_run-2.json"
+        ]
+        assert json.load(open(tmp_path / "BENCH_DETAIL_run-1.json"))["value"] == "run-1"
 
     def test_per_section_flush_is_parseable_and_marked_partial(
         self, tmp_path, capsys
@@ -46,7 +56,6 @@ class TestEmitArtifacts:
         """Every completed section prints a full summary line with
         partial=true; the final flush drops the flag. A consumer taking
         the LAST parseable stdout line always sees the latest state."""
-        detail_path = str(tmp_path / "d.json")
         state = {
             "run_id": "run-flush-test",
             "sf": 0.1,
@@ -58,7 +67,7 @@ class TestEmitArtifacts:
             "query_errors": {},
             "section_probes": {"before_headline_gbps": 19.0},
         }
-        line1 = bench._flush_state(state, detail_path)
+        line1 = bench._flush_state(state, str(tmp_path))
         p1 = json.loads(line1)
         assert p1["partial"] is True
         assert p1["sections_done"] == ["headline"]
@@ -66,11 +75,11 @@ class TestEmitArtifacts:
         # a later section appears in the next flush; final drops partial
         state["sections_done"].append("extensions")
         state["ext_timings"]["seq_pack"] = 0.6
-        p2 = json.loads(bench._flush_state(state, detail_path, final=True))
+        p2 = json.loads(bench._flush_state(state, str(tmp_path), final=True))
         assert "partial" not in p2
         assert p2["extensions"] == {"seq_pack": 0.6}
         # detail file matches the last flush
-        on_disk = json.load(open(detail_path))
+        on_disk = json.load(open(tmp_path / p2["detail_file"]))
         assert on_disk["run_id"] == "run-flush-test"
         assert on_disk["extensions"] == {"seq_pack": 0.6}
 
@@ -78,7 +87,6 @@ class TestEmitArtifacts:
         """The driver kills the bench with `timeout` (SIGTERM). The trap
         must flush a parseable summary line recording the signal, then
         exit 128+15 — round 4's artifact died without one."""
-        detail_path = str(tmp_path / "d.json")
         script = textwrap.dedent(f"""
             import json, os, sys, time
             sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
@@ -90,7 +98,7 @@ class TestEmitArtifacts:
                 "ext_timings": {{}}, "ext_steady": {{}},
                 "query_errors": {{}}, "section_probes": {{}},
             }}
-            bench._install_signal_flush(state, {detail_path!r})
+            bench._install_signal_flush(state, {str(tmp_path)!r})
             print("READY", flush=True)
             time.sleep(60)
         """)
@@ -111,7 +119,8 @@ class TestEmitArtifacts:
         # the kill is reported on its own, not as a query error
         assert parsed["errors_count"] == 0
         assert parsed["signal"].startswith("killed by signal 15")
-        assert json.load(open(detail_path))["errors"]["__signal__"].startswith(
+        detail = json.load(open(tmp_path / "BENCH_DETAIL_run-sig-test.json"))
+        assert detail["errors"]["__signal__"].startswith(
             "killed by signal 15"
         )
 
@@ -125,7 +134,6 @@ class TestEmitArtifacts:
         assert bench._total_deadline() == float("inf")
 
     def test_line_cap_drops_cold_timings_before_evidence(self, tmp_path):
-        detail_path = str(tmp_path / "d.json")
         big = {f"q{i}": 1.234 for i in range(400)}
         summary = {
             "queries": dict(big),
@@ -134,7 +142,7 @@ class TestEmitArtifacts:
             "skew": {"join_salted_speedup": 3.2},
             "sf1": {"pipeline_seq_per_sec": 1.0},
         }
-        line = bench._emit_artifacts(summary, dict(summary), detail_path,
+        line = bench._emit_artifacts(summary, dict(summary), str(tmp_path),
                                      max_line=2000)
         parsed = json.loads(line)
         assert len(line) <= 2000
@@ -142,7 +150,7 @@ class TestEmitArtifacts:
         assert "skew" in parsed and "sf1" in parsed
         assert "queries" not in parsed
         # the detail file keeps EVERYTHING regardless of the line cap
-        assert "queries" in json.load(open(detail_path))
+        assert "queries" in json.load(open(tmp_path / parsed["detail_file"]))
 
     def test_full_summary_line_fits_1500_bytes(self, tmp_path, capsys):
         """The flushed summary line of a run with EVERY section done stays
@@ -183,7 +191,7 @@ class TestEmitArtifacts:
                                   "8v32": {"scaling_efficiency": 0.71}},
                         "errors": []},
         }
-        line = bench._flush_state(state, str(tmp_path / "d.json"), final=True)
+        line = bench._flush_state(state, str(tmp_path), final=True)
         assert len(line.encode()) <= 1500
         parsed = json.loads(line)
         assert "queries" not in parsed and "extensions" not in parsed
@@ -191,5 +199,5 @@ class TestEmitArtifacts:
         assert parsed["pipeline"]["sequences_per_sec"] == 185000.0
         assert parsed["errors_count"] == 1 and parsed["value"] > 0
         # the detail file keeps every per-query map
-        assert "queries" in json.load(open(tmp_path / "d.json"))
+        assert "queries" in json.load(open(tmp_path / parsed["detail_file"]))
 

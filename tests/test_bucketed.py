@@ -222,7 +222,7 @@ class TestPipelineBucketedKeys:
         for label, buckets in (("plain", 0), ("bucketed", 4)):
             wh = str(tmp_path_factory.mktemp(f"wh_{label}"))
             pipe = NorthStarPipeline(
-                spark, wh, parse_mode="native", dedup="exact",
+                spark, wh, dedup="exact",
                 dedup_keys_buckets=buckets,
             )
             m1 = pipe.run_increment(h1, "inc1")
@@ -247,12 +247,12 @@ class TestPipelineBucketedKeys:
         h1 = synth_tokens(spark, 400, seed=13)
         h2 = synth_tokens(spark, 400, seed=13, id_offset=400)
         p1 = NorthStarPipeline(
-            spark, wh, parse_mode="native", dedup="exact", dedup_keys_buckets=4
+            spark, wh, dedup="exact", dedup_keys_buckets=4
         )
         p1.run_increment(h1, "inc1")
         # same warehouse, knob now off — append must stay bucketed
         p2 = NorthStarPipeline(
-            spark, wh, parse_mode="native", dedup="exact", dedup_keys_buckets=0
+            spark, wh, dedup="exact", dedup_keys_buckets=0
         )
         p2.run_increment(h2, "inc2")
         head = p2.catalog.manifest("dedup_keys")
@@ -262,7 +262,7 @@ class TestPipelineBucketedKeys:
 
     def test_dedup_stage_accepts_part_list(self, spark):
         base = synth_tokens(spark, 300, seed=7)
-        parsed = parse_stage(base, "native")
+        parsed = parse_stage(base)
         from qsvspark.pipeline.northstar import dedup_key
 
         keys = dedup_key(parsed.select("n_tok", "tokens")).select("__h1", "__h2")

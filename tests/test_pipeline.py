@@ -8,6 +8,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,30 +53,54 @@ class TestSynthTokens:
         assert counts["src00"] > 5 * counts.get("src19", 1)  # heavy hitter
 
 
+# doc_ids whose shard (> 2^31-1) or seq (> 2^63-1) does not fit its type
+OVERFLOW_IDS = ["src01/part-99999999999/doc-7", "src01/part-3/doc-9223372036854775808"]
+# each must give null in all three route fields
+MALFORMED_IDS = [
+    "garbage",
+    # \z, not `$`: Java's `$` also matches before a final "\n"
+    "src01/part-3/doc-7\n",
+    # Java's \d is ASCII-only, like Python's with re.ASCII
+    "src01/part-\u0663/doc-7",
+    "",
+    None,
+    *OVERFLOW_IDS,
+]
+
+
+def reference_parse(doc_id):
+    """The route fields parse_stage must give, from Python's re."""
+    m = doc_id is not None and re.fullmatch(
+        r"(src\d+)/part-(\d+)/doc-(\d+)", doc_id, flags=re.ASCII
+    )
+    if not m or int(m[2]) > 2**31 - 1 or int(m[3]) > 2**63 - 1:
+        return (None, None, None)
+    return (m[1], int(m[2]), int(m[3]))
+
+
 class TestParse:
-    def test_all_modes_agree(self, tokens):
-        cols = ["doc_id", "parsed_source", "shard", "seq"]
-        n = parse_stage(tokens, "native").select(*cols)
-        for mode in ("pandas", "arrow"):
-            p = parse_stage(tokens, mode).select(*cols)
-            assert p.exceptAll(n).count() == 0 and n.exceptAll(p).count() == 0
+    def test_matches_python_reference(self, tokens):
+        rows = parse_stage(tokens).select("doc_id", "parsed_source", "shard", "seq").collect()
+        assert len(rows) == N
+        for r in rows:
+            assert (r["parsed_source"], r["shard"], r["seq"]) == reference_parse(r["doc_id"])
 
     def test_parse_recovers_source(self, tokens):
-        p = parse_stage(tokens, "native")
+        p = parse_stage(tokens)
         assert p.filter(F.col("parsed_source") != F.col("source")).count() == 0
 
     def test_malformed_doc_id_gives_nulls(self, spark):
-        # a trailing newline is malformed on every engine: the pattern
-        # ends in \z, since Java's `$` also matches before a final "\n"
+        ids = MALFORMED_IDS + ["src01/part-0007/doc-0042"]
         df = spark.createDataFrame(
-            [("garbage", [1, 2], 2, "src00"), ("src01/part-3/doc-7\n", [1], 1, "src01")],
+            [(d, [1], 1, "src01") for d in ids],
             "doc_id string, tokens array<int>, n_tok int, source string",
         )
-        for mode in ("pandas", "native", "arrow"):
-            rows = parse_stage(df, mode).collect()
-            assert len(rows) == 2, mode
-            for row in rows:
-                assert (row["parsed_source"], row["shard"], row["seq"]) == (None, None, None), mode
+        got = {r["doc_id"]: (r["parsed_source"], r["shard"], r["seq"])
+               for r in parse_stage(df).collect()}
+        assert got == {d: reference_parse(d) for d in ids}
+        assert got["src01/part-0007/doc-0042"] == ("src01", 7, 42)
+        for d in MALFORMED_IDS:
+            assert got[d] == (None, None, None), repr(d)
 
 
 class TestEnrichRouteAggregate:
@@ -94,7 +119,7 @@ class TestEnrichRouteAggregate:
 
     def test_enrich_assigns_sink_to_all(self, spark, tokens):
         dim = source_dim(spark)
-        e = enrich_stage(parse_stage(tokens, "native"), dim)
+        e = enrich_stage(parse_stage(tokens), dim)
         assert e.filter(F.col("sink").isNull()).count() == 0
 
     def test_enrich_is_broadcast(self, spark, tokens):
@@ -195,7 +220,7 @@ class TestPipelineEndToEnd:
     @pytest.fixture(scope="class")
     def run(self, spark, tokens, tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("warehouse"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         metrics = pipe.run(tokens, input_fingerprint=f"synth-n{N}-s{SEED}")
         return pipe, metrics
 
@@ -265,7 +290,7 @@ class TestIncrementalRuns:
     @pytest.fixture(scope="class")
     def inc_setup(self, spark, tokens, tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("wh_inc"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         inc1, inc2 = self._halves(tokens)
         m1 = pipe.run_increment(inc1, "inc-1")
         m2 = pipe.run_increment(inc2, "inc-2")
@@ -273,7 +298,7 @@ class TestIncrementalRuns:
 
     def _direct_full(self, spark, tokens):
         return aggregate_stage(
-            enrich_stage(parse_stage(tokens, "pandas"), source_dim(spark))
+            enrich_stage(parse_stage(tokens), source_dim(spark))
         )
 
     def test_cumulative_counts_and_chain_read(self, spark, tokens, inc_setup):
@@ -311,7 +336,7 @@ class TestIncrementalRuns:
     def test_recompute_mode_equals_full_computation(self, spark, tokens,
                                                     tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("wh_inc_rc"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         inc1, inc2 = self._halves(tokens)
         pipe.run_increment(inc1, "inc-1", distinct_mode="recompute")
         pipe.run_increment(inc2, "inc-2", distinct_mode="recompute")
@@ -324,7 +349,7 @@ class TestIncrementalRuns:
         """Any partitioning of the input into disjoint increments must
         reproduce the single-run results exactly."""
         wh = str(tmp_path_factory.mktemp("wh_inc3"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         h = F.pmod(F.xxhash64("doc_id"), F.lit(3))
         for i in range(3):
             pipe.run_increment(tokens.filter(h == i), f"inc3-{i}")
@@ -383,10 +408,7 @@ class TestSinkMaintenance:
         fewer files, identical routed rows + per-sink counts, and resume
         reads the compacted snapshot without recomputing the route."""
         wh = str(tmp_path_factory.mktemp("wh_compact"))
-        pipe = NorthStarPipeline(
-            spark, wh, parse_mode="pandas",
-            route_cluster_by=["source", "n_tok"],
-        )
+        pipe = NorthStarPipeline(spark, wh, route_cluster_by=["source", "n_tok"])
         fp = f"synth-n{N}-s{SEED}-compact"
         first = pipe.run(tokens, input_fingerprint=fp)
         before = pipe.routed()
@@ -432,7 +454,7 @@ class TestDedupStage:
     def test_keep_first_drops_exact_duplicates(self, with_dups, base):
         from qsvspark.pipeline.northstar import dedup_stage
 
-        deduped = dedup_stage(parse_stage(with_dups, "native"))
+        deduped = dedup_stage(parse_stage(with_dups))
         assert deduped.count() == self.ND
         # every kept row is the ORIGINAL (lowest doc_id), never the copy
         kept_seq = F.substring_index("doc_id", "doc-", -1).cast("long")
@@ -442,7 +464,7 @@ class TestDedupStage:
         self, spark, base, with_dups, tmp_path_factory
     ):
         wh = str(tmp_path_factory.mktemp("wh_dedup"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="native", dedup="exact")
+        pipe = NorthStarPipeline(spark, wh, dedup="exact")
         m = pipe.run(with_dups, input_fingerprint="dup-run")
         assert m["input_rows"] == 2 * self.ND
         assert m["rows"] == self.ND
@@ -464,10 +486,10 @@ class TestDedupStage:
         self, spark, with_dups, tmp_path_factory
     ):
         wh = str(tmp_path_factory.mktemp("wh_dedup_fp"))
-        plain = NorthStarPipeline(spark, wh, parse_mode="native")
+        plain = NorthStarPipeline(spark, wh)
         m1 = plain.run(with_dups, input_fingerprint="same-fp")
         assert m1["rows"] == 2 * self.ND
-        deduping = NorthStarPipeline(spark, wh, parse_mode="native", dedup="exact")
+        deduping = NorthStarPipeline(spark, wh, dedup="exact")
         m2 = deduping.run(with_dups, input_fingerprint="same-fp")
         assert m2["resumed"] == []
         assert m2["rows"] == self.ND
@@ -478,7 +500,7 @@ class TestDedupStage:
         """Increment 2 re-ships increment 1's content under new doc_ids:
         the anti-join against the dedup_keys chain must drop it all."""
         wh = str(tmp_path_factory.mktemp("wh_dedup_inc"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="native", dedup="exact")
+        pipe = NorthStarPipeline(spark, wh, dedup="exact")
         h1 = synth_tokens(spark, 800, seed=13)
         h2 = synth_tokens(spark, 800, seed=13, id_offset=800)
         m1 = pipe.run_increment(h1, "inc1")
@@ -549,6 +571,19 @@ class TestQuarantine:
         observed = dict(metrics["per_sink_counts"])
         assert observed.pop(QUARANTINE_SINK) == len(self.BAD)
         assert observed == direct
+
+    @pytest.mark.parametrize("doc_id", OVERFLOW_IDS, ids=["shard", "seq"])
+    def test_out_of_range_id_is_quarantined(self, spark, tmp_path, doc_id):
+        # under ANSI mode a plain cast of either number fails the whole run
+        rows = [(doc_id, [1, 2], 2, "src01"), ("src01/part-0001/doc-000000000001", [3], 1, "src01")]
+        df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+        pipe = NorthStarPipeline(spark, str(tmp_path), quarantine=True)
+        metrics = pipe.run(df, input_fingerprint="overflow")
+        assert metrics["quarantined"] == 1
+        assert [tuple(r) for r in pipe.routed().select("doc_id", "error_reason")
+                .where(F.col("error_reason").isNotNull()).collect()] == [
+            (doc_id, "unparseable_doc_id")
+        ]
 
     def test_aggregates_exclude_quarantine(self, qrun):
         from qsvspark.pipeline.northstar import QUARANTINE_SINK
@@ -709,7 +744,7 @@ class TestPurgeDocs:
         pipe, tok, victim_ids, _ = purged
         direct = aggregate_stage(
             enrich_stage(
-                parse_stage(tok.where(~F.col("doc_id").isin(victim_ids)), "native"),
+                parse_stage(tok.where(~F.col("doc_id").isin(victim_ids))),
                 source_dim(spark),
             )
         )
@@ -727,7 +762,7 @@ class TestPurgeDocs:
         """Takedown semantics with dedup: deleting a doc does NOT free its
         content key — a re-shipped copy is still dropped."""
         wh = str(tmp_path_factory.mktemp("wh_purge_dedup"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="native", dedup="exact")
+        pipe = NorthStarPipeline(spark, wh, dedup="exact")
         h1 = synth_tokens(spark, 100, seed=31)
         pipe.run_increment(h1, "inc1")
         victims = h1.limit(3).select("doc_id")
@@ -1084,7 +1119,7 @@ class TestCheckpointedStages:
     @pytest.fixture(scope="class", params=[None, "exact"], ids=["dedup-off", "dedup-exact"])
     def committed(self, request, spark, tmp_path_factory):
         wh = str(tmp_path_factory.mktemp("wh_stages"))
-        pipe = NorthStarPipeline(spark, wh, parse_mode="native", dedup=request.param)
+        pipe = NorthStarPipeline(spark, wh, dedup=request.param)
         base = synth_tokens(spark, 200, seed=41)
         inc = synth_tokens(spark, 100, seed=42, id_offset=200)
         pipe.run(base, "stages-base")
@@ -1118,7 +1153,7 @@ class TestCheckpointedStages:
 
     def test_fingerprints_unchanged(self, spark, tmp_path_factory):
         pipe = NorthStarPipeline(
-            spark, str(tmp_path_factory.mktemp("wh_fp")), parse_mode="native", dedup="exact"
+            spark, str(tmp_path_factory.mktemp("wh_fp")), dedup="exact"
         )
         tok = synth_tokens(spark, 200, seed=43)
         pipe.run(tok, "fp")
@@ -1141,8 +1176,7 @@ class TestCheckpointedStages:
         ]
 
         q = NorthStarPipeline(
-            spark, str(tmp_path_factory.mktemp("wh_fp_dlq")), parse_mode="native",
-            quarantine=True,
+            spark, str(tmp_path_factory.mktemp("wh_fp_dlq")), quarantine=True,
         )
         q.run(TestQuarantine()._dirty(spark), "q")
         q.redrive_quarantine("rd", dim=TestQuarantineRedrive()._fixed_dim(spark))

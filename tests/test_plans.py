@@ -67,9 +67,12 @@ class TestJoinStrategies:
         from qsvspark.pipeline.tokens import source_dim, synth_tokens
 
         tok = synth_tokens(spark, 100)
-        plan = plan_of(enrich_stage(parse_stage(tok, "native"), source_dim(spark)))
+        plan = plan_of(enrich_stage(parse_stage(tok), source_dim(spark)))
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
+        # the doc_id parse runs in the JVM: no Python node on the route path
+        for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan
 
     def test_lsh_near_dup_never_nested_loop(self, spark):
         from qsvspark.functions import embedding_near_dups_lsh
@@ -162,7 +165,7 @@ class TestPipelineDedupPlan:
         from qsvspark.pipeline.northstar import dedup_stage, parse_stage
         from qsvspark.pipeline.tokens import synth_tokens
 
-        df = dedup_stage(parse_stage(synth_tokens(spark, 100, seed=3), "native"))
+        df = dedup_stage(parse_stage(synth_tokens(spark, 100, seed=3)))
         plan = plan_of(df)
         assert "WindowGroupLimit" in plan
         first_limit = plan.index("WindowGroupLimit")
@@ -182,7 +185,7 @@ class TestPipelineDedupPlan:
             synth_tokens(spark, 50, seed=4).select("n_tok", "tokens")
         ).select("__h1", "__h2")
         df = dedup_stage(
-            parse_stage(synth_tokens(spark, 100, seed=3), "native"), against=prev
+            parse_stage(synth_tokens(spark, 100, seed=3)), against=prev
         )
         plan = plan_of(df)
         assert "CartesianProduct" not in plan

@@ -45,7 +45,7 @@ class TestStreamingIngest:
         assert routed.count() == 5000
         # identical rows to the batch pipeline over the same input
         batch = enrich_stage(
-            parse_stage(spark.read.parquet(inp + "/*/"), "arrow"), dim
+            parse_stage(spark.read.parquet(inp + "/*/")), dim
         ).select(*routed.columns)
         assert routed.exceptAll(batch).count() == 0
         assert batch.exceptAll(routed).count() == 0
@@ -74,7 +74,7 @@ class TestStreamingIngest:
         direct = {
             r["sink"]: r["n"]
             for r in enrich_stage(
-                parse_stage(spark.read.parquet(inp + "/*/"), "native"), dim
+                parse_stage(spark.read.parquet(inp + "/*/")), dim
             ).groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
         }
         streamed = {
@@ -103,7 +103,7 @@ class TestIncrementalIngest:
 
     def test_streamed_increments_match_one_batch_run(self, spark, inc_dirs):
         inp, wh, ckpt = inc_dirs
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt,
                                max_files_per_trigger=1)
         q.awaitTermination(180)
@@ -112,7 +112,7 @@ class TestIncrementalIngest:
         m = pipe.catalog.manifest("routed")
         assert m["cumulative_row_count"] == 3500
         direct = aggregate_stage(
-            enrich_stage(parse_stage(all_tokens, "pandas"), source_dim(spark))
+            enrich_stage(parse_stage(all_tokens), source_dim(spark))
         )
         got = pipe.aggregates()
         assert got.exceptAll(direct).count() == 0
@@ -120,7 +120,7 @@ class TestIncrementalIngest:
 
     def test_restart_is_noop(self, spark, inc_dirs):
         inp, wh, ckpt = inc_dirs
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         snaps_before = pipe.catalog._snaps("routed")
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt)
         q.awaitTermination(120)
@@ -412,8 +412,7 @@ class TestStreamingQuarantine:
         synth_tokens(spark, 300, seed=42, num_partitions=1, id_offset=10**7
                      ).unionByName(bad).write.parquet(os.path.join(inp, "batch2"))
 
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas",
-                                 quarantine=True)
+        pipe = NorthStarPipeline(spark, wh, quarantine=True)
         q = incremental_ingest(spark, inp + "/*/", pipe, ckpt,
                                max_files_per_trigger=2)
         q.awaitTermination(180)
@@ -457,7 +456,7 @@ class TestStreamingDecontaminate:
         bench = all_tokens.where("doc_id LIKE '%00'").cache()
         bench.count()
 
-        pipe = NorthStarPipeline(spark, wh, parse_mode="pandas")
+        pipe = NorthStarPipeline(spark, wh)
         q = incremental_ingest(
             spark, inp + "/*/", pipe, ckpt, max_files_per_trigger=1,
             pre_stage=lambda df: decontaminate_stage(df, bench, n=8),

@@ -74,7 +74,7 @@ class TestSparkSubmitShipping:
         from qsvspark.pipeline.northstar import enrich_stage, parse_stage
         from qsvspark.pipeline.tokens import source_dim
         direct = (
-            enrich_stage(parse_stage(spark.read.parquet(shipped["inp"]), "arrow"),
+            enrich_stage(parse_stage(spark.read.parquet(shipped["inp"])),
                          source_dim(spark))
             .groupBy("sink").count().collect()
         )
