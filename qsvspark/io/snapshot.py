@@ -20,6 +20,12 @@ manifest is written last with committed=true, and CURRENT flips only then
 are never recomputed. On a real cluster the same interface binds to
 Iceberg (`writeTo(...).createOrReplace()` + snapshot metadata); the
 emulation keeps resume logic testable locally.
+
+Every consumer of an append chain (``read_parts``, ``data_files``,
+``compact``, ``expire_snapshots``) goes through ONE walk,
+``_resolve_chain``: the tag or CURRENT ref resolves once, each manifest
+is opened once, and each element comes back with the partition values
+and delete key files that later snapshots laid over it.
 """
 
 from __future__ import annotations
@@ -29,49 +35,31 @@ import os
 import shutil
 import time
 import urllib.parse
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _json_scalar(v):
-    """Parquet footer statistics value → JSON-serializable scalar, or None
-    when the type has no meaningful file-pruning order (we then skip the
-    stat rather than store something uncomparable)."""
-    if isinstance(v, bool) or v is None:
-        return None
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    return None
-
 
 # Spark stores each file's data schema (partition columns excluded) as
 # JSON in the parquet footer under this key
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _walk_written(data_dir: str, stats_cols: list[str], count_col: str | None = None) -> dict:
+def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
     """What a commit records about the files a write just produced, from
     ONE driver-side pass and no Spark job — the way Iceberg manifests
     account data files at commit time. Returns ``schema`` (footer Spark
-    schema JSON, None if no file has one), ``files`` (path, bytes, rows,
-    partition, min/max of ``stats_cols``: Iceberg lower/upper bounds),
-    ``partition_counts`` (rows per partition value) and ``value_counts``
-    (rows per ``str(value)`` of ``count_col``, else None). Only
-    ``count_col`` reads data pages; the rest is footers."""
+    schema JSON, None if no file has one), ``partition_counts`` (rows per
+    partition value) and ``value_counts`` (rows per ``str(value)`` of
+    ``count_col``, else None). Only ``count_col`` reads data pages; the
+    rest is footers."""
     import pyarrow.parquet as pq
 
-    out: dict = {"schema": None, "files": [], "partition_counts": {},
+    out: dict = {"schema": None, "partition_counts": {},
                  "value_counts": {} if count_col else None}
-    want = set(stats_cols or [])
     for root, dirs, files in os.walk(data_dir):
-        dirs.sort()  # stable partition order in the manifest and sidecar
+        dirs.sort()  # stable partition order in the manifest
         rel_dir = os.path.relpath(root, data_dir)
         part = None
         if rel_dir != "." and "=" in rel_dir:
@@ -79,8 +67,7 @@ def _walk_written(data_dir: str, stats_cols: list[str], count_col: str | None = 
         for fn in sorted(files):
             if not fn.endswith(".parquet"):
                 continue
-            path = os.path.join(root, fn)
-            pf = pq.ParquetFile(path)
+            pf = pq.ParquetFile(os.path.join(root, fn))
             md = pf.metadata
             if out["schema"] is None:
                 out["schema"] = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
@@ -93,40 +80,6 @@ def _walk_written(data_dir: str, stats_cols: list[str], count_col: str | None = 
                 for item in pf.read(columns=[count_col]).column(0).value_counts().to_pylist():
                     key = str(item["values"])
                     vc[key] = vc.get(key, 0) + item["counts"]
-            stats: dict[str, list] = {}
-            complete: dict[str, bool] = {}
-            for rg in range(md.num_row_groups if want else 0):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    name = c.path_in_schema.split(".")[0]
-                    if name not in want:
-                        continue
-                    s = c.statistics
-                    if s is None or not s.has_min_max:
-                        complete[name] = False
-                        continue
-                    mn, mx = _json_scalar(s.min), _json_scalar(s.max)
-                    if mn is None or mx is None:
-                        complete[name] = False
-                        continue
-                    complete.setdefault(name, True)
-                    if name in stats:
-                        stats[name][0] = min(stats[name][0], mn)
-                        stats[name][1] = max(stats[name][1], mx)
-                    else:
-                        stats[name] = [mn, mx]
-            # a column whose stats any row group lacked can't prune safely
-            stats = {k: v for k, v in stats.items() if complete.get(k)}
-            out["files"].append(
-                {
-                    "path": os.path.relpath(path, data_dir),
-                    "bytes": os.path.getsize(path),
-                    "rows": md.num_rows,
-                    "partition": part,
-                    "stats": stats,
-                }
-            )
     if count_col:
         out["value_counts"] = dict(sorted(out["value_counts"].items()))
     return out
@@ -243,6 +196,16 @@ def _broadcast_estimate_bytes(*dirs: str) -> int:
         return 3 * _dir_bytes(*dirs)
 
 
+class _Link(NamedTuple):
+    """One element of a resolved append chain (see ``_resolve_chain``)."""
+
+    snapshot: str
+    manifest: dict  # {} when the snapshot dir has no manifest
+    data_dir: str
+    mask: set  # partition values STRICTLY LATER snapshots replaced
+    deletes: list  # (key_cols, delete_dir) of STRICTLY LATER delete snapshots
+
+
 class SnapshotCatalog:
     def __init__(self, root: str):
         self.root = root
@@ -258,6 +221,12 @@ class SnapshotCatalog:
         if not os.path.isdir(d):
             return []
         return sorted(s for s in os.listdir(d) if s.startswith("snap-"))
+
+    def _next_snapshot(self, table: str) -> str:
+        """The id a new commit takes: one past the highest existing number
+        (not the count, which expiry lowers below the highest id)."""
+        nums = [int(s[len("snap-"):]) for s in self._snaps(table)]
+        return f"snap-{max(nums, default=0) + 1:05d}"
 
     def current_snapshot(self, table: str) -> str | None:
         cur = os.path.join(self._table_dir(table), "CURRENT")
@@ -276,28 +245,6 @@ class SnapshotCatalog:
         with open(mpath) as f:
             return json.load(f)
 
-    def file_stats(self, table: str, snap: str | None = None) -> list[dict] | None:
-        """Load a snapshot's per-file column-stats sidecar (the
-        manifest-file level of Iceberg's two-level metadata). Returns None
-        when the snapshot recorded no stats (no stats_by/cluster_by).
-        Reads back legacy manifests that inlined ``file_stats``."""
-        snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
-        if snap is None:
-            return None
-        m = self.manifest(table, snap)
-        if m is None:
-            return None
-        if m.get("file_stats") is not None:
-            return m["file_stats"]
-        rel = m.get("file_stats_file")
-        if not rel:
-            return None
-        path = os.path.join(self._table_dir(table), snap, rel)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
     # -- resume -----------------------------------------------------
 
     def find_committed(self, table: str, input_fingerprint: str) -> str | None:
@@ -306,12 +253,7 @@ class SnapshotCatalog:
         this per stage and skips stages whose fingerprint already landed."""
         for snap in reversed(self._snaps(table)):
             m = self.manifest(table, snap)
-            if (
-                m
-                and m.get("committed")
-                and not m.get("staged")
-                and m.get("input_fingerprint") == input_fingerprint
-            ):
+            if m and m.get("committed") and m.get("input_fingerprint") == input_fingerprint:
                 return snap
         return None
 
@@ -328,11 +270,9 @@ class SnapshotCatalog:
         count_by: str | None = None,
         cluster_by: list[str] | None = None,
         parent: str | None = None,
-        stats_by: list[str] | None = None,
         bucket_by: list[str] | None = None,
         n_buckets: int = 0,
         replace_partitions: list[str] | None = None,
-        staged: bool = False,
     ) -> dict:
         """Write df as the next snapshot of ``table`` and commit a manifest.
 
@@ -374,11 +314,6 @@ class SnapshotCatalog:
         file cover disjoint ranges of the cluster columns, so downstream
         point/range filters prune row groups instead of scanning them.
 
-        stats_by: columns whose per-FILE min/max go into the manifest
-        (Iceberg lower_bounds/upper_bounds) for ``scan()``-time file
-        pruning; defaults to cluster_by. Footer reads only — no data
-        pages, no extra Spark job.
-
         bucket_by/n_buckets: hash-bucket layout (Iceberg's ``bucket(N,
         col)`` partition transform, realized through Spark's native
         bucketed writer). The point at 10^12-row scale: a table written
@@ -403,12 +338,6 @@ class SnapshotCatalog:
         accounting (count_by == partition_by) on the chain. Pure
         metadata: no ancestor data is rewritten; time-travel reads of the
         parent still see the old partition.
-
-        staged: write-audit-publish (Iceberg WAP): the snapshot commits
-        fully — data + manifest — but CURRENT does not move and resume
-        (``find_committed``) ignores it, so production readers cannot see
-        it. Audit it by reading the snapshot id directly, then
-        ``publish()`` it (pure metadata) or leave it for expiry to judge.
         """
         t0 = time.time()
         if bucket_by and partition_by:
@@ -433,8 +362,7 @@ class SnapshotCatalog:
                 )
         if cluster_by:
             df = df.sortWithinPartitions(*cluster_by)
-        snaps = self._snaps(table)
-        snap = f"snap-{len(snaps) + 1:05d}"
+        snap = self._next_snapshot(table)
         snap_dir = os.path.join(self._table_dir(table), snap)
         data_dir = os.path.join(snap_dir, "data")
         obs = Observation()
@@ -463,11 +391,8 @@ class SnapshotCatalog:
             writer.parquet(data_dir, compression="snappy")
             total = obs.get["rows"]
 
-        stat_cols = stats_by if stats_by is not None else (cluster_by or [])
         counted = count_by if count_by and count_by in df.columns else None
-        written = _walk_written(
-            data_dir, stat_cols, counted if counted != partition_by else None
-        )
+        written = _walk_written(data_dir, counted if counted != partition_by else None)
         per_part = None
         if counted:
             per_part = written["partition_counts" if counted == partition_by else "value_counts"]
@@ -502,7 +427,6 @@ class SnapshotCatalog:
                     cum_total -= cum_parts.pop(v, 0)
                 for k, v in per_part.items():
                     cum_parts[k] = cum_parts.get(k, 0) + v
-        file_stats = written["files"] if stat_cols else None
         schema_json = _written_schema(df, data_dir, written, partition_by).jsonValue()
         manifest = {
             "table": table,
@@ -522,65 +446,13 @@ class SnapshotCatalog:
             "input_fingerprint": input_fingerprint,
             "lineage": lineage or {},
             "cluster_by": cluster_by,
-            # Per-file column stats live in a SIDECAR (Iceberg's
-            # manifest-list pattern: the snapshot record points at
-            # manifest files; it never inlines per-file entries). The
-            # manifest itself stays O(1) in file count, so history(),
-            # find_committed(), read() and chain walks never parse an
-            # O(files) blob — only scan planning loads the sidecar.
-            "file_stats_file": "file_stats.json" if file_stats is not None else None,
-            "file_count": len(file_stats) if file_stats is not None else None,
-            "stats_columns": stat_cols or None,
-            "staged": staged,
             "metrics": {"write_seconds": round(time.time() - t0, 3)},
         }
-        if file_stats is not None:
-            with open(os.path.join(snap_dir, "file_stats.json"), "w") as f:
-                json.dump(file_stats, f)
         with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2)
-        if not staged:
-            with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
-                f.write(snap)
-        return manifest
-
-    def publish(self, table: str, snap: str) -> dict:
-        """Promote a STAGED snapshot (Iceberg WAP publish / cherry-pick):
-        clear the staged flag and point CURRENT at it. Pure metadata —
-        the data committed at staging time. Idempotent on an
-        already-published snapshot.
-
-        Publishing verifies the table's CURRENT snapshot is an ancestor
-        of (or equal to) the staged one. Iceberg's WAP publish is a
-        cherry-pick onto the latest state, never a rollback: if other
-        snapshots committed after staging, blindly moving CURRENT would
-        hide them from readers, and the next write (parent = CURRENT)
-        would fork the chain and permanently orphan them. In that case
-        this raises; the caller must either ``rollback`` explicitly or
-        re-stage the audit on top of the new head."""
-        snap = self._resolve_ref(table, snap)
-        m = self.manifest(table, snap)
-        if m is None or not m.get("committed"):
-            raise FileNotFoundError(
-                f"cannot publish: no committed snapshot '{snap}' in '{table}'"
-            )
-        cur = self.current_snapshot(table)
-        if cur is not None and cur != snap and cur not in self._chain(table, snap):
-            raise ValueError(
-                f"cannot publish '{snap}': table '{table}' advanced to '{cur}' "
-                f"after staging (not an ancestor of the staged snapshot). "
-                f"Publishing would hide '{cur}' and fork the chain — rollback "
-                f"explicitly or re-stage on top of the new head."
-            )
-        if m.get("staged"):
-            m["staged"] = False
-            with open(
-                os.path.join(self._table_dir(table), snap, "manifest.json"), "w"
-            ) as f:
-                json.dump(m, f, indent=2)
         with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
             f.write(snap)
-        return m
+        return manifest
 
     def delete_rows(
         self,
@@ -633,8 +505,7 @@ class SnapshotCatalog:
         # A crash after this write but before the manifest leaves an
         # uncommitted snap dir (no manifest) — same crash-safety story as
         # every other write path.
-        snaps = self._snaps(table)
-        snap = f"snap-{len(snaps) + 1:05d}"
+        snap = self._next_snapshot(table)
         snap_dir = os.path.join(self._table_dir(table), snap)
         delete_dir = os.path.join(snap_dir, "deletes")
         keys.select(*on).distinct().coalesce(1).write.mode("overwrite").parquet(
@@ -696,26 +567,6 @@ class SnapshotCatalog:
         with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
             f.write(snap)
         return manifest
-
-    def _delete_specs(
-        self, table: str, snaps: list[str]
-    ) -> dict[str, list[tuple[list[str], str]]]:
-        """For each chain snapshot (oldest first): the (key_cols,
-        delete_dir) pairs from STRICTLY LATER delete snapshots that apply
-        to its rows. Manifests only."""
-        specs: dict[str, list[tuple[list[str], str]]] = {}
-        acc: list[tuple[list[str], str]] = []
-        for s in reversed(snaps):
-            specs[s] = list(acc)
-            m = self.manifest(table, s) or {}
-            if m.get("equality_delete_cols"):
-                acc.append(
-                    (
-                        m["equality_delete_cols"],
-                        os.path.join(self._table_dir(table), s, "deletes"),
-                    )
-                )
-        return specs
 
     def _apply_deletes(
         self,
@@ -890,7 +741,7 @@ class SnapshotCatalog:
         )
         return obs.get["rows"]
 
-    def _register_bucketed(self, spark: SparkSession, table: str, snap: str) -> str:
+    def _register_bucketed(self, spark: SparkSession, link: _Link) -> str:
         """Attach a bucketed snapshot's files to the session catalog (no-op
         if already attached). Spark only exploits bucketing through table
         metadata, not bare parquet paths; the manifest carries everything
@@ -898,13 +749,8 @@ class SnapshotCatalog:
         same shuffle-free join property. The bucket id lives in each file
         name (Spark's ``part-…_NNNNN`` convention), so re-registering
         files written by the bucketed writer is exact."""
-        from pyspark.sql import types as T
-
-        m = self.manifest(table, snap)
-        if not m or not m.get("bucket_by"):
-            raise ValueError(f"snapshot {table}/{snap} is not bucketed")
-        data_dir = os.path.join(self._table_dir(table), snap, "data")
-        name = self._bucket_table_name(data_dir)
+        m = link.manifest
+        name = self._bucket_table_name(link.data_dir)
         if not spark.catalog.tableExists(name):
             st = T.StructType.fromJson(m["schema"])
             cols_ddl = ", ".join(
@@ -915,34 +761,43 @@ class SnapshotCatalog:
                 f"CREATE TABLE {name} ({cols_ddl}) USING PARQUET "
                 f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
                 f"INTO {m['n_buckets']} BUCKETS "
-                f"LOCATION '{data_dir}'"
+                f"LOCATION '{link.data_dir}'"
             )
         return name
 
     # -- read -------------------------------------------------------
 
-    def _chain(self, table: str, snap: str) -> list[str]:
-        """Snapshot ids from the chain root to ``snap`` (oldest first)."""
-        chain: list[str] = []
-        cur: str | None = snap
+    def _resolve_chain(
+        self, table: str, snap: str | None = None, follow_parents: bool = True
+    ) -> list[_Link]:
+        """The one chain walk. Resolves ``snap`` (snapshot id, tag name, or
+        None for CURRENT) once, opens each manifest once, and returns the
+        chain from its root to ``snap``, oldest first (``snap`` alone when
+        not following parents). Each element carries the partition values
+        STRICTLY LATER snapshots replaced — its files under them are dead
+        to any read at the head — and the key files of STRICTLY LATER
+        delete snapshots (Iceberg sequence-number scoping). [] when the
+        table has no snapshot."""
+        newest_first: list[tuple[str, dict]] = []
+        cur = self._resolve_ref(table, snap) or self.current_snapshot(table)
         while cur is not None:
-            chain.append(cur)
-            m = self.manifest(table, cur)
-            cur = m.get("parent") if m else None
-        return list(reversed(chain))
-
-    def _replaced_after(self, table: str, snaps: list[str]) -> dict[str, set]:
-        """For each snapshot in the (oldest-first) chain, the set of
-        partition values that STRICTLY LATER snapshots declared replaced —
-        files of this snapshot under those partitions are dead to any read
-        at or above the chain head. Manifests only."""
-        masks: dict[str, set] = {}
-        acc: set = set()
-        for s in reversed(snaps):
-            masks[s] = set(acc)
-            m = self.manifest(table, s) or {}
-            acc |= set(m.get("replace_partitions") or [])
-        return masks
+            m = self.manifest(table, cur) or {}
+            newest_first.append((cur, m))
+            cur = m.get("parent") if follow_parents else None
+        links: list[_Link] = []
+        mask: set = set()
+        deletes: list = []
+        for s, m in newest_first:
+            snap_dir = os.path.join(self._table_dir(table), s)
+            links.append(
+                _Link(s, m, os.path.join(snap_dir, "data"), set(mask), list(deletes))
+            )
+            mask |= set(m.get("replace_partitions") or [])
+            if m.get("equality_delete_cols"):
+                deletes.append(
+                    (m["equality_delete_cols"], os.path.join(snap_dir, "deletes"))
+                )
+        return links[::-1]
 
     def _unmasked_partition_dirs(
         self, data_dir: str, partition_key: str, mask: set
@@ -957,6 +812,59 @@ class SnapshotCatalog:
             if urllib.parse.unquote(d.split("=", 1)[1]) not in mask:
                 out.append(os.path.join(data_dir, d))
         return out
+
+    def _read_chain(
+        self, spark: SparkSession, chain: list[_Link], *, raw: bool = False
+    ) -> list[DataFrame]:
+        """One scan per chain element that holds live data files, each
+        with its later deletes applied. A bucketed element reads as its
+        registered session-catalog table, whose scan REPORTS the hash
+        partitioning; ``raw`` reads its parquet files instead."""
+        parts: list[DataFrame] = []
+        for link in chain:
+            m = link.manifest
+            if m.get("equality_delete_cols"):
+                continue  # delete snapshots carry keys, not data
+            if m.get("row_count") == 0:
+                continue  # empty delta: no files on disk
+            # the manifest's stored schema IS the data's read-back schema:
+            # passing it skips Spark's per-read schema-inference job
+            reader = (
+                spark.read.schema(T.StructType.fromJson(m["schema"]))
+                if m.get("schema") else spark.read
+            )
+            if m.get("bucket_by") and not raw:
+                df = spark.table(self._register_bucketed(spark, link))
+            elif link.mask and m.get("partition_by"):
+                # a later snapshot replaced some of this one's partitions:
+                # read only the surviving partition directories (basePath
+                # keeps the partition column in the schema)
+                keep = self._unmasked_partition_dirs(
+                    link.data_dir, m["partition_by"], link.mask
+                )
+                if not keep:
+                    continue
+                df = reader.option("basePath", link.data_dir).parquet(*keep)
+            else:
+                df = reader.parquet(link.data_dir)
+            # broadcast LEFT ANTI keeps the part's reported partitioning
+            # (bucketed parts stay join-co-located)
+            parts.append(self._apply_deletes(spark, df, link.deletes))
+        return parts
+
+    @staticmethod
+    def _union(spark: SparkSession, dfs: list[DataFrame], schema: dict) -> DataFrame:
+        """Chain parts as one frame; with no part (every file masked,
+        deleted or empty), an empty frame of the chain head's ``schema``."""
+        if not dfs:
+            return spark.createDataFrame([], T.StructType.fromJson(schema))
+        df = dfs[0]
+        for other in dfs[1:]:
+            # allowMissingColumns = Iceberg add-column schema evolution:
+            # an increment that shipped a new column unions with older
+            # snapshots projecting null for it (and vice versa)
+            df = df.unionByName(other, allowMissingColumns=True)
+        return df
 
     def read(
         self,
@@ -974,20 +882,8 @@ class SnapshotCatalog:
         bounded. follow_parents=False reads only the snapshot's own
         delta."""
         dfs = self.read_parts(spark, table, snap, follow_parents=follow_parents)
-        if not dfs:
-            # every file masked by partition replacement: empty frame
-            # with the chain head's schema
-            m = self.manifest(table, snap or self.current_snapshot(table))
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(m["schema"])
-            )
-        df = dfs[0]
-        for other in dfs[1:]:
-            # allowMissingColumns = Iceberg add-column schema evolution:
-            # an increment that shipped a new column unions with older
-            # snapshots projecting null for it (and vice versa)
-            df = df.unionByName(other, allowMissingColumns=True)
-        return df
+        schema = None if dfs else self.manifest(table, snap)["schema"]
+        return self._union(spark, dfs, schema)
 
     def read_parts(
         self,
@@ -1003,48 +899,31 @@ class SnapshotCatalog:
         that join/anti-join the chain element-wise keep every element
         shuffle-free on the bucket key, which a union (whose output
         partitioning Spark discards) cannot."""
-        snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
-        if snap is None:
+        chain = self._resolve_chain(table, snap, follow_parents)
+        if not chain:
             raise FileNotFoundError(f"no committed snapshot for table '{table}'")
-        snaps = self._chain(table, snap) if follow_parents else [snap]
-        masks = self._replaced_after(table, snaps)
-        deletes = self._delete_specs(table, snaps)
-        parts: list[DataFrame] = []
-        for s in snaps:
-            m = self.manifest(table, s) or {}
-            if m.get("equality_delete_cols"):
-                continue  # delete snapshots carry keys, not data
-            if m.get("row_count") == 0:
-                continue  # empty delta: no files on disk
-            data_dir = os.path.join(self._table_dir(table), s, "data")
-            mask = masks.get(s) or set()
-            # the manifest's stored schema IS the data's read-back schema:
-            # passing it skips Spark's per-read schema-inference job
-            reader = (
-                spark.read.schema(T.StructType.fromJson(m["schema"]))
-                if m.get("schema") else spark.read
-            )
-            if m.get("bucket_by"):
-                parts.append(spark.table(self._register_bucketed(spark, table, s)))
-            elif mask and m.get("partition_by"):
-                # a later snapshot replaced some of this one's partitions:
-                # read only the surviving partition directories (basePath
-                # keeps the partition column in the schema)
-                keep = self._unmasked_partition_dirs(
-                    data_dir, m["partition_by"], mask
-                )
-                if not keep:
-                    continue
-                parts.append(reader.option("basePath", data_dir).parquet(*keep))
-            else:
-                parts.append(reader.parquet(data_dir))
-            if deletes.get(s):
-                # broadcast LEFT ANTI keeps the part's reported
-                # partitioning (bucketed parts stay join-co-located)
-                parts[-1] = self._apply_deletes(spark, parts[-1], deletes[s])
-        return parts
+        return self._read_chain(spark, chain)
 
     # -- maintenance ------------------------------------------------
+
+    @staticmethod
+    def _chain_files(chain: list[_Link]) -> list[dict]:
+        """The live data files of a resolved chain (see ``data_files``)."""
+        out: list[dict] = []
+        for link in chain:
+            for root, _, files in os.walk(link.data_dir):
+                rel = os.path.relpath(root, link.data_dir)
+                part = None
+                if rel != "." and "=" in rel:
+                    part = urllib.parse.unquote(rel.split("=", 1)[1])
+                if part is not None and part in link.mask:
+                    continue  # replaced by a later snapshot
+                for fn in sorted(files):
+                    if fn.endswith(".parquet"):
+                        p = os.path.join(root, fn)
+                        out.append({"path": p, "bytes": os.path.getsize(p),
+                                    "partition": part, "snapshot": link.snapshot})
+        return out
 
     def data_files(
         self,
@@ -1061,208 +940,9 @@ class SnapshotCatalog:
         storage; here the snapshot directory IS the metadata scope, so
         the walk stays bounded to the snapshot chain.
         """
-        snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
-        if snap is None:
-            return []
-        snaps = self._chain(table, snap) if follow_parents else [snap]
-        masks = self._replaced_after(table, snaps)
-        out: list[dict] = []
-        for s in snaps:
-            data_dir = os.path.join(self._table_dir(table), s, "data")
-            mask = masks.get(s) or set()
-            for root, _, files in os.walk(data_dir):
-                for fn in sorted(files):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(root, fn)
-                    rel = os.path.relpath(root, data_dir)
-                    part = None
-                    if rel != "." and "=" in rel:
-                        part = urllib.parse.unquote(rel.split("=", 1)[1])
-                    if part is not None and part in mask:
-                        continue  # replaced by a later snapshot
-                    out.append(
-                        {"path": p, "bytes": os.path.getsize(p),
-                         "partition": part, "snapshot": s}
-                    )
-        return out
-
-    # -- stats-pruned scan -------------------------------------------
-
-    @staticmethod
-    def _stats_admit(entry: dict, filters: list[tuple], partition_by) -> bool:
-        """Could a file possibly contain rows matching every filter?
-        Conservative: a column with no recorded stats admits the file.
-        Filters are (col, op, value) with op in = < <= > >=."""
-        for col, op, val in filters:
-            if partition_by == col and entry.get("partition") is not None:
-                p = entry["partition"]
-                # partition values are stored as strings; compare like-typed
-                try:
-                    p = type(val)(p)
-                except (TypeError, ValueError):
-                    pass
-                lo = hi = p
-            else:
-                rng = (entry.get("stats") or {}).get(col)
-                if rng is None:
-                    continue
-                lo, hi = rng
-            try:
-                if op == "=" and not (lo <= val <= hi):
-                    return False
-                if op == "<" and not (lo < val):
-                    return False
-                if op == "<=" and not (lo <= val):
-                    return False
-                if op == ">" and not (hi > val):
-                    return False
-                if op == ">=" and not (hi >= val):
-                    return False
-            except TypeError:
-                # stat/value types don't order together → can't prune safely
-                continue
-        return True
-
-    def plan_scan(
-        self,
-        table: str,
-        filters: list[tuple],
-        snap: str | None = None,
-        *,
-        follow_parents: bool = True,
-    ) -> list[dict]:
-        """File-pruning scan plan from manifest ``file_stats`` alone — no
-        storage listing, no footer reads (Iceberg's manifest-level
-        lower_bounds/upper_bounds pruning). Returns one entry per snapshot
-        in the chain: ``{"snapshot", "data_dir", "paths", "total_files"}``
-        where paths is the admitted subset (None = stats absent, scan the
-        whole directory)."""
-        snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
-        if snap is None:
-            raise FileNotFoundError(f"no committed snapshot for table '{table}'")
-        out = []
-        snaps = self._chain(table, snap) if follow_parents else [snap]
-        masks = self._replaced_after(table, snaps)
-        for s in snaps:
-            m = self.manifest(table, s) or {}
-            if m.get("equality_delete_cols") or m.get("row_count") == 0:
-                continue  # keys-only or empty delta: no data files
-            data_dir = os.path.join(self._table_dir(table), s, "data")
-            mask = masks.get(s) or set()
-            fs = self.file_stats(table, s)
-            if fs is None:
-                if mask and m.get("partition_by"):
-                    # no column stats, but partition replacement still
-                    # bounds the scan to the surviving partition dirs
-                    keep_dirs = self._unmasked_partition_dirs(
-                        data_dir, m["partition_by"], mask
-                    )
-                    out.append({"snapshot": s, "data_dir": data_dir,
-                                "paths": keep_dirs, "total_files": None})
-                else:
-                    out.append({"snapshot": s, "data_dir": data_dir,
-                                "paths": None, "total_files": None})
-                continue
-            part_key = m.get("partition_by")
-            keep = [
-                os.path.join(data_dir, e["path"])
-                for e in fs
-                if (e.get("partition") is None or e["partition"] not in mask)
-                and self._stats_admit(e, filters, part_key)
-            ]
-            out.append({"snapshot": s, "data_dir": data_dir,
-                        "paths": keep, "total_files": len(fs)})
-        return out
-
-    def scan(
-        self,
-        spark: SparkSession,
-        table: str,
-        filters: list[tuple] | None = None,
-        snap: str | None = None,
-        *,
-        follow_parents: bool = True,
-    ) -> DataFrame:
-        """Read a snapshot with manifest-stats file pruning, then apply the
-        filters exactly on the surviving rows (stats admit conservatively,
-        the residual predicate makes the result precise — same split as an
-        Iceberg scan). ``filters`` are (col, op, value) tuples, op in
-        ``= < <= > >=``; with no filters this is ``read()``."""
-        if not filters:
-            return self.read(spark, table, snap, follow_parents=follow_parents)
-        _OPS = {
-            "=": lambda c, v: c == v,
-            "<": lambda c, v: c < v,
-            "<=": lambda c, v: c <= v,
-            ">": lambda c, v: c > v,
-            ">=": lambda c, v: c >= v,
-        }
-        for _, op, _v in filters:
-            if op not in _OPS:
-                raise ValueError(f"unsupported scan op {op!r}")
-        _snap = self._resolve_ref(table, snap) or self.current_snapshot(table)
-        _snaps = self._chain(table, _snap) if follow_parents else [_snap]
-        _deletes = self._delete_specs(table, _snaps)
-        parts: list[DataFrame] = []
-        for plan in self.plan_scan(table, filters, snap,
-                                   follow_parents=follow_parents):
-            if plan["paths"] is None:
-                df = spark.read.parquet(plan["data_dir"])
-            elif not plan["paths"]:
-                continue  # every file pruned for this snapshot
-            else:
-                # basePath keeps partition-column discovery working when
-                # reading an explicit file subset under key=value dirs
-                df = (
-                    spark.read.option("basePath", plan["data_dir"])
-                    .parquet(*plan["paths"])
-                )
-            if _deletes.get(plan["snapshot"]):
-                df = self._apply_deletes(spark, df, _deletes[plan["snapshot"]])
-            parts.append(df)
-        if not parts:
-            # all files pruned: empty frame with the manifest schema
-            from pyspark.sql.types import StructType
-
-            m = self.manifest(table, snap or self.current_snapshot(table))
-            schema = StructType.fromJson(m["schema"])
-            return spark.createDataFrame([], schema)
-        df = parts[0]
-        for other in parts[1:]:
-            df = df.unionByName(other, allowMissingColumns=True)
-        for col, op, val in filters:
-            df = df.filter(_OPS[op](F.col(col), F.lit(val)))
-        return df
+        return self._chain_files(self._resolve_chain(table, snap, follow_parents))
 
     # -- snapshot expiry ---------------------------------------------
-
-    def _manifest_ranges(
-        self, table: str, snap: str, cols: list[str]
-    ) -> dict[str, tuple] | None:
-        """Global min/max per column across a chain, from manifest
-        file_stats alone (no data read). None when any file lacks a
-        recorded range for any requested column — callers then pay one
-        aggregate pass instead."""
-        lo: dict[str, object] = {c: None for c in cols}
-        hi: dict[str, object] = {c: None for c in cols}
-        for s in self._chain(table, snap):
-            sm = self.manifest(table, s) or {}
-            if sm.get("equality_delete_cols") or sm.get("row_count") == 0:
-                continue
-            fs = self.file_stats(table, s)
-            if not fs:
-                return None
-            for e in fs:
-                for c in cols:
-                    rng = (e.get("stats") or {}).get(c)
-                    if rng is None:
-                        return None
-                    lo[c] = rng[0] if lo[c] is None else min(lo[c], rng[0])
-                    hi[c] = rng[1] if hi[c] is None else max(hi[c], rng[1])
-        if any(lo[c] is None for c in cols):
-            return None
-        return {c: (lo[c], hi[c]) for c in cols}
 
     def expire_snapshots(self, table: str, *, keep_last: int = 1) -> list[str]:
         """Delete snapshot directories that are neither among the newest
@@ -1278,19 +958,11 @@ class SnapshotCatalog:
         snaps = self._snaps(table)
         committed = [s for s in snaps
                      if (self.manifest(table, s) or {}).get("committed")]
-        retained: set[str] = set()
-        roots = set(committed[-keep_last:])
+        roots = set(committed[-keep_last:]) | set(self.tags(table).values())
         cur = self.current_snapshot(table)
         if cur is not None:
             roots.add(cur)
-        roots.update(self.tags(table).values())
-        # staged (unpublished WAP) snapshots are pending audits — retained
-        roots.update(
-            s for s in committed
-            if (self.manifest(table, s) or {}).get("staged")
-        )
-        for r in roots:
-            retained.update(self._chain(table, r))
+        retained = {link.snapshot for r in roots for link in self._resolve_chain(table, r)}
         deleted = []
         for s in snaps:
             if s in retained:
@@ -1342,29 +1014,38 @@ class SnapshotCatalog:
         Morton interleave of the listed NUMERIC columns, so every file's
         min/max stats are tight on EVERY z column at once — point/range
         filters on any of them prune files, where a linear ``cluster_by``
-        only serves its leading column. Column ranges come from the
-        source manifests' file_stats when recorded (no extra scan) and
-        from one min/max aggregate otherwise. Mutually exclusive with
+        only serves its leading column. Column ranges come from one
+        min/max aggregate over the source. Mutually exclusive with
         cluster_by and with partitioned/bucketed layouts.
         """
-        src = snap or self.current_snapshot(table)
-        m = self.manifest(table, src)
-        if m is None:
+        chain = self._resolve_chain(table, snap)
+        m = chain[-1].manifest if chain else {}
+        if not m:
             raise FileNotFoundError(f"no committed snapshot for table '{table}'")
-        files = self.data_files(table, src)
+        src = chain[-1].snapshot
+        files = self._chain_files(chain)
         small = [f for f in files if f["bytes"] < 0.75 * target_file_bytes]
         if not force and len(small) < 2:
             return None
-        df = self.read(spark, table, src)
-        key = m.get("partition_by")
+        key, bucket_by = m.get("partition_by"), m.get("bucket_by")
         if zorder:
             if cluster_by:
                 raise ValueError("zorder and cluster_by are mutually exclusive")
-            if key or m.get("bucket_by"):
+            if key or bucket_by:
                 raise ValueError(
                     "zorder rewrites the global row order; partitioned/"
                     "bucketed layouts own their order already"
                 )
+        # A bucketed source reads its chain as RAW parquet: the bucketed
+        # writer's own repartition(n_buckets) IS the bin-pack (chain →
+        # exactly n_buckets files), and the layout must survive compaction
+        # or the chain's shuffle-free join property dies with it. Bucketed
+        # table scans report hash partitioning, which would make the
+        # planner elide that repartition and emit one file per (bucket ×
+        # chain element) — exactly the small files this rewrite removes.
+        df = self._union(
+            spark, self._read_chain(spark, chain, raw=bool(bucket_by)), m["schema"]
+        )
         # REBALANCE is AQE-only: size the post-shuffle partitions by
         # advisory bytes for the duration of this one write. (Shuffle
         # bytes ≠ encoded parquet bytes; like Iceberg's rewrite we accept
@@ -1373,65 +1054,17 @@ class SnapshotCatalog:
         advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         old = conf.get(advisory_key, None)
         conf.set(advisory_key, str(target_file_bytes))
-        # a compacted copy must stay as prunable as its source: carry the
-        # source's stats column set (recorded in the manifest; legacy
-        # manifests recover it from the sidecar's stats keys)
-        src_stat_cols = sorted(
-            set(
-                m.get("stats_columns")
-                or {
-                    c
-                    for e in (self.file_stats(table, m["snapshot"]) or [])
-                    for c in e.get("stats", {})
-                }
-            )
-            | set(cluster_by or [])
-            | set(zorder or [])
-        )
         try:
-            bucket_by = m.get("bucket_by")
             if bucket_by:
-                # bucketed source: the bucketed writer's own
-                # repartition(n_buckets) IS the bin-pack (chain → exactly
-                # n_buckets files), and the layout must survive compaction
-                # or the chain's shuffle-free join property dies with it.
-                # Read the chain as RAW parquet paths: bucketed scans
-                # report hash partitioning, which makes the planner elide
-                # the writer's repartition and emit one file per
-                # (bucket × chain element) instead of one per bucket —
-                # exactly the small files this rewrite exists to remove.
-                balanced = None
-                chain = self._chain(table, src)
-                del_specs = self._delete_specs(table, chain)
-                for s in chain:
-                    sm = self.manifest(table, s) or {}
-                    if sm.get("equality_delete_cols") or sm.get("row_count") == 0:
-                        continue  # keys-only or empty delta
-                    part = spark.read.parquet(
-                        os.path.join(self._table_dir(table), s, "data")
-                    )
-                    if del_specs.get(s):
-                        # broadcast anti preserves partitioning, so the
-                        # writer's repartition elision still holds
-                        part = self._apply_deletes(spark, part, del_specs[s])
-                    balanced = (
-                        part
-                        if balanced is None
-                        else balanced.unionByName(part, allowMissingColumns=True)
-                    )
+                balanced = df
             elif zorder:
-                ranges = self._manifest_ranges(table, src, zorder)
-                if ranges is None:
-                    # stats not recorded for some file: one min/max pass
-                    row = df.agg(
-                        *(F.min(c).alias(f"__mn{i}") for i, c in enumerate(zorder)),
-                        *(F.max(c).alias(f"__mx{i}") for i, c in enumerate(zorder)),
-                    ).collect()[0]
-                    ranges = {
-                        c: (row[f"__mn{i}"], row[f"__mx{i}"])
-                        for i, c in enumerate(zorder)
-                    }
-                z = _zorder_expr([(c, *ranges[c]) for c in zorder])
+                row = df.agg(
+                    *(F.min(c).alias(f"__mn{i}") for i, c in enumerate(zorder)),
+                    *(F.max(c).alias(f"__mx{i}") for i, c in enumerate(zorder)),
+                ).collect()[0]
+                z = _zorder_expr(
+                    [(c, row[f"__mn{i}"], row[f"__mx{i}"]) for i, c in enumerate(zorder)]
+                )
                 total_bytes = sum(f["bytes"] for f in files) or 1
                 nfiles = max(1, -(-total_bytes // target_file_bytes))
                 # range-partition by z (each task owns a z range → a file
@@ -1456,7 +1089,6 @@ class SnapshotCatalog:
                 partition_by=key,
                 count_by=key,
                 cluster_by=cluster_by,
-                stats_by=src_stat_cols or None,
                 bucket_by=bucket_by,
                 n_buckets=m.get("n_buckets", 0),
             )

@@ -206,6 +206,13 @@ class TestCoLocatedJoin:
         plan = _plan(delta.join(parts[0], ["__h1", "__h2"], "left_anti"))
         assert plan.count("Exchange") == 1
         assert "Bucketed: true" in plan
+        # through a tag: the ref resolves once, so the raw-parquet chain
+        # read finds the tagged chain's data and lineage records its id
+        cat.tag("keys", "prod", "snap-00002")
+        mt = cat.compact(spark, "keys", snap="prod", force=True)
+        assert mt["row_count"] == 2000
+        assert mt["lineage"]["source_snapshot"] == "snap-00002"
+        assert cat.read(spark, "keys").count() == 2000
 
 
 class TestPipelineBucketedKeys:

@@ -3,7 +3,7 @@
 The emulation in ``qsvspark/io/snapshot.py`` mirrors a large slice of the
 Apache Iceberg table-format surface (append chains, dynamic partition
 REPLACE, merge-on-read equality deletes, tags, history/rollback,
-write-audit-publish, bucket transform, rewrite_data_files,
+bucket transform, rewrite_data_files,
 expire_snapshots, add-column schema evolution). This module runs the SAME
 scenario set against an actual ``iceberg-spark-runtime`` catalog so that
 the day the jars are present, every semantic claim converts from argument
@@ -27,7 +27,6 @@ Emulation ↔ Iceberg mapping under test (also tabled in README.md):
   SnapshotCatalog.write(parent=...)        <- Iceberg APPEND snapshots
   write(replace_partitions=...)            <- INSERT OVERWRITE (dynamic)
   write(bucket_by=..., n_buckets=N)        <- PARTITIONED BY bucket(N, col)
-  write(staged=True) / publish()           <- spark.wap.id + cherrypick_snapshot
   delete_rows(on=[...])                    <- equality delete, merge-on-read
   tag()/drop_tag()/tags()                  <- ALTER TABLE CREATE/DROP TAG
   history() / rollback()                   <- snapshots metadata table /
@@ -125,7 +124,8 @@ def _rows(ice, sql: str) -> list[tuple]:
 
 class TestAppendChain:
     """Parity for SnapshotCatalog.write(parent=...): appends accumulate,
-    each append is its own snapshot (snapshot.py:247 chain semantics)."""
+    each append is its own snapshot (``SnapshotCatalog.write`` chain
+    semantics)."""
 
     def test_two_appends_union_and_two_snapshots(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT, v STRING) USING iceberg")
@@ -161,7 +161,7 @@ class TestDynamicPartitionOverwrite:
 
 class TestEqualityDeleteMergeOnRead:
     """Parity for delete_rows(): merge-on-read DELETE commits delete
-    files; prior data files are not rewritten (snapshot.py:499)."""
+    files; prior data files are not rewritten (``SnapshotCatalog.delete_rows``)."""
 
     def test_delete_without_rewrite(self, ice, tbl):
         ice.sql(
@@ -184,8 +184,8 @@ class TestEqualityDeleteMergeOnRead:
         assert summ and summ[0][0] is not None and int(summ[0][0]) >= 1
 
     def test_later_appends_untouched_by_earlier_delete(self, ice, tbl):
-        """Sequence-number semantics mirrored by _delete_specs: deletes
-        only mask rows from EARLIER snapshots (snapshot.py:614)."""
+        """Sequence-number semantics mirrored by ``_resolve_chain``:
+        deletes only mask rows from EARLIER snapshots."""
         ice.sql(
             f"CREATE TABLE {tbl} (id BIGINT) USING iceberg "
             f"TBLPROPERTIES ('write.delete.mode'='merge-on-read', "
@@ -199,7 +199,7 @@ class TestEqualityDeleteMergeOnRead:
 
 class TestTags:
     """Parity for tag()/drop_tag(): named immutable refs readable via
-    VERSION AS OF (snapshot.py:700)."""
+    VERSION AS OF (``SnapshotCatalog.tag``)."""
 
     def test_tag_pins_old_state(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT) USING iceberg")
@@ -215,7 +215,7 @@ class TestTags:
 
 class TestHistoryRollback:
     """Parity for history()/rollback(): rollback moves the current
-    pointer without deleting snapshots (snapshot.py:662/743)."""
+    pointer without deleting snapshots (``SnapshotCatalog.rollback``)."""
 
     def test_rollback_restores_and_keeps_history(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT) USING iceberg")
@@ -232,35 +232,9 @@ class TestHistoryRollback:
         assert len(_rows(ice, f"SELECT snapshot_id FROM {tbl}.snapshots")) == 2
 
 
-class TestWriteAuditPublish:
-    """Parity for write(staged=True)/publish(): WAP-staged snapshots are
-    invisible to reads until cherry-picked (snapshot.py:461)."""
-
-    def test_staged_invisible_until_cherrypick(self, ice, tbl):
-        ice.sql(
-            f"CREATE TABLE {tbl} (id BIGINT) USING iceberg "
-            f"TBLPROPERTIES ('write.wap.enabled'='true')"
-        )
-        ice.sql(f"INSERT INTO {tbl} VALUES (1)")
-        ice.conf.set("spark.wap.id", "audit-1")
-        try:
-            ice.sql(f"INSERT INTO {tbl} VALUES (99)")
-        finally:
-            ice.conf.unset("spark.wap.id")
-        # staged write invisible to a normal read
-        assert _rows(ice, f"SELECT id FROM {tbl}") == [(1,)]
-        staged = _rows(
-            ice,
-            f"SELECT snapshot_id FROM {tbl}.snapshots "
-            f"WHERE summary['wap.id'] = 'audit-1'",
-        )[0][0]
-        ice.sql(f"CALL ice.system.cherrypick_snapshot('{tbl[4:]}', {staged})")
-        assert sorted(_rows(ice, f"SELECT id FROM {tbl}")) == [(1,), (99,)]
-
-
 class TestBucketTransform:
     """Parity for write(bucket_by=..., n_buckets=N): the bucket(N, col)
-    partition transform (snapshot.py:775)."""
+    partition transform (``SnapshotCatalog._write_bucketed_data``)."""
 
     def test_bucketed_write_reads_back(self, ice, tbl):
         ice.sql(
@@ -281,7 +255,7 @@ class TestBucketTransform:
 
 class TestRewriteDataFiles:
     """Parity for compact(zorder=...): rewrite_data_files bin-packs and
-    preserves rows (snapshot.py:1212)."""
+    preserves rows (``SnapshotCatalog.compact``)."""
 
     def test_rewrite_preserves_rows_and_shrinks_files(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT, a DOUBLE, b DOUBLE) USING iceberg")
@@ -302,7 +276,7 @@ class TestRewriteDataFiles:
 
 
 class TestExpireSnapshots:
-    """Parity for expire_snapshots(keep_last=...) (snapshot.py:1177)."""
+    """Parity for expire_snapshots(keep_last=...) (``SnapshotCatalog.expire_snapshots``)."""
 
     def test_expire_drops_old_metadata(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT) USING iceberg")
@@ -320,7 +294,7 @@ class TestExpireSnapshots:
 class TestSchemaEvolution:
     """Parity for read()'s unionByName(allowMissingColumns=True): rows
     from pre-ADD-COLUMN snapshots read the new column as null
-    (snapshot.py:875)."""
+    (``SnapshotCatalog.read``)."""
 
     def test_add_column_nulls_for_old_rows(self, ice, tbl):
         ice.sql(f"CREATE TABLE {tbl} (id BIGINT) USING iceberg")

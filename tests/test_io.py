@@ -266,12 +266,27 @@ def _last_job_id(spark) -> int:
 def _assert_read_submits_no_job(spark, cat, table, snap=None):
     """A snapshot read plans against the manifest's stored schema: no
     Spark job (no schema inference) before an action, and every part's
-    schema equals what inference over its data directory gives."""
+    schema equals what inference over its data directory gives. The
+    read walks its chain once: each element's manifest.json is opened
+    exactly once."""
+    from qsvspark.io import snapshot as snapshot_module
+
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        opened.append(os.fspath(path))
+        return open(path, *args, **kwargs)
+
     before = _last_job_id(spark)
-    parts = cat.read_parts(spark, table, snap)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(snapshot_module, "open", counting_open, raising=False)
+        parts = cat.read_parts(spark, table, snap)
     df = cat.read(spark, table, snap)
     assert _last_job_id(spark) == before
-    chain = cat._chain(table, snap or cat.current_snapshot(table))  # noqa: SLF001
+    chain = [link.snapshot for link in cat._resolve_chain(table, snap)]  # noqa: SLF001
+    assert sorted(p for p in opened if p.endswith("manifest.json")) == sorted(
+        os.path.join(cat.root, table, s, "manifest.json") for s in chain
+    )
     dirs = [os.path.join(cat.root, table, s, "data") for s in chain]
     assert len(parts) == len(dirs)
     for part, d in zip(parts, dirs):
@@ -332,7 +347,7 @@ class TestJobLeanCommit:
         assert _jobs_submitted(
             spark,
             lambda: out.update(
-                m=cat.write(keyed, "t", partition_by="k", count_by="k", stats_by=["id"])
+                m=cat.write(keyed, "t", partition_by="k", count_by="k")
             ),
         ) == 1
         m = out["m"]
@@ -341,7 +356,6 @@ class TestJobLeanCommit:
         }
         data_dir = os.path.join(cat.root, "t", "snap-00001", "data")
         assert m["schema"] == spark.read.parquet(data_dir).schema.jsonValue()
-        assert sum(e["rows"] for e in cat.file_stats("t")) == 300
 
     def test_empty_and_nonempty_writes_store_one_shape(self, spark, keyed, tmp_path):
         cat = SnapshotCatalog(str(tmp_path / "wh"))
@@ -435,82 +449,6 @@ class TestCompaction:
         assert cat.manifest("t")["cluster_by"] == ["n_tok"]
 
 
-class TestManifestStatsScan:
-    """Manifest-level file pruning: write() records per-file min/max
-    (Iceberg lower_bounds/upper_bounds) for stats_by columns; scan()
-    selects files from the manifest ALONE — no storage listing, no footer
-    reads at query time — then applies the residual predicate exactly."""
-
-    @pytest.fixture()
-    def ranged(self, spark, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "whx"))
-        # 4 range-disjoint files: repartitionByRange gives each output
-        # file a narrow, non-overlapping id interval → prunable stats
-        df = spark.range(4000).select(
-            F.col("id"), (F.col("id") % 7).alias("m"))
-        cat.write(df.repartitionByRange(4, "id"), "t",
-                  input_fingerprint="fp", stats_by=["id"])
-        return cat
-
-    def test_manifest_records_file_stats(self, ranged):
-        fs = ranged.file_stats("t")
-        assert fs and all("id" in e["stats"] for e in fs)
-        # the manifest itself stays O(1): stats live in the sidecar
-        m = ranged.manifest("t")
-        assert m.get("file_stats") is None
-        assert m["file_stats_file"] == "file_stats.json"
-        assert m["file_count"] == len(fs)
-        lo = min(e["stats"]["id"][0] for e in fs)
-        hi = max(e["stats"]["id"][1] for e in fs)
-        assert (lo, hi) == (0, 3999)
-
-    def test_plan_scan_prunes_files(self, ranged):
-        plan = ranged.plan_scan("t", [("id", "=", 10)])
-        assert len(plan) == 1
-        assert plan[0]["total_files"] >= 4
-        assert 0 < len(plan[0]["paths"]) < plan[0]["total_files"]
-
-    def test_scan_equals_read_filter(self, spark, ranged):
-        got = ranged.scan(spark, "t", [("id", ">=", 3500)])
-        want = ranged.read(spark, "t").filter(F.col("id") >= 3500)
-        assert sorted(r.id for r in got.collect()) == \
-            sorted(r.id for r in want.collect())
-
-    def test_scan_all_pruned_returns_empty_with_schema(self, spark, ranged):
-        got = ranged.scan(spark, "t", [("id", ">", 10**9)])
-        assert got.count() == 0
-        assert set(got.columns) == {"id", "m"}
-
-    def test_scan_partition_filter_prunes(self, spark, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "whp"))
-        df = spark.range(300).select(
-            (F.col("id") % 3).cast("string").alias("sink"), F.col("id"))
-        cat.write(df, "t", partition_by="sink", count_by="sink",
-                  stats_by=["id"])
-        plan = cat.plan_scan("t", [("sink", "=", "1")])
-        assert len(plan[0]["paths"]) < plan[0]["total_files"]
-        got = cat.scan(spark, "t", [("sink", "=", "1")])
-        assert got.count() == 100
-        assert set(got.columns) == {"sink", "id"}
-
-    def test_scan_chain_prunes_per_snapshot(self, spark, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "whc"))
-        lo = spark.range(0, 100).select(F.col("id"))
-        hi = spark.range(100, 200).select(F.col("id"))
-        cat.write(lo.coalesce(1), "t", input_fingerprint="a",
-                  stats_by=["id"])
-        cat.write(hi.coalesce(1), "t", input_fingerprint="b",
-                  parent="snap-00001", stats_by=["id"])
-        plan = cat.plan_scan("t", [("id", "<", 50)])
-        kept = {p["snapshot"]: len(p["paths"]) for p in plan}
-        assert kept["snap-00001"] == 1 and kept["snap-00002"] == 0
-        assert cat.scan(spark, "t", [("id", "<", 50)]).count() == 50
-
-    def test_unknown_op_rejected(self, spark, ranged):
-        with pytest.raises(ValueError):
-            ranged.scan(spark, "t", [("id", "!=", 1)])
-
-
 class TestExpireSnapshots:
     def test_expire_keeps_current_chain(self, spark, simple_df, tmp_path):
         cat = SnapshotCatalog(str(tmp_path / "whe"))
@@ -523,6 +461,14 @@ class TestExpireSnapshots:
         assert deleted == ["snap-00001"]
         assert cat.read(spark, "t").count() == 3  # 2 + 1 delta
         assert cat.find_committed("t", "a") is None
+        # new commits number past the highest surviving id: the expiry
+        # lowered the snapshot count, but never the next id
+        head = cat.current_snapshot("t")
+        m4 = cat.write(simple_df.limit(1), "t", input_fingerprint="d")
+        m5 = cat.write(simple_df.limit(2), "t", input_fingerprint="e")
+        assert len({head, m4["snapshot"], m5["snapshot"]}) == 3
+        assert cat.read(spark, "t", head).count() == 3
+        assert cat.find_committed("t", "c") == head
 
     def test_expire_removes_uncommitted_orphans(self, simple_df, tmp_path):
         import os
@@ -539,34 +485,21 @@ class TestExpireSnapshots:
         with pytest.raises(ValueError):
             cat.expire_snapshots("t", keep_last=0)
 
-    def test_compact_carries_stats_columns(self, spark, tmp_path):
-        """Compaction must not lose manifest prunability: the rewritten
-        snapshot re-records file stats for the source's stats columns."""
-        cat = SnapshotCatalog(str(tmp_path / "whcs"))
-        df = spark.range(2000).select(F.col("id"))
-        cat.write(df.repartition(8), "t", input_fingerprint="fp",
-                  stats_by=["id"])
-        m2 = cat.compact(spark, "t", target_file_bytes=1 << 20, force=True)
-        fs2 = cat.file_stats("t", m2["snapshot"])
-        assert fs2 and all("id" in e["stats"] for e in fs2)
-        got = cat.scan(spark, "t", [("id", "=", 42)])
-        assert got.count() == 1
-
 
 class TestManifestGrowthBound:
     """Catalog metadata must stay cheap as per-snapshot file counts grow
-    (Iceberg bounds this with the manifest-list pattern; the emulation
-    mirrors it with the file_stats sidecar). 5k files is ~50× the normal
-    test scale — manifest parse, scan planning, and read-plan
-    construction must all stay interactive, and manifest.json itself must
-    stay O(1) bytes regardless of file count."""
+    (Iceberg bounds this with the manifest-list pattern; the emulation's
+    manifest records no per-file entry). 5k files is ~50× the normal test
+    scale — manifest parse and read-plan construction must stay
+    interactive, and manifest.json itself must stay O(1) bytes regardless
+    of file count."""
 
     @pytest.fixture(scope="class")
     def big5k(self, spark, tmp_path_factory):
         cat = SnapshotCatalog(str(tmp_path_factory.mktemp("wh5k")))
         # 5000 single-row source slices -> exactly 5000 files, no shuffle
         df = spark.range(0, 5000, 1, numPartitions=5000).select(F.col("id"))
-        cat.write(df, "t", input_fingerprint="fp5k", stats_by=["id"])
+        cat.write(df, "t", input_fingerprint="fp5k")
         return cat
 
     def test_manifest_stays_o1_and_sidecar_carries_stats(self, big5k):
@@ -576,24 +509,10 @@ class TestManifestGrowthBound:
         m = big5k.manifest("t")
         assert _t.time() - t0 < 0.5
         assert m["row_count"] == 5000
-        assert m["file_count"] == 5000
         mpath = os.path.join(
             big5k.root, "t", m["snapshot"], "manifest.json"
         )
         assert os.path.getsize(mpath) < 64 * 1024  # O(1) in file count
-        fs = big5k.file_stats("t")
-        assert len(fs) == 5000
-
-    def test_plan_scan_sub_second_and_prunes(self, big5k):
-        import time as _t
-
-        t0 = _t.time()
-        plan = big5k.plan_scan("t", [("id", "=", 42)])
-        assert _t.time() - t0 < 1.0
-        (entry,) = plan
-        assert entry["total_files"] == 5000
-        # one row per file with exact min/max -> exactly one file admitted
-        assert len(entry["paths"]) == 1
 
     def test_read_plan_construction_bounded(self, spark, big5k):
         import time as _t
@@ -697,11 +616,11 @@ class TestPartitionOverwrite:
             [("a", 1), ("a", 2), ("b", 3), ("b", 4)], "k string, v int"
         )
         m1 = cat.write(base, "t", partition_by="k", count_by="k",
-                       input_fingerprint="f1", stats_by=["v"])
+                       input_fingerprint="f1")
         delta = spark.createDataFrame([("a", 5), ("b", 99)], "k string, v int")
         m2 = cat.write(delta, "t", partition_by="k", count_by="k",
                        parent=m1["snapshot"], replace_partitions=["b"],
-                       input_fingerprint="f2", stats_by=["v"])
+                       input_fingerprint="f2")
         return cat, m1, m2
 
     def test_chain_read_masks_replaced_partition(self, spark, chain):
@@ -739,20 +658,6 @@ class TestPartitionOverwrite:
         # unmasked when the parent is read standalone
         solo = cat.data_files("t", m1["snapshot"], follow_parents=False)
         assert any(f["partition"] == "b" for f in solo)
-
-    def test_scan_with_stats_respects_mask(self, spark, chain):
-        cat, _, _ = chain
-        # v=3 only existed in the replaced partition: masked → no rows
-        assert cat.scan(spark, "t", [("v", "=", 3)]).count() == 0
-        assert cat.scan(spark, "t", [("v", "=", 99)]).count() == 1
-        assert cat.scan(spark, "t", [("k", "=", "a")]).count() == 3
-
-    def test_plan_scan_prunes_masked_files(self, chain):
-        cat, m1, _ = chain
-        plans = {p["snapshot"]: p for p in cat.plan_scan("t", [])}
-        base_paths = plans[m1["snapshot"]]["paths"]
-        assert base_paths is not None
-        assert not any("k=b" in p for p in base_paths)
 
     def test_replacement_can_empty_a_partition(self, spark, tmp_path):
         cat = SnapshotCatalog(str(tmp_path / "po_empty"))
@@ -828,11 +733,6 @@ class TestEqualityDelete:
             (r.k, r.v) for r in cat.read(spark, "t", m2["snapshot"]).collect()
         )
         assert rows == [("a", 1), ("a", 2), ("a", 4), ("b", 3), ("b", 5)]
-
-    def test_scan_applies_deletes(self, spark, deleted):
-        cat, _, _, _ = deleted
-        assert cat.scan(spark, "t", [("k", "=", "b")]).count() == 1
-        assert cat.scan(spark, "t", [("k", "=", "a")]).count() == 2
 
     def test_compact_applies_deletes_physically(self, spark, deleted):
         cat, _, _, _ = deleted
@@ -1143,8 +1043,8 @@ class TestManyDeletesOneJoin:
 class TestZOrderCompaction:
     """compact(zorder=[...]): Iceberg rewrite_data_files sort-strategy
     zorder — after the rewrite, file min/max stats are tight on EVERY z
-    column, so plan_scan prunes on any of them; a linear sort only
-    serves its leading column."""
+    column, so a file-pruning reader skips files on any of them; a
+    linear sort only serves its leading column."""
 
     @pytest.fixture()
     def zt(self, spark, tmp_path):
@@ -1154,37 +1054,41 @@ class TestZOrderCompaction:
             ((F.col("id") * 7919) % 200).cast("int").alias("y"),
             F.col("id").alias("v"),
         )
-        cat.write(df, "t", stats_by=["x", "y"])
+        cat.write(df, "t")
         tb = sum(f["bytes"] for f in cat.data_files("t"))
         cm = cat.compact(spark, "t", target_file_bytes=max(1, tb // 8),
                          zorder=["x", "y"], force=True)
         return cat, df, cm
 
     def test_prunes_on_every_z_column(self, zt):
+        import pyarrow.parquet as pq
+
         cat, _, _ = zt
-        px = cat.plan_scan("t", [("x", "<=", 10)])[0]
-        py = cat.plan_scan("t", [("y", "<=", 10)])[0]
-        assert len(px["paths"]) < px["total_files"]
-        assert len(py["paths"]) < py["total_files"]
+        files = cat.data_files("t")
+        assert len(files) > 1
+        for col in ("x", "y"):
+            # a file can hold a row with col <= 10 only if its footer min is
+            mins = []
+            for f in files:
+                md = pq.ParquetFile(f["path"]).metadata
+                names = [md.schema.column(i).name for i in range(md.num_columns)]
+                ci = names.index(col)
+                mins.append(min(md.row_group(g).column(ci).statistics.min
+                                for g in range(md.num_row_groups)))
+            assert sum(mn <= 10 for mn in mins) < len(files)
 
     def test_rows_preserved_and_scans_exact(self, spark, zt):
         cat, df, cm = zt
         assert cm["row_count"] == 60_000
         assert cat.read(spark, "t").count() == 60_000
         assert (
-            cat.scan(spark, "t", [("x", "=", 7)]).count()
+            cat.read(spark, "t").where("x = 7").count()
             == df.where("x = 7").count()
         )
         assert (
-            cat.scan(spark, "t", [("y", ">=", 190)]).count()
+            cat.read(spark, "t").where("y >= 190").count()
             == df.where("y >= 190").count()
         )
-
-    def test_ranges_come_from_manifests(self, zt):
-        cat, _, _ = zt
-        # the source chain had full file_stats for x and y → no data pass
-        r = cat._manifest_ranges("t", cat.current_snapshot("t"), ["x", "y"])
-        assert r == {"x": (0, 199), "y": (0, 199)}
 
     def test_z_values_stay_in_long_range(self, spark):
         """The interleave must never touch the long sign bit (a negative
@@ -1213,66 +1117,3 @@ class TestZOrderCompaction:
         cat2.write(spark.createDataFrame([(1, 2)], "a int, b int"), "t")
         with pytest.raises(ValueError, match="mutually exclusive"):
             cat2.compact(spark, "t", zorder=["a"], cluster_by=["b"], force=True)
-
-
-class TestWriteAuditPublish:
-    """Staged writes (Iceberg WAP): a snapshot commits fully but CURRENT
-    doesn't move and resume ignores it until publish()."""
-
-    def test_staged_invisible_until_published(self, spark, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "wap"))
-        m1 = cat.write(spark.createDataFrame([(1,)], "v int"), "t",
-                       input_fingerprint="base")
-        ms = cat.write(spark.createDataFrame([(2,)], "v int"), "t",
-                       input_fingerprint="audit-me", parent=m1["snapshot"],
-                       staged=True)
-        # production readers see only the published snapshot
-        assert cat.current_snapshot("t") == m1["snapshot"]
-        assert cat.read(spark, "t").count() == 1
-        # the audit reads the staged snapshot directly (full chain)
-        assert cat.read(spark, "t", ms["snapshot"]).count() == 2
-        # resume must NOT land on an unpublished snapshot
-        assert cat.find_committed("t", "audit-me") is None
-
-        pm = cat.publish("t", ms["snapshot"])
-        assert pm["staged"] is False
-        assert cat.current_snapshot("t") == ms["snapshot"]
-        assert cat.read(spark, "t").count() == 2
-        assert cat.find_committed("t", "audit-me") == ms["snapshot"]
-
-    def test_expire_retains_pending_audits(self, spark, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "wap_exp"))
-        cat.write(spark.createDataFrame([(1,)], "v int"), "t",
-                  input_fingerprint="a")
-        staged = cat.write(spark.createDataFrame([(9,)], "v int"), "t",
-                           input_fingerprint="s", staged=True)
-        cat.write(spark.createDataFrame([(2,)], "v int"), "t",
-                  input_fingerprint="b")
-        deleted = cat.expire_snapshots("t", keep_last=1)
-        assert staged["snapshot"] not in deleted
-        assert cat.read(spark, "t", staged["snapshot"]).count() == 1
-
-    def test_publish_requires_committed_snapshot(self, tmp_path):
-        cat = SnapshotCatalog(str(tmp_path / "wap_err"))
-        with pytest.raises(FileNotFoundError):
-            cat.publish("t", "snap-00001")
-
-    def test_publish_rejects_stale_staged_snapshot(self, spark, tmp_path):
-        """WAP publish is a cherry-pick onto the latest state, not a
-        rollback: if the table advanced after staging, publishing the
-        stale audit would hide the newer commit and fork the chain —
-        it must raise instead."""
-        cat = SnapshotCatalog(str(tmp_path / "wap_stale"))
-        m1 = cat.write(spark.createDataFrame([(1,)], "v int"), "t",
-                       input_fingerprint="base")
-        staged = cat.write(spark.createDataFrame([(2,)], "v int"), "t",
-                           input_fingerprint="audit", parent=m1["snapshot"],
-                           staged=True)
-        # a concurrent producer commits on top of m1 while the audit runs
-        m3 = cat.write(spark.createDataFrame([(3,)], "v int"), "t",
-                       input_fingerprint="concurrent", parent=m1["snapshot"])
-        with pytest.raises(ValueError, match="advanced"):
-            cat.publish("t", staged["snapshot"])
-        # nothing moved: readers still see the concurrent commit
-        assert cat.current_snapshot("t") == m3["snapshot"]
-        assert cat.read(spark, "t").count() == 2

@@ -222,11 +222,10 @@ class TestQuiltMaintenanceStages:
 
         cat = SnapshotCatalog(str(tmp_path / "wh"))
         base = spark.range(100).select(F.col("id"))
-        m1 = cat.write(base.repartition(8), "t", input_fingerprint="base",
-                       stats_by=["id"])
+        m1 = cat.write(base.repartition(8), "t", input_fingerprint="base")
         delta = spark.range(100, 200).select(F.col("id"))
         cat.write(delta.repartition(8), "t", input_fingerprint="delta",
-                  stats_by=["id"], parent=m1["snapshot"])
+                  parent=m1["snapshot"])
         return cat, tmp_path
 
     def test_snapshot_compact_tag_chain(self, spark, warehouse):
