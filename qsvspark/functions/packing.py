@@ -35,17 +35,28 @@ Two packers, two contracts:
   exactly why this parallelizes embarrassingly. Sequence ids are
   globalized as ``pid * 2^40 + local_seq``.
 
-  ONE first-fit loop (``_FirstFit``), TWO emitters:
+  ONE first-fit loop (``_FirstFit``), driven by two passes:
 
-    - ``pack_greedy`` emits LAYOUT rows (one per document part: seq_id,
-      seq_fill, part_start, part_len, ...) — the ``materialize=False``
-      table and quilt's ``pack`` stage;
-    - ``pack_greedy_sequences`` emits SEQUENCE rows: a ``mapInArrow``
-      over (id, n_tok, group, tokens) that cuts and concatenates each
-      sequence's token array with NumPy from the Arrow list buffers. No
-      token is shuffled or joined: the documents of a sequence already
-      sit in its partition. Its ``parts`` column carries the layout
-      rows; ``sequence_layout`` explodes them back.
+    - ``pack_greedy`` emits LAYOUT rows only (one per document part:
+      seq_id, seq_fill, part_start, part_len, ...) from (id, n_tok)
+      without touching a token — the ``materialize=False`` table and
+      quilt's ``pack`` stage;
+    - ``greedy_sequence_packer`` is ONE generator holding the loop and
+      the assembly step over (id, n_tok, group, tokens) Arrow batches:
+      for each set of bins the loop closes it cuts and concatenates the
+      sequences' token arrays with NumPy from the Arrow list buffers and
+      yields the SEQUENCE batch (one row per sequence, with a ``parts``
+      column of its layout rows) together with the matching LAYOUT
+      batch. No token is shuffled or joined: the documents of a sequence
+      already sit in its partition. Where the two batches go:
+        * ``pack_greedy_sequences`` returns the sequence batches as a
+          DataFrame (``mapInArrow``);
+        * ``NorthStarPipeline.pack_sinks(materialize=True)`` has each
+          task write BOTH batches as parquet files itself
+          (``SnapshotCatalog.stage``), committed as the ``sequences``
+          and ``packed`` snapshots — the tokens never return to the JVM.
+      ``sequence_layout`` explodes a committed sequence table's
+      ``parts`` back into the layout.
 
   Invariants (every doc packed once, every sequence ≤ seq_len unless a
   single oversized doc, fill ratio bound, emitter equivalence) are
@@ -59,12 +70,13 @@ for on top of the reference's operator set.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Optional
+from typing import Callable, Iterator, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # pid * 2^40 leaves ~10^12 sequences per shard and ~8M shards before a
 # signed-64 collision — comfortable at the 10^12-sequence target.
@@ -382,7 +394,18 @@ def pack_greedy(
 _SEQUENCE_COLS = ("seq_id", "tokens", "n_docs", "n_tokens", "pad", "parts")
 
 
-def pack_greedy_sequences(
+class GreedyPacker(NamedTuple):
+    """The greedy sequence pass of one packing, ready to run (see
+    ``greedy_sequence_packer``)."""
+
+    src: DataFrame  # (id, n_tok, *groups, tokens): the rows to pack
+    sequence_schema: T.StructType  # pack_greedy_sequences' rows
+    layout_schema: T.StructType  # pack_greedy's rows
+    # Iterator[pa.RecordBatch] of ``src`` -> Iterator[(sequences, layout)]
+    batches: Callable
+
+
+def greedy_sequence_packer(
     df: DataFrame,
     n_tok_col: str,
     id_col: str,
@@ -390,46 +413,38 @@ def pack_greedy_sequences(
     group_cols: Optional[list[str]] = None,
     oversized: str = "own",
     pad_id: Optional[int] = None,
-) -> DataFrame:
-    """``pack_greedy`` + ``materialize_greedy_sequences`` in ONE
-    partition-local pass — the SEQUENCE emitter. Same first-fit loop,
-    same seq ids, same ``oversized`` / ``group_cols`` semantics; one row
-    per sequence:
+) -> GreedyPacker:
+    """The one first-fit-and-assemble generator behind the sequence
+    emitters. ``batches`` runs inside a task over the Arrow batches of
+    ``src`` (one partition): it drives ``_FirstFit`` and, for each set
+    of bins the loop closes, yields the sequence batch (one row per
+    sequence, ``sequence_schema``) and the matching layout batch (one
+    row per document part, ``layout_schema`` — ``pack_greedy``'s
+    columns). ``pack_greedy_sequences`` returns the first as a
+    DataFrame; ``NorthStarPipeline.pack_sinks`` has its tasks write
+    both as files (``SnapshotCatalog.stage``).
 
-      (seq_id, *group_cols, tokens, n_docs, n_tokens, pad, parts)
-
-    ``parts`` is ``array<struct<id_col, n_tok_col, seq_fill, oversized,
-    part_start, part_len>>`` in fill order — the document boundaries a
-    loader needs for document-masked attention, and exactly the
-    ``pack_greedy`` rows of this sequence (``sequence_layout`` explodes
-    them back into that layout).
-
-    A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)`` (the token
-    array column is always ``tokens``): each sequence's token array is
-    cut and concatenated with NumPy straight from the Arrow list buffers
-    (no per-token Python), the token slices of bins still open carry
-    across Arrow batches, and every open bin is flushed at the end of
-    the partition. ``pad_id`` (when given)
-    right-pads every sequence to exactly ``seq_len``; an ``"own"``
-    oversized sequence stays unpadded. No shuffle, no join: the
-    documents of one sequence already sit in one partition.
-    """
+    Each sequence's token array is cut and concatenated with NumPy
+    straight from the Arrow list buffers (no per-token Python), the
+    token slices of bins still open carry across Arrow batches, and
+    every open bin is flushed at the end of the partition. ``pad_id``
+    (when given) right-pads every sequence to exactly ``seq_len``; an
+    ``"own"`` oversized sequence stays unpadded."""
     import pyarrow as pa
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
     _check_greedy_args(seq_len, oversized)
     groups = list(group_cols or [])
     src = df.select(id_col, n_tok_col, *groups, "tokens")
     field = {f.name: f for f in src.schema.fields}
-    part_type = T.StructType([
-        field[id_col], field[n_tok_col],
+    part_fields = [
         T.StructField("seq_fill", T.LongType()),
         T.StructField("oversized", T.IntegerType()),
         T.StructField("part_start", T.LongType()),
         T.StructField("part_len", T.LongType()),
-    ])
-    out_schema = T.StructType([
+    ]
+    part_type = T.StructType([field[id_col], field[n_tok_col], *part_fields])
+    seq_schema = T.StructType([
         T.StructField("seq_id", T.LongType()),
         *(field[g] for g in groups),
         field["tokens"],
@@ -438,15 +453,20 @@ def pack_greedy_sequences(
         T.StructField("pad", T.LongType()),
         T.StructField("parts", T.ArrayType(part_type)),
     ])
-    arrow_schema = to_arrow_schema(out_schema)
-    tok_type = arrow_schema.field("tokens").type
+    layout_schema = T.StructType([
+        field[id_col], field[n_tok_col], *(field[g] for g in groups),
+        T.StructField("seq_id", T.LongType()), *part_fields,
+    ])
+    seq_arrow = to_arrow_schema(seq_schema)
+    layout_arrow = to_arrow_schema(layout_schema)
+    tok_type = seq_arrow.field("tokens").type
     pad_dtype = tok_type.value_type.to_pandas_dtype()
-    part_fields = list(arrow_schema.field("parts").type.value_type)
+    part_arrow = list(seq_arrow.field("parts").type.value_type)
 
     def offsets(lengths: list) -> pa.Array:
         return pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
 
-    def assemble(bins: list) -> pa.RecordBatch:
+    def assemble(bins: list) -> tuple:
         pieces, rows, seq_lens, n_docs, n_tokens = [], [], [], [], []
         for b in bins:
             n = 0
@@ -461,16 +481,19 @@ def pack_greedy_sequences(
             n_docs.append(len({p[0][0] for p in b.parts}))
             n_tokens.append(n)
         parts = pa.StructArray.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(zip(*rows), part_fields)],
-            fields=part_fields,
+            [pa.array(c, type=f.type) for c, f in zip(zip(*rows), part_arrow)],
+            fields=part_arrow,
         )
+        n_parts = [len(b.parts) for b in bins]
+        seq_ids = pa.array([b.seq_id for b in bins], type=pa.int64())
+        keys = [
+            pa.array([b.key[j] for b in bins], type=seq_arrow.field(g).type)
+            for j, g in enumerate(groups)
+        ]
         n_tokens_arr = np.asarray(n_tokens, dtype=np.int64)
-        columns = [
-            pa.array([b.seq_id for b in bins], type=pa.int64()),
-            *(
-                pa.array([b.key[j] for b in bins], type=arrow_schema.field(g).type)
-                for j, g in enumerate(groups)
-            ),
+        seqs = pa.RecordBatch.from_arrays([
+            seq_ids,
+            *keys,
             pa.ListArray.from_arrays(
                 offsets(seq_lens),
                 pa.array(np.concatenate(pieces), type=tok_type.value_type),
@@ -479,9 +502,18 @@ def pack_greedy_sequences(
             pa.array(np.asarray(n_docs, dtype=np.int64)),
             pa.array(n_tokens_arr),
             pa.array(np.maximum(seq_len - n_tokens_arr, 0)),
-            pa.ListArray.from_arrays(offsets([len(b.parts) for b in bins]), parts),
-        ]
-        return pa.RecordBatch.from_arrays(columns, schema=arrow_schema)
+            pa.ListArray.from_arrays(offsets(n_parts), parts),
+        ], schema=seq_arrow)
+        # the layout is the parts flattened: each part row repeats its
+        # sequence's id and group values
+        of_part = pa.array(np.repeat(np.arange(len(bins)), n_parts))
+        layout = pa.RecordBatch.from_arrays([
+            parts.field(0), parts.field(1),
+            *(k.take(of_part) for k in keys),
+            seq_ids.take(of_part),
+            *(parts.field(i) for i in range(2, 6)),
+        ], schema=layout_arrow)
+        return seqs, layout
 
     def pack(batches):
         ff = None
@@ -511,7 +543,46 @@ def pack_greedy_sequences(
             if done:
                 yield assemble(done)
 
-    return src.mapInArrow(pack, out_schema)
+    return GreedyPacker(src, seq_schema, layout_schema, pack)
+
+
+def pack_greedy_sequences(
+    df: DataFrame,
+    n_tok_col: str,
+    id_col: str,
+    seq_len: int,
+    group_cols: Optional[list[str]] = None,
+    oversized: str = "own",
+    pad_id: Optional[int] = None,
+) -> DataFrame:
+    """``pack_greedy`` + ``materialize_greedy_sequences`` in ONE
+    partition-local pass — the SEQUENCE emitter. Same first-fit loop,
+    same seq ids, same ``oversized`` / ``group_cols`` semantics; one row
+    per sequence:
+
+      (seq_id, *group_cols, tokens, n_docs, n_tokens, pad, parts)
+
+    ``parts`` is ``array<struct<id_col, n_tok_col, seq_fill, oversized,
+    part_start, part_len>>`` in fill order — the document boundaries a
+    loader needs for document-masked attention, and exactly the
+    ``pack_greedy`` rows of this sequence (``sequence_layout`` explodes
+    them back into that layout).
+
+    A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)`` (the token
+    array column is always ``tokens``) running the sequence half of
+    ``greedy_sequence_packer``. No shuffle, no join: the documents of
+    one sequence already sit in one partition.
+    """
+    packer = greedy_sequence_packer(
+        df, n_tok_col, id_col, seq_len, group_cols, oversized, pad_id
+    )
+    pack = packer.batches  # the closure ships to tasks; the DataFrame must not
+
+    def sequences(batches):
+        for seqs, _layout in pack(batches):
+            yield seqs
+
+    return packer.src.mapInArrow(sequences, packer.sequence_schema)
 
 
 def sequence_layout(seqs: DataFrame) -> DataFrame:

@@ -21,6 +21,14 @@ are never recomputed. On a real cluster the same interface binds to
 Iceberg (`writeTo(...).createOrReplace()` + snapshot metadata); the
 emulation keeps resume logic testable locally.
 
+Files can also reach a snapshot without Spark's writer: ``stage`` runs
+one job whose tasks write their own parquet files (pyarrow, with the
+Spark writer's settings and footer schema) under a staging directory,
+and ``commit_staged`` moves exactly the files the successful tasks
+reported into a new snapshot. Both ``write`` and ``commit_staged`` end
+in the same ``_commit``: footer accounting, parent chaining, manifest,
+CURRENT flip.
+
 Every consumer of an append chain (``read_parts``, ``data_files``,
 ``compact``, ``expire_snapshots``) goes through ONE walk,
 ``_resolve_chain``: the tag or CURRENT ref resolves once, each manifest
@@ -35,6 +43,8 @@ import os
 import shutil
 import time
 import urllib.parse
+import uuid
+from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -86,20 +96,61 @@ def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
 
 
 def _written_schema(
-    df: DataFrame, data_dir: str, written: dict, partition_by: str | None
+    spark: SparkSession, declared: T.StructType, data_dir: str, written: dict,
+    partition_by: str | None,
 ) -> T.StructType:
     """``spark.read.parquet(data_dir).schema`` without its inference job
     (see ``SnapshotCatalog.write``); with no files, the same column order
-    and nullability from ``df``'s declared schema."""
-    spark = df.sparkSession
+    and nullability from the ``declared`` schema of the written rows."""
     if written["schema"] is not None:
         data_schema = T.StructType.fromJson(json.loads(written["schema"]))
-    else:  # 0 files: every file Spark's parquet writer makes has the footer key
-        data_schema = T.StructType([f for f in df.schema.fields if f.name != partition_by])
+    else:  # 0 files: every file a snapshot write makes has the footer key
+        data_schema = T.StructType([f for f in declared.fields if f.name != partition_by])
     schema = spark.read.schema(data_schema).parquet(data_dir).schema
     if partition_by and partition_by not in schema.names:
-        schema = schema.add(partition_by, df.schema[partition_by].dataType, True)
+        schema = schema.add(partition_by, declared[partition_by].dataType, True)
     return schema
+
+
+def _split_by(batch, col: str):
+    """``(value, rows without col)`` for each distinct ``col`` value of an
+    Arrow batch."""
+    import pyarrow.compute as pc
+
+    keys = batch.column(col)
+    rest = batch.drop_columns([col])
+    for v in keys.unique().to_pylist():
+        yield v, rest.filter(keys.is_null() if v is None else pc.equal(keys, v))
+
+
+def _parquet_writer(path: str, schema, footer_schema: str):
+    """A pyarrow writer with the settings of the Spark writes in
+    ``SnapshotCatalog.write``: snappy, no dictionary, v2 data pages and
+    DELTA_BINARY_PACKED for every integer leaf (list elements and struct
+    fields included), and the Spark schema JSON under the footer key
+    Spark's own writer uses, so readers and commit accounting cannot
+    tell the files apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def int_leaves(fields, prefix: str):
+        for f in fields:
+            name = prefix + f.name
+            if pa.types.is_list(f.type):
+                yield from int_leaves([f.type.value_field], name + ".list.")
+            elif pa.types.is_struct(f.type):
+                yield from int_leaves(list(f.type), name + ".")
+            elif pa.types.is_integer(f.type):
+                yield name
+
+    return pq.ParquetWriter(
+        path,
+        schema.with_metadata({_SPARK_SCHEMA_KEY: footer_schema.encode()}),
+        compression="snappy",
+        use_dictionary=False,
+        data_page_version="2.0",
+        column_encoding={c: "DELTA_BINARY_PACKED" for c in int_leaves(schema, "")},
+    )
 
 
 def _zorder_expr(cols_ranges: list[tuple[str, float, float]],
@@ -204,6 +255,17 @@ class _Link(NamedTuple):
     data_dir: str
     mask: set  # partition values STRICTLY LATER snapshots replaced
     deletes: list  # (key_cols, delete_dir) of STRICTLY LATER delete snapshots
+
+
+class _Staged(NamedTuple):
+    """The files one ``SnapshotCatalog.stage`` job wrote, per table."""
+
+    spark: SparkSession
+    dir: str
+    partition_by: str
+    schemas: dict  # table -> Spark schema of its rows
+    files: dict  # table -> [(partition value, staged path, rows)]
+    seconds: float  # the staging job's wall time
 
 
 class SnapshotCatalog:
@@ -391,7 +453,42 @@ class SnapshotCatalog:
             writer.parquet(data_dir, compression="snappy")
             total = obs.get["rows"]
 
-        counted = count_by if count_by and count_by in df.columns else None
+        return self._commit(
+            df.sparkSession, df.schema, table, snap, total, t0,
+            input_fingerprint=input_fingerprint, lineage=lineage,
+            partition_by=partition_by, count_by=count_by, cluster_by=cluster_by,
+            parent=parent, bucket_by=bucket_by, n_buckets=n_buckets,
+            replace_partitions=replace_partitions,
+        )
+
+    def _commit(
+        self,
+        spark: SparkSession,
+        declared: T.StructType,
+        table: str,
+        snap: str,
+        total: int,
+        t0: float,
+        *,
+        input_fingerprint: str,
+        lineage: dict | None,
+        partition_by: str | None,
+        count_by: str | None,
+        cluster_by: list[str] | None = None,
+        parent: str | None = None,
+        bucket_by: list[str] | None = None,
+        n_buckets: int = 0,
+        replace_partitions: list[str] | None = None,
+    ) -> dict:
+        """Commit the files already under ``snap``'s data dir: account
+        them from their footers (``_walk_written``), chain the counts onto
+        ``parent``, write the manifest and flip CURRENT. Every way data
+        reaches a snapshot (``write``, ``commit_staged``) ends here.
+        ``declared`` is the schema of the written rows; ``total`` their
+        count."""
+        snap_dir = os.path.join(self._table_dir(table), snap)
+        data_dir = os.path.join(snap_dir, "data")
+        counted = count_by if count_by and count_by in declared.names else None
         written = _walk_written(data_dir, counted if counted != partition_by else None)
         per_part = None
         if counted:
@@ -427,7 +524,7 @@ class SnapshotCatalog:
                     cum_total -= cum_parts.pop(v, 0)
                 for k, v in per_part.items():
                     cum_parts[k] = cum_parts.get(k, 0) + v
-        schema_json = _written_schema(df, data_dir, written, partition_by).jsonValue()
+        schema_json = _written_schema(spark, declared, data_dir, written, partition_by).jsonValue()
         manifest = {
             "table": table,
             "snapshot": snap,
@@ -453,6 +550,138 @@ class SnapshotCatalog:
         with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
             f.write(snap)
         return manifest
+
+    # -- task-written files -----------------------------------------
+
+    @contextmanager
+    def stage(
+        self,
+        df: DataFrame,
+        emit,
+        schemas: dict[str, T.StructType],
+        partition_by: str,
+    ):
+        """Run ONE Spark job in which each task writes its own rows of one
+        or more tables as parquet files, and yield a ``_Staged`` handle
+        whose files ``commit_staged`` turns into snapshots — the Iceberg
+        model, where writers produce data files and the catalog commits
+        the files they report.
+
+        ``emit`` runs in each task over the Arrow batches of ``df``'s
+        partition and yields one Arrow batch per table, in ``schemas``
+        order (``schemas`` maps each table to the Spark schema of its
+        rows). Each batch is split by the string ``partition_by`` column
+        into one open file per (table, value), written with the settings
+        of ``write``'s Spark writer (``_parquet_writer``).
+
+        Each task attempt writes under ``<root>/_staging/<uuid>/<table>/``
+        with attempt-unique names (partition id, attempt number, uuid) and
+        returns one row per file. The collected result holds exactly one
+        successful attempt per partition, so only its files are ever
+        committed: a failed or speculative attempt's files stay behind and
+        go when the staging directory is removed on exit, committed or
+        not. A staging directory a killed run leaves is never read:
+        readers list only ``snap-*``."""
+        import pyarrow as pa
+
+        for table, schema in schemas.items():
+            if not isinstance(schema[partition_by].dataType, T.StringType):
+                raise ValueError(
+                    f"stage: partition column '{partition_by}' of '{table}' "
+                    "must be a string"
+                )
+        staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        tables = list(schemas)
+        footers = [
+            T.StructType([f for f in schemas[t].fields if f.name != partition_by]).json()
+            for t in tables
+        ]
+        result = pa.schema([("table", pa.string()), ("partition", pa.string()),
+                            ("path", pa.string()), ("rows", pa.int64())])
+
+        def task(batches):
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            stem = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}-{uuid.uuid4().hex}"
+            files: dict = {}  # (table, partition value) -> [path, writer, rows]
+            try:
+                for out in emit(batches):
+                    for table, footer, batch in zip(tables, footers, out):
+                        for value, rows in _split_by(batch, partition_by):
+                            f = files.get((table, value))
+                            if f is None:
+                                os.makedirs(os.path.join(staging, table), exist_ok=True)
+                                path = os.path.join(
+                                    staging, table, f"{stem}-{len(files):05d}.snappy.parquet"
+                                )
+                                f = files[(table, value)] = [
+                                    path, _parquet_writer(path, rows.schema, footer), 0
+                                ]
+                            f[1].write_batch(rows)
+                            f[2] += rows.num_rows
+            finally:
+                for f in files.values():
+                    f[1].close()
+            yield pa.RecordBatch.from_pylist(
+                [{"table": t, "partition": v, "path": f[0], "rows": f[2]}
+                 for (t, v), f in files.items()],
+                schema=result,
+            )
+
+        t0 = time.time()
+        try:
+            reported = df.mapInArrow(
+                task, "table string, partition string, path string, rows long"
+            ).collect()
+            files: dict = {t: [] for t in tables}
+            for r in reported:
+                files[r["table"]].append((r["partition"], r["path"], r["rows"]))
+            yield _Staged(
+                df.sparkSession, staging, partition_by, schemas, files,
+                time.time() - t0,
+            )
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def commit_staged(
+        self,
+        staged: _Staged,
+        table: str,
+        *,
+        input_fingerprint: str = "",
+        lineage: dict | None = None,
+        count_by: str | None = None,
+    ) -> dict:
+        """Commit ``table``'s staged files (see ``stage``) as its next
+        snapshot: each reported file moves into ``snap-NNNNN/data/``,
+        under the partition directory Spark's writer would name
+        (``ExternalCatalogUtils.getPartitionPathString``: null and ""
+        become ``__HIVE_DEFAULT_PARTITION__``), and the snapshot commits
+        through ``_commit`` exactly as a ``write`` does. The manifest's
+        ``write_seconds`` is the staging job plus this commit. Commit the
+        tables in the order their lineage needs (a table recording
+        another's snapshot id commits after it)."""
+        t0 = time.time() - staged.seconds
+        snap = self._next_snapshot(table)
+        data_dir = os.path.join(self._table_dir(table), snap, "data")
+        os.makedirs(data_dir)
+        col = staged.partition_by
+        files = staged.files[table]
+        catalog_utils = (
+            staged.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+        )
+        dirs = {v: catalog_utils.getPartitionPathString(col, v) for v, _, _ in files}
+        for value, path, _ in files:
+            d = os.path.join(data_dir, dirs[value])
+            os.makedirs(d, exist_ok=True)
+            os.replace(path, os.path.join(d, os.path.basename(path)))
+        return self._commit(
+            staged.spark, staged.schemas[table], table, snap,
+            sum(rows for _, _, rows in files), t0,
+            input_fingerprint=input_fingerprint, lineage=lineage,
+            partition_by=col, count_by=count_by,
+        )
 
     def delete_rows(
         self,
@@ -600,8 +829,10 @@ class SnapshotCatalog:
     def history(self, table: str) -> list[dict]:
         """Commit log, oldest first (Iceberg's ``table.history()``): one
         entry per committed snapshot with its timestamp, lineage op,
-        parent, and row accounting. Reads only manifests — never data."""
+        parent, and row accounting. Reads only manifests — never data —
+        plus CURRENT and the tags once per call."""
         out = []
+        current, tags = self.current_snapshot(table), self.tags(table)
         for s in self._snaps(table):
             m = self.manifest(table, s)
             if not m or not m.get("committed"):
@@ -614,10 +845,8 @@ class SnapshotCatalog:
                     "parent": m.get("parent"),
                     "row_count": m.get("row_count"),
                     "cumulative_row_count": m.get("cumulative_row_count"),
-                    "is_current": s == self.current_snapshot(table),
-                    "tags": sorted(
-                        t for t, ts in self.tags(table).items() if ts == s
-                    ),
+                    "is_current": s == current,
+                    "tags": sorted(t for t, ts in tags.items() if ts == s),
                 }
             )
         return out
@@ -979,10 +1208,9 @@ class SnapshotCatalog:
         target_file_bytes: int = 128 * 1024 * 1024,
         cluster_by: list[str] | None = None,
         zorder: list[str] | None = None,
-        snap: str | None = None,
         force: bool = False,
     ) -> dict | None:
-        """Bin-pack a snapshot's small data files into ~target-size files
+        """Bin-pack the CURRENT snapshot's small data files into ~target-size files
         (Iceberg ``rewrite_data_files``), committed as a NEW snapshot.
 
         Routed sinks accumulate (write-tasks × sinks) files per run; at
@@ -1007,7 +1235,10 @@ class SnapshotCatalog:
 
         Append chains are flattened: the rewrite reads the whole parent
         chain and commits a parent-less snapshot whose counts equal the
-        chain's cumulative totals, so chain length resets to 1.
+        chain's cumulative totals, so chain length resets to 1. That is
+        why only CURRENT is rewritten: the rewrite becomes CURRENT, so
+        rewriting an older snapshot would drop every later commit from
+        what readers see.
 
         zorder: multi-column clustering (Iceberg ``rewrite_data_files``
         sort-strategy zorder): rows are range-partitioned and sorted by a
@@ -1018,7 +1249,7 @@ class SnapshotCatalog:
         min/max aggregate over the source. Mutually exclusive with
         cluster_by and with partitioned/bucketed layouts.
         """
-        chain = self._resolve_chain(table, snap)
+        chain = self._resolve_chain(table)
         m = chain[-1].manifest if chain else {}
         if not m:
             raise FileNotFoundError(f"no committed snapshot for table '{table}'")

@@ -868,25 +868,29 @@ class NorthStarPipeline:
         (pad_id=None skips padding). This is the table a training loader
         consumes; ``parts`` (doc_id, n_tok, seq_fill, oversized,
         part_start, part_len per document) gives the document boundaries
-        for document-masked attention. Commit order: ``sequences`` first
-        (packed and assembled in one partition-local pass,
-        pack_greedy_sequences — no token shuffle, no join), then
-        ``packed`` as ``explode(parts)`` of that committed snapshot, so
-        the two tables agree by construction. Resume:
+        for document-masked attention. Both tables come from ONE
+        partition-local pass in ONE Spark job: each task runs the greedy
+        packer (``greedy_sequence_packer`` — no token shuffle, no join)
+        and writes its ``sequences`` and ``packed`` rows itself
+        (``SnapshotCatalog.stage``), so the token arrays never return to
+        the JVM; the driver then commits ``sequences`` and, after it,
+        ``packed``, whose lineage records the new sequences snapshot.
+        The two tables agree by construction. Resume:
           * both committed (packed derived from the current sequences
             snapshot) — no-op;
-          * sequences committed, packed missing — packed is derived from
-            the committed sequences;
+          * sequences committed, packed missing (what a crash between
+            the two commits leaves) — packed is derived from the
+            committed sequences (``sequence_layout``, no token read);
           * packed committed by an earlier ``materialize=False`` call,
-            sequences missing — sequences are written, then a fresh
-            packed snapshot derived from them is committed.
+            sequences missing — both are written, a fresh packed
+            snapshot among them.
 
         Returns the written packed manifest (with a ``"sequences"`` key
         holding the sequences manifest, or None when it was already
         committed), or None when everything is already committed."""
         from qsvspark.functions.packing import (
+            greedy_sequence_packer,
             pack_greedy,
-            pack_greedy_sequences,
             sequence_layout,
         )
 
@@ -898,11 +902,6 @@ class NorthStarPipeline:
         policy_tag = "" if oversized == "own" else f"|ov={oversized}"
         pack_fp = f"{routed_fp}|pack|seq_len={seq_len}{policy_tag}"
 
-        packed_write = {
-            "input_fingerprint": pack_fp,
-            "partition_by": "sink",
-            "count_by": "sink",
-        }
         layout_snap = self.catalog.find_committed("packed", pack_fp)
         if not materialize:
             if layout_snap:
@@ -912,39 +911,45 @@ class NorthStarPipeline:
                 oversized=oversized,
             )
             return self.catalog.write(
-                packed, "packed",
+                packed, "packed", input_fingerprint=pack_fp,
                 lineage={"stages": ["pack"], "inputs": [routed_fp]},
-                **packed_write,
+                partition_by="sink", count_by="sink",
             )
         seq_fp = f"{pack_fp}|sequences|pad={pad_id}"
-        seq_manifest = None
+
+        def packed_lineage(seq_snap: str) -> dict:
+            return {"stages": ["pack"], "inputs": [seq_fp], "sequences": seq_snap}
+
         seq_snap = self.catalog.find_committed("sequences", seq_fp)
         if seq_snap is None:
-            seqs = pack_greedy_sequences(
+            packer = greedy_sequence_packer(
                 self._clean(self.routed()), "n_tok", "doc_id", seq_len, group_cols=["sink"],
                 oversized=oversized, pad_id=pad_id,
             )
-            seq_manifest = self.catalog.write(
-                seqs,
-                "sequences",
-                input_fingerprint=seq_fp,
-                lineage={"stages": ["pack", "materialize"], "inputs": [routed_fp]},
-                partition_by="sink",
-                count_by="sink",
-            )
-            seq_snap = seq_manifest["snapshot"]
-        elif layout_snap and (
+            schemas = {"sequences": packer.sequence_schema, "packed": packer.layout_schema}
+            with self.catalog.stage(packer.src, packer.batches, schemas, "sink") as staged:
+                seq_manifest = self.catalog.commit_staged(
+                    staged, "sequences", input_fingerprint=seq_fp,
+                    lineage={"stages": ["pack", "materialize"], "inputs": [routed_fp]},
+                    count_by="sink",
+                )
+                layout_manifest = self.catalog.commit_staged(
+                    staged, "packed", input_fingerprint=pack_fp,
+                    lineage=packed_lineage(seq_manifest["snapshot"]), count_by="sink",
+                )
+            layout_manifest["sequences"] = seq_manifest
+            return layout_manifest
+        if layout_snap and (
             self.catalog.manifest("packed", layout_snap)["lineage"].get("sequences")
             == seq_snap
         ):
             return None
         layout = sequence_layout(self.catalog.read(self.spark, "sequences", seq_snap))
         layout_manifest = self.catalog.write(
-            layout, "packed",
-            lineage={"stages": ["pack"], "inputs": [seq_fp], "sequences": seq_snap},
-            **packed_write,
+            layout, "packed", input_fingerprint=pack_fp, lineage=packed_lineage(seq_snap),
+            partition_by="sink", count_by="sink",
         )
-        layout_manifest["sequences"] = seq_manifest
+        layout_manifest["sequences"] = None
         return layout_manifest
 
     # -- results ------------------------------------------------------

@@ -537,6 +537,29 @@ class TestHistoryRollback:
         assert h[1]["cumulative_row_count"] == 4
         assert [e["is_current"] for e in h] == [False, True]
 
+    def test_history_reads_current_and_tags_once(self, spark, simple_df, tmp_path):
+        from qsvspark.io import snapshot as snapshot_module
+
+        cat = SnapshotCatalog(str(tmp_path / "whhc"))
+        one = simple_df.limit(1)
+        for i in range(20):
+            cat.write(one, "t", input_fingerprint=str(i))
+        cat.tag("t", "first", "snap-00001")
+        opened = []
+
+        def counting_open(path, *args, **kwargs):
+            opened.append(os.path.basename(os.fspath(path)))
+            return open(path, *args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(snapshot_module, "open", counting_open, raising=False)
+            h = cat.history("t")
+        assert len(h) == 20 and h[0]["tags"] == ["first"] and h[-1]["is_current"]
+        assert sorted(set(opened)) == ["CURRENT", "TAGS.json", "manifest.json"]
+        assert opened.count("manifest.json") == 20
+        assert opened.count("CURRENT") == 1
+        assert opened.count("TAGS.json") == 1
+
     def test_history_skips_uncommitted_orphans(self, spark, simple_df, tmp_path):
         import os
         cat = SnapshotCatalog(str(tmp_path / "whho"))

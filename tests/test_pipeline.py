@@ -1104,6 +1104,135 @@ class TestPackSinksLayoutThenMaterialize:
         _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
 
 
+def _jobs_submitted(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it submitted,
+    counted through a job group once the listener bus is drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestPackSinksStagedCommit:
+    """pack_sinks(materialize=True) commits the files its packing tasks
+    write: one Spark job for both tables, a stray file in the staging
+    directory is never committed, null sinks land where Spark's writer
+    puts them, and both manifests store the schema a Spark write of the
+    same rows stores."""
+
+    SEQ_LEN = 256
+    PAD = 0
+    # unknown sources: with quarantine off they route with a null sink
+    UNKNOWN = [
+        (f"src99/part-0002/doc-{i:012d}", list(range(i, i + 40 + 9 * i)), 40 + 9 * i, "src99")
+        for i in range(12)
+    ]
+
+    @pytest.fixture(scope="class")
+    def packed(self, spark, tmp_path_factory):
+        import shutil
+
+        wh = str(tmp_path_factory.mktemp("stagedwh"))
+        pipe = NorthStarPipeline(spark, wh)
+        unknown = spark.createDataFrame(
+            self.UNKNOWN, "doc_id string, tokens array<int>, n_tok int, source string"
+        )
+        pipe.run(synth_tokens(spark, 600, seed=51).unionByName(unknown), "staged")
+        real_commit = pipe.catalog.commit_staged
+        staging_dirs = []
+
+        def commit_with_stray(staged, table, **kw):
+            # a well-formed file of the table's own schema, not reported
+            # by any task: only the reported files may be committed
+            staging_dirs.append(staged.dir)
+            _value, path, _rows = staged.files[table][0]
+            shutil.copy(path, os.path.join(os.path.dirname(path), "part-stray.parquet"))
+            return real_commit(staged, table, **kw)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(pipe.catalog, "commit_staged", commit_with_stray)
+            m, jobs = _jobs_submitted(spark, lambda: pipe.pack_sinks(
+                seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD
+            ))
+        assert m is not None and m["sequences"] is not None
+        return pipe, m, jobs, staging_dirs
+
+    def _emitted(self, pipe):
+        from qsvspark.functions.packing import pack_greedy_sequences
+
+        return pack_greedy_sequences(
+            pipe.routed(), "n_tok", "doc_id", self.SEQ_LEN, group_cols=["sink"],
+            pad_id=self.PAD,
+        )
+
+    def test_one_spark_job_for_both_tables(self, packed):
+        _pipe, _m, jobs, _dirs = packed
+        assert jobs == 1
+
+    def test_stray_staged_file_never_committed(self, spark, packed):
+        pipe, m, _jobs, staging_dirs = packed
+        assert len(set(staging_dirs)) == 1
+        assert not os.path.exists(staging_dirs[0])
+        for table in ("sequences", "packed"):
+            files = pipe.catalog.data_files(table)
+            assert files and not any("stray" in f["path"] for f in files)
+        seqs = pipe.catalog.read(spark, "sequences")
+        assert seqs.count() == m["sequences"]["row_count"] == self._emitted(pipe).count()
+        routed_rows = pipe.routed().count()
+        assert pipe.catalog.read(spark, "packed").count() == m["row_count"] == routed_rows
+
+    def test_null_sink_lands_in_default_partition_token_exact(self, spark, packed):
+        from qsvspark.functions.packing import sequence_layout
+
+        pipe, m, _jobs, _dirs = packed
+        default = "__HIVE_DEFAULT_PARTITION__"
+        for man in (m["sequences"], m):
+            data = os.path.join(pipe.catalog.root, man["table"], man["snapshot"], "data")
+            assert os.listdir(os.path.join(data, f"sink={default}"))
+            assert man["partition_counts"][default] > 0
+        assert m["partition_counts"][default] == len(self.UNKNOWN)
+        # collected one side at a time: seq ids carry the task's partition
+        # id, which a plan joining both sides (exceptAll) would renumber
+        emitted = self._emitted(pipe)
+        want = {r["seq_id"]: r for r in emitted.collect()}
+        got = {
+            r["seq_id"]: r
+            for r in pipe.catalog.read(spark, "sequences").select(*emitted.columns).collect()
+        }
+        assert any(r["sink"] is None for r in got.values())
+        assert got == want
+        layout = sequence_layout(emitted)
+
+        def by_part(df):
+            return sorted(map(tuple, df.collect()), key=lambda r: (r[3], r[4]))
+
+        got_layout = pipe.catalog.read(spark, "packed").select(*layout.columns)
+        assert by_part(got_layout) == by_part(layout)
+
+    def test_manifest_schemas_equal_spark_write(self, spark, packed, tmp_path):
+        from qsvspark.functions.packing import sequence_layout
+        from qsvspark.io.snapshot import SnapshotCatalog
+
+        pipe, m, _jobs, _dirs = packed
+        ref = SnapshotCatalog(str(tmp_path))
+        emitted = self._emitted(pipe)
+        for table, rows, got in (
+            ("sequences", emitted, m["sequences"]),
+            ("packed", sequence_layout(emitted), m),
+        ):
+            want = ref.write(rows, table, partition_by="sink", count_by="sink")
+            assert got["schema"] == want["schema"]
+            assert got["partition_counts"] == want["partition_counts"]
+            assert got["row_count"] == want["row_count"]
+
+
 class TestCheckpointedStages:
     """Every entry point commits through one checkpointed-stage helper:
     run and run_increment record the same routed lineage, a rerun of a

@@ -195,16 +195,37 @@ class TestPipelineDedupPlan:
 
 class TestSequencePackingPlan:
     def test_sequences_write_has_no_exchange_or_join(self, spark, tmp_path, monkeypatch):
-        """pack_sinks(materialize=True) packs and assembles sequences in
-        one partition-local pass: the ``sequences`` write plan holds no
-        shuffle and no join (the documents of one sequence already sit
-        in one routed scan partition), and the ``packed`` layout derived
-        from it reads only ``parts`` — no token column, no Python."""
+        """pack_sinks(materialize=True) packs, assembles and writes
+        sequences in one partition-local pass: the plan of its one
+        staging job holds no shuffle and no join (the documents of one
+        sequence already sit in one routed scan partition), and a
+        ``packed`` layout derived from committed sequences (the resume
+        path) reads only ``parts`` — no token column, no Python."""
+        import shutil
+
         from qsvspark.pipeline.northstar import NorthStarPipeline
         from qsvspark.pipeline.tokens import synth_tokens
 
         p = NorthStarPipeline(spark, str(tmp_path / "wh"))
         p.run(synth_tokens(spark, 300, seed=7), input_fingerprint="plan-test")
+        frame = type(p.routed())
+        real_map = frame.mapInArrow
+        mapped = []
+
+        def map_spy(df, *args, **kwargs):
+            out = real_map(df, *args, **kwargs)
+            mapped.append(out)
+            return out
+
+        with monkeypatch.context() as mp:
+            mp.setattr(frame, "mapInArrow", map_spy)
+            p.pack_sinks(seq_len=512, materialize=True)
+        assert len(mapped) == 1  # the staging job writes both tables
+        seq_plan = plan_of(mapped[0])
+        assert "MapInArrow" in seq_plan
+        assert "Exchange" not in seq_plan
+        assert "Join" not in seq_plan
+
         written = {}
         real_write = p.catalog.write
 
@@ -213,11 +234,9 @@ class TestSequencePackingPlan:
             return real_write(df, table, **kw)
 
         monkeypatch.setattr(p.catalog, "write", spy)
+        shutil.rmtree(os.path.join(p.catalog.root, "packed"))
         p.pack_sinks(seq_len=512, materialize=True)
-        seq_plan = plan_of(written["sequences"])
-        assert "MapInArrow" in seq_plan
-        assert "Exchange" not in seq_plan
-        assert "Join" not in seq_plan
+        assert set(written) == {"packed"}
         layout_plan = plan_of(written["packed"])
         assert "Exchange" not in layout_plan
         assert "Python" not in layout_plan and "MapIn" not in layout_plan
