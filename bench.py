@@ -2,32 +2,31 @@
   {"metric": ..., "value": total_sec, "value_steady": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "extensions": {...}, "sf": ...,
    "pipeline": {rows, seconds, sequences_per_sec},
-   "scaling": {scaling_efficiency, hw_pair_efficiency,
-               job_vs_hw_ceiling, bandwidth_capped, phase, ...},
-   "detail_file": "BENCH_DETAIL_<run_id>.json"}
-and writes the full detail (per-level runs, bandwidth-probe history,
-calibration, per-sink counts) to that file next to this one. Each run
-writes its own file, so a run never overwrites a committed record.
+   "scaling": {rows, scaling_efficiency, counts_match, hw_pair_efficiency,
+               job_vs_hw_ceiling, rep_errors},
+   "section_s": {section: wall sec}, "detail_file": "BENCH_DETAIL_<run_id>.json"}
+and writes the full detail (every scaling rep, the bandwidth probes,
+per-sink counts) to that file next to this one. Each run writes its own
+file, so a run never overwrites a committed record.
 
 Headline queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS]. The scaling section evidences the north-rule
-two-cluster-size criterion in-sandbox: the same pipeline job at N vs 4N
-taskset-pinned cores (primary pair 1v4 — faithful executor emulation
-below this VM's DRAM-bandwidth ceiling; secondary pair 8v32 — the
-bandwidth-capped regime, emitted for transparency) on the SAME
-pre-materialized parquet input (fresh JVM per run, JVM/Python startup
-excluded, best of $QSVSPARK_BENCH_REPS reps to strip single-box
-scheduling noise), reporting sequences/sec at both and
-  eff = (throughput_4N / throughput_N) / 4.
+two-cluster-size criterion in-sandbox: the same pipeline job at 1 vs 4
+taskset-pinned cores on the SAME pre-materialized parquet input (the
+$QSVSPARK_BENCH_SCALE_ROWS rows the pipeline section wrote; fresh JVM per
+rep, JVM/Python startup excluded), as at most 3 interleaved (local[4],
+local[1]) rep pairs, reporting the ratio of per-level minimum rep times
+  eff = (seconds_1 / seconds_4) / 4.
+A memcpy-bandwidth pair probe before the first rep and after the last
+gives the machine's own 1v4 efficiency, the noise band of that number.
 Every rep is individually fenced (timeout / crash → recorded in
 ``scaling.errors``); the bench ALWAYS emits its final JSON line.
-Delivery is additionally kill-proof (round 4's driver artifact was
-rc=124/parsed:null): the summary line is (re)printed after EVERY
+Delivery is kill-proof: the summary line is (re)printed after EVERY
 completed section with ``"partial": true``, SIGTERM/SIGINT flush the
-current state before exiting, and $QSVSPARK_BENCH_TOTAL_BUDGET
-(default 6600 s, 0 = off) is a total-run deadline the scaling section
-and its clean-pair hunt respect with margin — so a consumer that takes
-the last parseable stdout line always gets the most complete state.
+current state before exiting, and $QSVSPARK_BENCH_TOTAL_BUDGET (default
+3200 s, 0 = off) is a total-run deadline the scaling section keeps with a
+flush margin — so a consumer that takes the last parseable stdout line
+always gets the most complete state.
 
 Methodology notes (full analysis in BASELINE.md):
   - the input table is materialized ONCE (untimed) and read by every
@@ -44,6 +43,7 @@ Methodology notes (full analysis in BASELINE.md):
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import subprocess
@@ -56,45 +56,16 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the pipeline section's input; every scaling rep reads all of it
 SCALE_ROWS = int(os.environ.get("QSVSPARK_BENCH_SCALE_ROWS", "4000000"))
-# the scaling input row count is CALIBRATED to the host: a quick
-# 4-core probe measures actual throughput, then rows are sized so the
-# 1-pinned-core rep takes ~TARGET_LO_SECONDS (round 1: a fixed 4M-row
-# 1-core rep took 166 s locally but blew a 1800 s cap on the >10×
-# slower driver host). Bigger inputs amortize fixed per-job overhead
-# (eff 0.83 at 4M vs 0.76 at 1M locally), so we want the LARGEST input
-# the slow rep can safely finish. Override with a fixed row count via
-# QSVSPARK_BENCH_SCALING_ROWS.
-SCALING_ROWS_FIXED = int(os.environ.get("QSVSPARK_BENCH_SCALING_ROWS", "0"))
-# ~600 s at the low level: long enough that per-job fixed overhead
-# (JVM scheduling, snapshot commits — ~10 s) is <2% of the measurement
-# (a 1.56M-row sizing produced 30 s hi-level reps and a 0.72 "efficiency"
-# that was really overhead+noise), short enough for a 4× margin under the
-# low level's WORKER_TIMEOUT×4 fence
-TARGET_LO_SECONDS = int(os.environ.get("QSVSPARK_BENCH_TARGET_LO_SECONDS", "600"))
-N_INPUT_FILES = 64  # _materialize_input writes 64 equal range slices
 SKIP_SCALING = os.environ.get("QSVSPARK_BENCH_SKIP_SCALING", "") == "1"
-# best-of-3: run-to-run variance on this virtualized box is ±30% on
-# identical jobs (host-level noise, BASELINE.md §4.4) — the minimum is
-# the steady-state estimate, the mean would measure the neighbors
-REPS = int(os.environ.get("QSVSPARK_BENCH_REPS", "3"))
-# per-rep timeout at the HIGH core count; low-core reps get it scaled
-# by (max_cores / cores). A timed-out or crashed rep is recorded and
-# skipped — the bench always emits its final JSON line.
-WORKER_TIMEOUT = int(os.environ.get("QSVSPARK_BENCH_WORKER_TIMEOUT", "600"))
-# hard wall-clock budget for the whole scaling section; remaining reps
-# are skipped (and noted) once it is exhausted. Sized for 3 interleaved
-# (hi, lo) pairs at TARGET_LO_SECONDS plus the extra hi reps and the
-# informational 8v32 pair.
-SCALING_BUDGET = int(os.environ.get("QSVSPARK_BENCH_SCALING_BUDGET", "5400"))
-# total-run deadline: the scaling section (and especially its open-ended
-# clean-pair hunt) must leave the process time to flush the final
-# summary line BEFORE the driver's outer timeout kills it — round 4's
-# recorded artifact was rc=124/parsed:null because the hunt slept
-# through 14 degraded host phases and the summary never printed. The
-# budget is measured from process start; 0 disables it.
+# total-run deadline, measured from process start (0 disables it): the
+# scaling section must leave the process time to flush the final summary
+# line BEFORE an outer timeout kills it — round 4's recorded
+# artifact was rc=124/parsed:null because the summary never printed.
 _RUN_T0 = time.time()
 TOTAL_BUDGET = int(os.environ.get("QSVSPARK_BENCH_TOTAL_BUDGET", "3200"))
+FLUSH_MARGIN_S = 60
 
 
 def _total_deadline() -> float:
@@ -201,16 +172,9 @@ def _materialize_input(spark, rows: int, path: str) -> None:
     )
 
 
-def _input_files(input_path: str, n_files: int) -> list[str]:
-    import glob as _glob
-
-    parts = sorted(_glob.glob(os.path.join(input_path, "part-*")))
-    return parts[:n_files] if 0 < n_files < len(parts) else parts
-
-
-def _scaling_worker(cores: int, rows: int, input_path: str, n_files: int) -> None:
-    """Subprocess entry: read the first n_files range slices of the
-    shared input at local[cores], run the pipeline, print one JSON line."""
+def _scaling_worker(cores: int, rows: int, input_path: str) -> None:
+    """Subprocess entry: read the whole shared input at local[cores],
+    run the pipeline, print one JSON line."""
     from qsvspark.session import get_spark
     from qsvspark.pipeline import NorthStarPipeline
 
@@ -226,7 +190,7 @@ def _scaling_worker(cores: int, rows: int, input_path: str, n_files: int) -> Non
         NorthStarPipeline(spark, warm_wh).run(warm, "warmup")
         shutil.rmtree(warm_wh, ignore_errors=True)
 
-        tokens = spark.read.parquet(*_input_files(input_path, n_files))
+        tokens = spark.read.parquet(input_path)
         pipe = NorthStarPipeline(spark, wh)
         t0 = time.time()
         m = pipe.run(tokens, input_fingerprint=f"bench-{rows}-42-{cores}")
@@ -242,9 +206,9 @@ def _scaling_worker(cores: int, rows: int, input_path: str, n_files: int) -> Non
         shutil.rmtree(wh, ignore_errors=True)
 
 
-def _worker_cmd(cores: int, rows: int, input_path: str, n_files: int) -> list[str]:
+def _worker_cmd(cores: int, rows: int, input_path: str) -> list[str]:
     cmd = [sys.executable, __file__, "--scaling-worker", str(cores),
-           str(rows), input_path, str(n_files)]
+           str(rows), input_path]
     # Pin the WHOLE process tree (JVM task threads + GC + Python workers)
     # to exactly `cores` CPUs: a real N-core executor container confines
     # all of that to N cores, whereas unpinned local[N] lets Python/GC
@@ -269,22 +233,14 @@ def _worker_env(cores: int) -> dict:
     return env
 
 
-# Primary N vs 4N pair: 1 vs 4 pinned cores. Higher pairs measure this
-# VM's DRAM-bandwidth saturation, not the engine: aggregate memcpy
-# bandwidth on this box scales 8→32 procs at only ~0.57 efficiency, and
-# the pipeline tracks that hardware ceiling (full curve + analysis in
-# BASELINE.md §4). On a real cluster each 4N-executor node brings its own
-# memory controllers, so the low-N pair is the faithful proxy. The 8v32
-# pair is ALSO measured and emitted so the bandwidth-capped regime is
-# visible in the artifact itself, not only in BASELINE.md prose.
-SCALING_PAIR = tuple(
-    int(x) for x in os.environ.get("QSVSPARK_BENCH_PAIR", "1,4").split(",")
-)
-EXTRA_PAIRS = [
-    tuple(int(x) for x in p.split("v"))
-    for p in os.environ.get("QSVSPARK_BENCH_EXTRA_PAIRS", "8v32").split(";")
-    if p
-]
+# The N vs 4N pair: 1 vs 4 pinned cores. Higher pairs measure this VM's
+# DRAM-bandwidth saturation, not the engine (aggregate memcpy bandwidth
+# scales 8→32 procs at only ~0.57 efficiency here; BASELINE.md §4.3). On
+# a real cluster each 4N-executor node brings its own memory
+# controllers, so the low-N pair is the faithful proxy.
+LO, HI = 1, 4
+MAX_PAIRS = 3
+MIN_REP_S = 30  # a rep with less time than this left is not started
 
 
 def _log(msg: str) -> None:
@@ -325,18 +281,8 @@ def _bandwidth_probe(procs: int) -> float | None:
         return None
 
 
-# a pair probe below this hardware efficiency marks a bandwidth-degraded
-# host phase (neighbors saturating the memory controller): the copy-bound
-# route stage cannot scale past the machine's own memcpy curve, so the
-# bench WAITS for a cleaner phase before burning the primary-pair budget
-# and prefers reps whose bracketing probes were cleanest.
-CLEAN_HW_EFF = float(os.environ.get("QSVSPARK_BENCH_CLEAN_HW_EFF", "0.85"))
-PHASE_WAIT_S = int(os.environ.get("QSVSPARK_BENCH_PHASE_WAIT", "90"))
-PHASE_ATTEMPTS = int(os.environ.get("QSVSPARK_BENCH_PHASE_ATTEMPTS", "4"))
-
-
 def _pair_probe(p_lo: int, p_hi: int) -> dict | None:
-    """One memcpy-bandwidth measurement at both primary-pair levels →
+    """One memcpy-bandwidth measurement at both pair levels →
     {lo_gbps, hi_gbps, hw_eff, plausible}.
 
     plausible=False marks a reading the scheduler ruined rather than the
@@ -344,9 +290,9 @@ def _pair_probe(p_lo: int, p_hi: int) -> dict | None:
     (descheduled by co-tenants — this host measures ~20 GB/s idle), and a
     pair efficiency > 1.15 is physically impossible for memcpy scaling
     (observed: a starved lo probe of 0.07 GB/s yielding 'eff 133').
-    Consumers treat implausible probes as degraded-phase evidence, never
-    as a clean bracket — otherwise one starved probe mislabels a noisy
-    phase as clean and poisons the recorded scaling artifact."""
+    An implausible reading is kept in the detail but never enters the
+    reported hardware efficiency — one starved probe would otherwise
+    poison the recorded scaling artifact."""
     bw_lo, bw_hi = _bandwidth_probe(p_lo), _bandwidth_probe(p_hi)
     if not (bw_lo and bw_hi):
         return None
@@ -357,33 +303,9 @@ def _pair_probe(p_lo: int, p_hi: int) -> dict | None:
     }
 
 
-def _wait_clean_phase(p_lo: int, p_hi: int, deadline: float) -> list[dict]:
-    """Probe the hardware pair efficiency and, while it shows a degraded
-    phase, wait and re-probe (bounded attempts + budget share) before the
-    primary pair starts. Returns the probe history (first entry = initial
-    state, last entry = the phase the pair actually ran in)."""
-    history: list[dict] = []
-    for attempt in range(PHASE_ATTEMPTS):
-        probe = _pair_probe(p_lo, p_hi)
-        if probe is None:
-            return history
-        probe["unix"] = int(time.time())
-        history.append(probe)
-        if probe["hw_eff"] >= CLEAN_HW_EFF and probe.get("plausible", True):
-            break
-        # don't spend more than ~1/4 of the scaling budget waiting
-        if attempt == PHASE_ATTEMPTS - 1 or time.time() + PHASE_WAIT_S > deadline:
-            break
-        _log(f"[bench] degraded host phase (hw pair eff {probe['hw_eff']} < "
-             f"{CLEAN_HW_EFF}); waiting {PHASE_WAIT_S}s for a cleaner phase "
-             f"({attempt + 1}/{PHASE_ATTEMPTS - 1} waits)")
-        time.sleep(PHASE_WAIT_S)
-    return history
-
-
 def _one_rep(
-    cores: int, rows: int, input_path: str, n_files: int,
-    timeout: float, errors: list, tag: str,
+    cores: int, rows: int, input_path: str, timeout: float | None, errors: list,
+    tag: str,
 ) -> dict | None:
     """Run one fenced worker rep; any failure is recorded and returns None.
 
@@ -400,7 +322,7 @@ def _one_rep(
     stdout = ""
     try:
         p = subprocess.Popen(
-            _worker_cmd(cores, rows, input_path, n_files),
+            _worker_cmd(cores, rows, input_path),
             stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
             env=_worker_env(cores), start_new_session=True,
         )
@@ -434,324 +356,78 @@ def _one_rep(
     return json.loads(lines[-1])
 
 
-def _run_scaling(input_path: str, total_rows: int) -> dict:
-    """Measure pipeline throughput at each core level in the requested
-    pairs. Every failure mode (rep timeout, worker crash, budget
-    exhaustion) is recorded in ``errors`` and the function ALWAYS returns
-    a dict — one bad rep can no longer lose the whole bench artifact.
+def _run_scaling(input_path: str, rows: int) -> dict:
+    """Pipeline throughput at local[LO] vs local[HI] on the whole input:
+    at most MAX_PAIRS interleaved (HI, LO) rep pairs, so a slow host
+    phase cannot land on one level only, with one memcpy pair probe
+    before the first rep and one after the last (the two readings are
+    the noise band of the number).
 
-    Row-count calibration: a 4-core probe on a small file subset measures
-    this host's actual throughput, then the scaling input is sized so the
-    slowest (1-pinned-core) rep takes ~TARGET_LO_SECONDS — the largest
-    input (best overhead amortization) that cannot blow its timeout even
-    on a 10×-contended host. Workers read the first K of the input's 64
-    equal range-slice files, so every level sees the identical rows.
-    """
-    pairs = [tuple(SCALING_PAIR)] + [p for p in EXTRA_PAIRS if p != tuple(SCALING_PAIR)]
-    # primary pair first, cheap (high-core) level before the expensive
-    # low-core level inside each pair, so budget exhaustion costs the
-    # secondary pair, not the headline number
-    levels: list[int] = []
-    for lo, hi in pairs:
-        for c in (hi, lo):
-            if c not in levels:
-                levels.append(c)
-    # timeout scale: a c-core run takes ~(baseline/c)× the baseline-core
-    # run; key it off the PRIMARY pair's high level so the cheap extra-
-    # pair levels don't inflate the slow-level budget
-    baseline = max(SCALING_PAIR)
-    lo_cores = min(SCALING_PAIR)
-    # the section deadline respects BOTH its own budget and the
-    # total-run deadline (less a flush margin), so the driver's outer
-    # timeout can never catch the bench mid-hunt with nothing printed
-    deadline = min(time.time() + SCALING_BUDGET, _total_deadline() - 60)
-    rows_per_file = total_rows // N_INPUT_FILES
-    out: dict = {"reps": REPS, "runs": {}, "errors": []}
+    The only deadline is the total-run one, less the flush margin and
+    the first probe's cost (the closing probe must fit too). A pair
+    starts only when the time left holds the longest pair seen so far,
+    and a rep only when MIN_REP_S are left; each rep's timeout is the
+    time left (none when TOTAL_BUDGET=0 turns the deadline off). A failed rep lands in ``errors`` and the function ALWAYS
+    returns a dict, so one bad rep cannot lose the artifact.
+    ``scaling_efficiency`` is the ratio of the per-level minimum rep
+    times over HI/LO: the minimum is the steady-state estimate on a box
+    with ±30% run-to-run noise (BASELINE.md §4.4)."""
+    t_start = time.time()
+    out: dict = {
+        "pair": (f"{LO} vs {HI} cores (process tree pinned via taskset; "
+                 "interleaved reps, ratio of per-level minima)"),
+        "rows": rows, "runs": {}, "errors": [], "probes": [],
+    }
 
-    if SCALING_ROWS_FIXED:
-        rows = min(SCALING_ROWS_FIXED, total_rows)
-    else:
-        cal_files = max(1, (500_000 // rows_per_file) or 1)
-        cal_rows = cal_files * rows_per_file
-        _log(f"[bench] calibration: local[{baseline}] on {cal_rows} rows")
-        cal = _one_rep(baseline, cal_rows, input_path, cal_files,
-                       WORKER_TIMEOUT, out["errors"], "calibration")
-        if cal:
-            tput_hi = cal["sequences_per_sec"]
-            # est lo-core throughput ≈ tput_hi / (baseline/lo) / 0.8(eff guess)
-            tput_lo_est = tput_hi * lo_cores / (baseline * 0.8)
-            rows = int(TARGET_LO_SECONDS * tput_lo_est)
-            # FLOOR: a small input lets per-job fixed overhead (~10 s)
-            # masquerade as lost scaling (measured 0.72 at 1.56M rows vs
-            # 0.83+ at 4M on the same box). Prefer ≥2M rows whenever the
-            # lo-level fence can still absorb them at half-capacity —
-            # the largest safe input is the best estimator.
-            lo_fence = WORKER_TIMEOUT * max(1, baseline // lo_cores)
-            safe_floor = min(2_000_000, int(tput_lo_est * 0.5 * lo_fence))
-            rows = max(rows, safe_floor)
-            out["calibration"] = {
-                "probe_rows": cal_rows, "probe_seconds": cal["seconds"],
-                "probe_sequences_per_sec": tput_hi,
-            }
-        else:
-            rows = 500_000  # calibration failed: smallest safe input
-    n_files = min(N_INPUT_FILES, max(8, rows // rows_per_file))
-    rows = n_files * rows_per_file
-    out["rows"] = rows
-    _log(f"[bench] scaling rows={rows} ({n_files}/{N_INPUT_FILES} input files)")
-
-    # PRIMARY pair: REACTIVE to host phase, then INTERLEAVED (hi, lo)
-    # rep pairs so a slow phase cannot land entirely on one level.
-    #   1. Before spending the budget, probe the hardware's own memcpy
-    #      pair efficiency and WAIT (bounded) while the host is in a
-    #      bandwidth-degraded phase — the copy-bound route stage tracks
-    #      that ceiling, so measuring during degradation measures the
-    #      neighbors, not the engine (round 2 recorded 0.687 with the
-    #      hardware itself at 0.674).
-    #   2. Bracket every rep with probes; the reported efficiency is the
-    #      ratio of per-level MINIMA over the reps whose bracketing
-    #      probes were clean (falling back to all reps when no clean
-    #      bracket exists), and job_vs_hw_ceiling = job eff / hw eff of
-    #      the selected phase is emitted machine-readable.
-    p_lo, p_hi = lo_cores, max(SCALING_PAIR)
-    probe_hist = _wait_clean_phase(p_lo, p_hi, deadline - 2 * WORKER_TIMEOUT)
-    out["probe_history"] = probe_hist
-    if probe_hist:
-        start = probe_hist[-1]
-        out["bandwidth_gbps"] = {
-            f"procs_{p_lo}": start["lo_gbps"], f"procs_{p_hi}": start["hi_gbps"],
-            "hw_pair_efficiency": start["hw_eff"],
-            "probe_plausible": start.get("plausible", True),
-        }
-        _log(f"[bench] memcpy bandwidth at pair start: {p_lo} proc "
-             f"{start['lo_gbps']} GB/s, {p_hi} proc {start['hi_gbps']} GB/s "
-             f"(hw pair eff {start['hw_eff']})")
-    entries: list[dict] = []  # every primary-level run + bracketing probes
-    last_probe = (
-        probe_hist[-1]["hw_eff"]
-        if probe_hist and probe_hist[-1].get("plausible", True)
-        else None
-    )
-
-    def _probe_between() -> float | None:
-        p = _pair_probe(p_lo, p_hi)
-        if p:
-            p["unix"] = int(time.time())
-            out["probe_history"].append(p)
-            # a starved/implausible probe is degraded-phase evidence, not
-            # a usable bracket value
-            return p["hw_eff"] if p.get("plausible", True) else None
-        return None
-
-    ratios = []
-    for i in range(REPS):
-        remaining = deadline - time.time()
-        if remaining < 60:
-            if not ratios:
-                out["errors"].append(
-                    f"scaling budget ({SCALING_BUDGET}s) exhausted before pair rep {i + 1}"
-                )
-            break
-        pair_runs = {}
-        before = last_probe
-        for cores in (p_hi, p_lo):
-            timeout = min(deadline - time.time(),
-                          WORKER_TIMEOUT * max(1, baseline // cores))
-            if timeout < 30:
-                break
-            _log(f"[bench] primary pair rep {i + 1}/{REPS}: local[{cores}] "
-                 f"(timeout {int(timeout)}s)")
-            run = _one_rep(cores, rows, input_path, n_files, timeout,
-                           out["errors"], f"local[{cores}] pair-rep {i + 1}")
-            if run is None:
-                continue
-            _log(f"[bench] local[{cores}] pair-rep {i + 1}: {run['seconds']}s")
-            pair_runs[cores] = run
-        after = _probe_between()
-        last_probe = after if after is not None else last_probe
-        for cores, run in pair_runs.items():
-            entries.append({"cores": cores, "run": run,
-                            "hw_before": before, "hw_after": after})
-        if p_hi in pair_runs and p_lo in pair_runs:
-            r = (pair_runs[p_hi]["sequences_per_sec"]
-                 / pair_runs[p_lo]["sequences_per_sec"]) / (p_hi / p_lo)
-            ratios.append(round(r, 3))
-    # the hi level's noise spread is ~4× the lo level's (short runs catch
-    # more one-sided spikes), so its min needs more samples to converge —
-    # two extra cheap hi-level reps buy the same estimator precision the
-    # lo level already has from the interleave
-    for i in range(2):
-        remaining = deadline - time.time()
-        if remaining < 60:
-            break
-        timeout = min(remaining, WORKER_TIMEOUT)
-        _log(f"[bench] extra local[{p_hi}] rep {i + 1}/2 (timeout {int(timeout)}s)")
-        before = last_probe
-        run = _one_rep(p_hi, rows, input_path, n_files, timeout,
-                       out["errors"], f"local[{p_hi}] extra-rep {i + 1}")
-        after = _probe_between()
-        last_probe = after if after is not None else last_probe
-        if run is None:
-            continue
-        _log(f"[bench] local[{p_hi}] extra-rep {i + 1}: {run['seconds']}s")
-        entries.append({"cores": p_hi, "run": run,
-                        "hw_before": before, "hw_after": after})
-
-    def _bracket(e: dict) -> float | None:
-        vals = [v for v in (e["hw_before"], e["hw_after"]) if v is not None]
-        return min(vals) if vals else None
-
-    def _minima(pool: list[dict]) -> tuple[dict, dict] | None:
-        lo = [e for e in pool if e["cores"] == p_lo]
-        hi = [e for e in pool if e["cores"] == p_hi]
-        if not (lo and hi):
-            return None
-        key = lambda e: e["run"]["seconds"]  # noqa: E731
-        return min(lo, key=key), min(hi, key=key)
-
-    # Clean-pair hunt: if no rep pair has clean bandwidth brackets yet,
-    # convert leftover budget into ADDITIONAL (hi, lo) attempts taken
-    # only when a fresh probe shows a clean phase — a degraded-phase rep
-    # can never become the reported pair, so waiting strictly beats
-    # burning budget on one. Capped at a share of what remains so the
-    # informational extra levels still run.
-    # the hunt additionally keeps a 2×WORKER_TIMEOUT margin to the
-    # total-run deadline: its reps are the longest fenced work in the
-    # bench, and an outer kill mid-hunt is exactly what lost round 4's
-    # driver artifact
-    hunt_deadline = min(
-        time.time() + 0.5 * max(0.0, deadline - time.time()),
-        _total_deadline() - 2 * WORKER_TIMEOUT,
-    )
-    lo_obs = [e["run"]["seconds"] for e in entries if e["cores"] == p_lo]
-    hi_obs = [e["run"]["seconds"] for e in entries if e["cores"] == p_hi]
-    pair_cost = 1.3 * (min(lo_obs or [WORKER_TIMEOUT]) + min(hi_obs or [WORKER_TIMEOUT]))
-    hunt_round = 0
-    while (_minima([e for e in entries if (_bracket(e) or 0) >= CLEAN_HW_EFF]) is None
-           and time.time() + pair_cost < hunt_deadline):
-        p = _pair_probe(p_lo, p_hi)
+    def probe() -> None:
+        p = _pair_probe(LO, HI)
         if p is not None:
             p["unix"] = int(time.time())
-            out["probe_history"].append(p)
-        if p is None or p["hw_eff"] < CLEAN_HW_EFF or not p.get("plausible", True):
-            hunt_round += 1
-            _log(f"[bench] clean-pair hunt: phase still degraded "
-                 f"(hw eff {p['hw_eff'] if p else '?'}); waiting {PHASE_WAIT_S}s "
-                 f"(round {hunt_round})")
-            time.sleep(min(PHASE_WAIT_S, max(0.0, hunt_deadline - time.time())))
-            continue
-        before = p["hw_eff"]
-        last_probe = before
-        hunt_runs: dict[int, dict] = {}
-        for cores in (p_hi, p_lo):
-            timeout = min(hunt_deadline - time.time(),
-                          WORKER_TIMEOUT * max(1, baseline // cores))
-            if timeout < 30:
-                break
-            _log(f"[bench] clean-pair hunt rep: local[{cores}] "
-                 f"(timeout {int(timeout)}s)")
-            run = _one_rep(cores, rows, input_path, n_files, timeout,
-                           out["errors"], f"local[{cores}] hunt-rep")
-            if run is None:
-                continue
-            _log(f"[bench] local[{cores}] hunt-rep: {run['seconds']}s")
-            hunt_runs[cores] = run
-        after = _probe_between()
-        last_probe = after if after is not None else last_probe
-        for cores, run in hunt_runs.items():
-            entries.append({"cores": cores, "run": run,
-                            "hw_before": before, "hw_after": after})
-        if p_hi in hunt_runs and p_lo in hunt_runs:
-            r = (hunt_runs[p_hi]["sequences_per_sec"]
-                 / hunt_runs[p_lo]["sequences_per_sec"]) / (p_hi / p_lo)
-            ratios.append(round(r, 3))
+            out["probes"].append(p)
 
-    best: dict[int, dict] = {}
-    for c in (p_lo, p_hi):
-        lvl = [e for e in entries if e["cores"] == c]
-        if lvl:
-            best[c] = min(lvl, key=lambda e: e["run"]["seconds"])["run"]
-    for cores, run in best.items():
-        out["runs"][f"local[{cores}]"] = run
-    out["pairs"] = {}
-    clean = [e for e in entries if (_bracket(e) or 0) >= CLEAN_HW_EFF]
-    chosen = _minima(clean) or _minima(entries)
-    if chosen:
-        e_lo, e_hi = chosen
-        eff = round(
-            (e_hi["run"]["sequences_per_sec"] / e_lo["run"]["sequences_per_sec"])
-            / (p_hi / p_lo), 3,
-        )
-        hw_effs = [b for b in (_bracket(e_lo), _bracket(e_hi)) if b is not None]
-        hw_sel = round(sum(hw_effs) / len(hw_effs), 3) if hw_effs else None
-        out["pairs"][f"{p_lo}v{p_hi}"] = {
-            "scaling_efficiency": eff,
-            "per_rep_ratios": sorted(ratios),
-            "counts_match": e_lo["run"]["per_sink_counts"] == e_hi["run"]["per_sink_counts"],
-            "phase": "clean" if _minima(clean) else "degraded",
-            "hw_pair_efficiency": hw_sel,
-            "job_vs_hw_ceiling": (
-                round(eff / hw_sel, 3) if hw_sel else None
-            ),
-            "bandwidth_capped": hw_sel is not None and hw_sel < CLEAN_HW_EFF,
-        }
+    probe()
+    end = _total_deadline() - FLUSH_MARGIN_S - (time.time() - t_start)
+    reps: dict[int, list[dict]] = {HI: [], LO: []}
+    pair_cost = 0.0
+    for i in range(1, MAX_PAIRS + 1):
+        if end - time.time() < max(pair_cost, MIN_REP_S):
+            break
+        t0 = time.time()
+        for cores in (HI, LO):
+            left = end - time.time()
+            if left < MIN_REP_S:
+                break
+            _log(f"[bench] scaling pair {i}/{MAX_PAIRS}: local[{cores}] "
+                 f"(timeout {left:.0f}s)")
+            # no deadline (TOTAL_BUDGET=0): the rep runs unfenced
+            timeout = left if math.isfinite(left) else None
+            run = _one_rep(cores, rows, input_path, timeout, out["errors"],
+                           f"local[{cores}] pair {i}")
+            if run is not None:
+                _log(f"[bench] local[{cores}] pair {i}: {run['seconds']}s")
+                reps[cores].append(run)
+        pair_cost = max(pair_cost, time.time() - t0)
+    probe()
 
-    # EXTRA pairs (informational — the bandwidth-capped regime): simple
-    # best-of per level, run after the primary so budget exhaustion
-    # never costs the headline number
-    extra_levels = [c for c in levels if c not in (p_lo, p_hi)]
-    if extra_levels and "bandwidth_gbps" in out:
-        for c in extra_levels:
-            bw = _bandwidth_probe(c)
-            if bw:
-                out["bandwidth_gbps"][f"procs_{c}"] = bw
-    for cores in extra_levels:
-        attempts = []
-        for i in range(REPS):
-            remaining = deadline - time.time()
-            if remaining < 30:
-                if not attempts:
-                    out["errors"].append(
-                        f"scaling budget ({SCALING_BUDGET}s) exhausted before local[{cores}]"
-                    )
-                break
-            timeout = min(remaining, WORKER_TIMEOUT * max(1, baseline // cores))
-            _log(f"[bench] scaling local[{cores}] rep {i + 1}/{REPS} "
-                 f"(timeout {int(timeout)}s)")
-            run = _one_rep(cores, rows, input_path, n_files, timeout,
-                           out["errors"], f"local[{cores}] rep {i + 1}")
-            if run is None:
-                continue
-            attempts.append(run)
-            _log(f"[bench] local[{cores}] rep {i + 1}: {run['seconds']}s")
-            # a long rep IS the steady-state estimate; don't burn the
-            # budget re-measuring it
-            if run["seconds"] > 0.5 * timeout:
-                break
-        if attempts:
-            out["runs"][f"local[{cores}]"] = min(attempts, key=lambda a: a["seconds"])
-    for lo, hi in pairs:
-        key = f"{lo}v{hi}"
-        if key in out["pairs"]:
-            continue
-        n_lo = out["runs"].get(f"local[{lo}]", {})
-        n_hi = out["runs"].get(f"local[{hi}]", {})
-        if "sequences_per_sec" in n_lo and "sequences_per_sec" in n_hi:
-            out["pairs"][key] = {
-                "scaling_efficiency": round(
-                    (n_hi["sequences_per_sec"] / n_lo["sequences_per_sec"]) / (hi / lo), 3
-                ),
-                "counts_match": n_lo["per_sink_counts"] == n_hi["per_sink_counts"],
-            }
-    lo, hi = SCALING_PAIR
-    primary = out["pairs"].get(f"{lo}v{hi}")
-    if primary:
-        out["pair"] = (f"{lo} vs {hi} cores (process tree pinned via taskset;"
-                       " probe-bracketed interleaved reps, ratio of"
-                       " per-level minima over the cleanest-phase reps)")
-        for k in ("scaling_efficiency", "counts_match", "phase",
-                  "hw_pair_efficiency", "job_vs_hw_ceiling", "bandwidth_capped"):
-            out[k] = primary.get(k)
+    out["rep_seconds"] = {f"local[{c}]": [r["seconds"] for r in runs]
+                          for c, runs in reps.items()}
+    for cores, runs in reps.items():
+        if runs:
+            out["runs"][f"local[{cores}]"] = min(runs, key=lambda r: r["seconds"])
+    eff = None
+    if reps[LO] and reps[HI]:
+        lo_s = out["runs"][f"local[{LO}]"]["seconds"]
+        hi_s = out["runs"][f"local[{HI}]"]["seconds"]
+        eff = round((lo_s / hi_s) / (HI / LO), 3)
+        out["counts_match"] = len({
+            json.dumps(r["per_sink_counts"], sort_keys=True)
+            for r in reps[LO] + reps[HI]
+        }) == 1
+    hw = [p["hw_eff"] for p in out["probes"] if p["plausible"]]
+    hw_eff = round(sum(hw) / len(hw), 3) if hw else None
+    out["scaling_efficiency"] = eff
+    out["hw_pair_efficiency"] = hw_eff
+    out["job_vs_hw_ceiling"] = round(eff / hw_eff, 3) if eff and hw_eff else None
     return out
 
 
@@ -1023,6 +699,7 @@ def _assemble(state: dict) -> tuple[dict, dict]:
         "extensions": ext_timings,
         "extensions_steady": ext_steady,
         "section_probes": state.get("section_probes") or {},
+        "section_s": state.get("section_s") or {},
         "sf": state["sf"],
         "pipeline": pipeline,
         "skew": skew,
@@ -1037,13 +714,8 @@ def _assemble(state: dict) -> tuple[dict, dict]:
     if scaling:
         scaling_summary = {
             k: scaling.get(k)
-            for k in ("rows", "scaling_efficiency", "counts_match", "phase",
-                      "hw_pair_efficiency", "job_vs_hw_ceiling",
-                      "bandwidth_capped")
-        }
-        scaling_summary["pairs"] = {
-            k: v.get("scaling_efficiency") for k, v in
-            (scaling.get("pairs") or {}).items()
+            for k in ("rows", "scaling_efficiency", "counts_match",
+                      "hw_pair_efficiency", "job_vs_hw_ceiling")
         }
         scaling_summary["rep_errors"] = len(scaling.get("errors") or [])
     pipeline_summary = None
@@ -1098,6 +770,7 @@ def _assemble(state: dict) -> tuple[dict, dict]:
         "extensions": ext_timings,
         "extensions_steady": ext_steady,
         "section_probes": state.get("section_probes") or {},
+        "section_s": state.get("section_s") or {},
         "sf": state["sf"],
         "pipeline": pipeline_summary,
         "skew": skew_summary,
@@ -1149,8 +822,7 @@ def _install_signal_flush(state: dict, detail_dir: str):
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scaling-worker":
-        _scaling_worker(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4],
-                        int(sys.argv[5]))
+        _scaling_worker(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
         return
 
     from qsvspark.session import get_spark
@@ -1172,6 +844,7 @@ def main() -> None:
     ext_steady: dict[str, float] = {}
     query_errors: dict[str, str] = {}
     section_probes: dict[str, float | None] = {}
+    section_s: dict[str, float] = {}
     state: dict = {
         "run_id": f"run-{int(time.time())}-{os.getpid()}",
         "sf": float(SF_DIR.rstrip("/").split("sf")[-1]),
@@ -1182,10 +855,20 @@ def main() -> None:
         "ext_steady": ext_steady,
         "query_errors": query_errors,
         "section_probes": section_probes,
+        "section_s": section_s,
     }
     _install_signal_flush(state, REPO)
+    lap_t0 = _RUN_T0
+
+    def _lap(name: str) -> None:
+        """Record ``name``'s wall seconds: the time since the last lap."""
+        nonlocal lap_t0
+        now = time.time()
+        section_s[name] = round(now - lap_t0, 1)
+        lap_t0 = now
 
     def _section_done(name: str) -> None:
+        _lap(name)
         state["sections_done"].append(name)
         _flush_state(state, REPO)
     # Untimed warmup: first-use JVM costs (codegen JIT, noop-sink init,
@@ -1234,6 +917,7 @@ def main() -> None:
     # 4 GB/s) is attributable from the artifact alone, not only from
     # BASELINE.md prose (round-3 extension regressions were exactly this
     # ambiguity).
+    _lap("setup")  # session start and warmup
     section_probes["before_headline_gbps"] = _bandwidth_probe(1)
     for name in HEADLINE:
         try:
@@ -1376,8 +1060,8 @@ def main() -> None:
 
         # materialize the physical sequence table (the north-star
         # deliverable: ~SCALE_ROWS×264 tokens packed and assembled in one
-        # partition-local pass, then the layout re-derived from it);
-        # throughput is per INPUT token
+        # partition-local pass whose tasks write the sequences and their
+        # layout themselves); throughput is per INPUT token
         t0 = time.time()
         sm = pipe.pack_sinks(seq_len=2048, materialize=True, pad_id=0)
         seq_wall = round(time.time() - t0, 3)
@@ -1408,14 +1092,15 @@ def main() -> None:
         if not SKIP_SCALING:
             scaling = _run_scaling(input_path, SCALE_ROWS)
             state["scaling"] = scaling
+            _lap("scaling")
     except Exception as e:  # noqa: BLE001 — always emit the final JSON line
         query_errors["__pipeline__"] = repr(e)[:500]
     finally:
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(input_dir, ignore_errors=True)
 
-    # Full detail (per-level runs, probe history, calibration, per-sink
-    # counts) goes to a SIDE FILE; the printed line is a bounded summary —
+    # Full detail (every scaling rep, the probes, per-sink counts) goes
+    # to a SIDE FILE; the printed line is a bounded summary —
     # round 2's inlined detail grew past the driver's tail-capture window
     # and the artifact recorded parsed:null despite rc=0. The final flush
     # re-emits with partial=false; every earlier section already printed

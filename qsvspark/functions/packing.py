@@ -344,6 +344,12 @@ def pack_greedy(
     is one open bin per group (Next-Fit: within 2x of optimal bin
     count — fine for training layout where padding waste, not bin
     optimality, is the metric).
+
+    Seq ids are ``partitionId() << 40 | n``, where ``partitionId()`` is
+    the task's index in the PLAN, not in this frame: two evaluations of
+    one packing frame inside one plan (a self-union, ``exceptAll``,
+    a self-join) number the same sequences differently. Compare or join
+    packings only after each is committed or collected on its own.
     """
     _check_greedy_args(seq_len, oversized)
     groups = list(group_cols or [])
@@ -423,6 +429,11 @@ def greedy_sequence_packer(
     columns). ``pack_greedy_sequences`` returns the first as a
     DataFrame; ``NorthStarPipeline.pack_sinks`` has its tasks write
     both as files (``SnapshotCatalog.stage``).
+
+    Seq ids carry the task's partition id in the whole plan (see
+    ``pack_greedy``), so they are stable only within one evaluation.
+    ``pack_sinks`` is unaffected: one staging job writes the sequences
+    and their layout, and both tables commit from its files.
 
     Each sequence's token array is cut and concatenated with NumPy
     straight from the Arrow list buffers (no per-token Python), the
@@ -572,6 +583,11 @@ def pack_greedy_sequences(
     array column is always ``tokens``) running the sequence half of
     ``greedy_sequence_packer``. No shuffle, no join: the documents of
     one sequence already sit in one partition.
+
+    As with ``pack_greedy``, seq ids depend on the task's partition id
+    in the whole plan: a self-union or ``exceptAll`` over one
+    ``pack_greedy_sequences`` frame evaluates it twice with different
+    ids, so ``seqs.exceptAll(seqs)`` keeps every row instead of none.
     """
     packer = greedy_sequence_packer(
         df, n_tok_col, id_col, seq_len, group_cols, oversized, pad_id

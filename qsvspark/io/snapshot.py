@@ -15,7 +15,9 @@ so the catalog emulates the parts the pipeline needs on plain Parquet:
 
 A write is atomic-by-rename semantics: data lands under a snap dir, the
 manifest is written last with committed=true, and CURRENT flips only then
-— a killed run leaves either no snap or an uncommitted one, and resume
+— a killed run leaves either no snap or an uncommitted one (every
+metadata file, TAGS.json included, is written to a temp file and
+``os.replace``d, so no reader ever sees half a file), and resume
 (``find_committed``) keys on the input fingerprint, so committed stages
 are never recomputed. On a real cluster the same interface binds to
 Iceberg (`writeTo(...).createOrReplace()` + snapshot metadata); the
@@ -203,6 +205,20 @@ def _zorder_expr(cols_ranges: list[tuple[str, float, float]],
 # broadcast. (Iceberg bounds delete application per data file via its
 # manifests; this is the emulation-layer equivalent bound.)
 _DELETE_BROADCAST_MAX_BYTES = 32 * 1024 * 1024
+
+
+def _replace_file(path: str, content) -> None:
+    """Write ``content`` (a string as is, anything else as JSON) to
+    ``path`` through a temp file and ``os.replace``: a kill mid-write
+    leaves the old file or none, never a truncated one that would make
+    every later manifest read raise."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        if isinstance(content, str):
+            f.write(content)
+        else:
+            json.dump(content, f, indent=2)
+    os.replace(tmp, path)
 
 
 def _dir_bytes(*dirs: str) -> int:
@@ -482,12 +498,12 @@ class SnapshotCatalog:
     ) -> dict:
         """Commit the files already under ``snap``'s data dir: account
         them from their footers (``_walk_written``), chain the counts onto
-        ``parent``, write the manifest and flip CURRENT. Every way data
-        reaches a snapshot (``write``, ``commit_staged``) ends here.
+        ``parent``, write the manifest and flip CURRENT (``_publish``, which
+        ``delete_rows`` shares). Every way data reaches a snapshot
+        (``write``, ``commit_staged``) ends here.
         ``declared`` is the schema of the written rows; ``total`` their
         count."""
-        snap_dir = os.path.join(self._table_dir(table), snap)
-        data_dir = os.path.join(snap_dir, "data")
+        data_dir = os.path.join(self._table_dir(table), snap, "data")
         counted = count_by if count_by and count_by in declared.names else None
         written = _walk_written(data_dir, counted if counted != partition_by else None)
         per_part = None
@@ -545,10 +561,14 @@ class SnapshotCatalog:
             "cluster_by": cluster_by,
             "metrics": {"write_seconds": round(time.time() - t0, 3)},
         }
-        with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
-        with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
-            f.write(snap)
+        return self._publish(table, manifest)
+
+    def _publish(self, table: str, manifest: dict) -> dict:
+        """The commit tail of every snapshot: the manifest lands in its
+        snap dir, then CURRENT flips to it."""
+        snap = manifest["snapshot"]
+        _replace_file(os.path.join(self._table_dir(table), snap, "manifest.json"), manifest)
+        _replace_file(os.path.join(self._table_dir(table), "CURRENT"), snap)
         return manifest
 
     # -- task-written files -----------------------------------------
@@ -735,8 +755,7 @@ class SnapshotCatalog:
         # uncommitted snap dir (no manifest) — same crash-safety story as
         # every other write path.
         snap = self._next_snapshot(table)
-        snap_dir = os.path.join(self._table_dir(table), snap)
-        delete_dir = os.path.join(snap_dir, "deletes")
+        delete_dir = os.path.join(self._table_dir(table), snap, "deletes")
         keys.select(*on).distinct().coalesce(1).write.mode("overwrite").parquet(
             delete_dir
         )
@@ -791,11 +810,7 @@ class SnapshotCatalog:
             "input_fingerprint": input_fingerprint,
             "lineage": {**(lineage or {}), "op": "equality-delete"},
         }
-        with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
-        with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
-            f.write(snap)
-        return manifest
+        return self._publish(table, manifest)
 
     def _apply_deletes(
         self,
@@ -885,8 +900,7 @@ class SnapshotCatalog:
                 "drop_tag it first"
             )
         tags[name] = snap
-        with open(self._tags_path(table), "w") as f:
-            json.dump(tags, f, indent=2)
+        _replace_file(self._tags_path(table), tags)
         return snap
 
     def drop_tag(self, table: str, name: str) -> None:
@@ -894,8 +908,7 @@ class SnapshotCatalog:
         if name not in tags:
             raise KeyError(f"no tag '{name}' on '{table}'")
         del tags[name]
-        with open(self._tags_path(table), "w") as f:
-            json.dump(tags, f, indent=2)
+        _replace_file(self._tags_path(table), tags)
 
     def _resolve_ref(self, table: str, ref: str | None) -> str | None:
         """A snapshot argument anywhere in the API may be a snapshot id
@@ -921,8 +934,7 @@ class SnapshotCatalog:
             raise FileNotFoundError(
                 f"cannot roll back '{table}' to {snap}: not a committed snapshot"
             )
-        with open(os.path.join(self._table_dir(table), "CURRENT"), "w") as f:
-            f.write(snap)
+        _replace_file(os.path.join(self._table_dir(table), "CURRENT"), snap)
         return m
 
     # -- bucketed layout ---------------------------------------------

@@ -5,8 +5,9 @@ different executions (the round-3 artifacts did), and no run overwrites
 another run's detail file. Round 5 adds the kill-proof
 delivery contract (round 4's driver artifact was rc=124/parsed:null):
 a summary line is flushed after EVERY completed section, SIGTERM/SIGINT
-flush before exiting, and the scaling hunt respects a total-run
-deadline."""
+flush before exiting, and the scaling section keeps a total-run
+deadline. The scaling loop itself is checked on a fake clock, and the
+scaling worker's one-line contract in a real subprocess."""
 
 from __future__ import annotations
 
@@ -16,6 +17,8 @@ import signal
 import subprocess
 import sys
 import textwrap
+
+import pytest
 
 import bench
 
@@ -125,8 +128,8 @@ class TestEmitArtifacts:
         )
 
     def test_total_deadline_math(self, monkeypatch):
-        """TOTAL_BUDGET bounds the scaling hunt: the section deadline and
-        the hunt deadline must stay ahead of the driver's outer kill."""
+        """TOTAL_BUDGET is the scaling section's only deadline: it must
+        stay ahead of an outer kill."""
         monkeypatch.setattr(bench, "TOTAL_BUDGET", 100)
         monkeypatch.setattr(bench, "_RUN_T0", 1000.0)
         assert bench._total_deadline() == 1100.0
@@ -184,20 +187,189 @@ class TestEmitArtifacts:
                     "increment": {"sequences_per_sec": 100000.0},
                     "per_row_rate_ratio": {n: 1.02 for n in names[:8]}},
             "scaling": {"rows": 4000000, "scaling_efficiency": 0.863,
-                        "counts_match": True, "phase": "clean",
+                        "counts_match": True,
                         "hw_pair_efficiency": 0.91, "job_vs_hw_ceiling": 0.95,
-                        "bandwidth_capped": False,
-                        "pairs": {"1v4": {"scaling_efficiency": 0.86},
-                                  "8v32": {"scaling_efficiency": 0.71}},
                         "errors": []},
+            "section_s": {"setup": 41.2, "headline": 30.5, "extensions": 88.1,
+                          "skew": 120.4, "pipeline": 210.7, "sf1": 1020.3,
+                          "scaling": 1403.9},
         }
         line = bench._flush_state(state, str(tmp_path), final=True)
         assert len(line.encode()) <= 1500
         parsed = json.loads(line)
         assert "queries" not in parsed and "extensions" not in parsed
         assert parsed["scaling"]["scaling_efficiency"] == 0.863
+        assert parsed["scaling"]["rep_errors"] == 0
+        assert parsed["section_s"]["scaling"] == 1403.9
         assert parsed["pipeline"]["sequences_per_sec"] == 185000.0
         assert parsed["errors_count"] == 1 and parsed["value"] > 0
         # the detail file keeps every per-query map
         assert "queries" in json.load(open(tmp_path / parsed["detail_file"]))
 
+
+class _Clock:
+    """Stands in for ``bench.time``: ``time()`` reads a settable now."""
+
+    def __init__(self, now: float):
+        self.now = now
+
+    def time(self) -> float:
+        return self.now
+
+
+T0 = 1000.0
+PROBE_S = 5.0
+
+
+@pytest.fixture
+def fake_scaling(monkeypatch):
+    """``run(durations, budget, probes)`` runs ``bench._run_scaling`` on a
+    fake clock starting at T0 with a total budget of ``budget`` seconds.
+    The stubbed rep at ``cores`` takes the next of ``durations[cores]``
+    seconds (None: the worker crashes; longer than its timeout: it times
+    out, as ``_one_rep`` reports both); each stubbed probe takes PROBE_S
+    and returns the next hardware efficiency of ``probes`` (a negative
+    one is implausible). Returns (block, calls), one call per rep
+    started: (cores, start, timeout)."""
+    clock = _Clock(T0)
+    monkeypatch.setattr(bench, "time", clock)
+    monkeypatch.setattr(bench, "_log", lambda msg: None)
+
+    def run(durations, budget, probes=(0.9, 0.9)):
+        clock.now = T0
+        durations = {c: list(d) for c, d in durations.items()}
+        probes = list(probes)
+        calls = []
+        monkeypatch.setattr(bench, "_total_deadline", lambda: T0 + budget)
+
+        def one_rep(cores, rows, input_path, timeout, errors, tag):
+            calls.append((cores, clock.now, timeout))
+            d = durations[cores].pop(0)
+            if d is None:
+                clock.now += 1
+                errors.append(f"{tag} rc=1: crashed")
+                return None
+            if timeout is not None and d > timeout:
+                clock.now += timeout
+                errors.append(f"{tag} timed out after {int(timeout)}s")
+                return None
+            clock.now += d
+            return {"cores": cores, "rows": rows, "seconds": d,
+                    "sequences_per_sec": round(rows / d, 1),
+                    "per_sink_counts": {"sink-0": rows - 1, "sink-1": 1}}
+
+        def pair_probe(p_lo, p_hi):
+            assert (p_lo, p_hi) == (bench.LO, bench.HI)
+            clock.now += PROBE_S
+            eff = probes.pop(0)
+            return {"lo_gbps": 5.0, "hi_gbps": 18.0, "hw_eff": abs(eff),
+                    "plausible": eff > 0}
+
+        monkeypatch.setattr(bench, "_one_rep", one_rep)
+        monkeypatch.setattr(bench, "_pair_probe", pair_probe)
+        return bench._run_scaling("/in", 1000), calls
+
+    return run
+
+
+class TestRunScaling:
+    def test_pairs_interleave_hi_then_lo(self, fake_scaling):
+        out, calls = fake_scaling({4: [10] * 3, 1: [40] * 3}, budget=10_000)
+        assert [c for c, _, _ in calls] == [4, 1, 4, 1, 4, 1]
+        assert bench.MAX_PAIRS == 3
+        assert out["errors"] == [] and len(out["probes"]) == 2
+        assert out["rep_seconds"] == {"local[4]": [10] * 3, "local[1]": [40] * 3}
+
+    def test_no_rep_starts_that_the_deadline_cannot_hold(self, fake_scaling):
+        # reps end at T0 + budget - flush margin - the first probe's cost
+        # (the closing probe must fit). 140 s of reps: two 50 s pairs
+        # leave 40 s, which holds no third pair; no rep is cut off.
+        budget = bench.FLUSH_MARGIN_S + PROBE_S + 140
+        end = T0 + budget - bench.FLUSH_MARGIN_S - PROBE_S
+        out, calls = fake_scaling({4: [10] * 3, 1: [40] * 3}, budget=budget)
+        assert [c for c, _, _ in calls] == [4, 1, 4, 1]
+        assert all(start + timeout == end for _, start, timeout in calls)
+        assert out["errors"] == []
+        assert len(out["probes"]) == 2  # the closing probe still ran
+        # first pair, nothing observed yet: the hi rep leaves fewer than
+        # MIN_REP_S seconds, so the lo rep never starts
+        budget = bench.FLUSH_MARGIN_S + PROBE_S + bench.MIN_REP_S + 5
+        out, calls = fake_scaling({4: [10], 1: [40]}, budget=budget)
+        assert [c for c, _, _ in calls] == [4]
+        assert out["scaling_efficiency"] is None
+        # no time for even one rep: nothing starts
+        out, calls = fake_scaling({4: [10], 1: [40]}, budget=bench.FLUSH_MARGIN_S)
+        assert calls == [] and out["runs"] == {}
+
+    def test_no_budget_runs_three_unfenced_pairs(self, fake_scaling):
+        # QSVSPARK_BENCH_TOTAL_BUDGET=0 makes the deadline +inf: all
+        # MAX_PAIRS pairs run, each rep without a timeout
+        out, calls = fake_scaling({4: [10] * 3, 1: [40] * 3},
+                                  budget=float("inf"))
+        assert [c for c, _, _ in calls] == [4, 1, 4, 1, 4, 1]
+        assert all(timeout is None for _, _, timeout in calls)
+        assert out["errors"] == [] and len(out["probes"]) == 2
+        assert out["scaling_efficiency"] == 1.0
+
+    def test_failed_rep_lands_in_errors_and_block_returns(self, fake_scaling):
+        out, calls = fake_scaling({4: [10, 10, 10], 1: [40, None, 38]},
+                                  budget=10_000)
+        assert len(calls) == 6
+        assert out["errors"] == ["local[1] pair 2 rc=1: crashed"]
+        assert out["scaling_efficiency"] == round((38 / 10) / 4, 3)
+        assert out["counts_match"] is True
+        # a rep that outlives its timeout (the time left) is recorded and
+        # the block still comes back, without an efficiency
+        budget = bench.FLUSH_MARGIN_S + PROBE_S + 100
+        out, calls = fake_scaling({4: [10], 1: [400]}, budget=budget)
+        assert [c for c, _, _ in calls] == [4, 1]
+        assert out["errors"] == ["local[1] pair 1 timed out after 85s"]
+        assert out["scaling_efficiency"] is None
+        assert out["runs"]["local[4]"]["seconds"] == 10
+
+    def test_efficiency_is_ratio_of_per_level_minima(self, fake_scaling):
+        out, _ = fake_scaling({4: [12, 10, 11], 1: [38, 41, 36]},
+                              budget=10_000, probes=(0.8, -9.0))
+        assert out["runs"]["local[1]"]["seconds"] == 36
+        assert out["runs"]["local[4]"]["seconds"] == 10
+        assert out["scaling_efficiency"] == round((36 / 10) / 4, 3) == 0.9
+        # the implausible closing probe stays in the detail, not the number
+        assert len(out["probes"]) == 2
+        assert out["hw_pair_efficiency"] == 0.8
+        assert out["job_vs_hw_ceiling"] == round(0.9 / 0.8, 3)
+        summary, _ = bench._assemble({
+            "run_id": "run-x", "sf": 0.01, "scaling": out,
+        })
+        assert summary["scaling"] == {
+            "rows": 1000, "scaling_efficiency": 0.9, "counts_match": True,
+            "hw_pair_efficiency": 0.8, "job_vs_hw_ceiling": 1.125,
+            "rep_errors": 0,
+        }
+
+
+class TestScalingWorker:
+    def test_worker_prints_one_result_line(self, spark, tmp_path):
+        """``bench.py --scaling-worker 1 <rows> <path>``, pinned to one
+        core, reads the whole input and prints ONE JSON line whose
+        per-sink counts cover every input row."""
+        import shutil
+
+        from qsvspark.pipeline import synth_tokens
+
+        rows = 400
+        path = str(tmp_path / "tokens")
+        synth_tokens(spark, rows, num_partitions=3).write.parquet(path)
+        cmd = bench._worker_cmd(1, rows, path)
+        if shutil.which("taskset"):
+            assert cmd[:3] == ["taskset", "-c", "0-0"]
+        assert cmd[-4:] == ["--scaling-worker", "1", str(rows), path]
+        proc = subprocess.run(cmd, capture_output=True, text=True,
+                              env=bench._worker_env(1), timeout=600)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+        assert len(lines) == 1, proc.stdout
+        out = json.loads(lines[0])
+        assert {"cores", "rows", "seconds", "sequences_per_sec",
+                "per_sink_counts"} <= out.keys()
+        assert out["cores"] == 1 and out["rows"] == rows and out["seconds"] > 0
+        assert sum(out["per_sink_counts"].values()) == rows

@@ -486,6 +486,44 @@ class TestExpireSnapshots:
             cat.expire_snapshots("t", keep_last=0)
 
 
+class TestCrashSafeMetadata:
+    def test_kill_mid_manifest_dump_keeps_resume_and_expiry(
+        self, spark, simple_df, tmp_path, monkeypatch
+    ):
+        """A kill while ``json.dump`` writes a manifest leaves no
+        truncated manifest.json behind: resume, history and expiry keep
+        reading the table, and expiry removes the uncommitted snapshot."""
+        root = str(tmp_path / "whk")
+        cat = SnapshotCatalog(root)
+        cat.write(simple_df, "t", input_fingerprint="a")
+
+        class Killed(BaseException):
+            pass
+
+        def dying_dump(obj, f, **kw):
+            text = json.dumps(obj, **kw)
+            f.write(text[: len(text) // 2])
+            f.flush()
+            raise Killed
+
+        with monkeypatch.context() as m:
+            m.setattr(json, "dump", dying_dump)
+            with pytest.raises(Killed):
+                cat.write(simple_df.limit(1), "t", input_fingerprint="b")
+        orphan = os.path.join(root, "t", "snap-00002")
+        assert os.path.isdir(orphan)
+        assert cat.find_committed("t", "a") == "snap-00001"
+        assert cat.find_committed("t", "b") is None
+        assert [h["snapshot"] for h in cat.history("t")] == ["snap-00001"]
+        assert cat.current_snapshot("t") == "snap-00001"
+        assert cat.expire_snapshots("t", keep_last=3) == ["snap-00002"]
+        assert not os.path.exists(orphan)
+        # the resumed run commits the write it lost
+        m = cat.write(simple_df.limit(1), "t", input_fingerprint="b")
+        assert cat.find_committed("t", "b") == m["snapshot"]
+        assert cat.read(spark, "t").count() == 1
+
+
 class TestManifestGrowthBound:
     """Catalog metadata must stay cheap as per-snapshot file counts grow
     (Iceberg bounds this with the manifest-list pattern; the emulation's
