@@ -433,10 +433,14 @@ def q_line_dups(spark, sf):
     # every 5th word) and injects a guaranteed duplicate line — a repeat
     # of the first line — on every third doc; both engines build the
     # identical string, so the value hash pins the whole signal chain.
+    # Whitespace is the explicit ASCII class: Java's \s and RE2's \s
+    # disagree on \x0B and some Unicode spaces.
     from qsvspark.functions import add_line_dup_signals
 
     docs = _t(spark, sf, "documents")
-    mt = F.regexp_replace(F.col("text"), r"((?:\S+\s+){4}\S+)\s+", "$1\n")
+    mt = F.regexp_replace(
+        F.col("text"), r"((?:[^ \t\n\r\f]+[ \t\n\r\f]+){4}[^ \t\n\r\f]+)[ \t\n\r\f]+", "$1\n"
+    )
     withdup = F.when(
         F.col("doc_id") % 3 == 0,
         F.concat(mt, F.lit("\n"), F.substring_index(mt, "\n", 1)),
@@ -1338,7 +1342,8 @@ def oracle_sql() -> dict[str, str]:
         # first line), then replicates add_line_dup_signals with list ops
         "line_dups": (
             r"WITH m AS (SELECT doc_id, regexp_replace(text,"
-            r" '((?:\S+\s+){4}\S+)\s+', '\1' || chr(10), 'g') AS mt"
+            r" '((?:[^ \t\n\r\f]+[ \t\n\r\f]+){4}[^ \t\n\r\f]+)[ \t\n\r\f]+',"
+            r" '\1' || chr(10), 'g') AS mt"
             r" FROM documents),"
             r" s AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0"
             r" THEN mt || chr(10) || string_split(mt, chr(10))[1]"

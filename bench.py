@@ -1060,13 +1060,12 @@ def main() -> None:
 
         # materialize the physical sequence table (the north-star
         # deliverable: ~SCALE_ROWS×264 tokens packed and assembled in one
-        # partition-local pass whose tasks write the sequences and their
-        # layout themselves); throughput is per INPUT token
+        # partition-local pass whose tasks write the sequences
+        # themselves); throughput is per INPUT token
         t0 = time.time()
         sm = pipe.pack_sinks(seq_len=2048, materialize=True, pad_id=0)
         seq_wall = round(time.time() - t0, 3)
-        seq_manifest = (sm or {}).get("sequences") or {}
-        n_seq = seq_manifest.get("row_count") or 0
+        n_seq = (sm or {}).get("row_count") or 0
         total_toks = n_seq * 2048  # upper bound incl. pad; exact enough
         pipeline["sequences"] = {
             "rows": n_seq,

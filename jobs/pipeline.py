@@ -94,10 +94,11 @@ def main(argv: list[str] | None = None) -> int:
                          "(zero padding waste), 'truncate' keeps the first "
                          "SEQ_LEN tokens")
     ap.add_argument("--materialize-sequences", action="store_true",
-                    help="with --pack-sinks: additionally write the physical "
-                         "'sequences' table (seq_id, sink, tokens, n_docs, "
-                         "n_tokens, pad) — docs flattened in layout order and "
-                         "padded to exactly SEQ_LEN; the table a training "
+                    help="with --pack-sinks: write the physical 'sequences' "
+                         "table (seq_id, sink, tokens, n_docs, n_tokens, pad, "
+                         "parts) instead of 'packed' — docs flattened in "
+                         "layout order and padded to exactly SEQ_LEN, each "
+                         "row's layout in its parts; the table a training "
                          "loader consumes")
     ap.add_argument("--pad-id", type=int, default=0,
                     help="pad token id for --materialize-sequences")
@@ -193,15 +194,10 @@ def main(argv: list[str] | None = None) -> int:
             materialize=args.materialize_sequences,
             pad_id=args.pad_id,
         )
-        metrics["packed"] = (
-            {"snapshot": m.get("snapshot"), "rows": m.get("row_count")}
-            if m else "already-packed"
+        table = "sequences" if args.materialize_sequences else "packed"
+        metrics[table] = (
+            {"snapshot": m["snapshot"], "rows": m["row_count"]} if m else "already-packed"
         )
-        if m and m.get("sequences"):
-            metrics["sequences"] = {
-                "snapshot": m["sequences"]["snapshot"],
-                "rows": m["sequences"].get("row_count"),
-            }
     print(json.dumps(metrics))
     spark.stop()
     return 0

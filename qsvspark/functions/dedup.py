@@ -454,24 +454,28 @@ def connected_components(
     Algorithm: iterative min-label propagation. Each round every node
     takes the minimum of its own label and its neighbors' labels; the
     loop stops when a round changes nothing. Rounds needed = graph
-    diameter, and near-dup components are by construction tiny, dense
-    clusters (diameter 1-3 — a doc cluster where A~B~C but A's label
-    must hop through B), so the loop converges in a handful of rounds.
-    Each round is one hash join (edges ⋈ labels) plus one groupBy-min —
-    both keyed shuffles on the id, no broadcast of anything
-    corpus-sized, and the per-round convergence check is a count-only
-    job over the changed rows. Labels are cached per round and
-    unpersisted after the next round materializes (at most two label
-    sets live at once). For adversarial long-chain graphs at extreme
-    scale, swap in the large-star/small-star recipe (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — same output
-    contract; not needed for dedup-shaped graphs.
+    diameter. Near-dup components are not bounded in diameter: chained
+    near-copies (A~B, B~C, ... where A and the last copy are no longer
+    similar) make a path whose diameter grows with the chain, so
+    ``max_iter`` is the real bound. Each round is one hash join (edges ⋈
+    labels) plus one groupBy-min — both keyed shuffles on the id, no
+    broadcast of anything corpus-sized — and the per-round convergence
+    check is a count-only job over the changed rows.
+
+    Each round's labels are ``localCheckpoint``ed: the round's plan
+    starts from the previous round's stored label rows instead of
+    nesting every earlier round's plan, so plan size (and planning time)
+    stays flat however many rounds the graph needs, and nothing enters
+    the session's cache. For long-chain graphs at extreme scale, swap in
+    the large-star/small-star recipe (Kiveris et al., "Connected
+    Components in MapReduce and Beyond") — same output contract,
+    O(log² n) rounds.
 
     Raises after ``max_iter`` rounds without convergence rather than
     returning partially-propagated labels. The returned frame reads the
-    final cached label set (node-count sized, tiny relative to the
-    corpus); persist it to a table and unpersist for long-lived
-    sessions."""
+    final checkpointed label set (node-count sized, tiny relative to the
+    corpus) from executor storage; write it to a table if it must
+    survive an executor loss."""
     edges = pairs.select(
         F.col(id_a).alias("__src"), F.col(id_b).alias("__dst")
     ).union(
@@ -480,11 +484,11 @@ def connected_components(
     # initial label: min(self, smallest direct neighbor)
     labels = edges.groupBy("__src").agg(
         F.least(F.col("__src"), F.min("__dst")).alias("__lbl")
-    ).cache()
+    ).localCheckpoint()
     for _ in range(max_iter):
         # each node pulls its neighbors' labels and keeps the min
-        # (labels derives from edges — rename its key first or the
-        # self-join is ambiguous)
+        # (labels and edges both carry __src — rename its key first or
+        # the join is ambiguous)
         lbl_by_node = labels.select(
             F.col("__src").alias("__nbr"), F.col("__lbl")
         )
@@ -498,7 +502,7 @@ def connected_components(
             .groupBy("__id")
             .agg(F.min("__lbl").alias("__lbl"))
             .select(F.col("__id").alias("__src"), "__lbl")
-        ).cache()
+        ).localCheckpoint()
         changed = (
             new_labels.join(
                 labels.withColumnRenamed("__lbl", "__old"), "__src"
@@ -506,12 +510,10 @@ def connected_components(
             .filter(F.col("__lbl") != F.col("__old"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
     else:
-        labels.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"(graph diameter exceeds the bound — use a larger max_iter "

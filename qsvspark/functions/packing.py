@@ -46,17 +46,18 @@ Two packers, two contracts:
       for each set of bins the loop closes it cuts and concatenates the
       sequences' token arrays with NumPy from the Arrow list buffers and
       yields the SEQUENCE batch (one row per sequence, with a ``parts``
-      column of its layout rows) together with the matching LAYOUT
-      batch. No token is shuffled or joined: the documents of a sequence
-      already sit in its partition. Where the two batches go:
-        * ``pack_greedy_sequences`` returns the sequence batches as a
-          DataFrame (``mapInArrow``);
+      column of its layout rows). No token is shuffled or joined: the
+      documents of a sequence already sit in its partition. Where the
+      batches go:
+        * ``pack_greedy_sequences`` returns them as a DataFrame
+          (``mapInArrow``);
         * ``NorthStarPipeline.pack_sinks(materialize=True)`` has each
-          task write BOTH batches as parquet files itself
-          (``SnapshotCatalog.stage``), committed as the ``sequences``
-          and ``packed`` snapshots — the tokens never return to the JVM.
-      ``sequence_layout`` explodes a committed sequence table's
-      ``parts`` back into the layout.
+          task write them as parquet files itself
+          (``SnapshotCatalog.write_tasks``), committed as the
+          ``sequences`` snapshot — the tokens never return to the JVM.
+      The layout is stored once, in ``parts``: ``sequence_layout``
+      explodes a sequence table's ``parts`` back into the
+      ``pack_greedy`` rows, reading no token.
 
   Invariants (every doc packed once, every sequence ≤ seq_len unless a
   single oversized doc, fill ratio bound, emitter equivalence) are
@@ -406,8 +407,7 @@ class GreedyPacker(NamedTuple):
 
     src: DataFrame  # (id, n_tok, *groups, tokens): the rows to pack
     sequence_schema: T.StructType  # pack_greedy_sequences' rows
-    layout_schema: T.StructType  # pack_greedy's rows
-    # Iterator[pa.RecordBatch] of ``src`` -> Iterator[(sequences, layout)]
+    # Iterator[pa.RecordBatch] of ``src`` -> Iterator[pa.RecordBatch]
     batches: Callable
 
 
@@ -424,16 +424,14 @@ def greedy_sequence_packer(
     emitters. ``batches`` runs inside a task over the Arrow batches of
     ``src`` (one partition): it drives ``_FirstFit`` and, for each set
     of bins the loop closes, yields the sequence batch (one row per
-    sequence, ``sequence_schema``) and the matching layout batch (one
-    row per document part, ``layout_schema`` — ``pack_greedy``'s
-    columns). ``pack_greedy_sequences`` returns the first as a
-    DataFrame; ``NorthStarPipeline.pack_sinks`` has its tasks write
-    both as files (``SnapshotCatalog.stage``).
+    sequence, ``sequence_schema``). ``pack_greedy_sequences`` returns
+    the batches as a DataFrame; ``NorthStarPipeline.pack_sinks`` has
+    its tasks write them as files (``SnapshotCatalog.write_tasks``).
 
     Seq ids carry the task's partition id in the whole plan (see
     ``pack_greedy``), so they are stable only within one evaluation.
-    ``pack_sinks`` is unaffected: one staging job writes the sequences
-    and their layout, and both tables commit from its files.
+    ``pack_sinks`` is unaffected: one job writes the sequences, and
+    their layout is their own ``parts`` column.
 
     Each sequence's token array is cut and concatenated with NumPy
     straight from the Arrow list buffers (no per-token Python), the
@@ -464,12 +462,7 @@ def greedy_sequence_packer(
         T.StructField("pad", T.LongType()),
         T.StructField("parts", T.ArrayType(part_type)),
     ])
-    layout_schema = T.StructType([
-        field[id_col], field[n_tok_col], *(field[g] for g in groups),
-        T.StructField("seq_id", T.LongType()), *part_fields,
-    ])
     seq_arrow = to_arrow_schema(seq_schema)
-    layout_arrow = to_arrow_schema(layout_schema)
     tok_type = seq_arrow.field("tokens").type
     pad_dtype = tok_type.value_type.to_pandas_dtype()
     part_arrow = list(seq_arrow.field("parts").type.value_type)
@@ -477,7 +470,7 @@ def greedy_sequence_packer(
     def offsets(lengths: list) -> pa.Array:
         return pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
 
-    def assemble(bins: list) -> tuple:
+    def assemble(bins: list) -> pa.RecordBatch:
         pieces, rows, seq_lens, n_docs, n_tokens = [], [], [], [], []
         for b in bins:
             n = 0
@@ -496,15 +489,13 @@ def greedy_sequence_packer(
             fields=part_arrow,
         )
         n_parts = [len(b.parts) for b in bins]
-        seq_ids = pa.array([b.seq_id for b in bins], type=pa.int64())
-        keys = [
-            pa.array([b.key[j] for b in bins], type=seq_arrow.field(g).type)
-            for j, g in enumerate(groups)
-        ]
         n_tokens_arr = np.asarray(n_tokens, dtype=np.int64)
-        seqs = pa.RecordBatch.from_arrays([
-            seq_ids,
-            *keys,
+        return pa.RecordBatch.from_arrays([
+            pa.array([b.seq_id for b in bins], type=pa.int64()),
+            *(
+                pa.array([b.key[j] for b in bins], type=seq_arrow.field(g).type)
+                for j, g in enumerate(groups)
+            ),
             pa.ListArray.from_arrays(
                 offsets(seq_lens),
                 pa.array(np.concatenate(pieces), type=tok_type.value_type),
@@ -515,16 +506,6 @@ def greedy_sequence_packer(
             pa.array(np.maximum(seq_len - n_tokens_arr, 0)),
             pa.ListArray.from_arrays(offsets(n_parts), parts),
         ], schema=seq_arrow)
-        # the layout is the parts flattened: each part row repeats its
-        # sequence's id and group values
-        of_part = pa.array(np.repeat(np.arange(len(bins)), n_parts))
-        layout = pa.RecordBatch.from_arrays([
-            parts.field(0), parts.field(1),
-            *(k.take(of_part) for k in keys),
-            seq_ids.take(of_part),
-            *(parts.field(i) for i in range(2, 6)),
-        ], schema=layout_arrow)
-        return seqs, layout
 
     def pack(batches):
         ff = None
@@ -554,7 +535,7 @@ def greedy_sequence_packer(
             if done:
                 yield assemble(done)
 
-    return GreedyPacker(src, seq_schema, layout_schema, pack)
+    return GreedyPacker(src, seq_schema, pack)
 
 
 def pack_greedy_sequences(
@@ -580,7 +561,7 @@ def pack_greedy_sequences(
     them back into that layout).
 
     A ``mapInArrow`` over ``(id, n_tok, *groups, tokens)`` (the token
-    array column is always ``tokens``) running the sequence half of
+    array column is always ``tokens``) running
     ``greedy_sequence_packer``. No shuffle, no join: the documents of
     one sequence already sit in one partition.
 
@@ -592,13 +573,7 @@ def pack_greedy_sequences(
     packer = greedy_sequence_packer(
         df, n_tok_col, id_col, seq_len, group_cols, oversized, pad_id
     )
-    pack = packer.batches  # the closure ships to tasks; the DataFrame must not
-
-    def sequences(batches):
-        for seqs, _layout in pack(batches):
-            yield seqs
-
-    return packer.src.mapInArrow(sequences, packer.sequence_schema)
+    return packer.src.mapInArrow(packer.batches, packer.sequence_schema)
 
 
 def sequence_layout(seqs: DataFrame) -> DataFrame:

@@ -23,13 +23,13 @@ are never recomputed. On a real cluster the same interface binds to
 Iceberg (`writeTo(...).createOrReplace()` + snapshot metadata); the
 emulation keeps resume logic testable locally.
 
-Files can also reach a snapshot without Spark's writer: ``stage`` runs
-one job whose tasks write their own parquet files (pyarrow, with the
-Spark writer's settings and footer schema) under a staging directory,
-and ``commit_staged`` moves exactly the files the successful tasks
-reported into a new snapshot. Both ``write`` and ``commit_staged`` end
-in the same ``_commit``: footer accounting, parent chaining, manifest,
-CURRENT flip.
+Files can also reach a snapshot without Spark's writer:
+``write_tasks`` runs one job whose tasks write their own parquet files
+(pyarrow, with the Spark writer's settings and footer schema) under a
+staging directory, then moves exactly the files the successful tasks
+reported into a new snapshot of one table. Both ``write`` and
+``write_tasks`` end in the same ``_commit``: footer accounting (row
+counts included), parent chaining, manifest, CURRENT flip.
 
 Every consumer of an append chain (``read_parts``, ``data_files``,
 ``compact``, ``expire_snapshots``) goes through ONE walk,
@@ -46,10 +46,9 @@ import shutil
 import time
 import urllib.parse
 import uuid
-from contextlib import contextmanager
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,14 +60,14 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
     """What a commit records about the files a write just produced, from
     ONE driver-side pass and no Spark job — the way Iceberg manifests
-    account data files at commit time. Returns ``schema`` (footer Spark
-    schema JSON, None if no file has one), ``partition_counts`` (rows per
-    partition value) and ``value_counts`` (rows per ``str(value)`` of
-    ``count_col``, else None). Only ``count_col`` reads data pages; the
-    rest is footers."""
+    account data files at commit time. Returns ``rows`` (footer row
+    counts summed), ``schema`` (footer Spark schema JSON, None if no file
+    has one), ``partition_counts`` (rows per partition value) and
+    ``value_counts`` (rows per ``str(value)`` of ``count_col``, else
+    None). Only ``count_col`` reads data pages; the rest is footers."""
     import pyarrow.parquet as pq
 
-    out: dict = {"schema": None, "partition_counts": {},
+    out: dict = {"rows": 0, "schema": None, "partition_counts": {},
                  "value_counts": {} if count_col else None}
     for root, dirs, files in os.walk(data_dir):
         dirs.sort()  # stable partition order in the manifest
@@ -81,6 +80,7 @@ def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
                 continue
             pf = pq.ParquetFile(os.path.join(root, fn))
             md = pf.metadata
+            out["rows"] += md.num_rows
             if out["schema"] is None:
                 out["schema"] = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
             if part is not None:
@@ -273,17 +273,6 @@ class _Link(NamedTuple):
     deletes: list  # (key_cols, delete_dir) of STRICTLY LATER delete snapshots
 
 
-class _Staged(NamedTuple):
-    """The files one ``SnapshotCatalog.stage`` job wrote, per table."""
-
-    spark: SparkSession
-    dir: str
-    partition_by: str
-    schemas: dict  # table -> Spark schema of its rows
-    files: dict  # table -> [(partition value, staged path, rows)]
-    seconds: float  # the staging job's wall time
-
-
 class SnapshotCatalog:
     def __init__(self, root: str):
         self.root = root
@@ -362,17 +351,16 @@ class SnapshotCatalog:
 
         count_by: a column whose per-value row counts go in the manifest
         (the per-partition lineage/metrics the north rule requires).
-        Accounting runs no Spark job after the write: the total row count
-        is an ``Observation`` metric collected DURING the write job, and
-        per-value counts come from one driver-side pass over the files
-        just written — footer row counts per partition directory when
-        partitioned by the count key, otherwise a pyarrow read of that
-        one column, keyed by ``str(value)`` (``"None"`` for null), as a
-        ``groupBy().count().collect()`` would key string, numeric, date
-        and boolean values. That read is O(rows) on the driver, so
-        unpartitioned ``count_by`` suits small tables: its one caller,
-        the pipeline's aggregates, writes one row per sink × source ×
-        bucket.
+        Accounting runs no Spark job after the write: the row counts come
+        from one driver-side pass over the files just written — footer
+        row counts in total and per partition directory when partitioned
+        by the count key, otherwise a pyarrow read of that one column for
+        the per-value counts, keyed by ``str(value)`` (``"None"`` for
+        null), as a ``groupBy().count().collect()`` would key string,
+        numeric, date and boolean values. That read is O(rows) on the
+        driver, so unpartitioned ``count_by`` suits small tables: its one
+        caller, the pipeline's aggregates, writes one row per sink ×
+        source × bucket.
 
         The manifest's ``schema`` is exactly what
         ``spark.read.parquet(data_dir).schema`` reports (partition column
@@ -443,17 +431,15 @@ class SnapshotCatalog:
         snap = self._next_snapshot(table)
         snap_dir = os.path.join(self._table_dir(table), snap)
         data_dir = os.path.join(snap_dir, "data")
-        obs = Observation()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if bucket_by:
             # one shuffle into bucket layout (each task owns exactly one
             # bucket → one file per bucket, no tasks×buckets fan-out);
             # in-bucket sort on the bucket columns so downstream SMJs
             # skip the sort on this side
-            total = self._write_bucketed_data(observed, obs, data_dir, bucket_by, n_buckets)
+            self._write_bucketed_data(df, data_dir, bucket_by, n_buckets)
         else:
             writer = (
-                observed
+                df
                 .write.mode("overwrite")
                 # token-id / unique-id heavy tables: dictionary encoding only
                 # balloons then falls back (ids are near-random), and parquet
@@ -467,10 +453,9 @@ class SnapshotCatalog:
             if partition_by:
                 writer = writer.partitionBy(partition_by)
             writer.parquet(data_dir, compression="snappy")
-            total = obs.get["rows"]
 
         return self._commit(
-            df.sparkSession, df.schema, table, snap, total, t0,
+            df.sparkSession, df.schema, table, snap, t0,
             input_fingerprint=input_fingerprint, lineage=lineage,
             partition_by=partition_by, count_by=count_by, cluster_by=cluster_by,
             parent=parent, bucket_by=bucket_by, n_buckets=n_buckets,
@@ -483,7 +468,6 @@ class SnapshotCatalog:
         declared: T.StructType,
         table: str,
         snap: str,
-        total: int,
         t0: float,
         *,
         input_fingerprint: str,
@@ -500,12 +484,12 @@ class SnapshotCatalog:
         them from their footers (``_walk_written``), chain the counts onto
         ``parent``, write the manifest and flip CURRENT (``_publish``, which
         ``delete_rows`` shares). Every way data reaches a snapshot
-        (``write``, ``commit_staged``) ends here.
-        ``declared`` is the schema of the written rows; ``total`` their
-        count."""
+        (``write``, ``write_tasks``) ends here.
+        ``declared`` is the schema of the written rows."""
         data_dir = os.path.join(self._table_dir(table), snap, "data")
         counted = count_by if count_by and count_by in declared.names else None
         written = _walk_written(data_dir, counted if counted != partition_by else None)
+        total = written["rows"]
         per_part = None
         if counted:
             per_part = written["partition_counts" if counted == partition_by else "value_counts"]
@@ -573,135 +557,107 @@ class SnapshotCatalog:
 
     # -- task-written files -----------------------------------------
 
-    @contextmanager
-    def stage(
+    def write_tasks(
         self,
         df: DataFrame,
         emit,
-        schemas: dict[str, T.StructType],
+        schema: T.StructType,
+        table: str,
+        *,
         partition_by: str,
-    ):
-        """Run ONE Spark job in which each task writes its own rows of one
-        or more tables as parquet files, and yield a ``_Staged`` handle
-        whose files ``commit_staged`` turns into snapshots — the Iceberg
-        model, where writers produce data files and the catalog commits
-        the files they report.
+        input_fingerprint: str = "",
+        lineage: dict | None = None,
+        count_by: str | None = None,
+    ) -> dict:
+        """Write ``table``'s next snapshot from files the tasks of ONE
+        Spark job write themselves, committing exactly the files they
+        report (the Iceberg model: writers produce data files, the
+        catalog commits them).
 
         ``emit`` runs in each task over the Arrow batches of ``df``'s
-        partition and yields one Arrow batch per table, in ``schemas``
-        order (``schemas`` maps each table to the Spark schema of its
-        rows). Each batch is split by the string ``partition_by`` column
-        into one open file per (table, value), written with the settings
-        of ``write``'s Spark writer (``_parquet_writer``).
+        partition and yields Arrow batches of ``schema``'s rows. Each
+        batch is split by the string ``partition_by`` column into one
+        open file per value, written with the settings of ``write``'s
+        Spark writer (``_parquet_writer``).
 
-        Each task attempt writes under ``<root>/_staging/<uuid>/<table>/``
-        with attempt-unique names (partition id, attempt number, uuid) and
+        Each task attempt writes under ``<root>/_staging/<uuid>/`` with
+        attempt-unique names (partition id, attempt number, uuid) and
         returns one row per file. The collected result holds exactly one
-        successful attempt per partition, so only its files are ever
-        committed: a failed or speculative attempt's files stay behind and
-        go when the staging directory is removed on exit, committed or
-        not. A staging directory a killed run leaves is never read:
-        readers list only ``snap-*``."""
+        successful attempt per partition, and ``_move_reported`` moves
+        only its files into the snapshot; a failed or speculative
+        attempt's files go with the staging directory, removed whether
+        or not the commit succeeds (readers list only ``snap-*``, so one
+        a killed run leaves is never read). The commit is ``_commit``'s,
+        as for ``write``; ``write_seconds`` spans the job and commit."""
         import pyarrow as pa
 
-        for table, schema in schemas.items():
-            if not isinstance(schema[partition_by].dataType, T.StringType):
-                raise ValueError(
-                    f"stage: partition column '{partition_by}' of '{table}' "
-                    "must be a string"
-                )
+        if not isinstance(schema[partition_by].dataType, T.StringType):
+            raise ValueError(
+                f"write_tasks: partition column '{partition_by}' of '{table}' "
+                "must be a string"
+            )
         staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
-        tables = list(schemas)
-        footers = [
-            T.StructType([f for f in schemas[t].fields if f.name != partition_by]).json()
-            for t in tables
-        ]
-        result = pa.schema([("table", pa.string()), ("partition", pa.string()),
-                            ("path", pa.string()), ("rows", pa.int64())])
+        footer = T.StructType([f for f in schema.fields if f.name != partition_by]).json()
+        result = pa.schema([("partition", pa.string()), ("path", pa.string())])
 
         def task(batches):
             from pyspark import TaskContext
 
             ctx = TaskContext.get()
             stem = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}-{uuid.uuid4().hex}"
-            files: dict = {}  # (table, partition value) -> [path, writer, rows]
+            files: dict = {}  # partition value -> (path, writer)
             try:
-                for out in emit(batches):
-                    for table, footer, batch in zip(tables, footers, out):
-                        for value, rows in _split_by(batch, partition_by):
-                            f = files.get((table, value))
-                            if f is None:
-                                os.makedirs(os.path.join(staging, table), exist_ok=True)
-                                path = os.path.join(
-                                    staging, table, f"{stem}-{len(files):05d}.snappy.parquet"
-                                )
-                                f = files[(table, value)] = [
-                                    path, _parquet_writer(path, rows.schema, footer), 0
-                                ]
-                            f[1].write_batch(rows)
-                            f[2] += rows.num_rows
+                for batch in emit(batches):
+                    for value, rows in _split_by(batch, partition_by):
+                        if value not in files:
+                            os.makedirs(staging, exist_ok=True)
+                            path = os.path.join(
+                                staging, f"{stem}-{len(files):05d}.snappy.parquet"
+                            )
+                            files[value] = (path, _parquet_writer(path, rows.schema, footer))
+                        files[value][1].write_batch(rows)
             finally:
-                for f in files.values():
-                    f[1].close()
+                for _, writer in files.values():
+                    writer.close()
             yield pa.RecordBatch.from_pylist(
-                [{"table": t, "partition": v, "path": f[0], "rows": f[2]}
-                 for (t, v), f in files.items()],
+                [{"partition": v, "path": path} for v, (path, _) in files.items()],
                 schema=result,
             )
 
         t0 = time.time()
         try:
-            reported = df.mapInArrow(
-                task, "table string, partition string, path string, rows long"
-            ).collect()
-            files: dict = {t: [] for t in tables}
-            for r in reported:
-                files[r["table"]].append((r["partition"], r["path"], r["rows"]))
-            yield _Staged(
-                df.sparkSession, staging, partition_by, schemas, files,
-                time.time() - t0,
+            reported = df.mapInArrow(task, "partition string, path string").collect()
+            snap = self._next_snapshot(table)
+            data_dir = os.path.join(self._table_dir(table), snap, "data")
+            os.makedirs(data_dir)
+            self._move_reported(df.sparkSession, reported, data_dir, partition_by)
+            return self._commit(
+                df.sparkSession, schema, table, snap, t0,
+                input_fingerprint=input_fingerprint, lineage=lineage,
+                partition_by=partition_by, count_by=count_by,
             )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 
-    def commit_staged(
-        self,
-        staged: _Staged,
-        table: str,
-        *,
-        input_fingerprint: str = "",
-        lineage: dict | None = None,
-        count_by: str | None = None,
-    ) -> dict:
-        """Commit ``table``'s staged files (see ``stage``) as its next
-        snapshot: each reported file moves into ``snap-NNNNN/data/``,
-        under the partition directory Spark's writer would name
-        (``ExternalCatalogUtils.getPartitionPathString``: null and ""
-        become ``__HIVE_DEFAULT_PARTITION__``), and the snapshot commits
-        through ``_commit`` exactly as a ``write`` does. The manifest's
-        ``write_seconds`` is the staging job plus this commit. Commit the
-        tables in the order their lineage needs (a table recording
-        another's snapshot id commits after it)."""
-        t0 = time.time() - staged.seconds
-        snap = self._next_snapshot(table)
-        data_dir = os.path.join(self._table_dir(table), snap, "data")
-        os.makedirs(data_dir)
-        col = staged.partition_by
-        files = staged.files[table]
+    @staticmethod
+    def _move_reported(
+        spark: SparkSession, reported: list, data_dir: str, partition_by: str
+    ) -> None:
+        """Move each reported file (a ``partition``, ``path`` row) into
+        ``data_dir``, under the partition directory Spark's writer would
+        name (``ExternalCatalogUtils.getPartitionPathString``: null and
+        "" become ``__HIVE_DEFAULT_PARTITION__``)."""
         catalog_utils = (
-            staged.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+            spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
         )
-        dirs = {v: catalog_utils.getPartitionPathString(col, v) for v, _, _ in files}
-        for value, path, _ in files:
-            d = os.path.join(data_dir, dirs[value])
+        dirs = {
+            v: catalog_utils.getPartitionPathString(partition_by, v)
+            for v in {r["partition"] for r in reported}
+        }
+        for r in reported:
+            d = os.path.join(data_dir, dirs[r["partition"]])
             os.makedirs(d, exist_ok=True)
-            os.replace(path, os.path.join(d, os.path.basename(path)))
-        return self._commit(
-            staged.spark, staged.schemas[table], table, snap,
-            sum(rows for _, _, rows in files), t0,
-            input_fingerprint=input_fingerprint, lineage=lineage,
-            partition_by=col, count_by=count_by,
-        )
+            os.replace(r["path"], os.path.join(d, os.path.basename(r["path"])))
 
     def delete_rows(
         self,
@@ -953,22 +909,21 @@ class SnapshotCatalog:
 
     def _write_bucketed_data(
         self,
-        observed: DataFrame,
-        obs: Observation,
+        df: DataFrame,
         data_dir: str,
         bucket_by: list[str],
         n_buckets: int,
-    ) -> int:
+    ) -> None:
         """Write through Spark's native bucketed writer (external table at
         the snap data dir). repartition(n_buckets, cols) uses the same
         murmur3 HashPartitioning as the bucket assignment, so each write
         task owns exactly one bucket → exactly n_buckets files, never a
         tasks×buckets fan-out."""
-        spark = observed.sparkSession
+        spark = df.sparkSession
         name = self._bucket_table_name(data_dir)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
-            observed.repartition(n_buckets, *bucket_by)
+            df.repartition(n_buckets, *bucket_by)
             .write.mode("overwrite")
             .format("parquet")
             .option("path", data_dir)
@@ -980,7 +935,6 @@ class SnapshotCatalog:
             .sortBy(*bucket_by)
             .saveAsTable(name)
         )
-        return obs.get["rows"]
 
     def _register_bucketed(self, spark: SparkSession, link: _Link) -> str:
         """Attach a bucketed snapshot's files to the session catalog (no-op
@@ -1236,7 +1190,7 @@ class SnapshotCatalog:
         The new snapshot carries the SOURCE's input_fingerprint: it is
         the same logical data, so ``find_committed`` resume now lands on
         the compacted copy. Row preservation is checked by the caller's
-        manifest (Observation row_count + footer partition counts).
+        manifest (footer row and partition counts).
 
         Returns the new manifest, or None when the snapshot is already
         compact (fewer than 2 sub-target files anywhere — nothing to

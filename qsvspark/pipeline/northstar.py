@@ -850,49 +850,42 @@ class NorthStarPipeline:
         any shuffle because cross-shard sequence order is irrelevant for
         training layout.
 
-        Writes a ``packed`` layout table (doc_id, n_tok, sink, seq_id,
-        seq_fill, oversized, part_start, part_len), partitioned by sink,
-        fingerprinted on the routed lineage + seq_len + policy — rerun
-        after more increments re-packs only because the routed
-        fingerprint chain changed; a crash before commit leaves no
-        partial state (snapshot write is atomic-by-rename).
-
         ``oversized``: policy for docs longer than seq_len — "own"
         (flagged solo sequence), "split" (boundary-cut chunks, zero
         waste), "truncate" (see pack_greedy).
 
-        ``materialize=True`` also writes the ``sequences`` table — one
-        row per sequence with the PHYSICAL token array (seq_id, sink,
-        tokens, n_docs, n_tokens, pad, parts), every doc's tokens in
-        seq_fill order, right-padded with ``pad_id`` to exactly seq_len
-        (pad_id=None skips padding). This is the table a training loader
-        consumes; ``parts`` (doc_id, n_tok, seq_fill, oversized,
-        part_start, part_len per document) gives the document boundaries
-        for document-masked attention. Both tables come from ONE
-        partition-local pass in ONE Spark job: each task runs the greedy
-        packer (``greedy_sequence_packer`` — no token shuffle, no join)
-        and writes its ``sequences`` and ``packed`` rows itself
-        (``SnapshotCatalog.stage``), so the token arrays never return to
-        the JVM; the driver then commits ``sequences`` and, after it,
-        ``packed``, whose lineage records the new sequences snapshot.
-        The two tables agree by construction. Resume:
-          * both committed (packed derived from the current sequences
-            snapshot) — no-op;
-          * sequences committed, packed missing (what a crash between
-            the two commits leaves) — packed is derived from the
-            committed sequences (``sequence_layout``, no token read);
-          * packed committed by an earlier ``materialize=False`` call,
-            sequences missing — both are written, a fresh packed
-            snapshot among them.
+        Each call writes ONE table, partitioned by sink, fingerprinted
+        on the routed lineage + seq_len + policy (+ pad_id), so a rerun
+        after more increments re-packs only because the routed
+        fingerprint chain changed; a crash before commit leaves no
+        partial state (snapshot commits are atomic-by-rename):
 
-        Returns the written packed manifest (with a ``"sequences"`` key
-        holding the sequences manifest, or None when it was already
-        committed), or None when everything is already committed."""
-        from qsvspark.functions.packing import (
-            greedy_sequence_packer,
-            pack_greedy,
-            sequence_layout,
-        )
+          * ``materialize=False`` writes the ``packed`` layout table
+            (doc_id, n_tok, sink, seq_id, seq_fill, oversized,
+            part_start, part_len) — one row per document part, no token
+            read.
+          * ``materialize=True`` writes the ``sequences`` table — one row
+            per sequence with the PHYSICAL token array (seq_id, sink,
+            tokens, n_docs, n_tokens, pad, parts), every doc's tokens in
+            seq_fill order, right-padded with ``pad_id`` to exactly
+            seq_len (pad_id=None skips padding). This is the table a
+            training loader consumes; ``parts`` (doc_id, n_tok,
+            seq_fill, oversized, part_start, part_len per document) is
+            the packing's layout — the document boundaries for
+            document-masked attention — and ``sequence_layout`` reads it
+            back as ``packed``'s rows without touching a token. ONE
+            partition-local pass in ONE Spark job: each task runs the
+            greedy packer (``greedy_sequence_packer`` — no token
+            shuffle, no join) and writes its sequences itself
+            (``SnapshotCatalog.write_tasks``), so the token arrays never
+            return to the JVM. A ``packed`` snapshot an earlier
+            ``materialize=False`` call committed is left as it is.
+
+        Resume is one rule per mode: when the table the mode writes is
+        already committed under its fingerprint, the call returns None
+        without reading the routed data. Otherwise it returns the
+        manifest of the table it wrote."""
+        from qsvspark.functions.packing import greedy_sequence_packer, pack_greedy
 
         snap = self.catalog.current_snapshot("routed")
         if snap is None:
@@ -901,56 +894,30 @@ class NorthStarPipeline:
         routed_fp = man.get("input_fingerprint") or snap
         policy_tag = "" if oversized == "own" else f"|ov={oversized}"
         pack_fp = f"{routed_fp}|pack|seq_len={seq_len}{policy_tag}"
-
-        layout_snap = self.catalog.find_committed("packed", pack_fp)
+        seq_fp = f"{pack_fp}|sequences|pad={pad_id}"
+        table, fp = ("sequences", seq_fp) if materialize else ("packed", pack_fp)
+        if self.catalog.find_committed(table, fp):
+            return None
+        docs = self._clean(self.routed())
         if not materialize:
-            if layout_snap:
-                return None
             packed = pack_greedy(
-                self._clean(self.routed()), "n_tok", "doc_id", seq_len, group_cols=["sink"],
-                oversized=oversized,
+                docs, "n_tok", "doc_id", seq_len, group_cols=["sink"], oversized=oversized,
             )
             return self.catalog.write(
                 packed, "packed", input_fingerprint=pack_fp,
                 lineage={"stages": ["pack"], "inputs": [routed_fp]},
                 partition_by="sink", count_by="sink",
             )
-        seq_fp = f"{pack_fp}|sequences|pad={pad_id}"
-
-        def packed_lineage(seq_snap: str) -> dict:
-            return {"stages": ["pack"], "inputs": [seq_fp], "sequences": seq_snap}
-
-        seq_snap = self.catalog.find_committed("sequences", seq_fp)
-        if seq_snap is None:
-            packer = greedy_sequence_packer(
-                self._clean(self.routed()), "n_tok", "doc_id", seq_len, group_cols=["sink"],
-                oversized=oversized, pad_id=pad_id,
-            )
-            schemas = {"sequences": packer.sequence_schema, "packed": packer.layout_schema}
-            with self.catalog.stage(packer.src, packer.batches, schemas, "sink") as staged:
-                seq_manifest = self.catalog.commit_staged(
-                    staged, "sequences", input_fingerprint=seq_fp,
-                    lineage={"stages": ["pack", "materialize"], "inputs": [routed_fp]},
-                    count_by="sink",
-                )
-                layout_manifest = self.catalog.commit_staged(
-                    staged, "packed", input_fingerprint=pack_fp,
-                    lineage=packed_lineage(seq_manifest["snapshot"]), count_by="sink",
-                )
-            layout_manifest["sequences"] = seq_manifest
-            return layout_manifest
-        if layout_snap and (
-            self.catalog.manifest("packed", layout_snap)["lineage"].get("sequences")
-            == seq_snap
-        ):
-            return None
-        layout = sequence_layout(self.catalog.read(self.spark, "sequences", seq_snap))
-        layout_manifest = self.catalog.write(
-            layout, "packed", input_fingerprint=pack_fp, lineage=packed_lineage(seq_snap),
-            partition_by="sink", count_by="sink",
+        packer = greedy_sequence_packer(
+            docs, "n_tok", "doc_id", seq_len, group_cols=["sink"],
+            oversized=oversized, pad_id=pad_id,
         )
-        layout_manifest["sequences"] = None
-        return layout_manifest
+        return self.catalog.write_tasks(
+            packer.src, packer.batches, packer.sequence_schema, "sequences",
+            partition_by="sink", input_fingerprint=seq_fp,
+            lineage={"stages": ["pack", "materialize"], "inputs": [routed_fp]},
+            count_by="sink",
+        )
 
     # -- results ------------------------------------------------------
 

@@ -451,6 +451,29 @@ class TestConnectedComponents:
         assert out == [(0, 0), (1, 0), (2, 0), (3, 0), (4, 0),
                        (10, 10), (11, 10)]
 
+    def test_long_path_converges_with_flat_plan_and_no_cache(self, spark):
+        """A path of L+1 nodes needs about L rounds. Each round's labels
+        are checkpointed, so the result's plan does not grow with the
+        round count, and nothing is left in the session's cache."""
+        from qsvspark.functions import connected_components
+
+        def path(n_edges):
+            pairs = spark.createDataFrame(
+                [(i, i + 1) for i in range(n_edges)], ["id_a", "id_b"]
+            )
+            return connected_components(pairs, max_iter=n_edges + 16)
+
+        def plan_chars(df):
+            return len(df._jdf.queryExecution().analyzed().toString())  # noqa: SLF001
+
+        spark.catalog.clearCache()
+        short, long = path(8), path(64)
+        rows = long.collect()
+        assert sorted(r["id"] for r in rows) == list(range(65))
+        assert {r["group_id"] for r in rows} == {0}
+        assert plan_chars(long) <= 1.5 * plan_chars(short)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+
     def test_non_convergence_raises(self, spark):
         from qsvspark.functions import connected_components
 

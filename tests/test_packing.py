@@ -381,32 +381,6 @@ def test_pack_greedy_sequences_matches_layout_plus_materialize(
     assert sequence_layout(seqs).columns == layout.columns
 
 
-@pytest.mark.parametrize("group_cols", [None, ["sink"]])
-@pytest.mark.parametrize("policy", ["own", "split", "truncate"])
-def test_packer_layout_batches_equal_pack_greedy(spark, policy, group_cols):
-    """The layout half of the one greedy generator (what pack_sinks'
-    tasks write as ``packed``) is exactly pack_greedy's layout, in its
-    declared schema."""
-    from qsvspark.functions.packing import greedy_sequence_packer
-
-    df = _random_token_docs(spark, seed=f"layout|{policy}|{group_cols}")
-    packer = greedy_sequence_packer(
-        df, "n_tok", "doc_id", SEQ_LEN, group_cols=group_cols, oversized=policy,
-    )
-    pack = packer.batches
-
-    def layouts(batches):
-        for _seqs, layout in pack(batches):
-            yield layout
-
-    got = packer.src.mapInArrow(layouts, packer.layout_schema)
-    want = pack_greedy(
-        df, "n_tok", "doc_id", SEQ_LEN, group_cols=group_cols, oversized=policy
-    )
-    assert got.columns == want.columns
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_materialize_chunked_sequences_exact(spark):
     df, toks, arrays = _token_docs(spark, n=60)
     layout = pack_chunked(df, "n_tok", "doc_id", SEQ_LEN, n_buckets=4)

@@ -957,12 +957,14 @@ class TestPackSinks:
 
 
 def _assert_sequences_token_exact_vs_packed(pipe, seq_len, pad):
-    """Rebuild every committed sequence from the committed packed
-    layout + routed docs and compare token arrays row by row."""
+    """Rebuild every committed sequence from its own layout (``parts``,
+    read flat through ``sequence_layout``) + the routed docs and compare
+    token arrays row by row."""
+    from qsvspark.functions.packing import sequence_layout
     from qsvspark.pipeline import QUARANTINE_SINK
 
     seqs = pipe.catalog.read(pipe.spark, "sequences")
-    layout = pipe.catalog.read(pipe.spark, "packed").collect()
+    layout = sequence_layout(seqs).collect()
     docs = {
         r["doc_id"]: r["tokens"]
         for r in pipe.routed()
@@ -1011,7 +1013,7 @@ class TestPackSinksMaterialize:
             seq_len=self.SEQ_LEN, oversized="split",
             materialize=True, pad_id=self.PAD,
         )
-        assert m is not None and m.get("sequences") is not None
+        assert m is not None and m["table"] == "sequences"
         return p
 
     def test_sequences_token_exact_vs_routed(self, pipe):
@@ -1043,10 +1045,9 @@ class TestPackSinksMaterialize:
 
 
 class TestPackSinksLayoutThenMaterialize:
-    """pack_sinks() then pack_sinks(materialize=True): the second call
-    writes ``sequences`` and commits a fresh ``packed`` snapshot derived
-    from it; a lost ``packed`` is re-derived from the committed
-    ``sequences`` without rewriting them."""
+    """pack_sinks() then pack_sinks(materialize=True): each call writes
+    its own table. The second writes ``sequences`` only; the ``packed``
+    snapshot the first committed stays CURRENT and untouched."""
 
     SEQ_LEN = 512
     PAD = 0
@@ -1059,15 +1060,20 @@ class TestPackSinksLayoutThenMaterialize:
         p = NorthStarPipeline(spark, wh)
         p.run(synth_tokens(spark, 1500, seed=35), input_fingerprint="layout-seq-test")
         first = p.pack_sinks(seq_len=self.SEQ_LEN)
-        assert first is not None and "sequences" not in first
+        assert first is not None and first["table"] == "packed"
         m = p.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
-        assert m is not None and m["sequences"] is not None
-        assert m["snapshot"] != first["snapshot"]  # fresh packed snapshot
-        assert m["lineage"]["sequences"] == m["sequences"]["snapshot"]
+        assert m is not None and m["table"] == "sequences"
+        p.first_packed = first
         return p
 
     def test_sequences_token_exact_vs_packed(self, pipe):
         _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
+
+    def test_earlier_packed_stays_current_and_untouched(self, pipe):
+        first = pipe.first_packed
+        assert pipe.catalog._snaps("packed") == [first["snapshot"]]
+        assert pipe.catalog.current_snapshot("packed") == first["snapshot"]
+        assert pipe.catalog.manifest("packed") == first
 
     @staticmethod
     def _forbid_routed_read(pipe, monkeypatch):
@@ -1084,24 +1090,6 @@ class TestPackSinksLayoutThenMaterialize:
             pipe.pack_sinks(seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD)
             is None
         )
-
-    def test_lost_packed_is_derived_from_committed_sequences(
-        self, pipe, monkeypatch
-    ):
-        import shutil
-
-        seq_snap = pipe.catalog.current_snapshot("sequences")
-        shutil.rmtree(os.path.join(pipe.catalog.root, "packed"))
-        with monkeypatch.context() as mp:
-            # packed comes from sequences' parts alone, never from routed
-            self._forbid_routed_read(pipe, mp)
-            m = pipe.pack_sinks(
-                seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD
-            )
-        assert m is not None and m["sequences"] is None  # not rewritten
-        assert pipe.catalog.current_snapshot("sequences") == seq_snap
-        assert m["lineage"]["sequences"] == seq_snap
-        _assert_sequences_token_exact_vs_packed(pipe, self.SEQ_LEN, self.PAD)
 
 
 def _jobs_submitted(spark, fn):
@@ -1122,10 +1110,10 @@ def _jobs_submitted(spark, fn):
 
 class TestPackSinksStagedCommit:
     """pack_sinks(materialize=True) commits the files its packing tasks
-    write: one Spark job for both tables, a stray file in the staging
-    directory is never committed, null sinks land where Spark's writer
-    puts them, and both manifests store the schema a Spark write of the
-    same rows stores."""
+    write: one Spark job, only ``sequences`` committed, a stray file in
+    the staging directory is never committed, null sinks land where
+    Spark's writer puts them, and the manifest stores the schema a Spark
+    write of the same rows stores."""
 
     SEQ_LEN = 256
     PAD = 0
@@ -1145,23 +1133,24 @@ class TestPackSinksStagedCommit:
             self.UNKNOWN, "doc_id string, tokens array<int>, n_tok int, source string"
         )
         pipe.run(synth_tokens(spark, 600, seed=51).unionByName(unknown), "staged")
-        real_commit = pipe.catalog.commit_staged
+        real_move = pipe.catalog._move_reported
         staging_dirs = []
 
-        def commit_with_stray(staged, table, **kw):
-            # a well-formed file of the table's own schema, not reported
-            # by any task: only the reported files may be committed
-            staging_dirs.append(staged.dir)
-            _value, path, _rows = staged.files[table][0]
+        def move_with_stray(spark_, reported, data_dir, partition_by):
+            # the driver-side step that moves the reported files: drop a
+            # well-formed file of the table's own schema, reported by no
+            # task, next to them first; only reported files may move
+            path = reported[0]["path"]
+            staging_dirs.append(os.path.dirname(path))
             shutil.copy(path, os.path.join(os.path.dirname(path), "part-stray.parquet"))
-            return real_commit(staged, table, **kw)
+            return real_move(spark_, reported, data_dir, partition_by)
 
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(pipe.catalog, "commit_staged", commit_with_stray)
+            mp.setattr(pipe.catalog, "_move_reported", move_with_stray)
             m, jobs = _jobs_submitted(spark, lambda: pipe.pack_sinks(
                 seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD
             ))
-        assert m is not None and m["sequences"] is not None
+        assert m is not None and m["table"] == "sequences"
         return pipe, m, jobs, staging_dirs
 
     def _emitted(self, pipe):
@@ -1172,65 +1161,53 @@ class TestPackSinksStagedCommit:
             pad_id=self.PAD,
         )
 
-    def test_one_spark_job_for_both_tables(self, packed):
-        _pipe, _m, jobs, _dirs = packed
+    def test_one_spark_job_commits_only_sequences(self, packed):
+        pipe, _m, jobs, _dirs = packed
         assert jobs == 1
+        tables = os.listdir(pipe.catalog.root)
+        assert "sequences" in tables and "packed" not in tables
 
     def test_stray_staged_file_never_committed(self, spark, packed):
+        from qsvspark.functions.packing import sequence_layout
+
         pipe, m, _jobs, staging_dirs = packed
         assert len(set(staging_dirs)) == 1
         assert not os.path.exists(staging_dirs[0])
-        for table in ("sequences", "packed"):
-            files = pipe.catalog.data_files(table)
-            assert files and not any("stray" in f["path"] for f in files)
+        files = pipe.catalog.data_files("sequences")
+        assert files and not any("stray" in f["path"] for f in files)
         seqs = pipe.catalog.read(spark, "sequences")
-        assert seqs.count() == m["sequences"]["row_count"] == self._emitted(pipe).count()
-        routed_rows = pipe.routed().count()
-        assert pipe.catalog.read(spark, "packed").count() == m["row_count"] == routed_rows
+        assert seqs.count() == m["row_count"] == self._emitted(pipe).count()
+        assert sequence_layout(seqs).count() == pipe.routed().count()
 
     def test_null_sink_lands_in_default_partition_token_exact(self, spark, packed):
         from qsvspark.functions.packing import sequence_layout
 
         pipe, m, _jobs, _dirs = packed
         default = "__HIVE_DEFAULT_PARTITION__"
-        for man in (m["sequences"], m):
-            data = os.path.join(pipe.catalog.root, man["table"], man["snapshot"], "data")
-            assert os.listdir(os.path.join(data, f"sink={default}"))
-            assert man["partition_counts"][default] > 0
-        assert m["partition_counts"][default] == len(self.UNKNOWN)
+        data = os.path.join(pipe.catalog.root, "sequences", m["snapshot"], "data")
+        assert os.listdir(os.path.join(data, f"sink={default}"))
+        assert m["partition_counts"][default] > 0
         # collected one side at a time: seq ids carry the task's partition
         # id, which a plan joining both sides (exceptAll) would renumber
         emitted = self._emitted(pipe)
         want = {r["seq_id"]: r for r in emitted.collect()}
-        got = {
-            r["seq_id"]: r
-            for r in pipe.catalog.read(spark, "sequences").select(*emitted.columns).collect()
-        }
+        committed = pipe.catalog.read(spark, "sequences")
+        got = {r["seq_id"]: r for r in committed.select(*emitted.columns).collect()}
         assert any(r["sink"] is None for r in got.values())
         assert got == want
-        layout = sequence_layout(emitted)
-
-        def by_part(df):
-            return sorted(map(tuple, df.collect()), key=lambda r: (r[3], r[4]))
-
-        got_layout = pipe.catalog.read(spark, "packed").select(*layout.columns)
-        assert by_part(got_layout) == by_part(layout)
+        null_parts = sequence_layout(committed).where("sink IS NULL")
+        assert null_parts.count() == len(self.UNKNOWN)
 
     def test_manifest_schemas_equal_spark_write(self, spark, packed, tmp_path):
-        from qsvspark.functions.packing import sequence_layout
         from qsvspark.io.snapshot import SnapshotCatalog
 
         pipe, m, _jobs, _dirs = packed
-        ref = SnapshotCatalog(str(tmp_path))
-        emitted = self._emitted(pipe)
-        for table, rows, got in (
-            ("sequences", emitted, m["sequences"]),
-            ("packed", sequence_layout(emitted), m),
-        ):
-            want = ref.write(rows, table, partition_by="sink", count_by="sink")
-            assert got["schema"] == want["schema"]
-            assert got["partition_counts"] == want["partition_counts"]
-            assert got["row_count"] == want["row_count"]
+        want = SnapshotCatalog(str(tmp_path)).write(
+            self._emitted(pipe), "sequences", partition_by="sink", count_by="sink"
+        )
+        assert m["schema"] == want["schema"]
+        assert m["partition_counts"] == want["partition_counts"]
+        assert m["row_count"] == want["row_count"]
 
 
 class TestCheckpointedStages:
@@ -1288,7 +1265,15 @@ class TestCheckpointedStages:
         pipe.run(tok, "fp")
         pipe.run_increment(synth_tokens(spark, 100, seed=44, id_offset=200), "inc")
         pipe.purge_docs(tok.limit(3).select("doc_id"), "take")
+        pipe.pack_sinks(seq_len=64)
+        pipe.pack_sinks(seq_len=64, oversized="split", materialize=True, pad_id=0)
         cfg = "parse=native|bw=64|k=20|s=4|dedup=exact"
+        assert self._fingerprints(pipe, "packed") == [
+            f"take|purge|{cfg}|pack|seq_len=64",
+        ]
+        assert self._fingerprints(pipe, "sequences") == [
+            f"take|purge|{cfg}|pack|seq_len=64|ov=split|sequences|pad=0",
+        ]
         assert self._fingerprints(pipe, "routed") == [
             "fp|route|parse=native|bw=64|k=20|s=4|dedup=exact",
             f"inc|route-increment|{cfg}",

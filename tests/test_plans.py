@@ -196,13 +196,12 @@ class TestPipelineDedupPlan:
 class TestSequencePackingPlan:
     def test_sequences_write_has_no_exchange_or_join(self, spark, tmp_path, monkeypatch):
         """pack_sinks(materialize=True) packs, assembles and writes
-        sequences in one partition-local pass: the plan of its one
-        staging job holds no shuffle and no join (the documents of one
-        sequence already sit in one routed scan partition), and a
-        ``packed`` layout derived from committed sequences (the resume
-        path) reads only ``parts`` — no token column, no Python."""
-        import shutil
-
+        sequences in one partition-local pass: the plan of its one job
+        holds no shuffle and no join (the documents of one sequence
+        already sit in one routed scan partition), and the layout read
+        back from the committed sequences (``sequence_layout``) reads
+        only ``parts`` — no token column, no Python."""
+        from qsvspark.functions.packing import sequence_layout
         from qsvspark.pipeline.northstar import NorthStarPipeline
         from qsvspark.pipeline.tokens import synth_tokens
 
@@ -220,24 +219,13 @@ class TestSequencePackingPlan:
         with monkeypatch.context() as mp:
             mp.setattr(frame, "mapInArrow", map_spy)
             p.pack_sinks(seq_len=512, materialize=True)
-        assert len(mapped) == 1  # the staging job writes both tables
+        assert len(mapped) == 1  # the one job writes the sequences
         seq_plan = plan_of(mapped[0])
         assert "MapInArrow" in seq_plan
         assert "Exchange" not in seq_plan
         assert "Join" not in seq_plan
 
-        written = {}
-        real_write = p.catalog.write
-
-        def spy(df, table, **kw):
-            written[table] = df
-            return real_write(df, table, **kw)
-
-        monkeypatch.setattr(p.catalog, "write", spy)
-        shutil.rmtree(os.path.join(p.catalog.root, "packed"))
-        p.pack_sinks(seq_len=512, materialize=True)
-        assert set(written) == {"packed"}
-        layout_plan = plan_of(written["packed"])
+        layout_plan = plan_of(sequence_layout(p.catalog.read(spark, "sequences")))
         assert "Exchange" not in layout_plan
         assert "Python" not in layout_plan and "MapIn" not in layout_plan
         read = [l for l in layout_plan.splitlines() if "ReadSchema" in l]

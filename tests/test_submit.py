@@ -64,9 +64,17 @@ class TestSparkSubmitShipping:
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
         return json.loads(line)
 
+    def _sequence_snaps(self, s):
+        return sorted(os.listdir(os.path.join(s["wh"], "sequences")))
+
     def test_submit_runs_and_resumes(self, spark, shipped):
-        m1 = self._submit(shipped)
+        pack = ("--pack-sinks", "256", "--materialize-sequences")
+        m1 = self._submit(shipped, *pack)
         assert m1["rows"] == N
+        # materialize commits sequences only: the layout is in their parts
+        assert m1["sequences"]["rows"] > 0
+        assert not os.path.exists(os.path.join(shipped["wh"], "packed"))
+        snaps = self._sequence_snaps(shipped)
         assert m1["resumed"] == []
         assert sum(m1["per_sink_counts"].values()) == N
         # committed-snapshot counts must equal a direct in-process compute
@@ -82,6 +90,8 @@ class TestSparkSubmitShipping:
             k: v for k, v in m1["per_sink_counts"].items()
         }
 
-        m2 = self._submit(shipped)
+        m2 = self._submit(shipped, *pack)
         assert sorted(m2["resumed"]) == ["aggregate", "route"]
         assert m2["per_sink_counts"] == m1["per_sink_counts"]
+        assert m2["sequences"] == "already-packed"
+        assert self._sequence_snaps(shipped) == snaps
