@@ -14,8 +14,13 @@ Architecture (see SURVEY.md):
     similarity search, text analysis, multimodal plumbing).
 
 Everything is expressed declaratively through the DataFrame API so Catalyst
-gets predicate pushdown / column pruning / join selection for free; Python
-executes only in Arrow-batched pandas UDFs (changetz, convert, grok parse).
+gets predicate pushdown / column pruning / join selection for free. Python
+executes only in Arrow-batched passes: the pandas UDFs of changetz and
+convert (``ops.udf``), the sequence packer and its task-side writers
+(``functions.packing`` → ``SnapshotCatalog.write_tasks``), multimodal
+feature extraction, the BLAS similarity join, and the streaming stateful
+operators (``applyInPandasWithState``). Local sessions run those workers
+under ``qsvspark.workerd`` (see ``session.get_spark``).
 """
 
 from qsvspark.engine import Q

@@ -1,7 +1,9 @@
 """Training-data pipeline extensions beyond reference parity: text
 analysis, deduplication, similarity search, multimodal plumbing.
 All hot paths are built-in Column expressions (codegen'd); Python appears
-only in Arrow-batched mapInPandas for the multimodal feature extraction."""
+only in Arrow-batched passes: the sequence packers (mapInPandas and
+mapInArrow), multimodal feature extraction (mapInPandas) and the BLAS
+similarity join (applyInPandas)."""
 
 from qsvspark.functions.text import (
     add_fingerprint,

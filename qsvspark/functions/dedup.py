@@ -466,10 +466,12 @@ def connected_components(
     starts from the previous round's stored label rows instead of
     nesting every earlier round's plan, so plan size (and planning time)
     stays flat however many rounds the graph needs, and nothing enters
-    the session's cache. For long-chain graphs at extreme scale, swap in
-    the large-star/small-star recipe (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") — same output contract,
-    O(log² n) rounds.
+    the session's cache. The edge set is checkpointed once, before the
+    first labels, so ``pairs`` (for ``near_dup_groups`` the whole
+    MinHash/LSH pair computation) is evaluated once, not every round.
+    For long-chain graphs at extreme scale, swap in the
+    large-star/small-star recipe (Kiveris et al., "Connected Components
+    in MapReduce and Beyond") — same output contract, O(log² n) rounds.
 
     Raises after ``max_iter`` rounds without convergence rather than
     returning partially-propagated labels. The returned frame reads the
@@ -480,7 +482,7 @@ def connected_components(
         F.col(id_a).alias("__src"), F.col(id_b).alias("__dst")
     ).union(
         pairs.select(F.col(id_b).alias("__src"), F.col(id_a).alias("__dst"))
-    ).distinct()
+    ).distinct().localCheckpoint()
     # initial label: min(self, smallest direct neighbor)
     labels = edges.groupBy("__src").agg(
         F.least(F.col("__src"), F.min("__dst")).alias("__lbl")

@@ -198,7 +198,14 @@ def stats(df: DataFrame) -> DataFrame:
             T.StructField("p75", T.DoubleType()),
         ]
     )
-    return df.sparkSession.createDataFrame(out_rows, schema)
+    # from Arrow, the result plans as a LocalTableScan: a Python list would
+    # plan as Scan ExistingRDD, whose execution starts Python workers
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return df.sparkSession.createDataFrame(
+        pa.Table.from_pylist(out_rows, schema=to_arrow_schema(schema)), schema
+    )
 
 
 def showquery(df: DataFrame, extended: bool = True) -> str:

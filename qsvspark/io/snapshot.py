@@ -1050,9 +1050,14 @@ class SnapshotCatalog:
     @staticmethod
     def _union(spark: SparkSession, dfs: list[DataFrame], schema: dict) -> DataFrame:
         """Chain parts as one frame; with no part (every file masked,
-        deleted or empty), an empty frame of the chain head's ``schema``."""
+        deleted or empty), an empty frame of the chain head's ``schema``
+        (from Arrow: a LocalTableScan, not an ExistingRDD scan that starts
+        Python workers)."""
         if not dfs:
-            return spark.createDataFrame([], T.StructType.fromJson(schema))
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            struct = T.StructType.fromJson(schema)
+            return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
         df = dfs[0]
         for other in dfs[1:]:
             # allowMissingColumns = Iceberg add-column schema evolution:

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "qsvspark",
@@ -33,7 +35,20 @@ def get_spark(
     # master/executor config — forcing local[] would fight it. The env
     # marker is how pyspark's launcher hands the JVM to Python.
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        builder = (
+            builder.master(f"local[{cpus}]")
+            # Each Python task calls importlib.invalidate_caches(); on
+            # CPython < 3.13 that re-reads the whole directory of every
+            # zipimporter in the worker (spark-core jar, pyspark.zip, py4j
+            # zip): 0.15-0.45 s per task. qsvspark.workerd is pyspark's
+            # daemon re-reading only archives that changed. Local mode
+            # only: under spark-submit the daemon starts before the
+            # --py-files zip is on sys.path, so it could not import this
+            # package. The checkout root on PYTHONPATH lets workers import
+            # it from any working directory.
+            .config("spark.python.daemon.module", "qsvspark.workerd")
+            .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
+        )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))

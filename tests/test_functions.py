@@ -474,6 +474,28 @@ class TestConnectedComponents:
         assert plan_chars(long) <= 1.5 * plan_chars(short)
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
+    def test_pairs_evaluated_once(self, spark):
+        """The edge set is checkpointed before the rounds start: a pairs
+        frame built through a counting UDF is evaluated for the edges and
+        their mirror (2 per pair row), not again in every round."""
+        from pyspark.sql.types import LongType
+
+        from qsvspark.functions import connected_components
+
+        evals = spark.sparkContext.accumulator(0)
+
+        def counted(i):
+            evals.add(1)
+            return i
+
+        n_edges = 16
+        ids = F.udf(counted, LongType())(F.col("id"))
+        pairs = spark.range(n_edges).select(ids.alias("id_a"), (ids + 1).alias("id_b"))
+        rows = connected_components(pairs, max_iter=n_edges + 8).collect()
+        assert {r["group_id"] for r in rows} == {0}
+        assert len(rows) == n_edges + 1
+        assert 0 < evals.value <= 2 * n_edges
+
     def test_non_convergence_raises(self, spark):
         from qsvspark.functions import connected_components
 

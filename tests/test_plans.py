@@ -230,3 +230,31 @@ class TestSequencePackingPlan:
         assert "Python" not in layout_plan and "MapIn" not in layout_plan
         read = [l for l in layout_plan.splitlines() if "ReadSchema" in l]
         assert read and all("tokens:" not in l for l in read)
+
+
+class TestNoPythonScan:
+    """Small driver-built frames come from Arrow as a LocalTableScan. A
+    Python list would plan as ``Scan ExistingRDD``, whose execution starts
+    Python workers."""
+
+    def test_stats_result_is_local(self, spark, events):
+        from qsvspark.io.sinks import stats
+
+        plan = plan_of(stats(events.select("event_type", "ts")))
+        assert "ExistingRDD" not in plan
+        assert "LocalTableScan" in plan
+
+    def test_empty_chain_read_is_local(self, spark, tmp_path):
+        from qsvspark.io.snapshot import SnapshotCatalog
+
+        cat = SnapshotCatalog(str(tmp_path / "wh"))
+        df = spark.createDataFrame([("a", 1)], "k string, v int")
+        parent = cat.write(df, "t", partition_by="k", count_by="k")["snapshot"]
+        schema = cat.read(spark, "t").schema
+        # replacing the only partition with nothing leaves no part to read
+        cat.write(df.where("v < 0"), "t", partition_by="k", count_by="k",
+                  parent=parent, replace_partitions=["a"])
+        out = cat.read(spark, "t")
+        assert out.collect() == []
+        assert out.schema == schema
+        assert "ExistingRDD" not in plan_of(out)

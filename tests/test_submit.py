@@ -2,8 +2,12 @@
 `spark-submit --py-files dist/qsvspark.zip jobs/pipeline.py`.
 
 The job script is copied into a bare temp directory (no qsvspark checkout
-next to it), so the subprocess can only import the engine from the shipped
-zip — this proves the artifact tools/package.py builds is self-sufficient.
+next to it) and submitted from there, so neither the driver nor its Python
+workers can import the engine from anywhere but the shipped zip — this
+proves the artifact tools/package.py builds is self-sufficient. It also
+pins that spark-submit keeps Spark's own worker daemon: get_spark names
+qsvspark.workerd only for the local sessions it starts itself, because a
+daemon starts before the --py-files zip is on its sys.path.
 A second identical submit must resume from the committed snapshots instead
 of recomputing (kill-and-restart safety across PROCESS boundaries, not just
 within a session like tests/test_pipeline.py covers)."""
@@ -58,8 +62,10 @@ class TestSparkSubmitShipping:
         ]
         env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
                    PYSPARK_DRIVER_PYTHON=sys.executable)
+        env.pop("PYTHONPATH", None)  # nothing but the zip may reach qsvspark
         proc = subprocess.run(cmd, capture_output=True, text=True,
-                              timeout=600, env=env)
+                              timeout=600, env=env,
+                              cwd=os.path.dirname(s["job"]))
         assert proc.returncode == 0, proc.stderr[-4000:]
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
         return json.loads(line)
