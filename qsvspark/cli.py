@@ -7,9 +7,10 @@ commands are split on standalone ``-`` tokens; each command has a
 whitelist of options (:19-113, validated :115-126); short options fuse
 values (``-sVal`` / ``-s=Val``, :206-262); a chain with no finalizer gets
 an implicit ``showtable`` (main.rs:91-110). ``--batch-size`` accepts
-B/KB/MB/GB and clamps to 1MB-10GB (command.rs:721-778) — parsed and
-validated for compatibility, then ignored: one distributed write replaces
-the reference's re-run-the-plan-per-batch streaming (SURVEY.md §4.2).
+B/KB/MB/GB and clamps to 1MB-10GB (command.rs:721-778); ``show`` and
+``dump`` turn it into a row count (estimate_batch_rows) and stream the
+result through the driver in toLocalIterator slices of that size. The
+plan runs once, not once per batch as in the reference (SURVEY.md §4.2).
 
 This is a thin dispatcher: every operator is the same qsvspark.ops /
 io implementation the fluent API uses — one IR, like the reference.

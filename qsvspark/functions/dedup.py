@@ -103,17 +103,20 @@ def _affine_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     ]
 
 
+def _hash_shingles(shingles: Column) -> Column:
+    """xxhash64 of each shingle, reduced to [0, p) — the one input array
+    every affine minhash lane derives from."""
+    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
+
+
 def shingle_hashes(text_col: str, k: int) -> Column:
     """xxhash64 of each k-shingle, reduced to [0, p) — computed ONCE per
     shingle; every minhash lane derives from this array. No distinct
     pass: min over a multiset equals min over its set, so duplicate
     shingles cannot change any minhash lane and array_distinct's O(n²)
     string comparisons are pure waste here. (Inline normalization —
-    pipelines stage the normalized text first, see minhash_lsh_pairs.)"""
-    return F.transform(
-        _shingle_seq(_norm_text(text_col), k),
-        lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-    )
+    pipelines stage the normalized text first, see _minhash_bands.)"""
+    return _hash_shingles(_shingle_seq(_norm_text(text_col), k))
 
 
 def minhash_signature_affine(
@@ -169,8 +172,121 @@ def minhash_signature(
         return F.array(
             *[F.array_min(F.transform(sh, hash_j(j))) for j in range(num_hashes)]
         )
-    hashed = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
-    return minhash_signature_affine(hashed, num_hashes)
+    return minhash_signature_affine(_hash_shingles(sh), num_hashes)
+
+
+def _explode_bands(sig: DataFrame, id_col: str, buckets: list[Column]) -> DataFrame:
+    """``(id, band, bucket)``: one row per (doc, band), ``buckets[b]``
+    being band b's bucket expression over ``sig``'s columns."""
+    return sig.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
+                    for b, bucket in enumerate(buckets)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, "bb.band", "bb.bucket")
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_size: int | None,
+    min_size: int | None = None,
+) -> DataFrame:
+    """Every i<j member pair ``(id_a, id_b)`` of each ``keys`` bucket, one
+    row per (bucket, pair) — callers dedupe or count.
+
+    ONE shuffle: group each bucket and expand its sorted member list as
+    an expression — a self-join on the bucket key would shuffle the rows
+    twice and re-run the whole upstream (signature) pipeline for each
+    side. Bucket membership is O(members) state per group. ``max_size``
+    drops degenerate buckets after a size check (a bucket of B members
+    yields B(B−1)/2 pairs; its members are exact/extreme dups — route
+    them through dedup_exact, O(B)); with a cap, ``min_size`` also drops
+    buckets too small to pair."""
+    buckets = rows.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
+    )
+    if max_size is not None:
+        size = F.size("__ids")
+        keep = size <= max_size
+        buckets = buckets.filter(keep if min_size is None else (size >= min_size) & keep)
+    combos = F.flatten(
+        F.transform(
+            F.col("__ids"),
+            lambda a, i: F.transform(
+                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
+                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+            ),
+        )
+    )
+    return buckets.select(F.explode(combos).alias("p")).select(
+        F.col("p.id_a"), F.col("p.id_b")
+    )
+
+
+def _minhash_bands(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    k: int,
+    hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """``(id, band, bucket)`` rows of banded MinHash — the staged
+    signature pipeline shared by the batch (minhash_lsh_pairs) and
+    streaming (dedup_stream_minhash) candidate generators.
+
+    Evaluate-once staging, the property every heavy expression here
+    needs (Catalyst does not CSE repeated or lambda-referenced
+    subexpressions):
+      1. the NORMALIZED TEXT goes behind a projection boundary — the
+         shingle transform references it once per element, so inline it
+         would re-run lower/regexp_replace/trim |shingles| times per
+         row (measured 16 s → 0.3 s single-core at sf0.1);
+      2. the per-shingle work (distinct array / hash array) goes behind
+         a second boundary — the num_hashes array_min lanes each
+         re-evaluate their input (measured 45 s → 10 s at sf0.01)."""
+    rows_per_band = num_hashes // bands
+    staged = df.select(F.col(id_col), _norm_text(text_col).alias("__t"))
+    if hash_fn == "md5_60":
+        # oracle family: per-lane salted md5 over the DISTINCT shingle
+        # array (the DuckDB replica uses list_distinct)
+        sig = staged.select(
+            F.col(id_col),
+            F.array_distinct(_shingle_seq(F.col("__t"), k)).alias("__sh"),
+        ).select(
+            F.col(id_col),
+            minhash_signature(
+                text_col, num_hashes, k, hash_fn, shingles=F.col("__sh")
+            ).alias("__sig"),
+        )
+    else:
+        # production family: one xxhash64 per shingle (no distinct pass —
+        # min over a multiset == min over its set), lanes are affine
+        # derivations of the staged hash array
+        sig = staged.select(
+            F.col(id_col),
+            _hash_shingles(_shingle_seq(F.col("__t"), k)).alias("__hs"),
+        ).select(
+            F.col(id_col),
+            minhash_signature_affine(F.col("__hs"), num_hashes).alias("__sig"),
+        )
+
+    def band_bucket(b: int) -> Column:
+        vals = [F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
+        if hash_fn == "md5_60":
+            # concat-string bucket: reproducible in any engine
+            return F.concat_ws("-", *[v.cast("string") for v in vals])
+        return F.xxhash64(*vals).cast("string")
+
+    return _explode_bands(sig, id_col, [band_bucket(b) for b in range(bands)])
 
 
 def minhash_lsh_pairs(
@@ -195,95 +311,16 @@ def minhash_lsh_pairs(
     from candidate generation (their members are by construction exact
     or extreme dups — route those through dedup_exact first, which is
     O(B)). The cap turns worst-case quadratic blowup at 100-TB scale
-    into a bounded skip; dropped buckets are observable via the
-    ``lsh_dropped_buckets`` metric column pattern in tests.
+    into a bounded skip; dropped buckets are not reported, so their
+    members pair only through the bands they did not fill.
+
+    The signature stage is compute-bound, so it must not inherit a
+    byte-sized partition count — see _ensure_parallelism.
     """
-    rows_per_band = num_hashes // bands
-    # Evaluate-once staging, the property every heavy expression here
-    # needs (Catalyst does not CSE repeated or lambda-referenced
-    # subexpressions):
-    #   1. the NORMALIZED TEXT goes behind a projection boundary — the
-    #      shingle transform references it once per element, so inline it
-    #      would re-run lower/regexp_replace/trim |shingles| times per
-    #      row (measured 16 s → 0.3 s single-core at sf0.1);
-    #   2. the per-shingle work (distinct array / hash array) goes behind
-    #      a second boundary — the num_hashes array_min lanes each
-    #      re-evaluate their input (measured 45 s → 10 s at sf0.01).
-    # A compute-bound stage also must not inherit a byte-sized partition
-    # count — see _ensure_parallelism.
-    staged = _ensure_parallelism(df).select(
-        F.col(id_col), _norm_text(text_col).alias("__t")
+    banded = _minhash_bands(
+        _ensure_parallelism(df), text_col, id_col, num_hashes, bands, k, hash_fn
     )
-    if hash_fn == "md5_60":
-        # oracle family: per-lane salted md5 over the DISTINCT shingle
-        # array (the DuckDB replica uses list_distinct)
-        sig = staged.select(
-            F.col(id_col),
-            F.array_distinct(_shingle_seq(F.col("__t"), k)).alias("__sh"),
-        ).select(
-            F.col(id_col),
-            minhash_signature(
-                text_col, num_hashes, k, hash_fn, shingles=F.col("__sh")
-            ).alias("__sig"),
-        )
-    else:
-        # production family: one xxhash64 per shingle (no distinct pass —
-        # min over a multiset == min over its set), lanes are affine
-        # derivations of the staged hash array
-        sig = staged.select(
-            F.col(id_col),
-            F.transform(
-                _shingle_seq(F.col("__t"), k),
-                lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-            ).alias("__hs"),
-        ).select(
-            F.col(id_col),
-            minhash_signature_affine(F.col("__hs"), num_hashes).alias("__sig"),
-        )
-
-    def band_bucket(b: int) -> Column:
-        vals = [F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        if hash_fn == "md5_60":
-            # concat-string bucket: reproducible in any engine
-            return F.concat_ws("-", *[v.cast("string") for v in vals])
-        return F.xxhash64(*vals).cast("string")
-
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # ONE shuffle: group each (band, bucket) and expand the i<j member
-    # combinations as an expression — a self-join on the bucket key would
-    # shuffle the banded rows twice and re-run the whole signature
-    # pipeline for each side. Bucket membership is O(members) state per
-    # group; the cap drops degenerate buckets after a size check (their
-    # members are exact/extreme dups — route through dedup_exact, O(B)).
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    return _bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket_size).distinct()
 
 
 # --- SimHash ----------------------------------------------------------
@@ -392,7 +429,7 @@ def shared_span_pairs(
       the exchange, so shuffle rows are (long, id) instead of k-word
       strings — ~10× fewer bytes at k=8;
     * grams group once; each group's sorted member list expands to i<j
-      pairs as an expression (same group-then-expand as
+      pairs as an expression (_bucket_pairs, shared with
       minhash_lsh_pairs — a self-join would shuffle the grams twice);
     * ``max_df`` drops grams appearing in more docs than the cap BEFORE
       pair expansion: boilerplate (headers, licenses) otherwise yields
@@ -414,24 +451,9 @@ def shared_span_pairs(
             F.array_distinct(word_ngrams(F.col(text_col), k, lower=lower))
         ).alias("__g"),
     ).select(F.col(id_col), F.xxhash64("__g").alias("__h"))
-    groups = staged.groupBy("__h").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    )
-    groups = groups.filter(
-        (F.size("__ids") >= 2) & (F.size("__ids") <= max_df)
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda a, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-            ),
-        )
-    )
     return (
-        groups.select(F.explode(combos).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _bucket_pairs(staged, ["__h"], id_col, max_df, min_size=2)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_spans"))
     )
 
@@ -605,44 +627,11 @@ def embedding_near_dups_lsh(
     planes = _hyperplanes(dim, bits, seed)
     sig = df.select(F.col(id_col), signature_expr(vec_col, planes).alias("__sig"))
     mask = F.lit((1 << r) - 1)
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("__sig"), b * r)
-                        .bitwiseAND(mask)
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    # one groupBy shuffle + in-bucket combination expansion (same
-    # restructure as minhash_lsh_pairs: no bucket self-join, no second
-    # evaluation of the signature pipeline)
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    combos = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size(F.col("__ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(combos).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    banded = _explode_bands(sig, id_col, [
+        F.shiftrightunsigned(F.col("__sig"), b * r).bitwiseAND(mask)
+        for b in range(bands)
+    ])
+    cand = _bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket_size).distinct()
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     return (

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from qsvspark.functions.dedup import cosine
+from qsvspark.functions.dedup import _dot, cosine
 
 
 def _manifest_probe(catalog, table: str, key: str, values: list) -> tuple[dict, list[str]]:
@@ -64,7 +64,9 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact cosine top-k for one query vector (broadcast as a literal)."""
+    """Exact cosine top-k for one query vector (broadcast as a literal)
+    → TakeOrderedAndProject. Also the exact rerank of every ANN
+    candidate set."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         df.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cos"))
@@ -82,12 +84,7 @@ def signature_expr(vec_col: str, planes: list[list[float]]) -> Column:
     """B-bit signature as a long: bit b = 1 iff dot(v, plane_b) > 0."""
     sig = F.lit(0).cast("long")
     for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), p, lambda x, y: (x * y).cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot = _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in plane]))
         sig = sig.bitwiseOR(F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long")))
     return sig
 
@@ -101,18 +98,6 @@ def query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
         if sum(q * p for q, p in zip(query_vec, plane)) > 0:
             qsig |= 1 << b
     return qsig
-
-
-def _rerank_topk(
-    cand: DataFrame, query_vec: list[float], k: int, vec_col: str, id_col: str
-) -> DataFrame:
-    """Exact-cosine rerank of a candidate set → TakeOrderedAndProject."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def lsh_ann_topk(
@@ -135,7 +120,7 @@ def lsh_ann_topk(
     cand = df.withColumn("__sig", sig).filter(
         F.bit_count(F.col("__sig").bitwiseXOR(F.lit(qsig).cast("long"))) <= probe_hamming
     )
-    return _rerank_topk(cand, query_vec, k, vec_col, id_col)
+    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
 
 # --- IVF (inverted-file) ANN — the second scale path ------------------
@@ -255,7 +240,7 @@ def ivf_topk(
     repeated queries skip the scan entirely."""
     probe = probed_centroids(query_vec, centroids, nprobe)
     cand = df.filter(ivf_assign_expr(vec_col, centroids).isin(*probe))
-    return _rerank_topk(cand, query_vec, k, vec_col, id_col)
+    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def semantic_dedup(
@@ -422,12 +407,12 @@ class IvfIndex:
         id_col = lin.get("id_col", self.id_col)
         vec_col = lin.get("vec_col", self.vec_col)
         if not dirs:
-            return _rerank_topk(
+            return brute_force_topk(
                 _manifest_empty_df(spark, m, [id_col, vec_col]),
                 query_vec, k, vec_col, id_col,
             )
         cand = spark.read.parquet(*dirs)
-        return _rerank_topk(cand, query_vec, k, vec_col, id_col)
+        return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
 
 class AnnIndex:
@@ -535,11 +520,11 @@ class AnnIndex:
         id_col = lin.get("id_col", self.id_col)
         vec_col = lin.get("vec_col", self.vec_col)
         if not dirs:
-            return _rerank_topk(
+            return brute_force_topk(
                 _manifest_empty_df(spark, m, [id_col, vec_col]),
                 query_vec, k, vec_col, id_col,
             )
         cand = spark.read.parquet(*dirs).filter(
             F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig).cast("long"))) <= probe_hamming
         )
-        return _rerank_topk(cand, query_vec, k, vec_col, id_col)
+        return brute_force_topk(cand, query_vec, k, vec_col, id_col)

@@ -100,30 +100,33 @@ def add_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "finge
 # ---------------------------------------------------------------------------
 
 
-def _shifted(arr: Column, j: int) -> Column:
-    """arr without its first j elements (one whole-array slice)."""
-    return F.slice(arr, j + 1, F.greatest(F.size(arr) - j, F.lit(0)))
+def _gram_fold(arr: Column, n: int, start: Column, step, empty_type: str) -> Column:
+    """One value per length-n window of ``arr``, ELEMENT-WISE: starting
+    from ``start`` (``arr`` or a per-element map of it), fold ``step``
+    in by zip_with against each of the n-1 shifted copies of ``arr``
+    (n-1 whole-array slices + n-1 element-wise steps, O(n·len) total).
+    The obvious ``transform(sequence(...), i -> f(slice(arr, i, n)))``
+    copies an n-element sub-array per position — O(n·len) allocations
+    per row, measured 20x slower on the sf0.1 corpus. zip_with pads the
+    shorter side with null, so the ragged tail yields partial windows —
+    sliced off here; fewer than n elements give an empty
+    ``empty_type`` array."""
+    acc = start
+    for j in range(1, n):
+        acc = F.zip_with(
+            acc, F.slice(arr, j + 1, F.greatest(F.size(arr) - j, F.lit(0))), step
+        )
+    return F.when(F.size(arr) < n, F.array().cast(empty_type)).otherwise(
+        F.slice(acc, 1, F.size(arr) - (n - 1))
+    )
 
 
 def word_ngrams(col: Column, n: int, lower: bool = True) -> Column:
     """Word n-grams as an array<string> column — the unit of benchmark
-    decontamination. Pure codegen, and — the part that matters at scale
-    — ELEMENT-WISE: each gram is built by zip_with folds over shifted
-    copies of the word array (n-1 whole-array slices + n-1 element-wise
-    concats, O(n·len) total). The obvious
-    ``transform(sequence(...), i -> array_join(slice(words, i, n)))``
-    copies a k-element sub-array per position — O(k·len) allocations
-    per row, measured 20x slower on the sf0.1 corpus. zip_with pads the
-    shorter side with null and concat_ws skips nulls, so the ragged
-    tail produces short grams — sliced off below."""
+    decontamination. Pure codegen, element-wise (see _gram_fold)."""
     words = _ws_tokens(F.lower(col) if lower else col)
-    acc = words
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc, _shifted(words, j), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.when(F.size(words) < n, F.array().cast("array<string>")).otherwise(
-        F.slice(acc, 1, F.size(words) - (n - 1))
+    return _gram_fold(
+        words, n, words, lambda a, b: F.concat_ws(" ", a, b), "array<string>"
     )
 
 
@@ -353,15 +356,9 @@ def add_repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
         return F.aggregate(srt, zero, step, lambda acc: acc["best"])
 
     word_hashes = F.transform(words, lambda w: F.xxhash64(w))
-    # element-wise pair hash (zip against the 1-shifted array) — the
-    # per-position slice(words, i, 2) variant costs O(len) array copies
-    # per row (see word_ngrams)
-    bigram_hashes = F.when(F.size(words) < 2, F.array().cast("array<long>")).otherwise(
-        F.slice(
-            F.zip_with(words, _shifted(words, 1), lambda a, b: F.xxhash64(a, b)),
-            1,
-            F.size(words) - 1,
-        )
+    # element-wise pair hash (see _gram_fold)
+    bigram_hashes = _gram_fold(
+        words, 2, words, lambda a, b: F.xxhash64(a, b), "array<long>"
     )
     return df.withColumns(
         {

@@ -36,18 +36,10 @@ def show(
     incrementally."""
     out = file or sys.stdout
     if batch_size:
-        import csv as _csv
-
-        w = _csv.writer(out, lineterminator="\n")
-        if header:
-            w.writerow(df.columns)
-        buf: list = []
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            buf.append(tuple(row))
-            if len(buf) >= batch_size:
-                w.writerows(buf)
-                buf.clear()
-        w.writerows(buf)
+        _write_csv_rows(
+            df.toLocalIterator(prefetchPartitions=True), df.columns, out, ",",
+            flush_every=batch_size, header=header,
+        )
         return ""  # streamed — not buffered into a return string
     pdf = df.toPandas()
     buf = _io.StringIO()
@@ -237,13 +229,14 @@ def estimate_batch_rows(
 
 
 def _write_csv_rows(rows_iter, cols: list[str], out_file, separator: str,
-                    flush_every: int = 10_000) -> None:
+                    flush_every: int = 10_000, header: bool = True) -> None:
     """One csv-module writer shared by every single-file CSV path, so the
     streamed and collected variants are byte-identical by construction."""
     import csv as _csv
 
     w = _csv.writer(out_file, delimiter=separator, lineterminator="\n")
-    w.writerow(cols)
+    if header:
+        w.writerow(cols)
     buf: list = []
     for row in rows_iter:
         buf.append(tuple(row))

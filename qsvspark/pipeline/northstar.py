@@ -52,6 +52,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from qsvspark.functions.text import _gram_fold
 from qsvspark.io.snapshot import SnapshotCatalog
 from qsvspark.pipeline.tokens import source_dim
 
@@ -193,22 +194,15 @@ def quarantine_stage(df: DataFrame) -> DataFrame:
 def token_ngram_hashes(tokens: F.Column | str, n: int) -> F.Column:
     """A 64-bit hash of every length-n token window, as array<long> —
     the membership unit for token-level decontamination. Pure codegen
-    and ELEMENT-WISE: position i's value is the xxhash64 chain
-    H(..H(H(t_i), t_{i+1}).., t_{i+n-1}), built by n-1 zip_with passes
-    against shifted copies of the token array. Equal windows hash
-    equal; distinct windows collide at the usual 2^-64 bound. The
-    naive ``transform(sequence, i -> xxhash64(slice(c, i, n)))`` copies
-    an n-element array per position — O(n·len) allocations per row,
-    measured 20x slower (see functions/text.py:word_ngrams). No
-    Python, no explode (callers choose whether to explode or probe in
-    place)."""
+    and ELEMENT-WISE (functions/text.py:_gram_fold): position i's value
+    is the xxhash64 chain H(..H(H(t_i), t_{i+1}).., t_{i+n-1}). Equal
+    windows hash equal; distinct windows collide at the usual 2^-64
+    bound. No Python, no explode (callers choose whether to explode or
+    probe in place)."""
     c = F.col(tokens) if isinstance(tokens, str) else tokens
-    acc = F.transform(c, lambda x: F.xxhash64(x))
-    for j in range(1, n):
-        shifted = F.slice(c, j + 1, F.greatest(F.size(c) - j, F.lit(0)))
-        acc = F.zip_with(acc, shifted, lambda a, x: F.xxhash64(a, x))
-    return F.when(F.size(c) < n, F.array().cast("array<long>")).otherwise(
-        F.slice(acc, 1, F.size(c) - (n - 1))
+    return _gram_fold(
+        c, n, F.transform(c, lambda x: F.xxhash64(x)),
+        lambda a, x: F.xxhash64(a, x), "array<long>",
     )
 
 

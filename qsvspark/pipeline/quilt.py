@@ -214,7 +214,8 @@ class Quilt:
                 df = self._maintenance_stage(stype, scfg or {}, base_dir)
             elif stype == "decontaminate":
                 # token-level benchmark decontamination: sources are
-                # [corpus, benchmark]; map-only arrays_overlap filter
+                # [corpus, benchmark]; size-guarded broadcast semi-join on
+                # gram hashes, then an anti-join on the matched ids
                 from qsvspark.pipeline.northstar import decontaminate_stage
 
                 srcs = self._resolve(scfg.get("sources", []))

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from qsvspark.functions.dedup import _minhash_bands
+
 
 def dedup_stream_exact(
     df: DataFrame,
@@ -99,9 +101,9 @@ def dedup_stream_minhash(
     family) with cross-micro-batch state — the 100-TB streaming plan the
     module docstring promises.
 
-    Per micro-batch, each row gets the same staged signature pipeline as
-    batch (normalized text → one xxhash64 per shingle → affine lanes →
-    band buckets), then state keyed on (band, bucket) holds the member
+    Per micro-batch, each row goes through batch's own staged signature
+    pipeline (dedup._minhash_bands: normalized text → one xxhash64 per
+    shingle → affine lanes → band buckets), then state keyed on (band, bucket) holds the member
     ids seen so far: a new arrival emits one (id_a, id_b) candidate per
     existing member (id_a < id_b) and joins the bucket. Over any arrival
     order, the union of emitted pairs equals the batch candidate set on
@@ -119,37 +121,7 @@ def dedup_stream_minhash(
         entirely at the end; a stream cannot retract, so it truncates);
       - ``ttl_minutes`` expires idle buckets, bounding unbounded streams.
     """
-    from qsvspark.functions.dedup import (
-        _MH_PRIME, _norm_text, _shingle_seq, minhash_signature_affine,
-    )
-
-    rows_per_band = num_hashes // bands
-    staged = df.select(F.col(id_col), _norm_text(text_col).alias("__t")).select(
-        F.col(id_col),
-        F.transform(
-            _shingle_seq(F.col("__t"), k),
-            lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)),
-        ).alias("__hs"),
-    ).select(
-        F.col(id_col),
-        minhash_signature_affine(F.col("__hs"), num_hashes).alias("__sig"),
-    )
-
-    def band_bucket(b: int):
-        vals = [F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        return F.xxhash64(*vals).cast("string")
-
-    banded = staged.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = _minhash_bands(df, text_col, id_col, num_hashes, bands, k)
 
     id_type = dict(df.dtypes)[id_col]
 

@@ -142,6 +142,25 @@ class TestDedup:
         assert (0, 1) in got            # small buckets unaffected
         assert len(got) < 10_000        # degenerate 50M-pair bucket dropped
 
+    def test_embedding_lsh_bucket_cap_bounds_degenerate_buckets(self, spark):
+        """50 identical vectors share every band bucket: uncapped they
+        yield all C(50, 2) pairs; a cap of 10 drops those buckets while
+        the near pair (opposite direction, so never in their buckets)
+        still pairs up."""
+        from itertools import combinations
+
+        u = [1.0, 0.5, -0.3, 0.8, -0.6, 0.2, 0.9, -0.4]
+        rows = [(0, u), (1, [x + 0.01 for x in u])]
+        rows += [(i, [-x for x in u]) for i in range(2, 52)]
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+        def pairs(**kw):
+            return {(r["id_a"], r["id_b"]) for r in
+                    embedding_near_dups_lsh(df, dim=8, **kw).collect()}
+
+        assert pairs() == {(0, 1)} | set(combinations(range(2, 52), 2))
+        assert pairs(max_bucket_size=10) == {(0, 1)}
+
     def test_simhash_near_for_near_dups(self, spark, docs):
         sh = simhash(docs).select("doc_id", "simhash")
         a = sh.alias("a").crossJoin(sh.alias("b")).filter("a.doc_id < b.doc_id")
