@@ -154,13 +154,14 @@ def pack_chunked(
     for b in sorted(totals):
         offsets[b] = acc
         acc += totals[b] or 0
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(b), int(o)) for b, o in offsets.items()] or [(0, 0)],
-            "_bkt long, _bkt_offset long",
-        )
-    )
+    # from Arrow: a LocalTableScan, not an ExistingRDD scan whose every
+    # broadcast starts a Python worker
+    import pyarrow as pa
+
+    off_df = F.broadcast(df.sparkSession.createDataFrame(pa.table({
+        "_bkt": pa.array([int(b) for b in offsets] or [0], pa.int64()),
+        "_bkt_offset": pa.array([int(o) for o in offsets.values()] or [0], pa.int64()),
+    })))
 
     # Pass 2: within-bucket exclusive cumsum. partitionBy(_bkt) keeps
     # every sort task bucket-sized — no single-partition window.

@@ -18,43 +18,13 @@ from __future__ import annotations
 
 import itertools
 import math
-import os
 import random
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from qsvspark.functions.dedup import _dot, cosine
-
-
-def _manifest_probe(catalog, table: str, key: str, values: list) -> tuple[dict, list[str]]:
-    """Resolve the probed partition directories of an index table THROUGH
-    its snapshot manifest — the manifest's ``partition_counts`` (captured
-    at commit time from parquet footers) is the authoritative bucket list,
-    so no filesystem enumeration happens here and the probe works against
-    any storage the catalog abstracts (the Iceberg manifest-file-list
-    equivalent). Returns (manifest, probed_dirs)."""
-    m = catalog.manifest(table)
-    if m is None:
-        raise FileNotFoundError(f"index table '{table}' not built")
-    counts = m.get("partition_counts") or {}
-    data_dir = os.path.join(catalog._table_dir(table), m["snapshot"], "data")  # noqa: SLF001
-    dirs = [
-        os.path.join(data_dir, f"{key}={v}") for v in values if str(v) in counts
-    ]
-    return m, dirs
-
-
-def _manifest_empty_df(spark: SparkSession, manifest: dict, cols: list[str]) -> DataFrame:
-    """Empty DataFrame with the manifest-recorded types of ``cols`` — the
-    build-time schema, so an empty-probe result unions cleanly with a
-    non-empty one even when ids are strings (or any non-long type)."""
-    full = T.StructType.fromJson(manifest["schema"])
-    picked = {f.name: f for f in full.fields}
-    return spark.createDataFrame(
-        [], T.StructType([picked[c] for c in cols if c in picked])
-    )
+from qsvspark.io.snapshot import SnapshotCatalog
 
 
 def brute_force_topk(
@@ -214,12 +184,10 @@ def probed_centroids(
 ) -> list[int]:
     """Driver-side: the nprobe centroid ids nearest the query (same
     round-6 cosine rule as ivf_assign_expr)."""
-    import math as _math
-
-    qn = _math.sqrt(sum(v * v for v in query_vec))
+    qn = math.sqrt(sum(v * v for v in query_vec))
     sims = []
     for i, c in enumerate(centroids):
-        cn = _math.sqrt(sum(v * v for v in c))
+        cn = math.sqrt(sum(v * v for v in c))
         sims.append((round(sum(a * b for a, b in zip(query_vec, c)) / (qn * cn), 6), i))
     sims.sort(key=lambda t: (-t[0], t[1]))
     return sorted(i for _, i in sims[:nprobe])
@@ -348,12 +316,12 @@ class IvfIndex:
     id is computed once and stored in a SnapshotCatalog table PARTITIONED
     BY centroid, so a query reads exactly the nprobe probed partition
     directories — nprobe/n_centroids of the data, no scan, no per-row
-    work outside the probed cells. Maps 1:1 to an Iceberg table
-    partitioned by the centroid id on a real cluster."""
+    work outside the probed cells. The directories come from the
+    snapshot manifest through ``SnapshotCatalog.read_partitions``, never
+    from listing storage. Maps 1:1 to an Iceberg table partitioned by
+    the centroid id on a real cluster."""
 
     def __init__(self, warehouse: str, table: str = "ivf_index"):
-        from qsvspark.io.snapshot import SnapshotCatalog
-
         self.catalog = SnapshotCatalog(warehouse)
         self.table = table
         self.centroids: list[list[float]] | None = None
@@ -395,24 +363,16 @@ class IvfIndex:
         k: int = 10,
         nprobe: int = 4,
     ) -> DataFrame:
+        lin = (self.catalog.manifest(self.table) or {}).get("lineage") or {}
         if self.centroids is None:
-            m = self.catalog.manifest(self.table)
-            cents = (m or {}).get("lineage", {}).get("centroids")
-            if cents is None:
+            if lin.get("centroids") is None:
                 raise ValueError("IvfIndex not built (or centroids not loaded)")
-            self.centroids = cents
+            self.centroids = lin["centroids"]
         probe = probed_centroids(query_vec, self.centroids, nprobe)
-        m, dirs = _manifest_probe(self.catalog, self.table, "centroid", probe)
-        lin = m.get("lineage") or {}
-        id_col = lin.get("id_col", self.id_col)
-        vec_col = lin.get("vec_col", self.vec_col)
-        if not dirs:
-            return brute_force_topk(
-                _manifest_empty_df(spark, m, [id_col, vec_col]),
-                query_vec, k, vec_col, id_col,
-            )
-        cand = spark.read.parquet(*dirs)
-        return brute_force_topk(cand, query_vec, k, vec_col, id_col)
+        cand = self.catalog.read_partitions(spark, self.table, probe)
+        return brute_force_topk(
+            cand, query_vec, k, lin.get("vec_col", self.vec_col), lin.get("id_col", self.id_col)
+        )
 
 
 class AnnIndex:
@@ -428,7 +388,9 @@ class AnnIndex:
     reading a strict subset of the buckets (pytest-asserted). At cluster
     scale the same layout maps to an Iceberg table partitioned by
     sig_prefix; the probe is a partition-pruned read of
-    sum_{i<=h} C(prefix_bits, i) of the 2^prefix_bits directories.
+    sum_{i<=h} C(prefix_bits, i) of the 2^prefix_bits directories, which
+    ``SnapshotCatalog.read_partitions`` resolves from the snapshot
+    manifest.
     """
 
     def __init__(
@@ -439,8 +401,6 @@ class AnnIndex:
         prefix_bits: int = 6,
         seed: int = 42,
     ):
-        from qsvspark.io.snapshot import SnapshotCatalog
-
         if not 0 < prefix_bits <= bits:
             raise ValueError("prefix_bits must be in (0, bits]")
         self.catalog = SnapshotCatalog(warehouse)
@@ -496,11 +456,6 @@ class AnnIndex:
                 out.append(p)
         return sorted(out)
 
-    def _bucket_dirs(self, prefixes: list[int]) -> tuple[dict, list[str]]:
-        """Probed bucket directories, resolved from the snapshot
-        MANIFEST's partition_counts — never by listing the filesystem."""
-        return _manifest_probe(self.catalog, self.table, "sig_prefix", prefixes)
-
     def query(
         self,
         spark: SparkSession,
@@ -515,16 +470,11 @@ class AnnIndex:
             self.dim = len(query_vec)
         planes = _hyperplanes(self.dim, self.bits, self.seed)
         qsig = query_signature(query_vec, planes)
-        m, dirs = self._bucket_dirs(self.probed_prefixes(qsig, probe_hamming))
-        lin = m.get("lineage") or {}
-        id_col = lin.get("id_col", self.id_col)
-        vec_col = lin.get("vec_col", self.vec_col)
-        if not dirs:
-            return brute_force_topk(
-                _manifest_empty_df(spark, m, [id_col, vec_col]),
-                query_vec, k, vec_col, id_col,
-            )
-        cand = spark.read.parquet(*dirs).filter(
+        lin = (self.catalog.manifest(self.table) or {}).get("lineage") or {}
+        probe = self.probed_prefixes(qsig, probe_hamming)
+        cand = self.catalog.read_partitions(spark, self.table, probe).filter(
             F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig).cast("long"))) <= probe_hamming
         )
-        return brute_force_topk(cand, query_vec, k, vec_col, id_col)
+        return brute_force_topk(
+            cand, query_vec, k, lin.get("vec_col", self.vec_col), lin.get("id_col", self.id_col)
+        )

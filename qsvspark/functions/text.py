@@ -10,6 +10,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qsvspark.io.snapshot import _BROADCAST_ROW_OVERHEAD
+
 # BPE-ish segmentation: letter runs, digit runs, single non-space symbols.
 # (portable subset — same semantics in Java regex and DuckDB's RE2)
 BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -140,9 +142,6 @@ def word_ngrams(col: Column, n: int, lower: bool = True) -> Column:
 # io/snapshot.py:_DELETE_BROADCAST_MAX_BYTES, which gates the analogous
 # delete-key broadcast.
 BENCH_BROADCAST_MAX_BYTES = 128 * 1024 * 1024
-# rough per-row overhead of Spark's LongToUnsafeRowMap/BytesToBytesMap
-# broadcast relations (key hash + offsets + UnsafeRow header)
-_BROADCAST_ROW_OVERHEAD = 48
 
 
 def broadcast_if_small(

@@ -31,11 +31,16 @@ reported into a new snapshot of one table. Both ``write`` and
 ``write_tasks`` end in the same ``_commit``: footer accounting (row
 counts included), parent chaining, manifest, CURRENT flip.
 
-Every consumer of an append chain (``read_parts``, ``data_files``,
-``compact``, ``expire_snapshots``) goes through ONE walk,
+Every consumer of an append chain (``read_parts``, ``read_partitions``,
+``data_files``, ``compact``, ``expire_snapshots``) goes through ONE walk,
 ``_resolve_chain``: the tag or CURRENT ref resolves once, each manifest
 is opened once, and each element comes back with the partition values
 and delete key files that later snapshots laid over it.
+
+Where a snapshot's files live is decided here alone: ``_data_files`` is
+the one listing of a data dir (commit accounting, broadcast sizing,
+masked reads, ``data_files``), and ``read_partitions`` reads partition
+values from the directories the manifests name, listing no storage.
 """
 
 from __future__ import annotations
@@ -57,6 +62,20 @@ from pyspark.sql import types as T
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def _data_files(data_dir: str) -> list[tuple[str, str | None]]:
+    """The one listing of a data dir: ``(path, partition value)`` per
+    parquet file in sorted order, the value decoded from Spark's
+    ``key=value`` directory name (None at the top level)."""
+    out = []
+    for root, dirs, files in os.walk(data_dir):
+        dirs.sort()
+        rel = os.path.relpath(root, data_dir)
+        part = urllib.parse.unquote(rel.split("=", 1)[1]) if "=" in rel else None
+        out.extend((os.path.join(root, fn), part)
+                   for fn in sorted(files) if fn.endswith(".parquet"))
+    return out
+
+
 def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
     """What a commit records about the files a write just produced, from
     ONE driver-side pass and no Spark job — the way Iceberg manifests
@@ -69,29 +88,19 @@ def _walk_written(data_dir: str, count_col: str | None = None) -> dict:
 
     out: dict = {"rows": 0, "schema": None, "partition_counts": {},
                  "value_counts": {} if count_col else None}
-    for root, dirs, files in os.walk(data_dir):
-        dirs.sort()  # stable partition order in the manifest
-        rel_dir = os.path.relpath(root, data_dir)
-        part = None
-        if rel_dir != "." and "=" in rel_dir:
-            part = urllib.parse.unquote(rel_dir.split("=", 1)[1])
-        for fn in sorted(files):
-            if not fn.endswith(".parquet"):
-                continue
-            pf = pq.ParquetFile(os.path.join(root, fn))
-            md = pf.metadata
-            out["rows"] += md.num_rows
-            if out["schema"] is None:
-                out["schema"] = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
-            if part is not None:
-                out["partition_counts"][part] = (
-                    out["partition_counts"].get(part, 0) + md.num_rows
-                )
-            if count_col:
-                vc = out["value_counts"]
-                for item in pf.read(columns=[count_col]).column(0).value_counts().to_pylist():
-                    key = str(item["values"])
-                    vc[key] = vc.get(key, 0) + item["counts"]
+    for path, part in _data_files(data_dir):
+        pf = pq.ParquetFile(path)
+        md = pf.metadata
+        out["rows"] += md.num_rows
+        if out["schema"] is None:
+            out["schema"] = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if part is not None:
+            out["partition_counts"][part] = out["partition_counts"].get(part, 0) + md.num_rows
+        if count_col:
+            vc = out["value_counts"]
+            for item in pf.read(columns=[count_col]).column(0).value_counts().to_pylist():
+                key = str(item["values"])
+                vc[key] = vc.get(key, 0) + item["counts"]
     if count_col:
         out["value_counts"] = dict(sorted(out["value_counts"].items()))
     return out
@@ -114,6 +123,14 @@ def _written_schema(
     return schema
 
 
+def _partition_dirs(spark: SparkSession, data_dir: str, key: str, values) -> dict:
+    """The directory under ``data_dir`` that Spark's writer names for each
+    partition value of ``key`` (null and "" become
+    ``__HIVE_DEFAULT_PARTITION__``)."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
+    return {v: os.path.join(data_dir, utils.getPartitionPathString(key, v)) for v in values}
+
+
 def _split_by(batch, col: str):
     """``(value, rows without col)`` for each distinct ``col`` value of an
     Arrow batch."""
@@ -125,9 +142,25 @@ def _split_by(batch, col: str):
         yield v, rest.filter(keys.is_null() if v is None else pc.equal(keys, v))
 
 
+def _spark_writer(df: DataFrame):
+    """The Spark writer of every snapshot data write, snappy. Token-id /
+    unique-id heavy tables: dictionary encoding only balloons then falls
+    back (ids are near-random), and parquet v2 delta-packed encodings
+    beat v1 plain by ~30% on encode time; 32MB row groups bound
+    per-writer buffer memory when a task holds one open writer per
+    routed sink."""
+    return (
+        df.write.mode("overwrite")
+        .option("compression", "snappy")
+        .option("parquet.enable.dictionary", "false")
+        .option("parquet.writer.version", "v2")
+        .option("parquet.block.size", str(32 * 1024 * 1024))
+    )
+
+
 def _parquet_writer(path: str, schema, footer_schema: str):
-    """A pyarrow writer with the settings of the Spark writes in
-    ``SnapshotCatalog.write``: snappy, no dictionary, v2 data pages and
+    """A pyarrow writer with the settings of ``_spark_writer``: snappy,
+    no dictionary, v2 data pages and
     DELTA_BINARY_PACKED for every integer leaf (list elements and struct
     fields included), and the Spark schema JSON under the footer key
     Spark's own writer uses, so readers and commit accounting cannot
@@ -205,6 +238,10 @@ def _zorder_expr(cols_ranges: list[tuple[str, float, float]],
 # broadcast. (Iceberg bounds delete application per data file via its
 # manifests; this is the emulation-layer equivalent bound.)
 _DELETE_BROADCAST_MAX_BYTES = 32 * 1024 * 1024
+# rough per-row overhead of Spark's LongToUnsafeRowMap/BytesToBytesMap
+# broadcast relations (key hash + offsets + UnsafeRow header); every
+# broadcast size estimate adds it
+_BROADCAST_ROW_OVERHEAD = 48
 
 
 def _replace_file(path: str, content) -> None:
@@ -221,46 +258,29 @@ def _replace_file(path: str, content) -> None:
     os.replace(tmp, path)
 
 
-def _dir_bytes(*dirs: str) -> int:
-    """Total bytes of parquet data under the given directories — file
-    sizes only, no reads; used to size-gate broadcasts."""
-    total = 0
-    for d in dirs:
-        for root, _, files in os.walk(d):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, fn))
-    return total
-
-
 def _broadcast_estimate_bytes(*dirs: str) -> int:
     """Estimated IN-MEMORY size of the broadcast relation built from the
     parquet under ``dirs``. At-rest snappy bytes understate the hazard —
     32 MB of highly-compressible key parquet can decompress to hundreds
     of MB of broadcast relation — so this reads only the FOOTERS
     (metadata, not data) and sums each column chunk's
-    total_uncompressed_size, plus a per-row overhead for the hash
-    relation (key hash + offsets + UnsafeRow header). Falls back to
-    3x the at-rest bytes when footer stats are unreadable."""
+    total_uncompressed_size, plus ``_BROADCAST_ROW_OVERHEAD`` per row.
+    Falls back to 3x the at-rest bytes when footer stats are
+    unreadable."""
+    files = [path for d in dirs for path, _ in _data_files(d)]
     try:
         import pyarrow.parquet as pq
 
         total = 0
-        rows = 0
-        for d in dirs:
-            for root, _, files in os.walk(d):
-                for fn in files:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    md = pq.ParquetFile(os.path.join(root, fn)).metadata
-                    rows += md.num_rows
-                    for rg in range(md.num_row_groups):
-                        g = md.row_group(rg)
-                        for c in range(g.num_columns):
-                            total += g.column(c).total_uncompressed_size
-        return total + rows * 32
+        for path in files:
+            md = pq.ParquetFile(path).metadata
+            total += md.num_rows * _BROADCAST_ROW_OVERHEAD + sum(
+                md.row_group(g).column(c).total_uncompressed_size
+                for g in range(md.num_row_groups) for c in range(md.num_columns)
+            )
+        return total
     except Exception:  # noqa: BLE001 — a sizing estimate must never fail the op
-        return 3 * _dir_bytes(*dirs)
+        return 3 * sum(os.path.getsize(path) for path in files)
 
 
 class _Link(NamedTuple):
@@ -429,8 +449,7 @@ class SnapshotCatalog:
         if cluster_by:
             df = df.sortWithinPartitions(*cluster_by)
         snap = self._next_snapshot(table)
-        snap_dir = os.path.join(self._table_dir(table), snap)
-        data_dir = os.path.join(snap_dir, "data")
+        data_dir = os.path.join(self._table_dir(table), snap, "data")
         if bucket_by:
             # one shuffle into bucket layout (each task owns exactly one
             # bucket → one file per bucket, no tasks×buckets fan-out);
@@ -438,21 +457,10 @@ class SnapshotCatalog:
             # skip the sort on this side
             self._write_bucketed_data(df, data_dir, bucket_by, n_buckets)
         else:
-            writer = (
-                df
-                .write.mode("overwrite")
-                # token-id / unique-id heavy tables: dictionary encoding only
-                # balloons then falls back (ids are near-random), and parquet
-                # v2 delta-packed encodings beat v1 plain by ~30% on encode
-                # time; 32MB row groups bound per-writer buffer memory when a
-                # task holds one open writer per routed sink.
-                .option("parquet.enable.dictionary", "false")
-                .option("parquet.writer.version", "v2")
-                .option("parquet.block.size", str(32 * 1024 * 1024))
-            )
+            writer = _spark_writer(df)
             if partition_by:
                 writer = writer.partitionBy(partition_by)
-            writer.parquet(data_dir, compression="snappy")
+            writer.parquet(data_dir)
 
         return self._commit(
             df.sparkSession, df.schema, table, snap, t0,
@@ -645,17 +653,10 @@ class SnapshotCatalog:
     ) -> None:
         """Move each reported file (a ``partition``, ``path`` row) into
         ``data_dir``, under the partition directory Spark's writer would
-        name (``ExternalCatalogUtils.getPartitionPathString``: null and
-        "" become ``__HIVE_DEFAULT_PARTITION__``)."""
-        catalog_utils = (
-            spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils  # noqa: SLF001
-        )
-        dirs = {
-            v: catalog_utils.getPartitionPathString(partition_by, v)
-            for v in {r["partition"] for r in reported}
-        }
+        name (``_partition_dirs``)."""
+        dirs = _partition_dirs(spark, data_dir, partition_by, {r["partition"] for r in reported})
         for r in reported:
-            d = os.path.join(data_dir, dirs[r["partition"]])
+            d = dirs[r["partition"]]
             os.makedirs(d, exist_ok=True)
             os.replace(r["path"], os.path.join(d, os.path.basename(r["path"])))
 
@@ -923,14 +924,9 @@ class SnapshotCatalog:
         name = self._bucket_table_name(data_dir)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
-            df.repartition(n_buckets, *bucket_by)
-            .write.mode("overwrite")
+            _spark_writer(df.repartition(n_buckets, *bucket_by))
             .format("parquet")
             .option("path", data_dir)
-            .option("compression", "snappy")
-            .option("parquet.enable.dictionary", "false")
-            .option("parquet.writer.version", "v2")
-            .option("parquet.block.size", str(32 * 1024 * 1024))
             .bucketBy(n_buckets, *bucket_by)
             .sortBy(*bucket_by)
             .saveAsTable(name)
@@ -994,27 +990,15 @@ class SnapshotCatalog:
                 )
         return links[::-1]
 
-    def _unmasked_partition_dirs(
-        self, data_dir: str, partition_key: str, mask: set
-    ) -> list[str]:
-        """Partition directories of one snapshot's data dir whose value is
-        not masked. One-level listing, same metadata scope as
-        data_files(); values decode exactly as Spark encoded them."""
-        out = []
-        for d in sorted(os.listdir(data_dir)):
-            if not d.startswith(f"{partition_key}="):
-                continue
-            if urllib.parse.unquote(d.split("=", 1)[1]) not in mask:
-                out.append(os.path.join(data_dir, d))
-        return out
-
     def _read_chain(
-        self, spark: SparkSession, chain: list[_Link], *, raw: bool = False
+        self, spark: SparkSession, chain: list[_Link], *, raw: bool = False,
+        values: list[str] | None = None,
     ) -> list[DataFrame]:
         """One scan per chain element that holds live data files, each
         with its later deletes applied. A bucketed element reads as its
         registered session-catalog table, whose scan REPORTS the hash
-        partitioning; ``raw`` reads its parquet files instead."""
+        partitioning; ``raw`` reads its parquet files instead. ``values``:
+        see ``read_partitions``."""
         parts: list[DataFrame] = []
         for link in chain:
             m = link.manifest
@@ -1022,6 +1006,20 @@ class SnapshotCatalog:
                 continue  # delete snapshots carry keys, not data
             if m.get("row_count") == 0:
                 continue  # empty delta: no files on disk
+            dirs = None  # the whole data dir
+            if values is not None:
+                counts = m.get("partition_counts") or {}
+                hit = [v for v in values if v in counts and v not in link.mask]
+                dirs = list(_partition_dirs(spark, link.data_dir, m["partition_by"], hit).values())
+            elif link.mask and m.get("partition_by"):
+                # a later snapshot replaced some of this one's partitions:
+                # read only the surviving partition directories
+                dirs = list(dict.fromkeys(
+                    os.path.dirname(path) for path, value in _data_files(link.data_dir)
+                    if value not in link.mask
+                ))
+            if dirs == []:
+                continue
             # the manifest's stored schema IS the data's read-back schema:
             # passing it skips Spark's per-read schema-inference job
             reader = (
@@ -1030,16 +1028,8 @@ class SnapshotCatalog:
             )
             if m.get("bucket_by") and not raw:
                 df = spark.table(self._register_bucketed(spark, link))
-            elif link.mask and m.get("partition_by"):
-                # a later snapshot replaced some of this one's partitions:
-                # read only the surviving partition directories (basePath
-                # keeps the partition column in the schema)
-                keep = self._unmasked_partition_dirs(
-                    link.data_dir, m["partition_by"], link.mask
-                )
-                if not keep:
-                    continue
-                df = reader.option("basePath", link.data_dir).parquet(*keep)
+            elif dirs:  # basePath keeps the partition column in the schema
+                df = reader.option("basePath", link.data_dir).parquet(*dirs)
             else:
                 df = reader.parquet(link.data_dir)
             # broadcast LEFT ANTI keeps the part's reported partitioning
@@ -1104,26 +1094,31 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"no committed snapshot for table '{table}'")
         return self._read_chain(spark, chain)
 
+    def read_partitions(self, spark: SparkSession, table: str, values: list) -> DataFrame:
+        """CURRENT's rows whose partition value is one of ``values``
+        (as ``str(value)``): an index probe's pruned read. Directories
+        come from the manifests' ``partition_counts``, never from listing
+        storage (Iceberg's manifest file list); with no value committed,
+        an empty frame of the stored schema."""
+        chain = self._resolve_chain(table)
+        head = chain[-1].manifest if chain else {}
+        if head.get("partition_counts") is None:
+            raise FileNotFoundError(f"no per-partition counts committed for table '{table}'")
+        parts = self._read_chain(spark, chain, values=[str(v) for v in values])
+        return self._union(spark, parts, head["schema"])
+
     # -- maintenance ------------------------------------------------
 
     @staticmethod
     def _chain_files(chain: list[_Link]) -> list[dict]:
         """The live data files of a resolved chain (see ``data_files``)."""
-        out: list[dict] = []
-        for link in chain:
-            for root, _, files in os.walk(link.data_dir):
-                rel = os.path.relpath(root, link.data_dir)
-                part = None
-                if rel != "." and "=" in rel:
-                    part = urllib.parse.unquote(rel.split("=", 1)[1])
-                if part is not None and part in link.mask:
-                    continue  # replaced by a later snapshot
-                for fn in sorted(files):
-                    if fn.endswith(".parquet"):
-                        p = os.path.join(root, fn)
-                        out.append({"path": p, "bytes": os.path.getsize(p),
-                                    "partition": part, "snapshot": link.snapshot})
-        return out
+        return [
+            {"path": path, "bytes": os.path.getsize(path), "partition": part,
+             "snapshot": link.snapshot}
+            for link in chain
+            for path, part in _data_files(link.data_dir)
+            if part not in link.mask  # else replaced by a later snapshot
+        ]
 
     def data_files(
         self,

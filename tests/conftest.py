@@ -24,6 +24,28 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` returns ``fn()``'s result and the number of
+    Spark jobs it submitted, counted through a job group once the
+    listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def simple_csv(tmp_path_factory):
     """3-row fixture per FIXTURES.md §1: datetime,col1,col2,col3,str."""
     p = tmp_path_factory.mktemp("fixtures") / "simple.csv"

@@ -4,6 +4,7 @@ multimodal plumbing."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -241,7 +242,8 @@ class TestSimilarity:
         qsig = query_signature(qv, _hyperplanes(64, 12, 42))
         prefixes = idx.probed_prefixes(qsig, 2)
         assert len(prefixes) == 37 < 256
-        _, dirs = idx._bucket_dirs(prefixes)  # noqa: SLF001
+        files = idx.catalog.read_partitions(emb.sparkSession, idx.table, prefixes).inputFiles()
+        dirs = {os.path.dirname(f) for f in files}
         all_buckets = len(manifest["partition_counts"])
         assert 0 < len(dirs) < all_buckets
 
@@ -280,6 +282,33 @@ class TestIndexManifestProbing:
         ivf_probed = [(r["vec_id"], r["cos"]) for r in
                       ivf.query(spark, qv, k=5, nprobe=2).collect()]
         assert ivf_probed == adhoc
+
+    def test_index_query_is_one_job(self, spark, tmp_path, count_jobs):
+        """An index query plans against the stored schema, so no
+        schema-inference job runs: a hit submits exactly the one job that
+        runs the query, and an empty probe none (its empty frame is a
+        local relation, which Spark answers on the driver)."""
+        from qsvspark.functions import IvfIndex
+
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        ann = AnnIndex(str(tmp_path / "ann"), bits=12, prefix_bits=6, seed=42)
+        ann.build(emb, dim=64)
+        ivf = IvfIndex(str(tmp_path / "ivf"))
+        ivf.build(emb, n_centroids=8, sample_n=128)
+        qv = list(emb.filter("vec_id = 3").collect()[0]["embedding"])
+        rows, jobs = count_jobs(lambda: ann.query(spark, qv, k=5, probe_hamming=2).collect())
+        assert rows and jobs == 1
+        rows, jobs = count_jobs(lambda: ivf.query(spark, qv, k=5, nprobe=2).collect())
+        assert rows and jobs == 1
+        # every vector shares one signature; the negated query's has every
+        # bit flipped, so a 0-hamming probe resolves no partition at all
+        one = AnnIndex(str(tmp_path / "one"), bits=8, prefix_bits=4, seed=1)
+        one.build(spark.createDataFrame(
+            [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(8)], "vec_id long, embedding array<float>"
+        ), dim=4)
+        miss = [-1.0, 0.0, 0.0, 0.0]
+        rows, jobs = count_jobs(lambda: one.query(spark, miss, k=3, probe_hamming=0).collect())
+        assert rows == [] and jobs == 0
 
     def test_empty_probe_keeps_build_schema(self, spark, tmp_path):
         """String doc ids: an empty-probe result must carry the SAME

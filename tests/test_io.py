@@ -8,7 +8,6 @@ import gzip
 import io
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -294,20 +293,6 @@ def _assert_read_submits_no_job(spark, cat, table, snap=None):
     return df
 
 
-def _jobs_submitted(spark, fn) -> int:
-    """How many Spark jobs ``fn()`` submits, counted through a job group
-    once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()  # noqa: SLF001
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestJobLeanCommit:
     """A commit runs only its own write's Spark job: the schema comes from
     the parquet footers and per-value counts from a driver-side read of
@@ -326,31 +311,23 @@ class TestJobLeanCommit:
             F.lit(1.5).alias("x"),
         )
 
-    def test_flat_write_with_count_by_is_one_job(self, spark, keyed, tmp_path):
+    def test_flat_write_with_count_by_is_one_job(self, spark, keyed, tmp_path, count_jobs):
         cat = SnapshotCatalog(str(tmp_path / "wh"))
-        out = {}
-        assert _jobs_submitted(
-            spark, lambda: out.update(m=cat.write(keyed, "t", count_by="k"))
-        ) == 1
+        m, jobs = count_jobs(lambda: cat.write(keyed, "t", count_by="k"))
+        assert jobs == 1
         grouped = {
             str(r["k"]): r["n"]
             for r in keyed.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()
         }
         assert "None" in grouped
-        assert out["m"]["partition_counts"] == grouped
+        assert m["partition_counts"] == grouped
         data_dir = os.path.join(cat.root, "t", "snap-00001", "data")
-        assert out["m"]["schema"] == spark.read.parquet(data_dir).schema.jsonValue()
+        assert m["schema"] == spark.read.parquet(data_dir).schema.jsonValue()
 
-    def test_partitioned_write_is_one_job(self, spark, keyed, tmp_path):
+    def test_partitioned_write_is_one_job(self, spark, keyed, tmp_path, count_jobs):
         cat = SnapshotCatalog(str(tmp_path / "wh"))
-        out = {}
-        assert _jobs_submitted(
-            spark,
-            lambda: out.update(
-                m=cat.write(keyed, "t", partition_by="k", count_by="k")
-            ),
-        ) == 1
-        m = out["m"]
+        m, jobs = count_jobs(lambda: cat.write(keyed, "t", partition_by="k", count_by="k"))
+        assert jobs == 1
         assert m["partition_counts"] == {
             "__HIVE_DEFAULT_PARTITION__": 43, "k0": 85, "k1": 86, "k2": 86,
         }
@@ -1056,17 +1033,17 @@ class TestBroadcastEstimate:
         """ADVICE r4: the broadcast bound must gate on estimated
         IN-MEMORY size — snappy parquet of highly compressible keys
         understates the decompressed broadcast relation by 10x+."""
-        from qsvspark.io.snapshot import _broadcast_estimate_bytes, _dir_bytes
+        from qsvspark.io.snapshot import _broadcast_estimate_bytes, _data_files
 
         d = str(tmp_path / "keys")
         # one repeated 200-char string: tiny at rest, big in memory
         spark.range(0, 20000).select(
             F.concat(F.lit("k" * 200), (F.col("id") % 3).cast("string")).alias("k")
         ).coalesce(1).write.parquet(d)
-        at_rest = _dir_bytes(d)
+        at_rest = sum(os.path.getsize(path) for path, _ in _data_files(d))
         est = _broadcast_estimate_bytes(d)
         # dictionary-encoded snappy crushes this to ~2 KB at rest; the
-        # footer estimate (uncompressed chunk stats + 32 B/row hash
+        # footer estimate (uncompressed chunk stats + 48 B/row hash
         # -relation overhead) lands ~300x higher — a floor, not an exact
         # decoded size (dictionary decode widens it further), but enough
         # to catch the compressible-keys hazard the at-rest gate missed

@@ -1092,22 +1092,6 @@ class TestPackSinksLayoutThenMaterialize:
         )
 
 
-def _jobs_submitted(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it submitted,
-    counted through a job group once the listener bus is drained."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()  # noqa: SLF001
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestPackSinksStagedCommit:
     """pack_sinks(materialize=True) commits the files its packing tasks
     write: one Spark job, only ``sequences`` committed, a stray file in
@@ -1124,7 +1108,7 @@ class TestPackSinksStagedCommit:
     ]
 
     @pytest.fixture(scope="class")
-    def packed(self, spark, tmp_path_factory):
+    def packed(self, spark, tmp_path_factory, count_jobs):
         import shutil
 
         wh = str(tmp_path_factory.mktemp("stagedwh"))
@@ -1147,7 +1131,7 @@ class TestPackSinksStagedCommit:
 
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(pipe.catalog, "_move_reported", move_with_stray)
-            m, jobs = _jobs_submitted(spark, lambda: pipe.pack_sinks(
+            m, jobs = count_jobs(lambda: pipe.pack_sinks(
                 seq_len=self.SEQ_LEN, materialize=True, pad_id=self.PAD
             ))
         assert m is not None and m["table"] == "sequences"

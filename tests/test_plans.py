@@ -258,3 +258,17 @@ class TestNoPythonScan:
         assert out.collect() == []
         assert out.schema == schema
         assert "ExistingRDD" not in plan_of(out)
+
+    def test_pack_chunked_offsets_are_local(self, spark):
+        """The broadcast bucket-offset frame of ``pack_chunked`` comes from
+        Arrow, so no packing job starts a Python worker to ship it."""
+        from qsvspark.functions.packing import pack_chunked
+
+        docs = spark.range(200).select(
+            F.col("id").alias("doc_id"), (F.col("id") % 7 + 1).alias("n_tok")
+        )
+        out = pack_chunked(docs, "n_tok", "doc_id", 16, n_buckets=4)
+        assert out.count() == 200
+        plan = plan_of(out)
+        assert "ExistingRDD" not in plan
+        assert "LocalTableScan" in plan
